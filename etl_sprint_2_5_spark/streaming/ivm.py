@@ -7,20 +7,26 @@ rebuild those documents with the lateral-join query → bulk-upsert to
 ES → advance the cursor (/root/reference/postgres_to_es/
 daemon.py:90-129,132-152,155-200,426-535).
 
-Here each pipeline is a config over ordinary Catalyst plans:
+Here each pipeline is a config over ordinary Catalyst plans, and every
+caller runs ONE change-apply core, :func:`apply_changes`:
 
-- **producer** = keyset_batch (S2/P6): composite (ts, id) cursor
-  predicate, pushable into the parquet/JDBC scan;
-- **fan-out** (J7/J8) = changed-rows → affected fact ids, either a
+- **fan-out** (J7/J8) = changed rows → affected doc ids, either a
   column pluck or a broadcast semi-join through the bridge table —
   stays distributed, nothing but the cursor row is ever collected;
 - **rebuild** = the gold builder restricted by the affected-id
   semi-join (J6) — same code as the full build, so incremental ==
   batch by construction;
-- **sink** = idempotent upsert by doc id (T3);
-- **commit** = offset advanced only after the sink returns (T2's
-  commit-after-sink ordering, daemon.py:118-129) ⇒ crash anywhere
-  re-delivers an already-upserted batch: no loss, no duplicates.
+- **sink** = idempotent upsert by doc id (T3), retried with bounded
+  backoff (T6).
+
+The callers own where changed rows come from and where the cursor
+lives. :func:`run_round` is the batch daemon's round: read each
+member's keyset batch (S2/P6: composite (ts, id) cursor predicate,
+pushable into the parquet/JDBC scan), apply, and only then advance
+the offsets (T2's commit-after-sink ordering, daemon.py:118-129) ⇒ a
+crash anywhere re-delivers an already-upserted batch: no loss, no
+duplicates. ``structured.stream_pipeline_from`` calls the same core
+from ``foreachBatch`` with Spark's checkpoint as the cursor.
 
 Unlike the reference's one-batch-per-poll quirk (T8, max 500 rows/s),
 ``run_to_completion`` drains the full backlog — a documented superset.
@@ -29,9 +35,11 @@ Unlike the reference's one-batch-per-poll quirk (T8, max 500 rows/s),
 from __future__ import annotations
 
 import datetime as dt
+import logging
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +50,8 @@ from etl_sprint_2_5_spark.streaming.sink import (
     upsert_keyed_parquet_bucketed,
 )
 from etl_sprint_2_5_spark.streaming.state import OffsetStore
+
+log = logging.getLogger(__name__)
 
 TableLoader = Callable[[str], DataFrame]  # table name -> current snapshot
 Rebuild = Callable[[TableLoader, DataFrame], DataFrame]  # (tables, ids) -> docs
@@ -185,11 +195,18 @@ def with_backoff(
     here so a dead sink fails the cycle loudly instead of hanging the
     daemon). Safe to combine with commit-after-sink: a retried
     delivery re-runs the idempotent upsert, so effects stay
-    exactly-once and the offset still advances exactly once."""
+    exactly-once and the offset still advances exactly once.
+
+    ``ValueError`` is re-raised at once: the sink raises it for
+    contract violations (key mismatch, rejected type change, pending
+    deltas) that no retry can cure, so sleeping through the schedule
+    would only delay the error."""
     delay = start
     for attempt in range(retries + 1):
         try:
             return fn()
+        except ValueError:
+            raise
         except Exception:  # noqa: BLE001 — transient sink/IO errors
             if attempt == retries:
                 raise
@@ -198,115 +215,69 @@ def with_backoff(
     return None
 
 
-def run_cycle(
+def apply_changes(
     spark: SparkSession,
-    p: Pipeline,
+    members: list[tuple[Pipeline, DataFrame]],
     load: TableLoader,
-    offsets: OffsetStore,
-) -> int:
-    """One micro-batch for one pipeline; returns rows consumed."""
-    ts, last_id = offsets.get(p.name)
-    if p.batch_fn is not None:
-        batch = p.batch_fn(ts, last_id, p.batch_size)
-    else:
-        batch = keyset_batch(
-            load(p.source), p.cursor_field, p.id_field, ts, last_id,
-            p.batch_size,
-        )
-    # cache: the batch feeds the fan-out AND the cursor computation;
-    # bounded by batch_size so it is safely materializable
-    batch = batch.cache()
+) -> None:
+    """The one change-apply core: changed rows → affected ids → ONE
+    restricted rebuild → ONE idempotent upsert.
+
+    ``members`` pairs each pipeline with its changed-rows frame; all
+    members share one :func:`_merge_key` (same sink, same rebuild), so
+    the group pays one rebuild and one sink commit over the union of
+    the members' affected ids (guide §1.2: remove redundant passes).
+    Result-identical to applying the members one by one:
+    rebuild(ids_a ∪ ids_b) row-for-row equals rebuild(ids_a) upserted
+    then rebuild(ids_b) upserted — sources are quiescent while a round
+    runs, and overlapping ids rebuild to the same row either way. A
+    single member's ids pass through as-is (``affected_ids`` is already
+    distinct). Cursors stay with the caller, which must advance them
+    only after this returns."""
+    p = members[0][0]
+    parts = [m.fanout.affected_ids(changed, load) for m, changed in members]
+    ids = reduce(DataFrame.unionByName, parts)
+    if len(parts) > 1:
+        ids = ids.distinct()
+    # persist ONLY when the sink's touched-bucket probe will execute
+    # the frame a second time (rewrite-bucketed path): the affected-id
+    # frame then feeds the probe AND the rebuild's broadcast semi-join
+    # (AND, on source-native rebuilds, an eager collect), and without
+    # the persist a bridge fan-out re-runs its bridge-table scan+join
+    # per execution. The delta/flat sinks consume ids exactly once
+    # (the broadcast) — persisting there is pure overhead. Bounded by
+    # the batches' fan-out, so it is safely materializable.
+    if p.sink_mode != "delta" and p.n_buckets > 0:
+        ids = ids.persist()
     try:
-        # ONE aggregation job yields both the consumed-row count and
-        # the cursor tail (max over the composite (ts, id) — struct
-        # comparison is lexicographic, identical to ORDER BY ts DESC,
-        # id DESC LIMIT 1). The previous sort-then-first plus separate
-        # count() cost two scheduler round-trips per cycle; at ~20
-        # cycles per maintenance scenario the fixed per-job latency
-        # was a measurable slice of the loop.
-        head = batch.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(
-                F.struct(
-                    F.col(p.cursor_field).alias("ts"),
-                    F.col(p.id_field).alias("id"),
-                )
-            ).alias("tail"),
-        ).first()
-        if not head["n"]:
-            return 0
-        tail = head["tail"]
-        n = head["n"]
-        # persist ONLY when the sink's touched-bucket probe will
-        # execute the frame a second time (rewrite-bucketed path): the
-        # affected-id frame then feeds the probe AND the rebuild's
-        # broadcast semi-join (AND, on source-native rebuilds, an
-        # eager collect), and without the persist a bridge fan-out
-        # re-runs its bridge-table scan+join per execution. The
-        # delta/flat sinks consume ids exactly once (the broadcast) —
-        # persisting there is pure overhead. Bounded by the batch's
-        # fan-out, same persistability argument as ``batch``.
-        ids = p.fanout.affected_ids(batch, load)
-        if p.sink_mode != "delta" and p.n_buckets > 0:
-            ids = ids.persist()
-        try:
-            docs = p.rebuild(load, ids)
-            # T6: transient sink failures are retried with capped
-            # backoff; only a still-failing sink aborts the cycle
-            # (offset unmoved). ids rides along as the touched-bucket
-            # probe hint: the rebuild restricted docs to exactly these
-            # ids, so the sink can probe over the bounded id frame and
-            # execute the rebuild plan only once — inside the merge
-            # write
-            with_backoff(lambda: p.upsert(spark, docs, probe_keys=ids))
-            # T2: ONLY after the sink returned do we advance the cursor
-            ts_val = tail["ts"]
-            if isinstance(ts_val, str):
-                ts_val = dt.datetime.fromisoformat(ts_val)
-            offsets.set(p.name, ts_val, tail["id"])
-            return n
-        finally:
-            ids.unpersist()
+        docs = p.rebuild(load, ids)
+        # T6: transient sink failures are retried with capped backoff;
+        # only a still-failing sink aborts. ids rides along as the
+        # touched-bucket probe hint: the rebuild restricted docs to
+        # exactly these ids, so the sink can probe over the bounded id
+        # frame and execute the rebuild plan only once — inside the
+        # merge write (the sink checks the superset contract)
+        with_backoff(lambda: p.upsert(spark, docs, probe_keys=ids))
     finally:
-        batch.unpersist()
+        ids.unpersist()
 
 
-def _merge_key(p: Pipeline) -> tuple:
-    """Identity under which pipelines may share ONE rebuild + ONE sink
-    commit per drain round: same sink (path/key/bucketing/mode) and
-    the same rebuild plan builder. Delta-mode pipelines never merge —
-    their compaction cadence is counted in UPSERTS (compact_every), so
-    collapsing a round's k upserts into one would shift when the log
-    folds back into bases (the mixed base+delta final state the delta
-    gate exists to cross)."""
-    return (p.sink_path, p.doc_key, p.n_buckets, p.sink_mode, id(p.rebuild))
-
-
-def _run_round_merged(
+def run_round(
     spark: SparkSession,
     plist: list[Pipeline],
     load: TableLoader,
     offsets: OffsetStore,
 ) -> list[int]:
-    """One drain round for a group of same-sink pipelines: each member
-    contributes its keyset batch, head aggregation and fan-out exactly
-    as in :func:`run_cycle`, but the group pays ONE restricted rebuild
-    and ONE sink commit over the UNION of the members' affected-id
-    frames (guide §1.2: remove redundant passes — the per-pipeline
-    loop re-ran the same rebuild sources and re-committed the same
-    view k times per round with identical per-key results, since
-    sources are quiescent during a drain and the rebuild depends only
-    on the source snapshots and the id set). Result-identical to the
-    sequential per-pipeline cycles: rebuild(ids_a ∪ ids_b) row-for-row
-    equals rebuild(ids_a) upserted then rebuild(ids_b) upserted —
-    overlapping ids rebuild to the same row either way.
-
-    Cursor discipline is unchanged per member: every cursor advances
-    only AFTER the (single) sink call returned — a sink failure leaves
-    every member's offset unmoved and the whole round re-delivers,
-    idempotently. Returns the per-member consumed-row counts, aligned
-    with ``plist``."""
-    live: list[tuple[Pipeline, DataFrame | None, int, object]] = []
+    """One drain round for a group of pipelines sharing one
+    :func:`_merge_key`: each member reads its bounded keyset batch
+    after its cursor, the non-empty ones go through ONE
+    :func:`apply_changes`, and only after it returned do their cursors
+    advance (T2) — a sink failure leaves every member's offset unmoved
+    and the whole round re-delivers, idempotently. Returns the
+    per-member consumed-row counts, aligned with ``plist``."""
+    counts: list[int] = []
+    live: list[tuple[Pipeline, DataFrame, object]] = []
+    cached: list[DataFrame] = []
     try:
         for p in plist:
             ts, last_id = offsets.get(p.name)
@@ -317,7 +288,16 @@ def _run_round_merged(
                     load(p.source), p.cursor_field, p.id_field, ts,
                     last_id, p.batch_size,
                 )
+            # cache: the batch feeds the fan-out AND the cursor
+            # computation; bounded by batch_size so it is safely
+            # materializable. Registered for release before the head
+            # aggregation runs, so a failing one cannot leak it.
             batch = batch.cache()
+            cached.append(batch)
+            # ONE aggregation job yields both the consumed-row count
+            # and the cursor tail (max over the composite (ts, id) —
+            # struct comparison is lexicographic, identical to ORDER BY
+            # ts DESC, id DESC LIMIT 1)
             head = batch.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.max(
@@ -327,43 +307,70 @@ def _run_round_merged(
                     )
                 ).alias("tail"),
             ).first()
-            if not head["n"]:
-                batch.unpersist()
-                live.append((p, None, 0, None))
-                continue
-            live.append((p, batch, head["n"], head["tail"]))
-        if all(b is None for _, b, _, _ in live):
-            return [0] * len(plist)
-        ids: DataFrame | None = None
-        for p, batch, _, _ in live:
-            if batch is None:
-                continue
-            part = p.fanout.affected_ids(batch, load)
-            ids = part if ids is None else ids.unionByName(part)
-        ids = ids.distinct()
-        rep = plist[0]  # group members share sink config + rebuild
-        # same conditional-persist rule as run_cycle: only the
-        # rewrite-bucketed sink's probe executes ids a second time
-        if rep.sink_mode != "delta" and rep.n_buckets > 0:
-            ids = ids.persist()
-        try:
-            docs = rep.rebuild(load, ids)
-            with_backoff(lambda: rep.upsert(spark, docs, probe_keys=ids))
-            # T2: cursors advance only after the shared sink returned
-            for p, batch, _, tail in live:
-                if batch is None:
-                    continue
+            counts.append(head["n"])
+            if head["n"]:
+                live.append((p, batch, head["tail"]))
+            else:
+                cached.pop().unpersist()
+        if live:
+            apply_changes(spark, [(p, b) for p, b, _ in live], load)
+            # T2: cursors advance only after the sink returned
+            for p, _, tail in live:
                 ts_val = tail["ts"]
                 if isinstance(ts_val, str):
                     ts_val = dt.datetime.fromisoformat(ts_val)
                 offsets.set(p.name, ts_val, tail["id"])
-            return [n for _, _, n, _ in live]
-        finally:
-            ids.unpersist()
+        return counts
     finally:
-        for _, batch, _, _ in live:
-            if batch is not None:
-                batch.unpersist()
+        for batch in cached:
+            batch.unpersist()
+
+
+def run_cycle(
+    spark: SparkSession,
+    p: Pipeline,
+    load: TableLoader,
+    offsets: OffsetStore,
+) -> int:
+    """One micro-batch for one pipeline; returns rows consumed."""
+    return run_round(spark, [p], load, offsets)[0]
+
+
+def _merge_key(p: Pipeline) -> tuple:
+    """The drain group a pipeline belongs to: pipelines with equal keys
+    run as one :func:`run_round` — one rebuild and one sink commit per
+    round. Equal means the same sink (path/key/bucketing/mode) and the
+    same rebuild function OBJECT (``id(p.rebuild)``: equivalent but
+    distinct closures do not merge; ``run_to_completion`` logs that
+    case). A delta-mode pipeline gets a key of its own: its compaction
+    cadence is counted in UPSERTS (compact_every), so collapsing a
+    round's k upserts into one would shift when the log folds back into
+    bases (the mixed base+delta final state the delta gate exists to
+    cross)."""
+    if p.sink_mode == "delta":
+        return (id(p),)
+    return (p.sink_path, p.doc_key, p.n_buckets, p.sink_mode, id(p.rebuild))
+
+
+def _warn_missed_merges(pipelines: list[Pipeline]) -> None:
+    """Log the same-sink pipelines that do not merge only because their
+    rebuild functions are distinct objects."""
+    builders: dict[tuple, dict[int, list[str]]] = {}
+    for p in pipelines:
+        if p.sink_mode != "delta":
+            sink = _merge_key(p)[:-1]  # the key minus rebuild identity
+            builders.setdefault(sink, {}).setdefault(
+                id(p.rebuild), []
+            ).append(p.name)
+    for sink, by_rebuild in builders.items():
+        if len(by_rebuild) > 1:
+            log.warning(
+                "pipelines %s share sink %s but not one rebuild function "
+                "object, so they do not merge: each rebuild function "
+                "pays its own rebuild and sink commit per round",
+                [n for names in by_rebuild.values() for n in names],
+                sink[0],
+            )
 
 
 def run_to_completion(
@@ -378,59 +385,42 @@ def run_to_completion(
     Equivalent to the daemon's poll loop (daemon.py:537-542) with
     Trigger.AvailableNow semantics instead of one-batch-per-poll.
 
-    Short-circuit: a cycle that returned FEWER rows than its
+    Every pipeline belongs to exactly one group keyed by
+    :func:`_merge_key`; each round calls :func:`run_round` once per
+    group that still has undrained members, so a group of k same-sink
+    pipelines pays one rebuild and one sink commit per round, not k
+    (the reference daemon's five movies coroutines write one index the
+    same way). Singleton groups — delta-mode pipelines, views with one
+    feeding pipeline — are the plain per-pipeline cycle.
+
+    Short-circuit: a member that consumed FEWER rows than its
     batch_size proves the keyset scan is past the last row — the
     producer is ``ORDER BY (ts, id) LIMIT batch_size``, so a partial
     batch means nothing remains after the advanced cursor. That
     pipeline is not re-polled within THIS drain (sources are
     quiescent during a drain — the CDC writes land between calls),
     which removes the confirm-empty cycle per pipeline (a full
-    keyset-scan plan + aggregation job each) the moved==0 exit used
-    to cost. The drained set is per-call: the next call re-polls
-    everything, so post-drain mutations are picked up exactly as
-    before.
-
-    Round merging: pipelines sharing one sink AND one rebuild builder
-    (see :func:`_merge_key`; delta mode excluded) drain as a GROUP —
-    per round each member still reads its own bounded batch and fans
-    out its own affected ids, but the group runs one rebuild and one
-    sink commit over the union (``_run_round_merged`` proves result
-    identity). The reference daemon's seven coroutines behave the same
-    way five-at-a-time into the movies index; here it cuts the
-    dominant per-round cost (the merge commit and the rebuild's source
-    scans) from k per round to one."""
-    total = 0
-    drained: set[int] = set()
+    keyset-scan plan + aggregation job each). The drained set is
+    per-call: the next call re-polls everything, so post-drain
+    mutations are picked up."""
     groups: dict[tuple, list[int]] = {}
     for i, p in enumerate(pipelines):
-        if p.sink_mode != "delta":
-            groups.setdefault(_merge_key(p), []).append(i)
-    group_of: dict[int, list[int]] = {
-        i: idxs for idxs in groups.values() if len(idxs) > 1 for i in idxs
-    }
+        groups.setdefault(_merge_key(p), []).append(i)
+    _warn_missed_merges(pipelines)
+    total = 0
+    drained: set[int] = set()
     for _ in range(max_cycles):
-        moved = 0
-        seen: set[int] = set()
-        for i, p in enumerate(pipelines):
-            if i in drained or i in seen:
+        for members in groups.values():
+            alive = [i for i in members if i not in drained]
+            if not alive:
                 continue
-            members = group_of.get(i)
-            if members is not None:
-                alive = [j for j in members if j not in drained]
-                seen.update(alive)
-                counts = _run_round_merged(
-                    spark, [pipelines[j] for j in alive], load, offsets
-                )
-                for j, n in zip(alive, counts):
-                    moved += n
-                    if n < pipelines[j].batch_size:
-                        drained.add(j)
-            else:
-                n = run_cycle(spark, p, load, offsets)
-                moved += n
-                if n < p.batch_size:
+            counts = run_round(
+                spark, [pipelines[i] for i in alive], load, offsets
+            )
+            for i, n in zip(alive, counts):
+                total += n
+                if n < pipelines[i].batch_size:
                     drained.add(i)
-        total += moved
         if len(drained) == len(pipelines):
             return total
     raise RuntimeError("IVM did not converge within max_cycles")

@@ -6,8 +6,9 @@ Source: a change-feed directory per base table (each micro-batch =
 newly arrived files of changed rows — the file-source analog of the
 reference's keyset poll, daemon.py:90-129). Spark's
 ``checkpointLocation`` persists which files were consumed, replacing
-OffsetStore; ``foreachBatch`` runs the identical fan-out → restricted
-rebuild → idempotent upsert, so the exactly-once-effect argument (T3)
+OffsetStore; ``foreachBatch`` calls ``ivm.apply_changes``, the batch
+drain's own fan-out → restricted rebuild → idempotent upsert core
+(sink retries included), so the exactly-once-effect argument (T3)
 carries over unchanged: a replayed micro-batch re-upserts the same
 documents.
 
@@ -21,7 +22,11 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
-from etl_sprint_2_5_spark.streaming.ivm import Pipeline, TableLoader
+from etl_sprint_2_5_spark.streaming.ivm import (
+    Pipeline,
+    TableLoader,
+    apply_changes,
+)
 
 
 def stream_pipeline(
@@ -60,8 +65,8 @@ def stream_pipeline_from(
     available_now: bool = True,
     row_counter: list | None = None,
 ):
-    """The pipeline body over an ARBITRARY change-feed stream — same
-    foreachBatch fan-out → restricted rebuild → idempotent upsert as
+    """The pipeline body over an ARBITRARY change-feed stream — each
+    micro-batch goes through ``ivm.apply_changes`` as in
     :func:`stream_pipeline`, source-agnostic: file feeds, Kafka, or a
     registered Python data source (sources/pg_stream's live-PG keyset
     source). ``available_now=False`` leaves the trigger default —
@@ -72,27 +77,8 @@ def stream_pipeline_from(
         n = batch_df.count()
         if row_counter is not None:
             row_counter.append(n)
-        if not n:
-            return
-        # persist only when the bucketed sink's probe executes the
-        # frame a second time (rewrite-bucketed path): ids then feeds
-        # the probe AND the rebuild's broadcast (and source-native
-        # rebuilds collect it) — without the persist a bridge fan-out
-        # re-executes its bridge scan+join per use. Delta/flat sinks
-        # consume ids once; persisting there is pure overhead. Bounded
-        # by the micro-batch's fan-out.
-        ids = p.fanout.affected_ids(batch_df, load)
-        if p.sink_mode != "delta" and p.n_buckets > 0:
-            ids = ids.persist()
-        try:
-            docs = p.rebuild(load, ids)
-            # flat or bucket-pruned per p.n_buckets; ids is the
-            # bucketed sink's touched-bucket probe hint (rebuild
-            # restricts docs to exactly these ids; the sink checks the
-            # superset contract)
-            p.upsert(spark, docs, probe_keys=ids)
-        finally:
-            ids.unpersist()
+        if n:
+            apply_changes(spark, [(p, batch_df)], load)
 
     writer = (
         changed_stream.writeStream.foreachBatch(process)

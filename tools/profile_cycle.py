@@ -1,40 +1,29 @@
-"""Sub-cycle profiler for the IVM loop (guide §1: measure first, at
+"""Sub-round profiler for the IVM loop (guide §1: measure first, at
 the granularity the next change needs). profile_ivm.py times the
-primitives (psql, run_cycle, the sink); this one splits run_cycle and
-the bucketed upsert into their SCHEDULER-VISIBLE pieces — head agg,
-fan-out/probe, merge write, manifest/commit bookkeeping — so the
-"~4 jobs/cycle floor" hypothesis is measured, not guessed.
+primitives (psql, ivm.run_round, the sink); this one splits a drain
+round into its SCHEDULER-VISIBLE pieces by wrapping the real
+functions, never copies of them:
+
+- ``0_round``: ``ivm.run_round``, the whole round;
+- ``1_batch_and_head``: round time minus apply time — the keyset
+  batch reads and head aggregations;
+- ``2_apply``: ``ivm.apply_changes`` — fan-out, rebuild plan, upsert;
+- ``3_upsert``: ``Pipeline.upsert``, one entry per sink attempt;
+- ``4_commit_write``: ``sink._commit_touched_buckets``, the bucketed
+  upsert's merge write and manifest publish.
 
 Usage: python tools/profile_cycle.py [query ...]
 """
 
 from __future__ import annotations
 
-import os
 import sys
 import time
-from collections import defaultdict
-from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-STATS: dict[str, list[float]] = defaultdict(list)
-
-
-def _t(cat: str, fn, *a, **k):  # noqa: ANN001
-    t0 = time.time()
-    try:
-        return fn(*a, **k)
-    finally:
-        STATS[cat].append(time.time() - t0)
+from profile_ivm import STATS, report, timed
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from etl_sprint_2_5_spark import plans
     from etl_sprint_2_5_spark.session import get_spark
     from etl_sprint_2_5_spark.streaming import ivm, sink
@@ -42,176 +31,28 @@ def main() -> None:
     plans.load_all()
     spark = get_spark("profile_cycle")
 
-    # ---- instrument run_cycle piecewise ------------------------------
-    import datetime as dt
+    orig_round = ivm.run_round
 
-    from etl_sprint_2_5_spark.streaming.ivm import with_backoff
-
-    def run_cycle(spark, p, load, offsets):  # noqa: ANN001
-        t_cycle = time.time()
-        ts, last_id = offsets.get(p.name)
-        if p.batch_fn is not None:
-            batch = _t("1_batch_fn", p.batch_fn, ts, last_id, p.batch_size)
-        else:
-            from etl_sprint_2_5_spark.operators.keyset import keyset_batch
-
-            batch = keyset_batch(
-                load(p.source), p.cursor_field, p.id_field, ts, last_id,
-                p.batch_size,
-            )
-        batch = batch.cache()
-        try:
-            head = _t(
-                "2_head_agg",
-                lambda: batch.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max(
-                        F.struct(
-                            F.col(p.cursor_field).alias("ts"),
-                            F.col(p.id_field).alias("id"),
-                        )
-                    ).alias("tail"),
-                ).first(),
-            )
-            if not head["n"]:
-                return 0
-            tail = head["tail"]
-            n = head["n"]
-            ids = _t(
-                "3_fanout_plan",
-                lambda: p.fanout.affected_ids(batch, load),
-            )
-            if p.sink_mode != "delta" and p.n_buckets > 0:
-                ids = ids.persist()  # mirrors ivm.run_cycle
-            try:
-                docs = _t("4_rebuild_plan", p.rebuild, load, ids)
-                _t(
-                    "5_upsert",
-                    lambda: with_backoff(
-                        lambda: p.upsert(spark, docs, probe_keys=ids)
-                    ),
-                )
-                ts_val = tail["ts"]
-                if isinstance(ts_val, str):
-                    ts_val = dt.datetime.fromisoformat(ts_val)
-                offsets.set(p.name, ts_val, tail["id"])
-                return n
-            finally:
-                ids.unpersist()
-        finally:
-            batch.unpersist()
-            STATS["0_cycle_total"].append(time.time() - t_cycle)
-
-    ivm.run_cycle = run_cycle
-
-    # ---- instrument the merged-round drain piecewise -----------------
-    def run_round_merged(spark, plist, load, offsets):  # noqa: ANN001
-        t_round = time.time()
-        live = []
-        try:
-            for p in plist:
-                ts, last_id = offsets.get(p.name)
-                if p.batch_fn is not None:
-                    batch = _t(
-                        "1_batch_fn", p.batch_fn, ts, last_id, p.batch_size
-                    )
-                else:
-                    from etl_sprint_2_5_spark.operators.keyset import (
-                        keyset_batch,
-                    )
-
-                    batch = keyset_batch(
-                        load(p.source), p.cursor_field, p.id_field, ts,
-                        last_id, p.batch_size,
-                    )
-                batch = batch.cache()
-                head = _t(
-                    "2_head_agg",
-                    lambda b=batch, pp=p: b.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.max(
-                            F.struct(
-                                F.col(pp.cursor_field).alias("ts"),
-                                F.col(pp.id_field).alias("id"),
-                            )
-                        ).alias("tail"),
-                    ).first(),
-                )
-                if not head["n"]:
-                    batch.unpersist()
-                    live.append((p, None, 0, None))
-                    continue
-                live.append((p, batch, head["n"], head["tail"]))
-            if all(b is None for _, b, _, _ in live):
-                return [0] * len(plist)
-            ids = None
-            for p, batch, _, _ in live:
-                if batch is None:
-                    continue
-                part = _t(
-                    "3_fanout_plan", p.fanout.affected_ids, batch, load
-                )
-                ids = part if ids is None else ids.unionByName(part)
-            ids = ids.distinct()
-            rep = plist[0]
-            if rep.sink_mode != "delta" and rep.n_buckets > 0:
-                ids = ids.persist()
-            try:
-                docs = _t("4_rebuild_plan", rep.rebuild, load, ids)
-                _t(
-                    "5_upsert",
-                    lambda: with_backoff(
-                        lambda: rep.upsert(spark, docs, probe_keys=ids)
-                    ),
-                )
-                for p, batch, _, tail in live:
-                    if batch is None:
-                        continue
-                    ts_val = tail["ts"]
-                    if isinstance(ts_val, str):
-                        ts_val = dt.datetime.fromisoformat(ts_val)
-                    offsets.set(p.name, ts_val, tail["id"])
-                return [n for _, _, n, _ in live]
-            finally:
-                ids.unpersist()
-        finally:
-            for _, batch, _, _ in live:
-                if batch is not None:
-                    batch.unpersist()
-            STATS["0_round_total"].append(time.time() - t_round)
-
-    ivm._run_round_merged = run_round_merged
-
-    # ---- instrument the bucketed upsert's commit write ---------------
-    orig_commit = sink._commit_touched_buckets
-
-    def commit_timed(*a, **k):  # noqa: ANN001
-        return _t("5c_commit_write", orig_commit, *a, **k)
-
-    sink._commit_touched_buckets = commit_timed
-
-    # warmup
-    plans.REGISTRY["point_lookup"].fn(spark, SF_DIR).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    names = sys.argv[1:] or ["ivm_maintained_docs"]
-    for name in names:
-        STATS.clear()
-        spark.sparkContext.setJobDescription(name)
+    def run_round(*a, **k):  # noqa: ANN002, ANN003, ANN202
+        first_apply = len(STATS.get("2_apply", ()))
         t0 = time.time()
-        plans.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        total = time.time() - t0
-        print(f"\n=== {name}: {total:.2f}s total ===")
-        for cat, xs in sorted(STATS.items()):
-            print(
-                f"  {cat:18s} n={len(xs):4d} sum={sum(xs):7.2f}s "
-                f"mean={sum(xs)/len(xs)*1000:7.1f}ms "
-                f"max={max(xs)*1000:7.1f}ms"
+        try:
+            return orig_round(*a, **k)
+        finally:
+            total = time.time() - t0
+            STATS["0_round"].append(total)
+            STATS["1_batch_and_head"].append(
+                total - sum(STATS.get("2_apply", [])[first_apply:])
             )
-        spark.catalog.clearCache()
+
+    ivm.run_round = run_round
+    ivm.apply_changes = timed("2_apply", ivm.apply_changes)
+    ivm.Pipeline.upsert = timed("3_upsert", ivm.Pipeline.upsert)
+    sink._commit_touched_buckets = timed(
+        "4_commit_write", sink._commit_touched_buckets
+    )
+
+    report(spark, sys.argv[1:] or ["ivm_maintained_docs"])
 
 
 if __name__ == "__main__":

@@ -1,7 +1,7 @@
 """Phase-level profiler for the heavy IVM/live-PG queries (guide §1:
 measure first). Monkeypatches timers around the expensive primitives
-(psql spawns, initdb, run_cycle, the bucketed upsert, pg_copy_read)
-and prints a per-query cost breakdown so optimization targets the
+(psql spawns, initdb, ivm.run_round, the bucketed upsert,
+pg_copy_read) and prints a per-query cost breakdown so optimization targets the
 measured term, not a guess.
 
 Usage: python tools/profile_ivm.py [query ...]
@@ -53,7 +53,7 @@ def main() -> None:
     pg_copy._copy_in = timed("_copy_in", pg_copy._copy_in)
     orig_enter = pg_copy.ephemeral_pg.__enter__
     pg_copy.ephemeral_pg.__enter__ = timed("pg_bootstrap", orig_enter)
-    ivm.run_cycle = timed("run_cycle", ivm.run_cycle)
+    ivm.run_round = timed("run_round", ivm.run_round)
     # ivm.py imported the bucketed upsert by name at module top
     ivm.upsert_keyed_parquet_bucketed = timed(
         "upsert_bucketed", ivm.upsert_keyed_parquet_bucketed
@@ -67,17 +67,23 @@ def main() -> None:
         "read_bucketed_view", sink.read_bucketed_view
     )
 
+    report(spark, sys.argv[1:] or [
+        "ivm_maintained_docs",
+        "ivm_maintained_docs_delta",
+        "ivm_maintained_docs_pg_live",
+        "ivm_staged_fanout_live",
+    ])
+
+
+def report(spark, names: list[str]) -> None:  # noqa: ANN001
+    """Run each query once after a warmup and print its STATS."""
+    from etl_sprint_2_5_spark import plans
+
     # warmup
     plans.REGISTRY["point_lookup"].fn(spark, SF_DIR).write.format(
         "noop"
     ).mode("overwrite").save()
 
-    names = sys.argv[1:] or [
-        "ivm_maintained_docs",
-        "ivm_maintained_docs_delta",
-        "ivm_maintained_docs_pg_live",
-        "ivm_staged_fanout_live",
-    ]
     for name in names:
         STATS.clear()
         spark.sparkContext.setJobDescription(name)
