@@ -29,19 +29,20 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from etl_sprint_2_5_spark.operators.pagination import paginate
-from etl_sprint_2_5_spark.operators.textops import fulltext_score
+from etl_sprint_2_5_spark.operators.textops import score_page, with_fulltext_score
 
 SORT_FIELDS = ("id", "title", "imdb_rating")
 ORDERS = ("asc", "desc")
 
-# ES multi_match boosts (search_api/api.py:94-100)
+# ES multi_match boosts (search_api/api.py:94-100); each name array is
+# matched as one space-joined string
 SEARCH_FIELDS = {
     "title": 4.0,
     "description": 3.0,
-    "genres_names_str": 2.0,
-    "actors_names_str": 4.0,
-    "writers_names_str": 1.0,
-    "directors_names_str": 3.0,
+    "array_join(genres_names, ' ')": 2.0,
+    "array_join(actors_names, ' ')": 4.0,
+    "array_join(writers_names, ' ')": 1.0,
+    "array_join(directors_names, ' ')": 3.0,
 }
 
 
@@ -49,7 +50,9 @@ class BadRequest(ValueError):
     """Invalid request params (HTTP 422 in the reference)."""
 
 
-ANALYZERS = ("plain", "en", "ru_en")
+# analyzer name → with_fulltext_score's ``stem`` option
+STEM = {"plain": False, "en": True, "ru_en": "ru_en"}
+ANALYZERS = tuple(STEM)
 
 
 @dataclass
@@ -87,25 +90,17 @@ def list_movies(movies: DataFrame, params: ListParams) -> DataFrame:
 
     With ``search``: order by relevance desc (ties by id, as ES does by
     internal doc id), like api.py:93-100. Without: explicit sort field.
+    The movie rows are scored in place: no join back to ``movies``.
     """
     if params.search:
-        terms = tuple(t for t in params.search.lower().split() if t)
-        scored_src = movies
-        for arr in ("genres_names", "actors_names", "writers_names", "directors_names"):
-            scored_src = scored_src.withColumn(
-                f"{arr}_str", F.array_join(F.col(arr), " ")
-            )
-        stem = False if params.analyzer == "plain" else (
-            True if params.analyzer == "en" else "ru_en"
+        terms = tuple(params.search.lower().split())
+        scored = with_fulltext_score(
+            movies, terms, SEARCH_FIELDS, stem=STEM[params.analyzer]
         )
-        scores = fulltext_score(scored_src, "id", terms, SEARCH_FIELDS, stem=stem)
-        df = movies.join(scores.where(F.col("score") > 0), "id")
-        order = [F.col("score").desc()]
-    else:
-        df = movies
-        col = F.col(params.sort)
-        order = [col.desc() if params.sort_order == "desc" else col.asc()]
-    return paginate(df, order, F.col("id"), params.page, params.limit)
+        return score_page(scored, F.col("id"), params.page, params.limit)
+    col = F.col(params.sort)
+    order = [col.desc() if params.sort_order == "desc" else col.asc()]
+    return paginate(movies, order, F.col("id"), params.page, params.limit)
 
 
 def admin_movie_list(movies: DataFrame, page: int = 1, per_page: int = 50) -> dict:

@@ -345,11 +345,11 @@ def prepared_fulltext_stats(
     meta). ``use_artifact=False`` forces the inline single-pass
     aggregate (the pytest equality witness)."""
     from etl_sprint_2_5_spark.operators.textops import (
-        _stem_terms,
+        _query_terms,
         corpus_term_stats,
     )
 
-    terms = _stem_terms(terms, stem) if stem else tuple(terms)
+    terms = _query_terms(terms, stem)
     if not use_artifact:
         return corpus_term_stats(df, terms, fields, stem=stem), terms
 

@@ -195,29 +195,6 @@ def stem_tokens(col: Column | str) -> Column:
     return pandas_udf(_stem_arrays, "array<string>")(c)
 
 
-def stem_token(col: Column | str) -> Column:
-    """string → string scalar variant (for already-exploded tokens)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _stem(s):
-        memo: dict[str, str] = {}
-
-        def one(t):
-            if t is None:
-                return None
-            r = memo.get(t)
-            if r is None:
-                r = memo[t] = porter_stem(t)
-            return r
-
-        return s.apply(one)
-
-    _stem.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    c = F.col(col) if isinstance(col, str) else col
-    return pandas_udf(_stem, "string")(c)
-
-
 def tokenize_stemmed(col: Column | str, lang: str = "en") -> Column:
     """The opt-in analyzer chain: tokenize → stem (the engine twin of
     the reference's es analyzer tokenizer+snowball pipeline).

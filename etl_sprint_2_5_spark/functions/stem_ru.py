@@ -296,27 +296,3 @@ def analyze_ru_en(col: Column | str) -> Column:
 
     _analyze.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(_analyze, "array<string>")(tokenize_ru_en(col))
-
-
-def stem_token_ru_en(col: Column | str) -> Column:
-    """string → string scalar chain for already-exploded tokens;
-    stopwords map to NULL (so a downstream `isin(terms)` filter drops
-    them, mirroring the stop filters)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _stem(s):
-        memo: dict[str, str | None] = {}
-
-        def one(t):
-            if t is None:
-                return None
-            if t not in memo:
-                memo[t] = stem_term_ru_en(t)
-            return memo[t]
-
-        return s.apply(one)
-
-    _stem.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    c = F.col(col) if isinstance(col, str) else col
-    return pandas_udf(_stem, "string")(c)

@@ -30,6 +30,16 @@ def tokenize(col: Column | str) -> Column:
     )
 
 
+def tokenize_sql(expr: str) -> str:
+    """``tokenize`` as SQL text over a SQL expression: one parse on the
+    JVM instead of a dozen py4j Column calls (the per-request cost of
+    building the plan in a serving path)."""
+    return (
+        f"filter(split(trim(regexp_replace(lower({expr}), '{TOKEN_SPLIT_RE}',"
+        " ' ')), ' '), t -> length(t) > 0)"
+    )
+
+
 def word_shingles(col: Column | str, n: int = 3) -> Column:
     """n-word shingles as space-joined strings.
 

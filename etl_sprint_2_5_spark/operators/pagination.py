@@ -2,15 +2,18 @@
 
 The reference paginates via ES ``from/size`` (search_api/api.py:85-87)
 and Django's Paginator (views.py:44-63). Spark has no stable OFFSET on
-an unordered DataFrame, so pagination is a row_number window over an
-explicit total order (sort keys MUST end in a unique column, or pages
-are nondeterministic across runs — we enforce that by requiring a
+an unordered DataFrame, so a page is an offset/limit over an explicit
+total order (sort keys MUST end in a unique column, or pages are
+nondeterministic across runs — we enforce that by requiring a
 tiebreak key).
 
-Scale note: a single global window is a full sort on one task for the
-rank assignment; for deep pagination over huge data prefer keyset
-pagination (see operators/keyset.py) — this operator is the serving-
-layer parity path where result sets are modest (an API page).
+Scale note: ``orderBy → offset → limit`` plans as one
+TakeOrderedAndProject — each partition keeps its top page·limit rows
+in a bounded heap and the driver merges them; there is no global sort
+and no single-partition window. The heap grows with the page number,
+so for deep pagination over huge data prefer keyset pagination (see
+operators/keyset.py) — this operator is the serving-layer parity path
+where pages are shallow (an API page).
 """
 
 from __future__ import annotations
@@ -25,19 +28,11 @@ def paginate(
     tiebreak: Column,
     page: int,
     limit: int,
-    rn_col: str = "_rn",
 ) -> DataFrame:
     """Return rows (page-1)*limit+1 .. page*limit in the given order."""
     if page < 1 or limit < 1:
         raise ValueError("page and limit must be >= 1")  # P8 param validation
-    w = Window.orderBy(*order_by, tiebreak)
-    lo = (page - 1) * limit
-    hi = page * limit
-    return (
-        df.withColumn(rn_col, F.row_number().over(w))
-        .where((F.col(rn_col) > lo) & (F.col(rn_col) <= hi))
-        .drop(rn_col)
-    )
+    return df.orderBy(*order_by, tiebreak).offset((page - 1) * limit).limit(limit)
 
 
 def top_k_per_group(

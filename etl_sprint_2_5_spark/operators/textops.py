@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_sprint_2_5_spark.functions.text import tokenize
+from etl_sprint_2_5_spark.functions.text import tokenize, tokenize_sql
+from etl_sprint_2_5_spark.operators.pagination import paginate
 
 # Function-word marker lists for n-gram-free language ID. Tiny on
 # purpose: the operator contract is "deterministic heuristic vote",
@@ -172,18 +173,39 @@ def _analyzer(stem: bool | str):
     return lambda c: tokenize_stemmed(c, lang=lang)
 
 
-def _stem_terms(terms: tuple[str, ...], stem: bool | str) -> tuple[str, ...]:
+def _query_terms(terms: tuple[str, ...], stem: bool | str) -> tuple[str, ...]:
     """Query-side twin of the token-stream analyzer: stem each term
-    with the same chain; ru_en drops stopword terms entirely."""
+    with the same chain (ru_en drops stopword terms entirely), drop
+    empties and duplicates — the one place query terms are analyzed."""
     if stem == "ru_en":
         from etl_sprint_2_5_spark.functions.stem_ru import stem_term_ru_en
 
-        stemmed = (stem_term_ru_en(t) for t in terms)
-    else:
+        terms = (stem_term_ru_en(t) for t in terms)
+    elif stem:
         from etl_sprint_2_5_spark.functions.stem import porter_stem
 
-        stemmed = (porter_stem(t) for t in terms)
-    return tuple(dict.fromkeys(t for t in stemmed if t))
+        terms = (porter_stem(t) for t in terms)
+    return tuple(dict.fromkeys(t for t in terms if t))
+
+
+def _analyzed(
+    df: DataFrame, terms: tuple[str, ...], fields, stem: bool | str
+) -> DataFrame:
+    """``df`` plus ``_q`` (the query terms as ONE literal array column,
+    so user text never enters SQL) and ``_tk{i}``, field i's analyzed
+    token array (a NULL field is an empty array). A field is a column
+    name or a SQL expression over the row. The token arrays are
+    referenced more than once downstream, so projection collapse keeps
+    them here: each field is tokenized once per row."""
+    if stem:
+        toks = [_analyzer(stem)(F.expr(f)) for f in fields]
+    else:
+        toks = [F.expr(tokenize_sql(f)) for f in fields]
+    return df.select(
+        "*",
+        F.lit(list(terms)).alias("_q"),
+        *[F.coalesce(t, F.array()).alias(f"_tk{i}") for i, t in enumerate(toks)],
+    )
 
 
 def corpus_term_stats(
@@ -199,21 +221,24 @@ def corpus_term_stats(
     BM25 length normalization) in a single-row agg — the "small
     broadcast" of the scoring design. In a serving deployment this is
     computed once at index-build time and reused per query."""
-    analyzer = _analyzer(stem)
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for i, field in enumerate(fields):
-        toks = analyzer(field)
-        aggs.append(F.sum(F.size(toks)).alias(f"_len_{i}"))
-        for j, term in enumerate(terms):
-            aggs.append(
-                F.sum(F.array_contains(toks, term).cast("int")).alias(f"_df_{i}_{j}")
-            )
-    row = df.agg(*aggs).first()
+    return _term_stats(_analyzed(df, terms, fields, stem), terms, fields)
+
+
+def _term_stats(tok: DataFrame, terms: tuple[str, ...], fields) -> dict:
+    """corpus_term_stats over an ``_analyzed`` frame."""
+    aggs = ["count(1) AS _n"]
+    for i in range(len(fields)):
+        aggs.append(f"sum(size(_tk{i})) AS _len_{i}")
+        aggs += [
+            f"count_if(array_contains(_tk{i}, _q[{j}])) AS _df_{i}_{j}"
+            for j in range(len(terms))
+        ]
+    row = tok.selectExpr(*aggs).first()
     n = row["_n"]
     return {
         "n": n,
         "df": {
-            (field, term): row[f"_df_{i}_{j}"] or 0
+            (field, term): row[f"_df_{i}_{j}"]
             for i, field in enumerate(fields)
             for j, term in enumerate(terms)
         },
@@ -243,6 +268,95 @@ def idf_weight(n: int, df_count: int) -> float:
     return round(math.log(1.0 + (n - df_count + 0.5) / (df_count + 0.5)), 6)
 
 
+def _dbl(x: float) -> str:
+    """Exact SQL DOUBLE literal (repr round-trips; bare 1.2 is DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
+def with_fulltext_score(
+    df: DataFrame,
+    terms: tuple[str, ...],
+    fields: dict[str, float],
+    stats: dict | None = None,
+    stem: bool | str = False,
+    k1: float | None = None,
+    b: float = 0.75,
+) -> DataFrame:
+    """Every row of ``df`` plus its weighted multi-field tf·idf
+    ``score`` — the in-engine approximation of the reference's ES
+    multi_match with per-field boosts (search_api/api.py:94-100:
+    title^4, description^3, ...; ES scores with BM25 = idf-weighted,
+    length-normalized tf). Rows without a term hit score 0.0.
+
+    score(doc) = Σ_field Σ_term (w_f · idf(field, term)) · tf(field, term)
+    idf(f, t)  = ln(1 + (N − df + 0.5)/(df + 0.5))   [BM25 idf]
+
+    A field is a column name or a SQL expression over the row (the
+    serving layer scores its name arrays as ``array_join(arr, ' ')``).
+
+    Execution shape: ONE projection over the input rows — no explode,
+    no shuffle, no join back. Each field is tokenized once per row into
+    an array column; tf(f, t) = size(tokens_f) − size(array_remove(
+    tokens_f, t)) (the tokens equal to t, counted by codegen'd array
+    ops instead of a per-term lambda), and the weighted sum is one SQL
+    expression summed field-major then term-major, the order the DuckDB
+    oracles sum in. The idf weights come from ``stats`` (one single-row
+    aggregate over the same token arrays when not supplied); the query
+    terms ride in one literal array column, never in SQL text.
+
+    With ``k1=None`` (default) the score is plain tf·idf — no tf
+    saturation, no length normalization. Pass ``k1`` (e.g. 1.2) to get
+    the FULL BM25 formula the reference's ES deployment runs:
+
+    score(doc) = Σ_f Σ_t w_f · idf_{f,t} ·
+                 tf·(k1+1) / (tf + k1·(1 − b + b·len_f/avglen_f))
+
+    where len_f = size(tokens_f) and avglen_f is the corpus mean from
+    the same stats pass — the same projection, with each tf held in its
+    own column because the formula reads it twice."""
+    terms = _query_terms(terms, stem)
+    if not terms:
+        return df.withColumn("score", F.lit(0.0))
+    tok = _analyzed(df, terms, fields, stem)
+    if stats is None:
+        stats = _term_stats(tok, terms, tuple(fields))
+    n = stats["n"]
+    tks = [f"_tk{i}" for i in range(len(fields))]
+    tfs, parts = {}, []
+    for i, f in enumerate(fields):
+        for j, t in enumerate(terms):
+            tf = f"_tf{i}_{j}"
+            tfs[tf] = f"size(_tk{i}) - size(array_remove(_tk{i}, _q[{j}])) AS {tf}"
+            wk = _dbl(fields[f] * idf_weight(n, stats["df"][(f, t)]))
+            if k1 is None:
+                parts.append(f"{wk} * {tf}")
+                continue
+            # operand order mirrors the oracle SQL exactly (IEEE doubles
+            # are deterministic per-op; only the order must match)
+            norm = f"{_dbl(b)} * size(_tk{i}) / {_dbl(stats['avglen'][f])}"
+            parts.append(
+                f"{wk} * ({tf} * {_dbl(k1 + 1.0)})"
+                f" / ({tf} + {_dbl(k1)} * ({_dbl(1.0)} - {_dbl(b)} + {norm}))"
+            )
+    return (
+        tok.selectExpr("*", *tfs.values())
+        .selectExpr("*", f"round({' + '.join(parts)}, 2) AS score")
+        .drop("_q", *tks, *tfs)
+    )
+
+
+def score_page(
+    scored: DataFrame, tiebreak: Column, page: int, limit: int
+) -> DataFrame:
+    """One page of ``with_fulltext_score`` rows by score desc, hits
+    only. The page is taken first (one top-k) and 0-score rows dropped
+    after: they sort behind every hit, so this equals paging the hits,
+    while a filter below the sort would be pushed under the scoring
+    projection and evaluate the whole score expression twice per row."""
+    top = paginate(scored, [F.col("score").desc()], tiebreak, page, limit)
+    return top.where(F.col("score") > 0)
+
+
 def fulltext_score(
     df: DataFrame,
     id_col: str,
@@ -253,127 +367,12 @@ def fulltext_score(
     k1: float | None = None,
     b: float = 0.75,
 ) -> DataFrame:
-    """Weighted multi-field tf·idf score — the in-engine approximation
-    of the reference's ES multi_match with per-field boosts
-    (search_api/api.py:94-100: title^4, description^3, ...; ES scores
-    with BM25 = idf-weighted, length-normalized tf).
-
-    score(doc) = Σ_field w_f · Σ_term tf(field, term) · idf(field, term)
-    idf(f, t)  = ln(1 + (N − df + 0.5)/(df + 0.5))   [BM25 idf]
-
-    Execution shape: each field is tokenized ONCE and exploded; tokens
-    are filtered to the query terms BEFORE the shuffle (the exchange
-    carries only matching tokens), then one hash aggregate sums the
-    per-token weight w_f·idf_{f,t} from a literal map — tokenization
-    can never be re-inlined per term by projection collapse. Only docs
-    with ≥1 term hit are returned (both consumers filter score > 0).
-
-    With ``k1=None`` (default) the score is plain tf·idf — no tf
-    saturation, no length normalization. Pass ``k1`` (e.g. 1.2) to get
-    the FULL BM25 formula the reference's ES deployment runs:
-
-    score(doc) = Σ_f Σ_t w_f · idf_{f,t} ·
-                 tf·(k1+1) / (tf + k1·(1 − b + b·len_f/avglen_f))
-
-    where len_f is the doc's token count in field f and avglen_f the
-    corpus mean (from the same single stats pass). Still pure Column
-    expressions: tokenize once per field, filter to query terms before
-    the shuffle (the exchange carries only matching tokens plus one
-    int field-length), hash-aggregate tf per (doc, field, term), then
-    one literal-map lookup per group computes the saturated
-    contribution."""
-    from functools import reduce
-
-    if stem:
-        # stem the query terms with the same chain the token stream
-        # goes through, so 'running' matches 'runs' (and 'бегущая'
-        # matches 'бегущий' under ru_en)
-        terms = _stem_terms(terms, stem)
-    terms = tuple(t for t in terms if t)
-    if not terms:
-        # empty query (or terms that stem away entirely): no doc can
-        # score — return an empty result of the contract schema instead
-        # of letting isin()/create_map() blow up on zero arguments
-        return df.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
-    if stats is None:
-        stats = corpus_term_stats(df, terms, tuple(fields), stem=stem)
-    n = stats["n"]
-
-    if k1 is not None:
-        analyzer = _analyzer(stem)
-        parts = []
-        for field in fields:
-            toks = analyzer(field)
-            parts.append(
-                df.select(
-                    F.col(id_col),
-                    F.lit(field).alias("_f"),
-                    F.size(toks).alias("_len"),
-                    F.explode(toks).alias("_t"),
-                ).where(F.col("_t").isin(*terms))
-            )
-        tokens = reduce(lambda a, b_: a.unionByName(b_), parts)
-        tf = tokens.groupBy(id_col, "_f", "_t", "_len").agg(
-            F.count(F.lit(1)).alias("_tf")
-        )
-        wk_entries, avglen_entries = [], []
-        for field, w in fields.items():
-            avglen_entries += [F.lit(field), F.lit(stats["avglen"][field])]
-            for term in terms:
-                wk_entries += [
-                    F.lit(f"{field}|{term}"),
-                    F.lit(w * idf_weight(n, stats["df"][(field, term)])),
-                ]
-        wk = F.element_at(
-            F.create_map(*wk_entries), F.concat(F.col("_f"), F.lit("|"), F.col("_t"))
-        )
-        avglen = F.element_at(F.create_map(*avglen_entries), F.col("_f"))
-        # operand order mirrors the oracle SQL exactly (IEEE doubles are
-        # deterministic per-op; only the order must match)
-        denom = F.col("_tf") + F.lit(k1) * (
-            F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("_len") / avglen
-        )
-        contrib = wk * (F.col("_tf") * F.lit(k1 + 1.0)) / denom
-        return tf.groupBy(id_col).agg(F.round(F.sum(contrib), 2).alias("score"))
-
-    if stem == "ru_en":
-        from etl_sprint_2_5_spark.functions.stem_ru import tokenize_ru_en
-
-        base_tokenize = tokenize_ru_en
-    else:
-        base_tokenize = tokenize
-    parts = [
-        df.select(
-            F.col(id_col),
-            F.lit(field).alias("_f"),
-            F.explode(base_tokenize(field)).alias("_t"),
-        )
-        for field in fields
-    ]
-    tokens = reduce(lambda a, b: a.unionByName(b), parts)
-    if stem == "ru_en":
-        from etl_sprint_2_5_spark.functions.stem_ru import stem_token_ru_en
-
-        # stopword tokens map to NULL and fall out at the isin filter
-        tokens = tokens.withColumn("_t", stem_token_ru_en("_t"))
-    elif stem:
-        from etl_sprint_2_5_spark.functions.stem import stem_token
-
-        tokens = tokens.withColumn("_t", stem_token("_t"))
-    tokens = tokens.where(F.col("_t").isin(*terms))
-    weight_entries = []
-    for field, w in fields.items():
-        for term in terms:
-            weight_entries += [
-                F.lit(f"{field}|{term}"),
-                F.lit(w * idf_weight(n, stats["df"][(field, term)])),
-            ]
-    token_weight = F.element_at(
-        F.create_map(*weight_entries), F.concat(F.col("_f"), F.lit("|"), F.col("_t"))
-    )
-    return tokens.groupBy(id_col).agg(
-        F.round(F.sum(token_weight), 2).alias("score")
-    )
+    """``(id_col, score)`` of the rows ``with_fulltext_score`` scores
+    above 0 (rounded) — the docs with at least one term hit. Spark
+    pushes the filter under the scoring projection, so the score is
+    evaluated twice per row; ranked consumers use ``score_page``."""
+    scored = with_fulltext_score(df, terms, fields, stats, stem, k1, b)
+    return scored.where(F.col("score") > 0).select(id_col, "score")
 
 
 def unigram_nll(

@@ -8,11 +8,12 @@ from pyspark.sql import functions as F
 
 from etl_sprint_2_5_spark.operators.textops import (
     LANG_MARKERS,
-    fulltext_score,
     language_id,
     quality_score,
+    score_page,
     token_stats,
     unigram_nll,
+    with_fulltext_score,
 )
 from etl_sprint_2_5_spark.plans.registry import materialize_release, query
 from etl_sprint_2_5_spark.sources.parquet import (
@@ -148,7 +149,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# fulltext oracle: mirrors fulltext_score's tf·idf exactly —
+# fulltext oracle: mirrors with_fulltext_score's tf·idf exactly —
 # idf = round(ln(1 + (N - df + 0.5)/(df + 0.5)), 6) from corpus doc
 # frequencies, per-term contribution = (w · idf) · tf, summed in the
 # written field-major/term-major order.
@@ -210,18 +211,13 @@ def fulltext_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, _ = prepared_fulltext_stats(
         d, sf_dir, ("spark", "window", "merge"), ("text", "source")
     )
-    scored = fulltext_score(
+    scored = with_fulltext_score(
         d,
-        "doc_id",
         terms=("spark", "window", "merge"),
         fields={"text": 3.0, "source": 1.0},
         stats=stats,
     )
-    return (
-        scored.where(F.col("score") > 0)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(20)
-    )
+    return score_page(scored, F.col("doc_id"), 1, 20).select("doc_id", "score")
 
 
 @query(
@@ -257,7 +253,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hashed_linear_score(d, "text", "doc_id").orderBy("doc_id")
 
 
-# BM25 oracle: full formula mirror of fulltext_score(k1=1.2, b=0.75).
+# BM25 oracle: full formula mirror of with_fulltext_score(k1=1.2, b=0.75).
 # All float constants use e0 notation so DuckDB parses them as DOUBLE
 # (bare 1.2 would be DECIMAL and change the arithmetic); operand order
 # matches the Spark expression tree exactly.
@@ -320,20 +316,15 @@ def fulltext_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, _ = prepared_fulltext_stats(
         d, sf_dir, ("spark", "window", "merge"), ("text", "source")
     )
-    scored = fulltext_score(
+    scored = with_fulltext_score(
         d,
-        "doc_id",
         terms=("spark", "window", "merge"),
         fields={"text": 3.0, "source": 1.0},
         stats=stats,
         k1=1.2,
         b=0.75,
     )
-    return (
-        scored.where(F.col("score") > 0)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(20)
-    )
+    return score_page(scored, F.col("doc_id"), 1, 20).select("doc_id", "score")
 
 
 _DUCK_SHINGLES_T = (
@@ -964,13 +955,12 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     standalone queries).
 
     Scale shape: each input ranking is the already-audited standalone
-    plan (term-filtered BM25 scoring, gemm partial-top-k cosine); the
-    fusion itself touches only 2×{_RRF_LIST} (id, rank) rows — a
-    full-outer join of two driver-size lists. At 100 TB you fuse
-    top-1000 lists, still bytes."""
+    plan (a top-k page of in-row BM25 scores, gemm partial-top-k
+    cosine); the fusion itself touches only 2×{_RRF_LIST} (id, rank)
+    rows — a full-outer join of two driver-size lists. At 100 TB you
+    fuse top-1000 lists, still bytes."""
     from etl_sprint_2_5_spark.artifacts import prepared_fulltext_stats
     from etl_sprint_2_5_spark.operators.similarity import brute_force_topk_gemm
-    from etl_sprint_2_5_spark.operators.textops import fulltext_score
     from etl_sprint_2_5_spark.sources.parquet import load_documents_spread
     from pyspark.sql import Window
 
@@ -978,9 +968,8 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, _ = prepared_fulltext_stats(
         d, sf_dir, ("spark", "window", "merge"), ("text", "source")
     )
-    scored = fulltext_score(
+    scored = with_fulltext_score(
         d,
-        "doc_id",
         terms=("spark", "window", "merge"),
         fields={"text": 3.0, "source": 1.0},
         stats=stats,
@@ -988,11 +977,8 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         b=0.75,
     )
     wt = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    trank = (
-        scored.where(F.col("score") > 0)
-        .withColumn("text_rank", F.row_number().over(wt).cast("long"))
-        .where(F.col("text_rank") <= _RRF_LIST)
-        .select("doc_id", "text_rank")
+    trank = score_page(scored, F.col("doc_id"), 1, _RRF_LIST).select(
+        "doc_id", F.row_number().over(wt).cast("long").alias("text_rank")
     )
 
     e = load_table(spark, "embeddings", sf_dir)

@@ -18,7 +18,9 @@ APP_NAME = "etl_sprint_2_5_spark"
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_spark(app_name: str = APP_NAME, shuffle_partitions: int | None = None) -> SparkSession:

@@ -145,3 +145,104 @@ def test_search_ru_en_analyzer(spark):
     # bad analyzer name is a 422
     with pytest.raises(BadRequest):
         ListParams(search="x", analyzer="de")
+
+
+def test_search_repeated_terms_score_once(movies):
+    """A repeated query term is one term (ES multi_match semantics),
+    not a duplicate key that crashes the scorer."""
+    once = list_movies(movies, ListParams(search="movie")).collect()
+    twice = list_movies(movies, ListParams(search="movie Movie movie")).collect()
+    assert once and [(r["id"], r["score"]) for r in twice] == [
+        (r["id"], r["score"]) for r in once
+    ]
+
+
+def test_search_pages_are_disjoint_and_continue_the_ranking(movies):
+    p1 = list_movies(movies, ListParams(search="movie", limit=7, page=1)).collect()
+    p2 = list_movies(movies, ListParams(search="movie", limit=7, page=2)).collect()
+    both = list_movies(movies, ListParams(search="movie", limit=14)).collect()
+    assert len(p1) == len(p2) == 7
+    assert not {r["id"] for r in p1} & {r["id"] for r in p2}
+    assert [r["id"] for r in p1 + p2] == [r["id"] for r in both]
+
+
+_MIRROR_ROWS = [
+    ("m1", "Night Train", None, ["Drama"], ["Ann Lee"], None, ["Bo Ray"]),
+    ("m2", "The Long Night", "a night of nights, night after night",
+     ["Drama", "Noir"], ["O'Brien"], ["Cy Dee"], []),
+    ("m3", "Back\\slash :t0", "o'brien's night", ["Comedy"], [], [], None),
+    ("m4", "Day One", "no match here", None, ["Ann Lee"], ["Lee Ann"], ["Ray"]),
+    ("m5", "Ray of Night", "train", ["Noir"], ["Ray Bo"], None, None),
+]
+
+
+def _mirror_movies(spark):
+    return spark.createDataFrame(
+        _MIRROR_ROWS,
+        "id string, title string, description string, "
+        "genres_names array<string>, actors_names array<string>, "
+        "writers_names array<string>, directors_names array<string>",
+    ).withColumn("imdb_rating", F.lit(5.0))
+
+
+def _mirror_pages(query: str, limit: int) -> list[list[tuple[str, float]]]:
+    """Pure-Python tf·idf search over _MIRROR_ROWS: the same tokenizer,
+    idf, field boosts and summation order as the engine, HALF_UP
+    round-2, ranked by (score desc, id), split into pages."""
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from etl_sprint_2_5_spark.api.query import SEARCH_FIELDS
+    from etl_sprint_2_5_spark.operators.textops import idf_weight
+
+    def toks(s):
+        return re.sub("[^a-z0-9]+", " ", s.lower()).split() if s else []
+
+    def text(v):
+        return " ".join(x for x in v if x is not None) if isinstance(v, list) else v
+
+    boosts = list(SEARCH_FIELDS.values())  # title, description, genres, actors, writers, directors
+    docs = [
+        (r[0], [toks(text(r[k])) for k in (1, 2, 3, 4, 5, 6)]) for r in _MIRROR_ROWS
+    ]
+    terms = list(dict.fromkeys(query.lower().split()))
+    n = len(docs)
+    ranked = []
+    for doc_id, fields in docs:
+        score = 0.0
+        for i, w in enumerate(boosts):
+            for t in terms:
+                dfc = sum(1 for _, fs in docs if t in fs[i])
+                score += (w * idf_weight(n, dfc)) * fields[i].count(t)
+        rounded = float(Decimal(repr(score)).quantize(Decimal("0.01"), ROUND_HALF_UP))
+        if rounded > 0:
+            ranked.append((doc_id, rounded))
+    ranked.sort(key=lambda p: (-p[1], p[0]))
+    return [ranked[k:k + limit] for k in range(0, len(ranked), limit)] or [[]]
+
+
+@pytest.mark.parametrize(
+    "query",
+    ["night", "night train", "o'brien night", "back\\slash :t0 ray",
+     "zzz", "night zzz", "lee ann ray drama"],
+)
+def test_search_pages_match_python_mirror(spark, query):
+    """Terms with quotes, backslashes or parameter-marker syntax are
+    plain data, a term matching nothing adds nothing, and NULL fields
+    (m1/m5 have no description or writers) still score on the others."""
+    movies = _mirror_movies(spark)
+    want = _mirror_pages(query, limit=2)
+    for page, expected in enumerate(want, start=1):
+        got = list_movies(movies, ListParams(search=query, limit=2, page=page))
+        assert [(r["id"], r["score"]) for r in got.collect()] == expected, page
+    past = list_movies(movies, ListParams(search=query, limit=2, page=len(want) + 1))
+    assert past.collect() == []
+
+
+def test_search_scores_rows_with_null_fields(spark):
+    got = {
+        r["id"]: r["score"]
+        for r in list_movies(_mirror_movies(spark), ListParams(search="train")).collect()
+    }
+    assert set(got) == {"m1", "m5"}  # m1: title only, NULL description/writers
+    assert all(s > 0 for s in got.values())

@@ -378,43 +378,45 @@ def test_pg_copy_read_script_framing(spark, dsn):
         "(1, 'plain'), (2, NULL), (3, ''), (4, E'multi\\nline'), "
         "(5, '\\N')",
     )
-    frag, prelude, epilogue, stage = pg_copy.id_restriction_script(
-        [1, 2, 3, 4, 5], threshold=0
-    )
-    assert stage is not None and prelude and epilogue
-    a, b, c = pg_copy.pg_copy_read_script(
-        spark,
-        dsn,
-        [
-            (
-                f"SELECT id, txt FROM frame_t WHERE id IN ({frag}) "
-                "ORDER BY id",
-                "id long, txt string",
-            ),
-            ("SELECT id FROM frame_t WHERE id > 100", "id long"),
-            ("SELECT count(*) AS n FROM frame_t", "n long"),
-        ],
-        prelude=prelude,
-        epilogue=epilogue,
-    )
-    rows = {r.id: r.txt for r in a.collect()}
-    assert rows[1] == "plain"
-    assert rows[2] is None  # SQL NULL survives the frame
-    assert rows[3] == ""  # empty string stays distinct from NULL
-    assert rows[4] == "multi\nline"  # quoted newline, no frame split
-    assert rows[5] == "\\N"  # literal marker string stays a string
-    assert a.count() == 5
-    assert b.count() == 0  # empty result set frames cleanly
-    assert c.collect()[0].n == 5
-    # the staged table was dropped by the epilogue in the SAME spawn
-    left = pg_copy.pg_exec(
-        dsn,
-        "SELECT count(*) FROM pg_class WHERE relname LIKE 'ids_stage_%'",
-    ).strip()
-    assert left == "0"
-    # leave the module-scoped cluster exactly as found (tests must not
-    # depend on each other's residue)
-    pg_copy.pg_exec(dsn, "DROP TABLE frame_t")
+    try:
+        frag, prelude, epilogue, stage = pg_copy.id_restriction_script(
+            [1, 2, 3, 4, 5], threshold=0
+        )
+        assert stage is not None and prelude and epilogue
+        a, b, c = pg_copy.pg_copy_read_script(
+            spark,
+            dsn,
+            [
+                (
+                    f"SELECT id, txt FROM frame_t WHERE id IN ({frag}) "
+                    "ORDER BY id",
+                    "id long, txt string",
+                ),
+                ("SELECT id FROM frame_t WHERE id > 100", "id long"),
+                ("SELECT count(*) AS n FROM frame_t", "n long"),
+            ],
+            prelude=prelude,
+            epilogue=epilogue,
+        )
+        rows = {r.id: r.txt for r in a.collect()}
+        assert rows[1] == "plain"
+        assert rows[2] is None  # SQL NULL survives the frame
+        assert rows[3] == ""  # empty string stays distinct from NULL
+        assert rows[4] == "multi\nline"  # quoted newline, no frame split
+        assert rows[5] == "\\N"  # literal marker string stays a string
+        assert a.count() == 5
+        assert b.count() == 0  # empty result set frames cleanly
+        assert c.collect()[0].n == 5
+        # the staged table was dropped by the epilogue in the SAME spawn
+        left = pg_copy.pg_exec(
+            dsn,
+            "SELECT count(*) FROM pg_class WHERE relname LIKE 'ids_stage_%'",
+        ).strip()
+        assert left == "0"
+    finally:
+        # leave the module-scoped cluster exactly as found, also when an
+        # assertion fails (tests must not depend on each other's residue)
+        pg_copy.pg_exec(dsn, "DROP TABLE frame_t")
 
 
 def test_pg_copy_read_script_error_aborts_whole_script(spark, dsn):

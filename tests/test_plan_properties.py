@@ -188,3 +188,61 @@ def test_repeated_substrings_skew_bounded(spark):
         assert "doc_id" in spec.split(",")[0], (spec, plan)
     # semi-join probe present
     assert "LeftSemi" in plan, plan
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """Physical plan text of every SQL execution ``action`` runs, read
+    from the SQL status store (present with the UI disabled)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id() -> int:
+        execs = store.executionsList()
+        return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+    first = last_id() + 1
+    action()
+    return [
+        store.execution(i).get().physicalPlanDescription()
+        for i in range(first, last_id() + 1)
+        if store.execution(i).isDefined()
+    ]
+
+
+def test_search_is_one_scan_per_job_with_no_shuffle(spark, tmp_path):
+    """A search runs two executions — the term-stats aggregate and the
+    page top-k — each scanning the served view once. The movie rows
+    are scored in place: no Generate (explode), no hash-partitioned
+    Exchange, no Window and no join back to the movies."""
+    import re
+
+    from etl_sprint_2_5_spark.api.query import ListParams, list_movies
+    from etl_sprint_2_5_spark.pipeline.movie_gold import movies_gold
+    from etl_sprint_2_5_spark.pipeline.normalize import normalize
+    from tests.fixtures_legacy import as_dataframes
+
+    path = str(tmp_path / "movies_gold")
+    movies_gold(normalize(*as_dataframes(spark))).write.parquet(path)
+    movies = spark.read.parquet(path)
+    params = ListParams(search="movie drama movie", limit=5, page=2)
+    plans = _executed_plans(spark, lambda: list_movies(movies, params).collect())
+    assert len(plans) == 2, plans
+    for plan in plans:
+        tree = plan.split("\n\n")[0]
+        for op in ("Generate", "Window", "Join"):
+            assert op not in tree, plan
+        assert "hashpartitioning" not in plan, plan
+        assert len(set(re.findall(r"Scan parquet\s*\((\d+)\)", tree))) == 1, plan
+    assert "TakeOrderedAndProject" in plans[1]
+
+
+def test_paginate_is_a_top_k_not_a_window(spark):
+    """paginate plans orderBy → offset → limit as one
+    TakeOrderedAndProject, not a global single-partition row_number."""
+    from pyspark.sql import functions as F
+
+    from etl_sprint_2_5_spark.operators.pagination import paginate
+
+    plan = _plan(spark, "paginated_listing")
+    assert "TakeOrderedAndProject" in plan and "Window" not in plan, plan
+    page = paginate(spark.range(100), [F.col("id").desc()], F.col("id"), 3, 10)
+    assert [r.id for r in page.collect()] == list(range(79, 69, -1))

@@ -276,3 +276,49 @@ def test_kneser_ney_formula_normalizes_to_one():
         assert abs(s3 - 1.0) < 1e-9, ((w1, w2), s3)
     # and all probabilities are strictly positive (interpolation floor)
     assert min(p3(w1, w2, w3) for (w1, w2) in ctx2 for w3 in vocab) > 0
+
+
+def test_tokenize_sql_matches_tokenize(spark):
+    """The SQL-text tokenizer the scorer parses is the Column one."""
+    df = spark.createDataFrame(
+        [("Hello, World!!  foo-bar 42",), ("  ",), (None,), ("O'Brien\\x :t0",)],
+        "s string",
+    )
+    rows = df.select(
+        T.tokenize("s").alias("a"), F.expr(T.tokenize_sql("s")).alias("b")
+    ).collect()
+    assert all(r["a"] == r["b"] for r in rows)
+    assert rows[3]["b"] == ["o", "brien", "x", "t0"]
+
+
+def test_fulltext_score_repeated_terms(spark):
+    """A repeated term counts once on every analyzer path, instead of
+    raising a duplicate-map-key error on the unstemmed ones."""
+    from etl_sprint_2_5_spark.operators.textops import fulltext_score
+
+    df = spark.createDataFrame(
+        [("d1", "spark spark rows"), ("d2", "rows"), ("d3", "sparks fly")],
+        "id string, text string",
+    )
+    for kwargs in ({}, {"k1": 1.2}, {"stem": True}, {"stem": "ru_en"}):
+        once = fulltext_score(df, "id", ("spark",), {"text": 1.0}, **kwargs)
+        twice = fulltext_score(df, "id", ("spark", "spark"), {"text": 1.0}, **kwargs)
+        assert sorted(twice.collect()) == sorted(once.collect()), kwargs
+        assert once.count() >= 1
+
+
+def test_with_fulltext_score_keeps_every_row(spark):
+    """The row-keeping scorer returns every input row and column with
+    its score (0.0 without a hit); a NULL field scores as empty."""
+    from etl_sprint_2_5_spark.operators.textops import with_fulltext_score
+
+    df = spark.createDataFrame(
+        [("d1", "spark", None, 1), ("d2", None, "spark spark", 2), ("d3", "x", "y", 3)],
+        "id string, a string, b string, extra int",
+    )
+    out = with_fulltext_score(df, ("spark",), {"a": 2.0, "b": 1.0})
+    assert out.columns == ["id", "a", "b", "extra", "score"]
+    got = {r["id"]: r["score"] for r in out.collect()}
+    assert got["d3"] == 0.0 and got["d1"] > 0 and got["d2"] > 0
+    empty = with_fulltext_score(df, (), {"a": 1.0})
+    assert {r["score"] for r in empty.collect()} == {0.0}
