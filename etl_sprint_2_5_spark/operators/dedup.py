@@ -75,14 +75,6 @@ def token_fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
-    """Per-doc distinct n-word shingle set (array column, no shuffle)."""
-    return df.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(text_col, n)).alias("shingles"),
-    )
-
-
 def hashed_shingle_sets(
     df: DataFrame, text_col: str, id_col: str, n: int = 3
 ) -> DataFrame:

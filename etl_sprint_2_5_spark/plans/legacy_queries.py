@@ -570,6 +570,12 @@ def legacy_full_load_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_sprint_2_5_spark.pipeline.normalize import normalize
     from etl_sprint_2_5_spark.sources.sqlite_src import sqlite_range_read
 
+    if not Path(_REF_DB).is_file():
+        raise FileNotFoundError(
+            f"legacy_full_load_live reads the reference's db.sqlite at "
+            f"{_REF_DB}, which is absent on this host"
+        )
+
     def rd(table: str, schema: str, n: int = 8) -> DataFrame:
         return sqlite_range_read(
             spark, _REF_DB, table, pk="rowid", schema=schema,

@@ -4,8 +4,9 @@ The reference reads SQLite full-load scans (etl.py:62-117) and
 PostgreSQL keyset batches (daemon.py:90-129) through driver-side
 cursors. The Spark path is ``spark.read.format("jdbc")`` with the
 options below; no database ships in this container, so the option
-construction is factored pure (unit-testable) and the actual read is a
-thin call.
+construction is factored pure (unit-testable); the read itself is
+``spark.read.format("jdbc").options(**jdbc_options(...)).load()``,
+with the vendor driver jar on the executor classpath.
 
 Scale contract (the part that matters at 1000 executors):
 
@@ -22,8 +23,6 @@ Scale contract (the part that matters at 1000 executors):
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def jdbc_options(
@@ -64,9 +63,3 @@ def keyset_subquery(
         f"OR {ts_col} > '{cursor_ts}' "
         f"ORDER BY {ts_col}, {id_col} LIMIT {batch_size}) AS keyset_batch"
     )
-
-
-def read_jdbc(spark: SparkSession, **options: str) -> DataFrame:
-    """Execute the JDBC read. Requires the vendor driver jar on the
-    executor classpath (not shipped in this container)."""
-    return spark.read.format("jdbc").options(**options).load()

@@ -145,8 +145,8 @@ class Pipeline:
         bounded frame instead of executing the (join/agg-heavy)
         rebuild plan an extra time. The sink checks the superset
         contract structurally (stray staged buckets abort the
-        commit), so a rebuild that ever emitted an out-of-set key
-        would fail loudly, not lose rows."""
+        commit with a ValueError), so a rebuild that ever emitted an
+        out-of-set key fails loudly and at once, not lose rows."""
         if self.sink_mode == "delta":
             from etl_sprint_2_5_spark.streaming.sink import (
                 compact_bucketed_view,
@@ -199,8 +199,9 @@ def with_backoff(
 
     ``ValueError`` is re-raised at once: the sink raises it for
     contract violations (key mismatch, rejected type change, pending
-    deltas) that no retry can cure, so sleeping through the schedule
-    would only delay the error."""
+    deltas, a probe that is not a superset of the batch's keys) that
+    no retry can cure, so sleeping through the schedule would only
+    delay the error."""
     delay = start
     for attempt in range(retries + 1):
         try:

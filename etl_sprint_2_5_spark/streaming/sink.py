@@ -172,6 +172,21 @@ def dir_bytes(path: str) -> int:
 # unreferenced data dirs are garbage, swept by the next successful
 # commit's GC; there is no heal step and no crash window that loses
 # or tears data.
+#
+# Every write verb (bucketed upsert and delete, delta append,
+# compaction, split) commits through ONE optimistic-concurrency loop,
+# ``_optimistic_commit``. Each attempt loads the latest manifest and
+# hands it to the verb, which validates against it (key, pending
+# deltas, schema stamp, log depth), stages its new rows through
+# ``_stage_buckets`` and builds the next manifest with
+# ``_next_manifest``. The loop then publishes by compare-and-swap. A
+# win stamps the published version and runs the incremental GC; a
+# loss means a concurrent writer published first, so the next attempt
+# re-merges against the winner's manifest, and the losing attempt's
+# dirs stay unreferenced garbage for GC/vacuum. Single-writer callers
+# never loop. A violated contract raises ValueError at once (no retry
+# can cure it); ``_COMMIT_ATTEMPTS`` lost publishes raise
+# RuntimeError.
 # --------------------------------------------------------------------
 
 _MANIFEST_DIR = "_manifests"
@@ -419,6 +434,116 @@ def _gc_unreferenced(
                 pass
 
 
+#: Publish attempts a commit makes before giving up. A lost attempt
+#: costs one restage (a delta append only re-appends its entry), so
+#: the budget bites only under pathological writer contention.
+_COMMIT_ATTEMPTS = 10
+
+
+def _optimistic_commit(
+    path: str,
+    what: str,
+    attempt,  # noqa: ANN001 - (dict | None) -> (dict | None, result)
+    keep_versions: int,
+    gc_grace_seconds: float,
+):
+    """The one commit loop (see the module block above).
+    ``attempt(man)`` gets the latest manifest and returns ``(doc,
+    result)``: ``doc`` is the manifest to publish, or None when there
+    is nothing to commit and ``result`` returns as is."""
+    for _ in range(_COMMIT_ATTEMPTS):
+        doc, result = attempt(load_manifest(path))
+        if doc is None:
+            return result
+        pub_v = _publish_manifest(path, doc)  # THE commit point (CAS)
+        if pub_v is not None:
+            doc["version"] = pub_v  # may have bumped past a torn name
+            _gc_unreferenced(path, doc, keep_versions, gc_grace_seconds)
+            return result
+    raise RuntimeError(
+        f"{what} at {path!r} lost the manifest publish race "
+        f"{_COMMIT_ATTEMPTS} times — pathological writer contention"
+    )
+
+
+def _stage_buckets(
+    path: str, rows: DataFrame, kbs: list[int], kind: str = "c"
+) -> tuple[str, dict[str, str]]:
+    """Write ``rows`` (carrying ``_kb``) as one new immutable dir per
+    bucket: stage under ``_stage-<id>``, then move each bucket to
+    ``data/kb=N/<kind>-<id>``. Returns ``(id, {kb: rel})``; a bucket
+    of ``kbs`` with no rows gets no dir. The stage dir is removed on
+    every path, a failed write included.
+
+    Any staged bucket outside ``kbs`` aborts before anything moves: a
+    row there would be silently dropped with the stage dir, so the
+    caller's probe-superset contract (``probe_keys``) is checked, not
+    trusted."""
+    commit_id = uuid.uuid4().hex[:12]
+    stage = os.path.join(path, f"_stage-{commit_id}")
+    try:
+        # one shuffle on the bucket id → exactly one file per bucket
+        # (partitionBy without it writes |tasks|×|buckets| files)
+        rows.repartition(len(kbs), F.col("_kb")).write.mode(
+            "overwrite"
+        ).partitionBy("_kb").parquet(stage)
+        staged = {
+            int(d.split("=", 1)[1])
+            for d in os.listdir(stage)
+            if d.startswith("_kb=")
+        }
+        stray = staged - {int(kb) for kb in kbs}
+        if stray:
+            raise ValueError(
+                f"staged rows at {path!r} landed in bucket(s) "
+                f"{sorted(stray)} absent from the touched-bucket probe — "
+                "probe_keys is not a superset of the batch's keys"
+            )
+        moved: dict[str, str] = {}
+        for kb in sorted(staged):
+            rel = f"{_DATA_DIR}/kb={kb}/{kind}-{commit_id}"
+            dst = os.path.join(path, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            # dst is a fresh id — nothing references it until a
+            # manifest does, so this move needs no atomicity
+            os.replace(os.path.join(stage, f"_kb={kb}"), dst)
+            moved[str(kb)] = rel
+        return commit_id, moved
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _next_manifest(
+    man: dict | None, key: str, n_buckets: int, buckets: dict, **stamps
+) -> dict:
+    """The manifest a commit publishes on top of ``man``: version + 1
+    (1 for a fresh view), carrying ``man``'s ``rebucket`` marker and
+    stamped ``fields``. Mid-migration the marker must ride along:
+    dropping it would reset every writer's routing to the old layout
+    while the map already holds new-layout ids, forking split buckets'
+    keys into duplicate dirs. A keyword in ``stamps`` replaces the
+    carried value and None drops it — widening writers restamp
+    ``fields``, and only ``split_buckets`` edits ``rebucket``."""
+    doc = {
+        "version": (int(man["version"]) + 1) if man else 1,
+        "key": key,
+        "n_buckets": n_buckets,
+        "buckets": buckets,
+    }
+    carried = {k: man[k] for k in ("rebucket", "fields") if man and man.get(k)}
+    carried.update(stamps)
+    doc.update({k: v for k, v in carried.items() if v is not None})
+    return doc
+
+
+def _check_key(path: str, man: dict | None, key: str) -> None:
+    if man is not None and man["key"] != key:
+        raise ValueError(
+            f"bucketed view at {path!r} is keyed by {man['key']!r}, "
+            f"not {key!r}"
+        )
+
+
 #: Default :func:`vacuum` grace — deliberately conservative (like the
 #: retention check Delta's VACUUM enforces): under ``grace_seconds=0``
 #: every item is "aged", so a default-arg call would sweep a CONCURRENT
@@ -611,8 +736,7 @@ def upsert_keyed_parquet_bucketed(
     manifest) are read as one pruned scan, merged with the batch
     (anti-join on incoming keys), and written partitioned by bucket in
     a single pass; the commit is then file moves of invisible new dirs
-    plus ONE manifest publish (see the module block above for the
-    crash contract — no rename atomicity required anywhere).
+    plus ONE manifest publish (see the module block above).
 
     ``n_buckets`` is STAMPED into the manifest at view creation and
     the stamped count wins on every later call — so a caller that
@@ -634,27 +758,17 @@ def upsert_keyed_parquet_bucketed(
     — inside the merge write. A probed-but-absent bucket keeps its
     current manifest entry unless it has live rows to rewrite (same
     anti-join; byte-identical result). A batch row landing in an
-    UN-probed bucket would be silently dropped, so the commit lists
-    the staged dirs and raises loudly on any stray bucket — the
-    contract is checked, not trusted."""
+    UN-probed bucket would be silently dropped, so the staging step
+    raises ValueError on any stray bucket — the contract is checked,
+    not trusted."""
     for col in _RESERVED_COLS:
         if col in batch.columns:
             raise ValueError(f"batch column {col!r} is reserved by the sink")
-    # optimistic-concurrency loop: each attempt merges against the
-    # manifest it read and publishes version+1 via compare-and-swap;
-    # losing the CAS to a concurrent writer means re-merging against
-    # THEIR manifest (the losing attempt's data dirs are unreferenced
-    # garbage, swept by the next successful GC). Single-writer callers
-    # never loop.
-    for _ in range(5):
-        man = load_manifest(path)
+
+    def attempt(man: dict | None):
         nb = n_buckets
         if man is not None:
-            if man["key"] != key:
-                raise ValueError(
-                    f"bucketed view at {path!r} is keyed by {man['key']!r}, "
-                    f"not {key!r}"
-                )
+            _check_key(path, man, key)
             _require_no_pending_deltas(path, man, "upsert_keyed_parquet_bucketed")
             nb = int(man["n_buckets"])  # stamped count wins — no drift
         fields = _widen_fields(spark, path, man, batch.schema)  # fail fast
@@ -680,120 +794,44 @@ def upsert_keyed_parquet_bucketed(
             )
             if not touched:
                 if probe_keys is not None and not b.isEmpty():
-                    raise RuntimeError(
+                    raise ValueError(
                         "upsert_keyed_parquet_bucketed: probe_keys is "
                         "empty but the batch is not — the superset "
                         "contract is violated"
                     )
-                return 0
-            n = _commit_touched_buckets(
-                spark, b, touched, path, key, kb_of, nb, man,
-                keep_versions, gc_grace_seconds, fields,
-            )
-            if n is not None:
-                return n
+                return None, 0
+            buckets: dict[str, str] = dict(man["buckets"]) if man else {}
+            existing = [
+                os.path.join(path, buckets[str(kb)])
+                for kb in touched
+                if str(kb) in buckets
+            ]
+            if existing:
+                # bucket id recomputed from the key (deterministic
+                # hash) so the pruned multi-dir read needs no partition
+                # column inference. Old dirs are read under the
+                # PREVIOUSLY stamped schema (a widened batch would
+                # otherwise fail the union), and the union NULL-fills
+                # the widened columns for old rows.
+                old = _stamped_reader(spark, man).parquet(*existing)
+                keys = b.select(key).distinct()
+                merged = old.withColumn("_kb", kb_of).join(
+                    F.broadcast(keys), key, "left_anti"
+                ).unionByName(b, allowMissingColumns=True)
+            else:
+                merged = b
+            # a touched bucket without staged rows (the batch had the
+            # key set but every row was replaced-away) keeps its entry
+            _, moved = _stage_buckets(path, merged, touched)
         finally:
             b.unpersist()
-    raise RuntimeError(
-        f"bucketed upsert at {path!r} lost the manifest publish race 5 "
-        "times — pathological writer contention"
+        buckets.update(moved)
+        doc = _next_manifest(man, key, nb, buckets, fields=fields)
+        return doc, len(touched)
+
+    return _optimistic_commit(
+        path, "bucketed upsert", attempt, keep_versions, gc_grace_seconds
     )
-
-
-def _commit_touched_buckets(
-    spark: SparkSession,
-    b: DataFrame,
-    touched: list[int],
-    path: str,
-    key: str,
-    kb_of,  # noqa: ANN001
-    n_buckets: int,
-    man: dict | None,
-    keep_versions: int = 2,
-    gc_grace_seconds: float = 0.0,
-    fields: list | None = None,
-) -> int | None:
-    buckets: dict[str, str] = dict(man["buckets"]) if man else {}
-    existing = [
-        os.path.join(path, buckets[str(kb)])
-        for kb in touched
-        if str(kb) in buckets
-    ]
-    if existing:
-        # bucket id recomputed from the key (deterministic hash) so the
-        # pruned multi-dir read needs no partition-column inference.
-        # Old dirs are read under the PREVIOUSLY stamped schema (a
-        # widened batch would otherwise fail the union), and the union
-        # NULL-fills the widened columns for old rows.
-        reader = spark.read
-        if man and man.get("fields"):
-            reader = reader.schema(_stamped_ddl(man["fields"]))
-        old = reader.parquet(*existing).withColumn("_kb", kb_of)
-        keys = b.select(key).distinct()
-        merged = old.join(F.broadcast(keys), key, "left_anti").unionByName(
-            b, allowMissingColumns=True
-        )
-    else:
-        merged = b
-    commit_id = uuid.uuid4().hex[:12]
-    stage = os.path.join(path, f"_stage-{commit_id}")
-    # one shuffle on the bucket id → exactly one file per touched
-    # bucket (partitionBy without it writes |tasks|×|buckets| files)
-    merged.repartition(len(touched), F.col("_kb")).write.mode(
-        "overwrite"
-    ).partitionBy("_kb").parquet(stage)
-    # the probe_keys superset contract is CHECKED, not trusted: a
-    # batch row whose bucket the probe missed would fall through the
-    # move loop below and be silently dropped by the stage cleanup —
-    # so any staged bucket outside the touched set aborts the commit
-    # (nothing moved, no manifest published, target unchanged)
-    staged_kbs = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(stage)
-        if d.startswith("_kb=")
-    }
-    stray = staged_kbs - {int(kb) for kb in touched}
-    if stray:
-        shutil.rmtree(stage, ignore_errors=True)
-        raise RuntimeError(
-            "bucketed upsert: batch rows landed in bucket(s) "
-            f"{sorted(stray)} absent from the touched-bucket probe — "
-            "probe_keys is not a superset of the batch's keys"
-        )
-    for kb in touched:
-        src = os.path.join(stage, f"_kb={kb}")
-        if not os.path.exists(src):
-            # batch had the key set but every row was replaced-away:
-            # keep the bucket's current manifest entry
-            continue
-        rel = f"{_DATA_DIR}/kb={kb}/c-{commit_id}"
-        dst = os.path.join(path, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        # dst is a fresh uuid — nothing references it until the
-        # manifest below does, so this move needs no atomicity
-        os.replace(src, dst)
-        buckets[str(kb)] = rel
-    shutil.rmtree(stage, ignore_errors=True)
-    doc = {
-        "version": (int(man["version"]) + 1) if man else 1,
-        "key": key,
-        "n_buckets": n_buckets,
-        "buckets": buckets,
-    }
-    if man and man.get("rebucket"):
-        # mid-migration: dropping the marker would reset every writer's
-        # routing to the old layout while the map already holds
-        # new-layout ids — keys of split buckets would fork into
-        # duplicate dirs. Carried verbatim; only split_buckets edits it.
-        doc["rebucket"] = man["rebucket"]
-    if fields is not None:
-        doc["fields"] = fields
-    pub_v = _publish_manifest(path, doc)  # THE commit point (CAS)
-    if pub_v is None:
-        return None  # lost to a concurrent writer — caller re-merges
-    doc["version"] = pub_v  # may have bumped past a torn file's name
-    _gc_unreferenced(path, doc, keep_versions, gc_grace_seconds)
-    return len(touched)
 
 
 def _is_vanished_file_error(exc: BaseException) -> bool:
@@ -937,10 +975,7 @@ def read_bucketed_view(
             if kb not in touched
         )
         if untouched:
-            reader = spark.read
-            if man.get("fields"):
-                reader = reader.schema(_stamped_ddl(man["fields"]))
-            df = reader.parquet(*untouched).unionByName(
+            df = _stamped_reader(spark, man).parquet(*untouched).unionByName(
                 merged, allowMissingColumns=True
             )
         else:
@@ -949,12 +984,7 @@ def read_bucketed_view(
         dirs = sorted(
             os.path.join(path, rel) for rel in man["buckets"].values()
         )
-        reader = spark.read
-        if man.get("fields"):
-            # explicit stamped schema: mixed-generation dirs NULL-fill
-            # widened columns per file, no mergeSchema footer sweep
-            reader = reader.schema(_stamped_ddl(man["fields"]))
-        df = reader.parquet(*dirs)
+        df = _stamped_reader(spark, man).parquet(*dirs)
     if _ReresolvingView is not None and isinstance(df, _ClassicDataFrame):
         return _ReresolvingView(df._jdf, spark, path, version)
     return df  # pragma: no cover - non-classic session
@@ -1022,10 +1052,7 @@ def _snapshot_read(
                 "view) — cannot construct an empty typed snapshot"
             )
         return spark.read.parquet(*all_dirs).limit(0)
-    reader = spark.read
-    if man.get("fields"):
-        reader = reader.schema(_stamped_ddl(man["fields"]))
-    return reader.parquet(*dirs)
+    return _stamped_reader(spark, man).parquet(*dirs)
 
 
 def snapshot_diff_views(
@@ -1087,23 +1114,18 @@ def delete_keys_bucketed(
       :func:`vacuum`/later commits age them out — the same
       retention-vs-erasure trade Delta documents for GDPR workloads.
 
-    Commit shape is unchanged: stage → move invisible dirs → ONE
-    manifest CAS publish → incremental GC; concurrent writers re-merge
-    via the same optimistic loop. Returns the number of buckets
-    rewritten or dropped (0 when no doomed key maps to a live bucket).
+    Commits through the module's one commit loop (see the manifest
+    block above). Returns the number of buckets rewritten or dropped
+    (0 when no doomed key maps to a live bucket).
 
     Reference parity: postgres_to_es/daemon.py:358-381 upserts only —
     deletion is beyond-reference surface required by any pipeline
     subject to erasure requests."""
-    for _ in range(5):
-        man = load_manifest(path)
+
+    def attempt(man: dict | None):
         if man is None or not man["buckets"]:
-            return 0  # nothing committed — nothing to forget
-        if man["key"] != key:
-            raise ValueError(
-                f"bucketed view at {path!r} is keyed by {man['key']!r}, "
-                f"not {key!r}"
-            )
+            return None, 0  # nothing committed — nothing to forget
+        _check_key(path, man, key)
         _require_no_pending_deltas(path, man, "delete_keys_bucketed")
         _check_key_type(path, man, keys.select(key).schema)
         nb = int(man["n_buckets"])  # stamped count wins — no drift
@@ -1117,53 +1139,23 @@ def delete_keys_bucketed(
                 if str(r["_kb"]) in buckets
             )
             if not touched:
-                return 0
+                return None, 0
             existing = [os.path.join(path, buckets[str(kb)]) for kb in touched]
-            reader = spark.read
-            if man.get("fields"):
-                reader = reader.schema(_stamped_ddl(man["fields"]))
-            old = reader.parquet(*existing).withColumn("_kb", kb_of)
-            remaining = old.join(
+            old = _stamped_reader(spark, man).parquet(*existing)
+            remaining = old.withColumn("_kb", kb_of).join(
                 F.broadcast(doomed.select(key)), key, "left_anti"
             )
-            commit_id = uuid.uuid4().hex[:12]
-            stage = os.path.join(path, f"_stage-{commit_id}")
-            remaining.repartition(len(touched), F.col("_kb")).write.mode(
-                "overwrite"
-            ).partitionBy("_kb").parquet(stage)
-            for kb in touched:
-                src = os.path.join(stage, f"_kb={kb}")
-                rel = f"{_DATA_DIR}/kb={kb}/c-{commit_id}"
-                dst = os.path.join(path, rel)
-                if os.path.exists(src):
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.replace(src, dst)
-                    buckets[str(kb)] = rel
-                else:
-                    # every row of this bucket was deleted
-                    buckets.pop(str(kb), None)
-            shutil.rmtree(stage, ignore_errors=True)
-            doc = {
-                "version": int(man["version"]) + 1,
-                "key": key,
-                "n_buckets": nb,
-                "buckets": buckets,
-            }
-            if man.get("rebucket"):
-                doc["rebucket"] = man["rebucket"]  # mid-migration marker
-            if man.get("fields"):
-                doc["fields"] = man["fields"]  # deletes never evolve
-            pub_v = _publish_manifest(path, doc)  # THE commit point
-            if pub_v is None:
-                continue  # lost the CAS — re-merge against the winner
-            doc["version"] = pub_v
-            _gc_unreferenced(path, doc, keep_versions, gc_grace_seconds)
-            return len(touched)
+            _, moved = _stage_buckets(path, remaining, touched)
         finally:
             doomed.unpersist()
-    raise RuntimeError(
-        f"bucketed delete at {path!r} lost the manifest publish race 5 "
-        "times — pathological writer contention"
+        for kb in touched:
+            # replaced by its staged dir, or every row of it was deleted
+            buckets.pop(str(kb))
+        buckets.update(moved)
+        return _next_manifest(man, key, nb, buckets), len(touched)
+
+    return _optimistic_commit(
+        path, "bucketed delete", attempt, keep_versions, gc_grace_seconds
     )
 
 
@@ -1328,6 +1320,18 @@ def _stamped_ddl(fields: list, with_deleted: bool = False) -> str:
     return ", ".join(cols)
 
 
+def _stamped_reader(
+    spark: SparkSession, man: dict, with_deleted: bool = False
+):
+    """``spark.read`` under ``man``'s stamped schema: mixed-generation
+    dirs NULL-fill widened columns per file, with no mergeSchema footer
+    sweep. Pre-evolution manifests (no stamp) keep the inferred read."""
+    reader = spark.read
+    if man.get("fields"):
+        reader = reader.schema(_stamped_ddl(man["fields"], with_deleted))
+    return reader
+
+
 def _require_no_pending_deltas(path: str, man: dict, fn: str) -> None:
     if man.get("delta_commits"):
         raise ValueError(
@@ -1355,12 +1359,8 @@ def _merged_delta_read(
     from functools import reduce
 
     key = man["key"]
-    # with a stamped schema every generation is read under ONE explicit
-    # schema (missing columns NULL-fill per file — no mergeSchema
-    # footer sweep); pre-evolution manifests keep the inferred read
-    reader = spark.read
-    if man.get("fields"):
-        reader = reader.schema(_stamped_ddl(man["fields"], with_deleted=True))
+    # every generation is read under ONE stamped schema
+    reader = _stamped_reader(spark, man, with_deleted=True)
     parts: list[DataFrame] = []
     base = [
         os.path.join(path, rel)
@@ -1432,7 +1432,7 @@ def _check_pending_depth(
             "1 + pending scans — schedule compact_bucketed_view(), or "
             "set max_pending_deltas on the writers to fail loudly",
             RuntimeWarning,
-            stacklevel=4,
+            stacklevel=6,
         )
 
 
@@ -1450,117 +1450,64 @@ def _append_delta(
     for col in _RESERVED_COLS:
         if col in rows.columns:
             raise ValueError(f"batch column {col!r} is reserved by the sink")
-    for _ in range(5):  # outer: restage only if the stamped bucket
-        #                  count changed under us (first-commit race)
-        man = load_manifest(path)
+    # the staged entry is kept across attempts: its dirs are FINAL, so
+    # losing the CAS only re-appends the entry onto the winner's log,
+    # never a data rewrite (the cheap half of optimistic concurrency
+    # that rewrite mode doesn't get)
+    staged_layout = entry = None
+    n_touched = 0
+
+    def attempt(man: dict | None):
+        nonlocal staged_layout, entry, n_touched
+        _check_key(path, man, key)
+        if entry is not None and man is not None and any(
+            dc.get("id") == entry["id"] for dc in man.get("delta_commits", ())
+        ):
+            # our publish was retracted AFTER a racer read it and built
+            # v+1 on top — the racer's manifest already carries this
+            # entry, so the commit is live; re-appending would duplicate
+            # it in the log (rows would stay correct — identical dirs,
+            # max seq wins — but reads would scan the dirs twice and
+            # changed_buckets would report phantom churn)
+            return None, n_touched
         _check_pending_depth(path, man, max_pending_deltas)
-        nb = n_buckets
-        if man is not None:
-            if man["key"] != key:
-                raise ValueError(
-                    f"bucketed view at {path!r} is keyed by "
-                    f"{man['key']!r}, not {key!r}"
-                )
-            nb = int(man["n_buckets"])  # stamped count wins — no drift
+        nb = int(man["n_buckets"]) if man else n_buckets  # stamped wins
         if tombstone:  # keys-only batch: validate just the key's type
             _check_key_type(path, man, rows.schema)
+            stamps = {}
         else:
-            _widen_fields(spark, path, man, rows.schema)  # fail fast
+            stamps = {"fields": _widen_fields(spark, path, man, rows.schema)}
         layout = _layout_of(man, nb)
-        kb_of = _kb_expr(layout, key)
-        b = (
-            rows.withColumn(_DELETED_COL, F.lit(tombstone))
-            .withColumn("_kb", kb_of)
-            .persist()
-        )
-        try:
-            touched = sorted(
-                r["_kb"] for r in b.select("_kb").distinct().collect()
+        if layout != staged_layout:
+            # first attempt, or the bucket count OR rebucket state
+            # changed under us (a first-commit race or a concurrent
+            # split_buckets step): staged bucket ids are stale, so
+            # restage; the orphaned dirs are swept by vacuum()
+            b = (
+                rows.withColumn(_DELETED_COL, F.lit(tombstone))
+                .withColumn("_kb", _kb_expr(layout, key))
+                .persist()
             )
-            if not touched:
-                return 0
-            commit_id = uuid.uuid4().hex[:12]
-            stage = os.path.join(path, f"_stage-{commit_id}")
-            b.repartition(len(touched), F.col("_kb")).write.mode(
-                "overwrite"
-            ).partitionBy("_kb").parquet(stage)
-            entry_buckets: dict[str, str] = {}
-            for kb in touched:
-                src = os.path.join(stage, f"_kb={kb}")
-                if not os.path.exists(src):  # pragma: no cover
-                    continue
-                rel = f"{_DATA_DIR}/kb={kb}/d-{commit_id}"
-                dst = os.path.join(path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)  # invisible until the manifest
-                entry_buckets[str(kb)] = rel
-            shutil.rmtree(stage, ignore_errors=True)
-            entry = {"id": commit_id, "buckets": entry_buckets}
-            # publish retry: the staged dirs are FINAL — losing the CAS
-            # only requires re-appending the entry onto the winner's
-            # manifest, never a data rewrite (the cheap half of
-            # optimistic concurrency that rewrite mode doesn't get)
-            for _ in range(10):
-                man2 = load_manifest(path)
-                if man2 is not None and man2["key"] != key:
-                    raise ValueError(
-                        f"bucketed view at {path!r} is keyed by "
-                        f"{man2['key']!r}, not {key!r}"
-                    )
-                if man2 is not None and any(
-                    dc.get("id") == commit_id
-                    for dc in man2.get("delta_commits", ())
-                ):
-                    # our publish was retracted AFTER a racer read it
-                    # and built v+1 on top — the racer's manifest
-                    # already carries this entry, so the commit is
-                    # live; re-appending would duplicate it in the log
-                    # (rows would stay correct — identical dirs, max
-                    # seq wins — but reads would scan the dirs twice
-                    # and changed_buckets would report phantom churn)
-                    return len(touched)
-                if _layout_of(man2, nb) != layout:
-                    # bucket count OR rebucket state changed under us (a
-                    # first-commit race or a concurrent split_buckets
-                    # step) — the staged dirs' bucket ids are stale
-                    break  # restage under the fresh layout (outer loop)
-                if tombstone:
-                    fields = man2.get("fields") if man2 else None
-                else:  # re-validate vs the manifest we now publish on
-                    fields = _widen_fields(spark, path, man2, rows.schema)
-                doc = {
-                    "version": (int(man2["version"]) + 1) if man2 else 1,
-                    "key": key,
-                    "n_buckets": nb,
-                    "buckets": dict(man2["buckets"]) if man2 else {},
-                    "delta_commits": (
-                        list(man2.get("delta_commits", ())) if man2 else []
-                    )
-                    + [entry],
-                }
-                if man2 is not None and man2.get("rebucket"):
-                    doc["rebucket"] = man2["rebucket"]  # mid-migration
-                if fields is not None:
-                    doc["fields"] = fields
-                pub_v = _publish_manifest(path, doc)  # THE commit point
-                if pub_v is not None:
-                    doc["version"] = pub_v
-                    _gc_unreferenced(
-                        path, doc, keep_versions, gc_grace_seconds
-                    )
-                    return len(touched)
-            else:
-                raise RuntimeError(
-                    f"delta commit at {path!r} lost the manifest publish "
-                    "race 10 times — pathological writer contention"
+            try:
+                touched = sorted(
+                    r["_kb"] for r in b.select("_kb").distinct().collect()
                 )
-            # fell through the break: orphaned staged dirs are swept by
-            # vacuum(); re-resolve and restage under the stamped count
-        finally:
-            b.unpersist()
-    raise RuntimeError(
-        f"delta commit at {path!r} could not stabilize on a bucket "
-        "count — pathological first-commit contention"
+                if not touched:
+                    return None, 0
+                commit_id, moved = _stage_buckets(path, b, touched, "d")
+            finally:
+                b.unpersist()
+            staged_layout, n_touched = layout, len(touched)
+            entry = {"id": commit_id, "buckets": moved}
+        doc = _next_manifest(
+            man, key, nb, dict(man["buckets"]) if man else {}, **stamps
+        )
+        log = list(man.get("delta_commits", ())) if man else []
+        doc["delta_commits"] = log + [entry]
+        return doc, n_touched
+
+    return _optimistic_commit(
+        path, "delta commit", attempt, keep_versions, gc_grace_seconds
     )
 
 
@@ -1595,8 +1542,8 @@ def upsert_keyed_parquet_delta(
     Semantics match the rewrite path exactly: per key the newest
     commit's row-SET replaces the old (multi-row-per-key batches
     supported), redelivery is idempotent (same batch re-appended →
-    same winning set), and the commit/crash contract is unchanged —
-    invisible staged dirs, one CAS publish, incremental GC.
+    same winning set), and it commits through the same loop (see the
+    manifest block above).
 
     Reference parity: postgres_to_es/daemon.py:358-381 (at-least-once
     upsert); the delta log itself is beyond-reference surface for
@@ -1653,14 +1600,13 @@ def compact_bucketed_view(
     is the point where tombstoned bytes stop being readable at any
     retained version (physical erasure).
 
-    Concurrency: a delta writer that lands between our read and our
-    publish wins the version CAS and we restage against the grown log
-    — the same optimistic loop as every other commit here. Returns
-    the number of buckets compacted (0 when there are no deltas)."""
-    for _ in range(5):
-        man = load_manifest(path)
+    A delta writer that publishes first makes the commit loop refold
+    against the grown log. Returns the number of buckets compacted (0
+    when there are no deltas)."""
+
+    def attempt(man: dict | None):
         if man is None or not man.get("delta_commits"):
-            return 0
+            return None, 0
         key = man["key"]
         nb = int(man["n_buckets"])
         touched = sorted(
@@ -1673,42 +1619,17 @@ def compact_bucketed_view(
         # since), and the folded rows must land back under the same ids
         kb_of = _kb_expr(_layout_of(man, nb), key)
         folded = _merged_delta_read(spark, path, man, only_buckets=only)
-        commit_id = uuid.uuid4().hex[:12]
-        stage = os.path.join(path, f"_stage-{commit_id}")
-        folded.withColumn("_kb", kb_of).repartition(
-            len(touched), F.col("_kb")
-        ).write.mode("overwrite").partitionBy("_kb").parquet(stage)
+        folded = folded.withColumn("_kb", kb_of)
+        _, moved = _stage_buckets(path, folded, touched)
         buckets: dict[str, str] = dict(man["buckets"])
         for kb in touched:
-            src = os.path.join(stage, f"_kb={kb}")
-            rel = f"{_DATA_DIR}/kb={kb}/c-{commit_id}"
-            dst = os.path.join(path, rel)
-            if os.path.exists(src):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-                buckets[str(kb)] = rel
-            else:  # every key of this bucket tombstoned away
-                buckets.pop(str(kb), None)
-        shutil.rmtree(stage, ignore_errors=True)
-        doc = {
-            "version": int(man["version"]) + 1,
-            "key": key,
-            "n_buckets": nb,
-            "buckets": buckets,
-        }
-        if man.get("rebucket"):
-            doc["rebucket"] = man["rebucket"]  # mid-migration marker
-        if man.get("fields"):
-            doc["fields"] = man["fields"]  # compaction never evolves
-        pub_v = _publish_manifest(path, doc)  # THE commit point
-        if pub_v is None:
-            continue  # a delta landed meanwhile — refold against it
-        doc["version"] = pub_v
-        _gc_unreferenced(path, doc, keep_versions, gc_grace_seconds)
-        return len(touched)
-    raise RuntimeError(
-        f"compaction at {path!r} lost the manifest publish race 5 times "
-        "— pathological writer contention"
+            # folded into its staged dir, or every key tombstoned away
+            buckets.pop(str(kb), None)
+        buckets.update(moved)
+        return _next_manifest(man, key, nb, buckets), len(touched)
+
+    return _optimistic_commit(
+        path, "compaction", attempt, keep_versions, gc_grace_seconds
     )
 
 
@@ -1746,11 +1667,9 @@ def split_buckets(
     When the last old bucket splits, the manifest stamps
     ``n_buckets = to`` and drops the marker.
 
-    Concurrency and crash shape are the standard ones here: staged
-    dirs are invisible until the ONE manifest CAS publish; losing the
-    CAS (any interleaved commit — including another splitter) restages
-    against the winner, and the loser's dirs are unreferenced garbage
-    for GC/vacuum. Time travel keeps working: superseded manifests
+    Commits through the module's one commit loop: an interleaved
+    commit (another splitter included) makes it restage against the
+    winner. Time travel keeps working: superseded manifests
     reference the pre-split dirs until they age out of retention.
     The delta log must be drained first (``compact_bucketed_view``) —
     a pending delta's bucket ids would go stale under a re-layout, so
@@ -1768,8 +1687,8 @@ def split_buckets(
     """
     if int(factor) < 2:
         raise ValueError(f"split factor must be >= 2, got {factor}")
-    for _ in range(5):
-        man = load_manifest(path)
+
+    def attempt(man: dict | None):
         if man is None:
             raise FileNotFoundError(
                 f"bucketed keyed view at {path!r} has no committed "
@@ -1794,7 +1713,7 @@ def split_buckets(
             done = set()
         pending = [kb for kb in range(nb) if kb not in done]
         if not pending:  # pragma: no cover - completion drops the marker
-            return 0
+            return None, 0
         batch = pending[: buckets_per_call or len(pending)]
         buckets: dict[str, str] = dict(man["buckets"])
         src_dirs = [
@@ -1802,58 +1721,32 @@ def split_buckets(
             for kb in batch
             if str(kb) in buckets
         ]
-        commit_id = uuid.uuid4().hex[:12]
         moved: dict[str, str] = {}
         if src_dirs:
-            reader = spark.read
-            if man.get("fields"):
-                reader = reader.schema(_stamped_ddl(man["fields"]))
-            rows = reader.parquet(*sorted(src_dirs)).withColumn(
-                "_kb", F.pmod(F.hash(F.col(key)), F.lit(to))
+            rows = _stamped_reader(spark, man).parquet(*sorted(src_dirs))
+            # staged by the NEW bucket id: one file per child dir, and
+            # a child without keys of its old bucket gets no dir
+            children = [kb + j * nb for kb in batch for j in range(to // nb)]
+            _, moved = _stage_buckets(
+                path,
+                rows.withColumn("_kb", F.pmod(F.hash(F.col(key)), F.lit(to))),
+                children,
             )
-            stage = os.path.join(path, f"_stage-{commit_id}")
-            # one shuffle on the NEW bucket id → one file per child dir
-            rows.repartition(
-                len(batch) * (to // nb), F.col("_kb")
-            ).write.mode("overwrite").partitionBy("_kb").parquet(stage)
-            children = sorted(
-                kb + j * nb for kb in batch for j in range(to // nb)
-            )
-            for j in children:
-                src = os.path.join(stage, f"_kb={j}")
-                if not os.path.exists(src):
-                    continue  # no key of the old bucket landed here
-                rel = f"{_DATA_DIR}/kb={j}/c-{commit_id}"
-                dst = os.path.join(path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)  # invisible until the manifest
-                moved[str(j)] = rel
-            shutil.rmtree(stage, ignore_errors=True)
         for kb in batch:
             buckets.pop(str(kb), None)  # old id dies with this commit
         buckets.update(moved)
         done2 = done | set(batch)
-        doc = {
-            "version": int(man["version"]) + 1,
-            "key": key,
-            "n_buckets": nb,
-            "buckets": buckets,
-        }
-        if len(done2) == nb:
-            doc["n_buckets"] = to  # migration complete — plain layout
+        if len(done2) == nb:  # migration complete — plain layout
+            doc = _next_manifest(man, key, to, buckets, rebucket=None)
         else:
-            doc["rebucket"] = {"to": to, "done": sorted(done2)}
-        if man.get("fields"):
-            doc["fields"] = man["fields"]  # splits never evolve schema
-        pub_v = _publish_manifest(path, doc)  # THE commit point (CAS)
-        if pub_v is None:
-            continue  # an interleaved commit won — restage fresh
-        doc["version"] = pub_v
-        _gc_unreferenced(path, doc, keep_versions, gc_grace_seconds)
-        return len(batch)
-    raise RuntimeError(
-        f"split_buckets at {path!r} lost the manifest publish race 5 "
-        "times — pathological writer contention"
+            doc = _next_manifest(
+                man, key, nb, buckets,
+                rebucket={"to": to, "done": sorted(done2)},
+            )
+        return doc, len(batch)
+
+    return _optimistic_commit(
+        path, "split_buckets", attempt, keep_versions, gc_grace_seconds
     )
 
 

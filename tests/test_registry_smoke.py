@@ -7,9 +7,12 @@ Value-level correctness is the DuckDB oracle gate
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from etl_sprint_2_5_spark import plans
+from etl_sprint_2_5_spark.plans.legacy_queries import _REF_DB
 from tests.conftest import SF_SMOKE
 
 plans.load_all()
@@ -17,6 +20,9 @@ plans.load_all()
 
 @pytest.mark.parametrize("name", sorted(plans.REGISTRY))
 def test_query_runs(spark, name):
+    # the one query that reads the reference checkout, not the repo
+    if name == "legacy_full_load_live" and not os.path.isfile(_REF_DB):
+        pytest.skip(f"{name} reads {_REF_DB}, which is absent on this host")
     q = plans.REGISTRY[name]
     df = q.fn(spark, SF_SMOKE)
     assert df.columns, f"{name}: empty schema"

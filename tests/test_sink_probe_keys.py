@@ -123,7 +123,7 @@ def test_probe_missing_a_batch_bucket_aborts(spark, tmp_path):
     a = 0
     b = next(i for i, kb in kbs.items() if kb != kbs[a])
     batch = _bdf(spark, [(a, 111), (b, 222)])
-    with pytest.raises(RuntimeError, match="absent from the touched-bucket"):
+    with pytest.raises(ValueError, match="absent from the touched-bucket"):
         sink.upsert_keyed_parquet_bucketed(
             spark, batch, view, key="id", n_buckets=4,
             probe_keys=_ids(spark, [a]),  # misses b's bucket
@@ -137,7 +137,7 @@ def test_empty_probe_with_rows_violates_contract(spark, tmp_path):
     view = str(tmp_path / "v")
     exp = _seed(spark, sink, view, n_buckets=4)
     batch = _bdf(spark, [(1, 111)])
-    with pytest.raises(RuntimeError, match="superset"):
+    with pytest.raises(ValueError, match="superset"):
         sink.upsert_keyed_parquet_bucketed(
             spark, batch, view, key="id", n_buckets=4,
             probe_keys=_ids(spark, []),

@@ -9,8 +9,9 @@ functions, never copies of them:
   batch reads and head aggregations;
 - ``2_apply``: ``ivm.apply_changes`` — fan-out, rebuild plan, upsert;
 - ``3_upsert``: ``Pipeline.upsert``, one entry per sink attempt;
-- ``4_commit_write``: ``sink._commit_touched_buckets``, the bucketed
-  upsert's merge write and manifest publish.
+- ``4_stage_write``: ``sink._stage_buckets``, a sink commit's merge
+  write and data-dir moves (every manifest write verb stages through
+  it).
 
 Usage: python tools/profile_cycle.py [query ...]
 """
@@ -48,9 +49,7 @@ def main() -> None:
     ivm.run_round = run_round
     ivm.apply_changes = timed("2_apply", ivm.apply_changes)
     ivm.Pipeline.upsert = timed("3_upsert", ivm.Pipeline.upsert)
-    sink._commit_touched_buckets = timed(
-        "4_commit_write", sink._commit_touched_buckets
-    )
+    sink._stage_buckets = timed("4_stage_write", sink._stage_buckets)
 
     report(spark, sys.argv[1:] or ["ivm_maintained_docs"])
 

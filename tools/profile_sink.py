@@ -1,6 +1,7 @@
 """Fine-grained timing inside upsert_keyed_parquet_bucketed during a
-real IVM query run: probe collect vs merge write vs manifest publish
-vs GC (guide §1 — find the term before touching the code)."""
+real IVM query run: probe collect vs merge write (``stage_write``) vs
+manifest publish vs GC, and the whole commit loop (``commit_total``)
+(guide §1 — find the term before touching the code)."""
 
 from __future__ import annotations
 
@@ -41,17 +42,8 @@ def main() -> None:
     sink._widen_fields = t("widen_fields", sink._widen_fields)
     sink._publish_manifest = t("publish_manifest", sink._publish_manifest)
     sink._gc_unreferenced = t("gc", sink._gc_unreferenced)
-
-    orig_commit = sink._commit_touched_buckets
-
-    def commit(spark_, b, touched, *a, **k):  # noqa: ANN001
-        t0 = time.time()
-        try:
-            return orig_commit(spark_, b, touched, *a, **k)
-        finally:
-            STATS["commit_total"].append(time.time() - t0)
-
-    sink._commit_touched_buckets = commit
+    sink._stage_buckets = t("stage_write", sink._stage_buckets)
+    sink._optimistic_commit = t("commit_total", sink._optimistic_commit)
 
     # time the probe by wrapping DataFrame-level collect on the _kb
     # distinct — monkeypatch the upsert itself around the probe
