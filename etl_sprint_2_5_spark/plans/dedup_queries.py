@@ -837,8 +837,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop list, checkpointed exactly-once). Verdicts are batch-chop
     invariant, so the streamed result equals the batch query
     bit-for-bit and the one oracle gates both execution modes."""
-    import tempfile
-
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -846,10 +844,12 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
+    from etl_sprint_2_5_spark.artifacts import prepared_shingle_index
     from etl_sprint_2_5_spark.streaming.doc_dedup import (
         CorpusDedupIndex,
         stream_doc_dedup,
     )
+    from etl_sprint_2_5_spark.streaming.gate import streaming_gate
 
     d = load_documents_spread(spark, sf_dir)
     incoming = d.where(F.col("source").isin(*_INCOMING)).select(
@@ -861,13 +861,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("text", StringType())]
     )
-    import shutil
-
-    from etl_sprint_2_5_spark.artifacts import prepared_shingle_index
-
-    tmp = tempfile.mkdtemp(prefix="stream_incdedup_")
-    try:
-        incoming.coalesce(2).write.parquet(f"{tmp}/feed")
+    with streaming_gate(spark, "streaming_incremental_dedup") as gate:
+        feed, out = f"{gate.dir}/feed", f"{gate.dir}/out"
+        incoming.coalesce(2).write.parquet(feed)
         # corpus side probes the prepared shingle artifact — the
         # persisted dedup index — instead of reshingling raw text
         corpus_sh = prepared_shingle_index(spark, sf_dir).join(
@@ -876,22 +872,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         index = CorpusDedupIndex(
             corpus, shingles=corpus_sh, max_df=MAX_SHINGLE_DF
         )
-        q = stream_doc_dedup(
-            spark, index, f"{tmp}/feed", schema, f"{tmp}/out", f"{tmp}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_incremental_dedup did not drain within 300s"
-            )
-        sink = spark.read.parquet(f"{tmp}/out").select(
-            "doc_id", "verdict", "match_id"
-        )
-        # materialize before the temp feed/sink is deleted
-        out = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out.orderBy("doc_id")
+        stream_doc_dedup(spark, index, feed, schema, out, gate.checkpoint())
+        sink = spark.read.parquet(out).select("doc_id", "verdict", "match_id")
+        return materialize_release(sink).orderBy("doc_id")
 
 
 # one oracle gates both execution modes (stream == batch parity is

@@ -7,11 +7,14 @@ oracle can verify the semantics exactly.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_sprint_2_5_spark.plans.registry import query
+from etl_sprint_2_5_spark.plans.registry import materialize_release, query
 from etl_sprint_2_5_spark.sources.parquet import load_table
+from etl_sprint_2_5_spark.streaming.gate import streaming_gate, write_feed
 
 SESSION_GAP_MIN = 30
 
@@ -569,16 +572,6 @@ def salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-def _drain_or_raise(q, name: str, timeout: int = 300) -> None:
-    """availableNow streams must fully drain before the sink is read:
-    on timeout, stop the query and fail loudly instead of returning a
-    silently-partial table (which would surface as a baffling
-    oracle-hash mismatch) and leaking the running stream."""
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise RuntimeError(f"{name} did not drain within {timeout}s")
-
-
 import contextlib  # noqa: E402
 
 
@@ -648,60 +641,38 @@ def streaming_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregation (it would need a dedup stage feeding a second agg,
     and chained streaming aggregations are likewise unsupported);
     the batch query keeps the full contract."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_tumbling_")
-    feed = f"{tmp}/feed"
-    # two files → two micro-batches; ts is already micros-normalized,
-    # so the stream schema is plain timestamp
-    ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
+    with streaming_gate(spark, "streaming_tumbling_window_agg") as gate:
+        feed = f"{gate.dir}/feed"
+        # two files → two micro-batches; ts is already micros-normalized,
+        # so the stream schema is plain timestamp
+        write_feed(feed, *(ev.where(F.col("event_id") % 2 == h) for h in (0, 1)))
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, event_type string, value double"
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, event_type string, value double"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    agg = stream.groupBy(
-        F.window("ts", "1 hour").alias("w"), F.col("event_type")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    sink = f"t_{os.path.basename(tmp)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_tumbling_window_agg")
-    # memory-sink rows live on the driver — the feed/checkpoint tmp
-    # dir is no longer needed once the stream has drained
-    shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(sink)
-        .select(
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "total_value",
+        agg = stream.groupBy(
+            F.window("ts", "1 hour").alias("w"), F.col("event_type")
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
         )
-        .orderBy("window_start_us", "event_type")
-    )
+        return materialize_release(
+            gate.to_memory(agg, "complete")
+            .select(
+                F.unix_micros(F.col("w.start")).alias("window_start_us"),
+                "event_type",
+                "n_events",
+                "total_value",
+            )
+            .orderBy("window_start_us", "event_type")
+        )
 
 
 @query(
@@ -715,51 +686,31 @@ def streaming_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming state store across two micro-batches (one feed file
     each), complete-mode memory sink. The batch query carries no
     distinct aggregate, so stream and batch share the full contract."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select("event_id", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="stream_sliding_")
-    feed = f"{tmp}/feed"
-    ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
+    with streaming_gate(spark, "streaming_sliding_window_agg") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(feed, *(ev.where(F.col("event_id") % 2 == h) for h in (0, 1)))
 
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    agg = stream.groupBy(
-        F.window("ts", "1 hour", "30 minutes").alias("w")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    sink = f"t_{os.path.basename(tmp)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_sliding_window_agg")
-    shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(sink)
-        .select(
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "n_events",
-            "total_value",
+        stream = (
+            spark.readStream.schema("event_id long, ts timestamp, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-        .orderBy("window_start_us")
-    )
+        agg = stream.groupBy(
+            F.window("ts", "1 hour", "30 minutes").alias("w")
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+        return materialize_release(
+            gate.to_memory(agg, "complete")
+            .select(
+                F.unix_micros(F.col("w.start")).alias("window_start_us"),
+                "n_events",
+                "total_value",
+            )
+            .orderBy("window_start_us")
+        )
 
 
 @query(
@@ -787,64 +738,44 @@ def streaming_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     all a user's sessions, which only exist once the stream ends; the
     sessionization itself (the stateful, unbounded part) runs fully
     in the stream."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "user_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_session_")
-    feed = f"{tmp}/feed"
-    ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
+    with streaming_gate(spark, "streaming_session_window_agg") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(feed, *(ev.where(F.col("event_id") % 2 == h) for h in (0, 1)))
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, value double"
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, value double"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    agg = stream.groupBy(
-        F.session_window("ts", "30 minutes 1 microsecond").alias("sw"),
-        F.col("user_id"),
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("t1"),
-    )
-    sink = f"t_{os.path.basename(tmp)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_session_window_agg")
-    shutil.rmtree(tmp, ignore_errors=True)
-    seq = Window.partitionBy("user_id").orderBy("t0")
-    return (
-        spark.table(sink)
-        .select(
-            "user_id",
-            F.row_number().over(seq).cast("long").alias("session_seq"),
-            F.unix_micros("t0").alias("session_start_us"),
-            "n_events",
-            "total_value",
-            (F.col("t1").cast("long") - F.col("t0").cast("long")).alias(
-                "duration_s"
-            ),
+        agg = stream.groupBy(
+            F.session_window("ts", "30 minutes 1 microsecond").alias("sw"),
+            F.col("user_id"),
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+            F.min("ts").alias("t0"),
+            F.max("ts").alias("t1"),
         )
-        .orderBy("user_id", "session_seq")
-    )
+        seq = Window.partitionBy("user_id").orderBy("t0")
+        return materialize_release(
+            gate.to_memory(agg, "complete")
+            .select(
+                "user_id",
+                F.row_number().over(seq).cast("long").alias("session_seq"),
+                F.unix_micros("t0").alias("session_start_us"),
+                "n_events",
+                "total_value",
+                (F.col("t1").cast("long") - F.col("t0").cast("long")).alias(
+                    "duration_s"
+                ),
+            )
+            .orderBy("user_id", "session_seq")
+        )
 
 
 @query(
@@ -862,56 +793,36 @@ def streaming_stateful_event_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     accumulate across the boundary), complete-mode memory sink. The
     batch query is a plain aggregate, so stream and batch share the
     full contract."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "user_id", "event_type"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_dedup_")
-    feed = f"{tmp}/feed"
-    ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
+    with streaming_gate(spark, "streaming_stateful_event_dedup") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(feed, *(ev.where(F.col("event_id") % 2 == h) for h in (0, 1)))
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string"
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, event_type string"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    agg = stream.groupBy("user_id", "event_type").agg(
-        F.min("event_id").alias("first_event_id"),
-        F.min("ts").alias("first_ts"),
-        F.count(F.lit(1)).alias("n_occurrences"),
-    )
-    sink = f"t_{os.path.basename(tmp)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_stateful_event_dedup")
-    shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(sink)
-        .select(
-            "user_id",
-            "event_type",
-            "first_event_id",
-            F.unix_micros("first_ts").alias("first_ts_us"),
-            "n_occurrences",
+        agg = stream.groupBy("user_id", "event_type").agg(
+            F.min("event_id").alias("first_event_id"),
+            F.min("ts").alias("first_ts"),
+            F.count(F.lit(1)).alias("n_occurrences"),
         )
-        .orderBy("user_id", "event_type")
-    )
+        return materialize_release(
+            gate.to_memory(agg, "complete")
+            .select(
+                "user_id",
+                "event_type",
+                "first_event_id",
+                F.unix_micros("first_ts").alias("first_ts_us"),
+                "n_occurrences",
+            )
+            .orderBy("user_id", "event_type")
+        )
 
 
 @query(
@@ -933,10 +844,7 @@ def streaming_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     timeline split exercises for every user active in both halves.
     After the drain, the per-purchase emissions roll up to the same
     3-row channel table the batch oracle computes."""
-    import shutil
-    import tempfile
-    import time
-
+    from etl_sprint_2_5_spark.plans.temporal_queries import timeline_halves
     from etl_sprint_2_5_spark.streaming.stateful import (
         ATTRIB_OUTPUT,
         attribution_state_stream,
@@ -945,50 +853,34 @@ def streaming_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    n = ev.count()
-    ranked = ev.withColumn(
-        "_rn", F.row_number().over(Window.orderBy("ts", "event_id"))
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_attrib_")
-    feed = f"{tmp}/feed"
-    ranked.where(F.col("_rn") <= n // 2).drop("_rn").coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    time.sleep(0.05)  # file-source orders batches by mtime: keep half 2 later
-    ranked.where(F.col("_rn") > n // 2).drop("_rn").coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
+    with streaming_gate(spark, "streaming_last_touch_attribution") as gate:
+        feed, out = f"{gate.dir}/feed", f"{gate.dir}/out"
+        write_feed(feed, *timeline_halves(ev))
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double"
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, "
+                "event_type string, value double"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = (
-        attribution_state_stream(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_last_touch_attribution")
-    sink = spark.read.schema(ATTRIB_OUTPUT).parquet(f"{tmp}/out")
-    rollup = (
-        sink.groupBy("channel")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum("value"), 2).alias("attributed_value"),
+        gate.drain(
+            attribution_state_stream(stream)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
         )
-        .orderBy("channel")
-    )
-    out = spark.createDataFrame(rollup.collect(), rollup.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out.orderBy("channel")
+        sink = spark.read.schema(ATTRIB_OUTPUT).parquet(out)
+        rollup = (
+            sink.groupBy("channel")
+            .agg(
+                F.count(F.lit(1)).alias("n_purchases"),
+                F.round(F.sum("value"), 2).alias("attributed_value"),
+            )
+            .orderBy("channel")
+        )
+        return materialize_release(rollup)
 
 
 from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
@@ -1030,9 +922,7 @@ def streaming_enriched_purchase_rollup(spark: SparkSession, sf_dir: str) -> Data
     boundary. At scale the dim side stays a broadcast as long as it
     fits one executor; bigger dims switch to a pre-bucketed table and
     a shuffle-free sort-merge join."""
-    import os
-    import shutil
-    import tempfile
+    from etl_sprint_2_5_spark.streaming.joins import enrich_stream
 
     purchases = load_table(spark, "events", sf_dir).where(
         F.col("event_type") == "purchase"
@@ -1041,42 +931,26 @@ def streaming_enriched_purchase_rollup(spark: SparkSession, sf_dir: str) -> Data
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
     )
-    tmp = tempfile.mkdtemp(prefix="stream_enrich_")
-    feed = f"{tmp}/feed"
-    purchases.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    purchases.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
+    with streaming_gate(spark, "streaming_enriched_purchase_rollup") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(
+            feed, *(purchases.where(F.col("event_id") % 2 == h) for h in (0, 1))
+        )
 
-    from etl_sprint_2_5_spark.streaming.joins import enrich_stream
-
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    agg = enrich_stream(stream, dim, ("user_id",)).groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n_purchases"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    sink = f"t_{os.path.basename(tmp)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_enriched_purchase_rollup")
-    shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(sink)
-        .select("segment", "n_purchases", "total_value")
-        .orderBy("segment")
-    )
+        stream = (
+            spark.readStream.schema("event_id long, user_id long, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+        )
+        agg = enrich_stream(stream, dim, ("user_id",)).groupBy("segment").agg(
+            F.count(F.lit(1)).alias("n_purchases"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+        return materialize_release(
+            gate.to_memory(agg, "complete")
+            .select("segment", "n_purchases", "total_value")
+            .orderBy("segment")
+        )
 
 
 # --- Live watermark semantics -------------------------------------------
@@ -1157,61 +1031,46 @@ def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     independent of stream length, and the drop/emit predicates are
     evaluated inside the state store operator with no extra shuffle
     (plan: one exchange on the grouping key, as the batch twin)."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "event_type", "value"
     )
     hist = F.col("ts") <= F.lit(_WM_HIST_CUT).cast("timestamp")
     bridge = F.col("ts") <= F.lit(_WM_BRIDGE_CUT).cast("timestamp")
     straggler = hist & (F.col("event_id") % _WM_STRAGGLER_MOD == 0)
-    tmp = tempfile.mkdtemp(prefix="stream_wmdrop_")
-    feed = f"{tmp}/feed"
-    for part in (
-        ev.where(hist & ~straggler),
-        ev.where(~hist & bridge),
-        ev.where(~bridge | straggler),
-    ):
-        part.coalesce(1).write.mode("append").parquet(feed)
+    with streaming_gate(spark, "streaming_watermark_late_drop") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(
+            feed,
+            ev.where(hist & ~straggler),
+            ev.where(~hist & bridge),
+            ev.where(~bridge | straggler),
+        )
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, event_type string, value double"
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, event_type string, value double"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    agg = (
-        stream.withWatermark("ts", "1 day")
-        .groupBy(F.window("ts", "4 hours").alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
+        agg = (
+            stream.withWatermark("ts", "1 day")
+            .groupBy(F.window("ts", "4 hours").alias("w"), F.col("event_type"))
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            )
         )
-    )
-    sink = f"t_{os.path.basename(tmp)}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_watermark_late_drop")
-    shutil.rmtree(tmp, ignore_errors=True)
-    return (
-        spark.table(sink)
-        .select(
-            F.unix_micros(F.col("w.start")).alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "total_value",
+        return materialize_release(
+            gate.to_memory(agg, "append")
+            .select(
+                F.unix_micros(F.col("w.start")).alias("window_start_us"),
+                "event_type",
+                "n_events",
+                "total_value",
+            )
+            .orderBy("window_start_us", "event_type")
         )
-        .orderBy("window_start_us", "event_type")
-    )
 
 
 @query(
@@ -1312,67 +1171,48 @@ def streaming_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: per batch it ships only changed keys, never the full
     state (complete) and without append's watermark-finalization
     latency."""
-    import os
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type")
-    tmp = tempfile.mkdtemp(prefix="stream_update_")
-    feed = f"{tmp}/feed"
-    for half in (0, 1):
-        ev.where(F.col("event_id") % 2 == half).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
+    with streaming_gate(spark, "streaming_update_mode_counts") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(feed, *(ev.where(F.col("event_id") % 2 == h) for h in (0, 1)))
 
-    stream = (
-        spark.readStream.schema("event_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    agg = stream.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    sink = f"t_{os.path.basename(tmp)}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_update_mode_counts")
-    # per-key MIN over emitted rows is batch 1's emission ONLY for keys
-    # that actually appeared in batch 1 (had at least one even
-    # event_id); a key whose first emission is batch 2 would make MIN
-    # equal the final cumulative count, while the oracle pins 0 — so
-    # coalesce the MIN against the even-id key set instead of assuming
-    # fixture parity coverage.
-    first_batch_keys = (
-        ev.where(F.col("event_id") % 2 == 0).select("event_type").distinct()
-        .withColumn("in_b1", F.lit(True))
-    )
-    out = (
-        spark.table(sink)
-        .groupBy("event_type")
-        .agg(
-            F.max("n").alias("n_events"),
-            F.min("n").alias("min_n"),
+        stream = (
+            spark.readStream.schema("event_id long, event_type string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-        .join(first_batch_keys, "event_type", "left")
-        .select(
-            "event_type",
-            "n_events",
-            F.when(F.col("in_b1"), F.col("min_n"))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("n_first_batch"),
+        agg = stream.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n")
         )
-        .orderBy("event_type")
-    )
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return res.orderBy("event_type")
+        emitted = gate.to_memory(agg, "update")
+        # per-key MIN over emitted rows is batch 1's emission ONLY for keys
+        # that actually appeared in batch 1 (had at least one even
+        # event_id); a key whose first emission is batch 2 would make MIN
+        # equal the final cumulative count, while the oracle pins 0 — so
+        # coalesce the MIN against the even-id key set instead of assuming
+        # fixture parity coverage.
+        first_batch_keys = (
+            ev.where(F.col("event_id") % 2 == 0).select("event_type").distinct()
+            .withColumn("in_b1", F.lit(True))
+        )
+        out = (
+            emitted.groupBy("event_type")
+            .agg(
+                F.max("n").alias("n_events"),
+                F.min("n").alias("min_n"),
+            )
+            .join(first_batch_keys, "event_type", "left")
+            .select(
+                "event_type",
+                "n_events",
+                F.when(F.col("in_b1"), F.col("min_n"))
+                .otherwise(F.lit(0))
+                .cast("long")
+                .alias("n_first_batch"),
+            )
+            .orderBy("event_type")
+        )
+        return materialize_release(out)
 
 
 @query(
@@ -1459,10 +1299,6 @@ def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad lines never kill the job and never silently vanish — they
     land countable. JSONL splits by line, so one big file still fans
     out across executors."""
-    import os
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.schemas import TESTDATA_SCHEMAS
     from etl_sprint_2_5_spark.sources.text_files import (
         read_jsonl,
@@ -1479,30 +1315,28 @@ def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit('{"event_id": '), F.col("event_id").cast("string"),
                  F.lit(', "event_ty')),
     ).otherwise(F.to_json(F.struct("event_id", "event_type", "value")))
-    tmp = tempfile.mkdtemp(prefix="jsonl_ingest_")
-    feed = f"{tmp}/feed"
-    ev.select(line.alias("value")).coalesce(4).write.mode("overwrite").text(feed)
+    with tempfile.TemporaryDirectory(prefix="jsonl_ingest_") as tmp:
+        feed = f"{tmp}/feed"
+        ev.select(line.alias("value")).coalesce(4).write.mode("overwrite").text(feed)
 
-    schema = StructType(
-        [f for f in TESTDATA_SCHEMAS["events"].fields
-         if f.name in ("event_id", "event_type", "value")]
-    )
-    good, bad = split_corrupt(read_jsonl(spark, feed, schema))
-    clean = good.groupBy(F.col("event_type").alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_cents"),
-    )
-    quarantined = bad.agg(
-        F.lit("_CORRUPT_").alias("bucket"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.lit(0).cast("bigint").alias("sum_cents"),
-    )
-    out = clean.unionAll(quarantined).orderBy("bucket")
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return res.orderBy("bucket")
+        schema = StructType(
+            [f for f in TESTDATA_SCHEMAS["events"].fields
+             if f.name in ("event_id", "event_type", "value")]
+        )
+        good, bad = split_corrupt(read_jsonl(spark, feed, schema))
+        clean = good.groupBy(F.col("event_type").alias("bucket")).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+            .cast("bigint")
+            .alias("sum_cents"),
+        )
+        quarantined = bad.agg(
+            F.lit("_CORRUPT_").alias("bucket"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.lit(0).cast("bigint").alias("sum_cents"),
+        )
+        out = clean.unionAll(quarantined).orderBy("bucket")
+        return materialize_release(out).orderBy("bucket")
 
 
 @query(
@@ -1531,9 +1365,6 @@ def csv_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed fans out across executors. Clean rows roll up by type with
     the cents checksum — doubles are serialized by Spark's CSV writer
     round-trip-exactly — and the quarantine lands countable."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.schemas import TESTDATA_SCHEMAS
     from etl_sprint_2_5_spark.sources.text_files import (
         read_csv,
@@ -1552,30 +1383,28 @@ def csv_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("string")
         ),
     )
-    tmp = tempfile.mkdtemp(prefix="csv_ingest_")
-    feed = f"{tmp}/feed"
-    ev.select(line.alias("value")).coalesce(4).write.mode("overwrite").text(feed)
+    with tempfile.TemporaryDirectory(prefix="csv_ingest_") as tmp:
+        feed = f"{tmp}/feed"
+        ev.select(line.alias("value")).coalesce(4).write.mode("overwrite").text(feed)
 
-    schema = StructType(
-        [f for f in TESTDATA_SCHEMAS["events"].fields
-         if f.name in ("event_id", "event_type", "value")]
-    )
-    good, bad = split_corrupt(read_csv(spark, feed, schema, header=False))
-    clean = good.groupBy(F.col("event_type").alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_cents"),
-    )
-    quarantined = bad.agg(
-        F.lit("_CORRUPT_").alias("bucket"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.lit(0).cast("bigint").alias("sum_cents"),
-    )
-    out = clean.unionAll(quarantined).orderBy("bucket")
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return res.orderBy("bucket")
+        schema = StructType(
+            [f for f in TESTDATA_SCHEMAS["events"].fields
+             if f.name in ("event_id", "event_type", "value")]
+        )
+        good, bad = split_corrupt(read_csv(spark, feed, schema, header=False))
+        clean = good.groupBy(F.col("event_type").alias("bucket")).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+            .cast("bigint")
+            .alias("sum_cents"),
+        )
+        quarantined = bad.agg(
+            F.lit("_CORRUPT_").alias("bucket"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.lit(0).cast("bigint").alias("sum_cents"),
+        )
+        out = clean.unionAll(quarantined).orderBy("bucket")
+        return materialize_release(out).orderBy("bucket")
 
 
 @query(
@@ -1607,32 +1436,27 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeSchema's footer-union cost is why production datasets pin
     the superset schema in a catalog instead; the read semantics
     are identical."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "user_id"
     )
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
-    data = f"{tmp}/data"
-    ev.where(F.col("event_id") % 2 == 0).select(
-        "event_id", "event_type"
-    ).write.mode("append").parquet(data)
-    ev.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(data)
+    with tempfile.TemporaryDirectory(prefix="schema_evo_") as tmp:
+        data = f"{tmp}/data"
+        ev.where(F.col("event_id") % 2 == 0).select(
+            "event_id", "event_type"
+        ).write.mode("append").parquet(data)
+        ev.where(F.col("event_id") % 2 == 1).write.mode("append").parquet(data)
 
-    merged = spark.read.option("mergeSchema", "true").parquet(data)
-    out = (
-        merged.groupBy(F.col("event_type").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("user_id").cast("bigint").alias("sum_user_v2"),
-            F.count("user_id").cast("bigint").alias("n_v2"),
+        merged = spark.read.option("mergeSchema", "true").parquet(data)
+        out = (
+            merged.groupBy(F.col("event_type").alias("bucket"))
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum("user_id").cast("bigint").alias("sum_user_v2"),
+                F.count("user_id").cast("bigint").alias("n_v2"),
+            )
+            .orderBy("bucket")
         )
-        .orderBy("bucket")
-    )
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return res.orderBy("bucket")
+        return materialize_release(out).orderBy("bucket")
 
 
 @query(
@@ -1661,32 +1485,27 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum proves the pruned read returned exactly the two
     partitions' rows — pruning that dropped rows, or partition-column
     reconstruction that bent values, both fail the gate."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="part_prune_")
-    data = f"{tmp}/data"
-    ev.write.partitionBy("event_type").mode("overwrite").parquet(data)
+    with tempfile.TemporaryDirectory(prefix="part_prune_") as tmp:
+        data = f"{tmp}/data"
+        ev.write.partitionBy("event_type").mode("overwrite").parquet(data)
 
-    back = spark.read.parquet(data).where(
-        F.col("event_type").isin("click", "purchase")
-    )
-    out = (
-        back.groupBy(F.col("event_type").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_cents"),
+        back = spark.read.parquet(data).where(
+            F.col("event_type").isin("click", "purchase")
         )
-        .orderBy("bucket")
-    )
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return res.orderBy("bucket")
+        out = (
+            back.groupBy(F.col("event_type").alias("bucket"))
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+                .cast("bigint")
+                .alias("sum_cents"),
+            )
+            .orderBy("bucket")
+        )
+        return materialize_release(out).orderBy("bucket")
 
 
 @query(
@@ -1716,43 +1535,38 @@ def small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds the bin-pack bound, so a broken pack fails the gate
     loudly. At 100 TB this is the job that keeps scan task counts
     proportional to bytes, not to writer history."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.operators.layout import compact_small_files
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="compaction_")
-    src, dest = f"{tmp}/small", f"{tmp}/compacted"
-    ev.repartition(64).write.mode("overwrite").parquet(src)
+    with tempfile.TemporaryDirectory(prefix="compaction_") as tmp:
+        src, dest = f"{tmp}/small", f"{tmp}/compacted"
+        ev.repartition(64).write.mode("overwrite").parquet(src)
 
-    from pathlib import Path
+        from pathlib import Path
 
-    total = sum(
-        p.stat().st_size for p in Path(src).rglob("*.parquet") if p.is_file()
-    )
-    # target ≈ total/4 → bound of 4-5 files from 64
-    n_out, n_in = compact_small_files(
-        spark, src, dest, max(1, total // 4), order_by=["event_type", "ts"]
-    )
-
-    out = (
-        spark.read.parquet(dest)
-        .groupBy(F.col("event_type").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_cents"),
+        total = sum(
+            p.stat().st_size for p in Path(src).rglob("*.parquet") if p.is_file()
         )
-        .withColumn("n_files_in", F.lit(n_in).cast("bigint"))
-        .orderBy("bucket")
-    )
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return res.orderBy("bucket")
+        # target ≈ total/4 → bound of 4-5 files from 64
+        n_out, n_in = compact_small_files(
+            spark, src, dest, max(1, total // 4), order_by=["event_type", "ts"]
+        )
+
+        out = (
+            spark.read.parquet(dest)
+            .groupBy(F.col("event_type").alias("bucket"))
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+                .cast("bigint")
+                .alias("sum_cents"),
+            )
+            .withColumn("n_files_in", F.lit(n_in).cast("bigint"))
+            .orderBy("bucket")
+        )
+        return materialize_release(out).orderBy("bucket")
 
 
 @query(
@@ -1782,42 +1596,37 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else survived the overwrite byte-identical. At scale
     this is the idempotent day-partition backfill: re-running the
     job rewrites exactly the partitions it produces."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="dyn_overwrite_")
-    data = f"{tmp}/data"
-    ev.write.partitionBy("event_type").mode("overwrite").parquet(data)
+    with tempfile.TemporaryDirectory(prefix="dyn_overwrite_") as tmp:
+        data = f"{tmp}/data"
+        ev.write.partitionBy("event_type").mode("overwrite").parquet(data)
 
-    corrected = ev.where(F.col("event_type") == "click").withColumn(
-        "value", F.col("value") * 2
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        corrected.write.partitionBy("event_type").mode("overwrite").parquet(
-            data
+        corrected = ev.where(F.col("event_type") == "click").withColumn(
+            "value", F.col("value") * 2
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            corrected.write.partitionBy("event_type").mode("overwrite").parquet(
+                data
+            )
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    out = (
-        spark.read.parquet(data)
-        .groupBy(F.col("event_type").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_cents"),
+        out = (
+            spark.read.parquet(data)
+            .groupBy(F.col("event_type").alias("bucket"))
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+                .cast("bigint")
+                .alias("sum_cents"),
+            )
+            .orderBy("bucket")
         )
-        .orderBy("bucket")
-    )
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return res.orderBy("bucket")
+        return materialize_release(out).orderBy("bucket")
 
 
 @query(
@@ -2053,9 +1862,6 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff is one shuffle on the view key. Reference parity: the CDC
     fan-out contract of postgres_to_es/daemon.py:276-334, re-expressed
     as snapshot algebra."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.sink import (
         read_bucketed_view,
         upsert_keyed_parquet_bucketed,
@@ -2069,9 +1875,8 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (F.col("n_chars") + F.lit(1000)).alias("payload")
     )
 
-    tmp = tempfile.mkdtemp(prefix="change_feed_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="change_feed_") as tmp:
+        view = f"{tmp}/docs_view"
         upsert_keyed_parquet_bucketed(
             spark, v1_batch, view, key="doc_id", n_buckets=8, keep_versions=3
         )
@@ -2099,8 +1904,6 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("change_type")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _cdf_three_commits(spark: SparkSession, sf_dir: str, view: str) -> None:
@@ -2180,14 +1983,10 @@ def manifest_change_feed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the view key. Reference parity: the CDC delete fan-out of
     postgres_to_es/daemon.py:276-334 (films dropped from the index),
     re-expressed as snapshot algebra."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.sink import read_bucketed_view
 
-    tmp = tempfile.mkdtemp(prefix="cdf_del_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="cdf_del_") as tmp:
+        view = f"{tmp}/docs_view"
         _cdf_three_commits(spark, sf_dir, view)
 
         old = read_bucketed_view(spark, view, version=1).select(
@@ -2213,8 +2012,6 @@ def manifest_change_feed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("op")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2266,14 +2063,10 @@ def manifest_change_feed_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed row and a hash mismatch. The exclusion of untouched buckets
     from the physical scan is pytest-pinned via inputFiles() in
     tests/test_sink_delta.py."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.sink import snapshot_diff_views
 
-    tmp = tempfile.mkdtemp(prefix="cdf_pruned_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="cdf_pruned_") as tmp:
+        view = f"{tmp}/docs_view"
         _cdf_three_commits(spark, sf_dir, view)
         old_rows, new_rows, _ = snapshot_diff_views(spark, view, 1, 3)
         old = old_rows.select(
@@ -2299,8 +2092,6 @@ def manifest_change_feed_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("op")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _DELTA_MERGE_ORACLE = """
@@ -2397,19 +2188,13 @@ def manifest_delta_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     outstanding at read time. The merge is ONE exchange on the view
     key and 1+3 pruned scans. Companion: manifest_delta_compact_equiv
     proves folding the log changes nothing."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.sink import load_manifest
 
-    tmp = tempfile.mkdtemp(prefix="delta_merge_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="delta_merge_") as tmp:
+        view = f"{tmp}/docs_view"
         _delta_log_view(spark, sf_dir, view)
         pending = len(load_manifest(view).get("delta_commits", ()))
         return _delta_rollup(spark, view, pending)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2430,23 +2215,17 @@ def manifest_delta_compact_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     superseded snapshots age out of keep_versions (the
     retention-vs-erasure trade, pytest-pinned in
     tests/test_sink_delta.py::test_compact_physical_erasure_after_retention)."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.sink import (
         compact_bucketed_view,
         load_manifest,
     )
 
-    tmp = tempfile.mkdtemp(prefix="delta_compact_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="delta_compact_") as tmp:
+        view = f"{tmp}/docs_view"
         _delta_log_view(spark, sf_dir, view)
         compact_bucketed_view(spark, view, keep_versions=2)
         pending = len(load_manifest(view).get("delta_commits", ()))
         return _delta_rollup(spark, view, pending)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2490,9 +2269,6 @@ def manifest_pruned_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputFiles in tests/test_sink_delta.py); the grouped counts and
     payload checksum gate that pruning changed no row. Companion:
     manifest_delta_merge_read (unpruned semantics), compact_equiv."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.sink import (
         delete_keys_delta,
         load_manifest,
@@ -2502,9 +2278,8 @@ def manifest_pruned_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    tmp = tempfile.mkdtemp(prefix="pruned_merge_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="pruned_merge_") as tmp:
+        view = f"{tmp}/docs_view"
         upsert_keyed_parquet_bucketed(
             spark,
             d.select("doc_id", F.col("n_chars").alias("payload")),
@@ -2538,8 +2313,6 @@ def manifest_pruned_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("grp")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2587,9 +2360,6 @@ def manifest_rebucket_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sink_split.py (CAS-loss restage, delta-writer restage
     on layout change, marker carry-forward, time travel across the
     split, row-empty change feed)."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.sink import (
         compact_bucketed_view,
         delete_keys_bucketed,
@@ -2601,9 +2371,8 @@ def manifest_rebucket_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    tmp = tempfile.mkdtemp(prefix="rebucket_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="rebucket_") as tmp:
+        view = f"{tmp}/docs_view"
         upsert_keyed_parquet_bucketed(
             spark,
             d.select("doc_id", F.col("n_chars").alias("payload")),
@@ -2650,8 +2419,6 @@ def manifest_rebucket_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("grp")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2712,9 +2479,6 @@ def manifest_auto_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole maintenance history changed no row. At 100 TB this is one
     cron slot per CDC cycle: cost proportional to the cycle's deltas
     plus at most buckets_per_call bucket rewrites — never the corpus."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.sink import (
         dir_bytes,
         load_manifest,
@@ -2725,9 +2489,8 @@ def manifest_auto_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    tmp = tempfile.mkdtemp(prefix="auto_maintain_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="auto_maintain_") as tmp:
+        view = f"{tmp}/docs_view"
         upsert_keyed_parquet_bucketed(
             spark,
             d.select("doc_id", F.col("n_chars").alias("payload")),
@@ -2803,8 +2566,6 @@ def manifest_auto_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("grp")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2837,15 +2598,11 @@ def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's ORC support is built-in (no external package), making
     this the zero-dependency migration path for Hive-era ORC lakes
     at 100 TB."""
-    import shutil
-    import tempfile
-
     li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_returnflag", "l_linestatus", "l_extendedprice"
     )
-    tmp = tempfile.mkdtemp(prefix="orc_rt_")
-    data = f"{tmp}/data"
-    try:
+    with tempfile.TemporaryDirectory(prefix="orc_rt_") as tmp:
+        data = f"{tmp}/data"
         li.write.partitionBy("l_returnflag").mode("overwrite").orc(data)
         back = spark.read.orc(data).where(F.col("l_returnflag") == "R")
         out = (
@@ -2864,8 +2621,6 @@ def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("bucket")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(

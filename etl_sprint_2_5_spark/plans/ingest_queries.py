@@ -26,14 +26,14 @@ column, not by a summary statistic.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_sprint_2_5_spark.plans.registry import query
+from etl_sprint_2_5_spark.plans.registry import materialize_release, query
 from etl_sprint_2_5_spark.sources.parquet import load_table
+from etl_sprint_2_5_spark.streaming.gate import streaming_gate
 
 _DOC_COLS = ("doc_id", "text", "lang", "source", "n_chars")
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -69,8 +69,7 @@ def jsonl_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    tmp = tempfile.mkdtemp(prefix="jsonl_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="jsonl_ingest_") as tmp:
         docs = load_table(spark, "documents", sf_dir).select(*_DOC_COLS)
 
         def write_shard(batches):  # noqa: ANN001 - Arrow iterator
@@ -116,8 +115,6 @@ def jsonl_gz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"read back {len(rows)}"
             )
         return spark.createDataFrame(rows, back.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -243,7 +240,7 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver failover, and the writers here address the inbox by the
     same URI. Injectable via ``SPARK_GRAFT_INGEST_ROOT`` (a fresh
     subdirectory is created per run and removed afterward); the
-    default — a driver-local mkdtemp — is exactly as portable as
+    default — a driver-local temp dir — is exactly as portable as
     local[*], where driver and executors share one filesystem."""
     import os
 
@@ -261,100 +258,91 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir).select(*_DOC_COLS)
     root = os.environ.get("SPARK_GRAFT_INGEST_ROOT")
-    tmp = tempfile.mkdtemp(prefix="warc_stream_", dir=root or None)
-    inbox, ckpt, view = f"{tmp}/inbox", f"{tmp}/ckpt", f"{tmp}/view"
-    os.makedirs(inbox)
+    with streaming_gate(spark, "streaming_warc_ingest", root or None) as gate:
+        inbox, view = f"{gate.dir}/inbox", f"{gate.dir}/view"
+        os.makedirs(inbox)
 
-    def stage_wave(wave: str, part: DataFrame) -> None:
-        def write_shard(batches):  # noqa: ANN001 - Arrow iterator
-            from pyspark import TaskContext
+        def stage_wave(wave: str, part: DataFrame) -> None:
+            def write_shard(batches):  # noqa: ANN001 - Arrow iterator
+                from pyspark import TaskContext
 
-            pid = TaskContext.get().partitionId()
-            path = os.path.join(inbox, f"{wave}-{pid:04d}.warc.gz")
-            n = 0
-            with open(path, "wb") as fh:
-                for pdf in batches:
-                    for r in pdf.itertuples():
-                        fh.write(
-                            warc_pack_record(
-                                f"http://corpus.local/docs/{int(r.doc_id)}",
-                                str(r.text).encode("utf-8"),
-                                extra_headers={
-                                    "X-Doc-Lang": str(r.lang),
-                                    "X-Doc-Source": str(r.source),
-                                    "X-Doc-NChars": str(int(r.n_chars)),
-                                },
+                pid = TaskContext.get().partitionId()
+                path = os.path.join(inbox, f"{wave}-{pid:04d}.warc.gz")
+                n = 0
+                with open(path, "wb") as fh:
+                    for pdf in batches:
+                        for r in pdf.itertuples():
+                            fh.write(
+                                warc_pack_record(
+                                    f"http://corpus.local/docs/{int(r.doc_id)}",
+                                    str(r.text).encode("utf-8"),
+                                    extra_headers={
+                                        "X-Doc-Lang": str(r.lang),
+                                        "X-Doc-Source": str(r.source),
+                                        "X-Doc-NChars": str(int(r.n_chars)),
+                                    },
+                                )
+                            )
+                            n += 1
+                yield pd.DataFrame({"path": [path], "rows": [n]})
+
+            part.repartition(4, "doc_id").mapInPandas(
+                write_shard, "path string, rows long"
+            ).collect()
+
+        def parse(batches):  # noqa: ANN001 - Arrow iterator
+            for pdf in batches:
+                rows = []
+                for shard in pdf["content"]:
+                    for raw in warc_split_members(bytes(shard)):
+                        hdr, block = warc_parse_record(raw)
+                        rows.append(
+                            (
+                                int(hdr["warc-target-uri"].rsplit("/", 1)[1]),
+                                block.decode("utf-8"),
+                                hdr["x-doc-lang"],
+                                hdr["x-doc-source"],
+                                int(hdr["x-doc-nchars"]),
                             )
                         )
-                        n += 1
-            yield pd.DataFrame({"path": [path], "rows": [n]})
+                yield pd.DataFrame(
+                    rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
+                )
 
-        part.repartition(4, "doc_id").mapInPandas(
-            write_shard, "path string, rows long"
-        ).collect()
-
-    def parse(batches):  # noqa: ANN001 - Arrow iterator
-        for pdf in batches:
-            rows = []
-            for shard in pdf["content"]:
-                for raw in warc_split_members(bytes(shard)):
-                    hdr, block = warc_parse_record(raw)
-                    rows.append(
-                        (
-                            int(hdr["warc-target-uri"].rsplit("/", 1)[1]),
-                            block.decode("utf-8"),
-                            hdr["x-doc-lang"],
-                            hdr["x-doc-source"],
-                            int(hdr["x-doc-nchars"]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
+        def drain_once() -> int:
+            stream = (
+                spark.readStream.format("binaryFile")
+                # the source's fixed schema, stated explicitly — streaming
+                # sources refuse inference by design
+                .schema(
+                    "path string, modificationTime timestamp, "
+                    "length long, content binary"
+                )
+                .option("pathGlobFilter", "*.warc.gz")
+                .option("maxFilesPerTrigger", 2)
+                .load(inbox)
+                .select("content")
+                .mapInPandas(parse, _DOC_SCHEMA)
             )
+            seen = []
 
-    def drain_once(tag: str) -> int:
-        stream = (
-            spark.readStream.format("binaryFile")
-            # the source's fixed schema, stated explicitly — streaming
-            # sources refuse inference by design
-            .schema(
-                "path string, modificationTime timestamp, "
-                "length long, content binary"
-            )
-            .option("pathGlobFilter", "*.warc.gz")
-            .option("maxFilesPerTrigger", 2)
-            .load(inbox)
-            .select("content")
-            .mapInPandas(parse, _DOC_SCHEMA)
-        )
-        seen = []
+            def commit(b, _eid) -> None:  # noqa: ANN001 - micro-batch DF
+                b.persist()
+                seen.append(b.count())
+                upsert_keyed_parquet_bucketed(spark, b, view, "doc_id",
+                                              n_buckets=8)
+                b.unpersist()
 
-        def commit(b, _eid) -> None:  # noqa: ANN001 - micro-batch DF
-            b.persist()
-            seen.append(b.count())
-            upsert_keyed_parquet_bucketed(spark, b, view, "doc_id",
-                                          n_buckets=8)
-            b.unpersist()
+            gate.drain(stream.writeStream.foreachBatch(commit))
+            return sum(seen)
 
-        q = (
-            stream.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(f"streaming_warc_ingest {tag} did not drain")
-        return sum(seen)
-
-    try:
         half = docs.count() // 2  # SF-independent wave split
         stage_wave("wave_a", docs.where(F.col("doc_id") < half))
-        drain_once("wave A")
+        drain_once()
         phase_a = read_bucketed_view(spark, view).count()
 
         stage_wave("wave_b", docs.where(F.col("doc_id") >= half))
-        phase_b = drain_once("wave B")
+        phase_b = drain_once()
 
         out = (
             read_bucketed_view(spark, view)
@@ -363,9 +351,7 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("phase_b_rows", F.lit(phase_b).cast("bigint"))
             .orderBy("doc_id")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return materialize_release(out)
 
 
 @query(
@@ -389,8 +375,7 @@ def orc_interchange_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching stripes and requested columns; values gate against
     DuckDB evaluating the same predicate on the original parquet, so
     the ORC round trip is value-lossless."""
-    tmp = tempfile.mkdtemp(prefix="orc_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="orc_ingest_") as tmp:
         docs = load_table(spark, "documents", sf_dir).select(*_DOC_COLS)
         docs.write.mode("overwrite").option("compression", "zlib").orc(tmp)
         back = (
@@ -404,8 +389,6 @@ def orc_interchange_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
         )
         return spark.createDataFrame(back.collect(), back.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -454,8 +437,7 @@ def csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard count, not intra-file splits (the tradeoff for honest
     embedded newlines; single-line CSV would split but cannot carry
     real text)."""
-    tmp = tempfile.mkdtemp(prefix="csv_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="csv_ingest_") as tmp:
         txt = (
             F.when(F.col("doc_id") % 6 == 0, F.lit(None))
             .when(F.col("doc_id") % 6 == 1, F.lit(""))
@@ -501,8 +483,6 @@ def csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
         )
         return spark.createDataFrame(back.collect(), back.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -543,8 +523,7 @@ def avro_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_ocf_stream,
     )
 
-    tmp = tempfile.mkdtemp(prefix="avro_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="avro_ingest_") as tmp:
         docs = load_table(spark, "documents", sf_dir).select(*_DOC_COLS)
         avro_schema = avro_schema_of(docs.schema, name="document")
 
@@ -605,8 +584,6 @@ def avro_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"split-read back {len(rows)}"
             )
         return spark.createDataFrame(rows, back.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -663,76 +640,67 @@ def streaming_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select(*_DOC_COLS)
     avro_schema = avro_schema_of(docs.schema, name="document")
     root = os.environ.get("SPARK_GRAFT_INGEST_ROOT")
-    tmp = tempfile.mkdtemp(prefix="avro_stream_", dir=root or None)
-    inbox, ckpt, view = f"{tmp}/inbox", f"{tmp}/ckpt", f"{tmp}/view"
-    os.makedirs(inbox)
+    with streaming_gate(spark, "streaming_avro_ingest", root or None) as gate:
+        inbox, view = f"{gate.dir}/inbox", f"{gate.dir}/view"
+        os.makedirs(inbox)
 
-    def stage_wave(wave: str, part: DataFrame) -> None:
-        def write_shard(batches):  # noqa: ANN001 - Arrow iterator
-            from pyspark import TaskContext
+        def stage_wave(wave: str, part: DataFrame) -> None:
+            def write_shard(batches):  # noqa: ANN001 - Arrow iterator
+                from pyspark import TaskContext
 
-            pid = TaskContext.get().partitionId()
-            path = os.path.join(inbox, f"{wave}-{pid:04d}.avro")
-            recs = (
-                rec for pdf in batches for rec in pdf.to_dict("records")
+                pid = TaskContext.get().partitionId()
+                path = os.path.join(inbox, f"{wave}-{pid:04d}.avro")
+                recs = (
+                    rec for pdf in batches for rec in pdf.to_dict("records")
+                )
+                n = write_ocf_stream(
+                    path, recs, avro_schema, codec="deflate", block_rows=64
+                )
+                yield pd.DataFrame({"path": [path], "rows": [n]})
+
+            part.repartition(4, "doc_id").mapInPandas(
+                write_shard, "path string, rows long"
+            ).collect()
+
+        def parse(batches):  # noqa: ANN001 - Arrow iterator
+            cols = list(_DOC_COLS)
+            for pdf in batches:
+                for blob in pdf["content"]:
+                    _, rows = read_ocf(bytes(blob))
+                    yield pd.DataFrame(rows, columns=cols)
+
+        def drain_once() -> int:
+            stream = (
+                spark.readStream.format("binaryFile")
+                .schema(
+                    "path string, modificationTime timestamp, "
+                    "length long, content binary"
+                )
+                .option("pathGlobFilter", "*.avro")
+                .option("maxFilesPerTrigger", 2)
+                .load(inbox)
+                .select("content")
+                .mapInPandas(parse, _DOC_SCHEMA)
             )
-            n = write_ocf_stream(
-                path, recs, avro_schema, codec="deflate", block_rows=64
-            )
-            yield pd.DataFrame({"path": [path], "rows": [n]})
+            seen = []
 
-        part.repartition(4, "doc_id").mapInPandas(
-            write_shard, "path string, rows long"
-        ).collect()
+            def commit(b, _eid) -> None:  # noqa: ANN001 - micro-batch DF
+                b.persist()
+                seen.append(b.count())
+                upsert_keyed_parquet_bucketed(spark, b, view, "doc_id",
+                                              n_buckets=8)
+                b.unpersist()
 
-    def parse(batches):  # noqa: ANN001 - Arrow iterator
-        cols = list(_DOC_COLS)
-        for pdf in batches:
-            for blob in pdf["content"]:
-                _, rows = read_ocf(bytes(blob))
-                yield pd.DataFrame(rows, columns=cols)
+            gate.drain(stream.writeStream.foreachBatch(commit))
+            return sum(seen)
 
-    def drain_once(tag: str) -> int:
-        stream = (
-            spark.readStream.format("binaryFile")
-            .schema(
-                "path string, modificationTime timestamp, "
-                "length long, content binary"
-            )
-            .option("pathGlobFilter", "*.avro")
-            .option("maxFilesPerTrigger", 2)
-            .load(inbox)
-            .select("content")
-            .mapInPandas(parse, _DOC_SCHEMA)
-        )
-        seen = []
-
-        def commit(b, _eid) -> None:  # noqa: ANN001 - micro-batch DF
-            b.persist()
-            seen.append(b.count())
-            upsert_keyed_parquet_bucketed(spark, b, view, "doc_id",
-                                          n_buckets=8)
-            b.unpersist()
-
-        q = (
-            stream.writeStream.foreachBatch(commit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(f"streaming_avro_ingest {tag} did not drain")
-        return sum(seen)
-
-    try:
         half = docs.count() // 2  # SF-independent wave split
         stage_wave("wave_a", docs.where(F.col("doc_id") < half))
-        drain_once("wave A")
+        drain_once()
         phase_a = read_bucketed_view(spark, view).count()
 
         stage_wave("wave_b", docs.where(F.col("doc_id") >= half))
-        phase_b = drain_once("wave B")
+        phase_b = drain_once()
 
         out = (
             read_bucketed_view(spark, view)
@@ -741,6 +709,4 @@ def streaming_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("phase_b_rows", F.lit(phase_b).cast("bigint"))
             .orderBy("doc_id")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return materialize_release(out)

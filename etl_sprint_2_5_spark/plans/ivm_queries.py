@@ -36,14 +36,14 @@ stale pre-mutation name and break the hash).
 from __future__ import annotations
 
 import datetime as dt
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_sprint_2_5_spark.plans.registry import query
+from etl_sprint_2_5_spark.plans.registry import materialize_release, query
 from etl_sprint_2_5_spark.sources.parquet import load_table
+from etl_sprint_2_5_spark.streaming.gate import streaming_gate, write_feed
 from etl_sprint_2_5_spark.streaming.sink import (
     buckets_for,
     dir_bytes,
@@ -288,43 +288,41 @@ def ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_sprint_2_5_spark.streaming.ivm import run_to_completion
     from etl_sprint_2_5_spark.streaming.state import OffsetStore
 
-    tmp = tempfile.mkdtemp(prefix="ivm_gate_")
-    base, gold = f"{tmp}/base", f"{tmp}/gold/docs"
-    _stage_base(spark, sf_dir, base)
-    # bucket count from TARGET BUCKET SIZE, not a magic number
-    # (buckets_for docstring has the 100-TB math: ~1 GiB/bucket ->
-    # ~100k buckets at 100 TB; floors to 16 on this toy base)
-    nb = buckets_for(dir_bytes(base))
+    with tempfile.TemporaryDirectory(prefix="ivm_gate_") as tmp:
+        base, gold = f"{tmp}/base", f"{tmp}/gold/docs"
+        _stage_base(spark, sf_dir, base)
+        # bucket count from TARGET BUCKET SIZE, not a magic number
+        # (buckets_for docstring has the 100-TB math: ~1 GiB/bucket ->
+        # ~100k buckets at 100 TB; floors to 16 on this toy base)
+        nb = buckets_for(dir_bytes(base))
 
-    # one resolved relation per table per PHASE (see _memo_loader on
-    # why the loader must not outlive the mutate boundary)
-    load = _memo_loader(spark, base)
+        # one resolved relation per table per PHASE (see _memo_loader on
+        # why the loader must not outlive the mutate boundary)
+        load = _memo_loader(spark, base)
 
-    # batch_size ≈ n/2 per source: every pipeline needs ≥2 keyset
-    # cycles for the backfill, so the cursor provably advances
-    # mid-table (T7's bounded batches + T8's drain-to-empty loop)
-    sizes = {
-        name: max(1, load(name).count() // 2 + 1)
-        for name in ("orders", "customer", "lineitem")
-    }
-    pipelines = _docs_pipelines(gold, nb, sizes)
-    offsets = OffsetStore(f"{tmp}/offsets.json", id_default=0)
+        # batch_size ≈ n/2 per source: every pipeline needs ≥2 keyset
+        # cycles for the backfill, so the cursor provably advances
+        # mid-table (T7's bounded batches + T8's drain-to-empty loop)
+        sizes = {
+            name: max(1, load(name).count() // 2 + 1)
+            for name in ("orders", "customer", "lineitem")
+        }
+        pipelines = _docs_pipelines(gold, nb, sizes)
+        offsets = OffsetStore(f"{tmp}/offsets.json", id_default=0)
 
-    run_to_completion(spark, pipelines, load, offsets)  # phase A: backfill
-    _mutate(spark, sf_dir, base)  # the CDC writes
-    consumed_b = run_to_completion(
-        spark, pipelines, _memo_loader(spark, base), offsets
-    )  # phase B — fresh loader over the mutated snapshots
+        run_to_completion(spark, pipelines, load, offsets)  # phase A: backfill
+        _mutate(spark, sf_dir, base)  # the CDC writes
+        consumed_b = run_to_completion(
+            spark, pipelines, _memo_loader(spark, base), offsets
+        )  # phase B — fresh loader over the mutated snapshots
 
-    docs = (
-        read_bucketed_view(spark, gold)
-        .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
-        .orderBy("o_orderkey")
-    )
-    # materialize before the staging dir disappears
-    out = spark.createDataFrame(docs.collect(), docs.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        docs = (
+            read_bucketed_view(spark, gold)
+            .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
+            .orderBy("o_orderkey")
+        )
+        # materialize before the staging dir disappears
+        return materialize_release(docs)
 
 
 @query(
@@ -356,118 +354,113 @@ def streaming_ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     from etl_sprint_2_5_spark.streaming.ivm import FanOut, Pipeline
     from etl_sprint_2_5_spark.streaming.structured import stream_pipeline
 
-    tmp = tempfile.mkdtemp(prefix="ivm_stream_gate_")
-    base, gold = f"{tmp}/base", f"{tmp}/gold/docs"
-    _stage_base(spark, sf_dir, base)
-    # bucket count from TARGET BUCKET SIZE, not a magic number
-    # (buckets_for docstring has the 100-TB math: ~1 GiB/bucket ->
-    # ~100k buckets at 100 TB; floors to 16 on this toy base)
-    nb = buckets_for(dir_bytes(base))
+    with streaming_gate(spark, "streaming_ivm_maintained_docs") as gate:
+        base, gold = f"{gate.dir}/base", f"{gate.dir}/gold/docs"
+        _stage_base(spark, sf_dir, base)
+        # bucket count from TARGET BUCKET SIZE, not a magic number
+        # (buckets_for docstring has the 100-TB math: ~1 GiB/bucket ->
+        # ~100k buckets at 100 TB; floors to 16 on this toy base)
+        nb = buckets_for(dir_bytes(base))
 
-    # one resolved relation per table per PHASE (see _memo_loader);
-    # rebuilt fresh after the mutate so phase B's rebuilds read the
-    # overwritten snapshots
-    load = _memo_loader(spark, base)
+        # one resolved relation per table per PHASE (see _memo_loader);
+        # rebuilt fresh after the mutate so phase B's rebuilds read the
+        # overwritten snapshots
+        load = _memo_loader(spark, base)
 
-    schemas = {
-        "orders": (
-            "o_orderkey long, o_custkey long, o_orderpriority string, "
-            "updated_at timestamp"
-        ),
-        "customer": "c_custkey long, c_name string, updated_at timestamp",
-        "lineitem": (
-            "li_id long, l_orderkey long, cents long, updated_at timestamp"
-        ),
-    }
-    pipelines = {
-        "orders": Pipeline(
-            name="orders",
-            source="orders",
-            cursor_field="updated_at",
-            id_field="o_orderkey",
-            fanout=FanOut(id_field="o_orderkey"),
-            rebuild=_rebuild_docs,
-            sink_path=gold,
-            doc_key="o_orderkey",
-            n_buckets=nb,
-        ),
-        "customer": Pipeline(
-            name="customer",
-            source="customer",
-            cursor_field="updated_at",
-            id_field="c_custkey",
-            fanout=FanOut(
-                id_field="c_custkey",
-                bridge="orders",
-                join_field="o_custkey",
-                select_field="o_orderkey",
+        schemas = {
+            "orders": (
+                "o_orderkey long, o_custkey long, o_orderpriority string, "
+                "updated_at timestamp"
             ),
-            rebuild=_rebuild_docs,
-            sink_path=gold,
-            doc_key="o_orderkey",
-            n_buckets=nb,
-        ),
-        "lineitem": Pipeline(
-            name="lineitem",
-            source="lineitem",
-            cursor_field="updated_at",
-            id_field="li_id",
-            fanout=FanOut(id_field="l_orderkey"),
-            rebuild=_rebuild_docs,
-            sink_path=gold,
-            doc_key="o_orderkey",
-            n_buckets=nb,
-        ),
-    }
+            "customer": "c_custkey long, c_name string, updated_at timestamp",
+            "lineitem": (
+                "li_id long, l_orderkey long, cents long, updated_at timestamp"
+            ),
+        }
+        pipelines = {
+            "orders": Pipeline(
+                name="orders",
+                source="orders",
+                cursor_field="updated_at",
+                id_field="o_orderkey",
+                fanout=FanOut(id_field="o_orderkey"),
+                rebuild=_rebuild_docs,
+                sink_path=gold,
+                doc_key="o_orderkey",
+                n_buckets=nb,
+            ),
+            "customer": Pipeline(
+                name="customer",
+                source="customer",
+                cursor_field="updated_at",
+                id_field="c_custkey",
+                fanout=FanOut(
+                    id_field="c_custkey",
+                    bridge="orders",
+                    join_field="o_custkey",
+                    select_field="o_orderkey",
+                ),
+                rebuild=_rebuild_docs,
+                sink_path=gold,
+                doc_key="o_orderkey",
+                n_buckets=nb,
+            ),
+            "lineitem": Pipeline(
+                name="lineitem",
+                source="lineitem",
+                cursor_field="updated_at",
+                id_field="li_id",
+                fanout=FanOut(id_field="l_orderkey"),
+                rebuild=_rebuild_docs,
+                sink_path=gold,
+                doc_key="o_orderkey",
+                n_buckets=nb,
+            ),
+        }
 
-    from pyspark.sql.types import _parse_datatype_string
+        from pyspark.sql.types import _parse_datatype_string
 
-    def drain(name: str, loader) -> int:  # noqa: ANN001
-        """One availableNow pass of one pipeline; returns the rows the
-        STREAM itself consumed (per-batch counts recorded inside the
-        foreachBatch body — see stream_pipeline's row_counter note on
-        why numInputRows over-reports under foreachBatch)."""
-        counter: list[int] = []
-        q = stream_pipeline(
-            spark,
-            pipelines[name],
-            f"{tmp}/feed/{name}",
-            _parse_datatype_string(schemas[name]),
-            loader,
-            f"{tmp}/ckpt/{name}",
-            row_counter=counter,
+        def drain(name: str, loader) -> int:  # noqa: ANN001
+            """One availableNow pass of one pipeline; returns the rows the
+            STREAM itself consumed (per-batch counts recorded inside the
+            foreachBatch body — see stream_pipeline's row_counter note on
+            why numInputRows over-reports under foreachBatch)."""
+            counter: list[int] = []
+            stream_pipeline(
+                spark,
+                pipelines[name],
+                f"{gate.dir}/feed/{name}",
+                _parse_datatype_string(schemas[name]),
+                loader,
+                gate.checkpoint(name),
+                row_counter=counter,
+            )
+            return sum(counter)
+
+        # phase A: full-base backfill feed
+        for name in pipelines:
+            load(name).write.mode("append").parquet(f"{gate.dir}/feed/{name}")
+            drain(name, load)
+
+        # the CDC writes: mutate the base snapshots, feed ONLY changed rows
+        _mutate(spark, sf_dir, base)
+        load = _memo_loader(spark, base)  # fresh — post-mutate snapshots
+        load("customer").where(F.col("c_custkey") % 10 == 0).write.mode(
+            "append"
+        ).parquet(f"{gate.dir}/feed/customer")
+        load("orders").where(F.col("o_orderkey") % 13 == 0).write.mode(
+            "append"
+        ).parquet(f"{gate.dir}/feed/orders")
+
+        # phase B: resumed queries must consume exactly the new files
+        consumed_b = sum(drain(name, load) for name in pipelines)
+
+        docs = (
+            read_bucketed_view(spark, gold)
+            .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
+            .orderBy("o_orderkey")
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(f"ivm stream {name} did not drain in 300s")
-        return sum(counter)
-
-    # phase A: full-base backfill feed
-    for name in pipelines:
-        load(name).write.mode("append").parquet(f"{tmp}/feed/{name}")
-        drain(name, load)
-
-    # the CDC writes: mutate the base snapshots, feed ONLY changed rows
-    _mutate(spark, sf_dir, base)
-    load = _memo_loader(spark, base)  # fresh — post-mutate snapshots
-    load("customer").where(F.col("c_custkey") % 10 == 0).write.mode(
-        "append"
-    ).parquet(f"{tmp}/feed/customer")
-    load("orders").where(F.col("o_orderkey") % 13 == 0).write.mode(
-        "append"
-    ).parquet(f"{tmp}/feed/orders")
-
-    # phase B: resumed queries must consume exactly the new files
-    consumed_b = sum(drain(name, load) for name in pipelines)
-
-    docs = (
-        read_bucketed_view(spark, gold)
-        .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
-        .orderBy("o_orderkey")
-    )
-    out = spark.createDataFrame(docs.collect(), docs.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return materialize_release(docs)
 
 
 from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
@@ -500,37 +493,35 @@ def ivm_maintained_docs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_sprint_2_5_spark.streaming.ivm import run_to_completion
     from etl_sprint_2_5_spark.streaming.state import OffsetStore
 
-    tmp = tempfile.mkdtemp(prefix="ivm_delta_gate_")
-    base, gold = f"{tmp}/base", f"{tmp}/gold/docs"
-    _stage_base(spark, sf_dir, base)
-    nb = buckets_for(dir_bytes(base))
+    with tempfile.TemporaryDirectory(prefix="ivm_delta_gate_") as tmp:
+        base, gold = f"{tmp}/base", f"{tmp}/gold/docs"
+        _stage_base(spark, sf_dir, base)
+        nb = buckets_for(dir_bytes(base))
 
-    # one resolved relation per table per PHASE (see _memo_loader)
-    load = _memo_loader(spark, base)
+        # one resolved relation per table per PHASE (see _memo_loader)
+        load = _memo_loader(spark, base)
 
-    sizes = {
-        name: max(1, load(name).count() // 2 + 1)
-        for name in ("orders", "customer", "lineitem")
-    }
-    pipelines = _docs_pipelines(
-        gold, nb, sizes, sink_mode="delta", compact_every=3
-    )
-    offsets = OffsetStore(f"{tmp}/offsets.json", id_default=0)
+        sizes = {
+            name: max(1, load(name).count() // 2 + 1)
+            for name in ("orders", "customer", "lineitem")
+        }
+        pipelines = _docs_pipelines(
+            gold, nb, sizes, sink_mode="delta", compact_every=3
+        )
+        offsets = OffsetStore(f"{tmp}/offsets.json", id_default=0)
 
-    run_to_completion(spark, pipelines, load, offsets)  # phase A: backfill
-    _mutate(spark, sf_dir, base)  # the CDC writes
-    consumed_b = run_to_completion(
-        spark, pipelines, _memo_loader(spark, base), offsets
-    )  # phase B — fresh loader over the mutated snapshots
+        run_to_completion(spark, pipelines, load, offsets)  # phase A: backfill
+        _mutate(spark, sf_dir, base)  # the CDC writes
+        consumed_b = run_to_completion(
+            spark, pipelines, _memo_loader(spark, base), offsets
+        )  # phase B — fresh loader over the mutated snapshots
 
-    docs = (
-        read_bucketed_view(spark, gold)
-        .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
-        .orderBy("o_orderkey")
-    )
-    out = spark.createDataFrame(docs.collect(), docs.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        docs = (
+            read_bucketed_view(spark, gold)
+            .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
+            .orderBy("o_orderkey")
+        )
+        return materialize_release(docs)
 
 
 _REG["ivm_maintained_docs_delta"].oracle = _REG["ivm_maintained_docs"].oracle
@@ -662,83 +653,60 @@ def streaming_ivm_aggregate_deltas(spark: SparkSession, sf_dir: str) -> DataFram
     )
     old_rows = o.where(changed_pred).select("bucket", "cents")
 
-    tmp = tempfile.mkdtemp(prefix="ivm_agg_stream_")
-    feed, state = f"{tmp}/feed", f"{tmp}/state"
-    import glob as _glob
-    import os
-
-    def _pin_mtime(epoch: int) -> None:
-        """Pin every not-yet-pinned feed file to an explicit mtime.
-        The file source orders micro-batches by modificationTime; a
-        coarse-resolution filesystem could otherwise sort the
-        changelog batch BEFORE the insert batch, and a retract applied
-        to empty state now raises in merge_agg_state rather than
-        silently dropping groups — this makes the ordering a stated
-        invariant instead of a sleep-and-hope."""
-        for f in _glob.glob(f"{feed}/*.parquet"):
-            # fresh writes carry the current (far-future vs the pinned
-            # epochs) mtime; already-pinned files are left alone
-            if os.stat(f).st_mtime > _T1 + 1:
-                os.utime(f, (epoch, epoch))
-
-    # micro-batch 1: initial inserts as (+1) changelog rows
-    o.select(
+    # micro-batch 1: initial inserts as (+1) changelog rows;
+    # micro-batch 2: the mutation changelog (retract old, add new)
+    inserts = o.select(
         "bucket",
         F.lit(1).cast("long").alias("_dn"),
         F.col("cents").cast("long").alias("d_cents"),
-    ).coalesce(1).write.mode("append").parquet(feed)
-    _pin_mtime(_T0)
-    # micro-batch 2: the mutation changelog (retract old, add new)
+    )
     changelog = agg_delta(old_rows, new_rows, ["bucket"], ["cents"])
-    changelog.coalesce(1).write.mode("append").parquet(feed)
-    _pin_mtime(_T1)
 
-    counts: list[int] = []
+    with streaming_gate(spark, "streaming_ivm_aggregate_deltas") as gate:
+        feed, state = f"{gate.dir}/feed", f"{gate.dir}/state"
+        # inserts strictly before the changelog: a retract applied to
+        # empty state raises in merge_agg_state rather than silently
+        # dropping groups
+        write_feed(feed, inserts, changelog)
 
-    def process(batch_df, batch_id: int) -> None:  # noqa: ANN001
-        counts.append(batch_df.count())
-        apply_agg_delta_batch(
-            spark, state, batch_df, ["bucket"], ["cents"], batch_id
+        counts: list[int] = []
+
+        def process(batch_df, batch_id: int) -> None:  # noqa: ANN001
+            counts.append(batch_df.count())
+            apply_agg_delta_batch(
+                spark, state, batch_df, ["bucket"], ["cents"], batch_id
+            )
+
+        gate.drain(
+            spark.readStream.schema("bucket string, _dn long, d_cents long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+            .writeStream.foreachBatch(process)
+            .outputMode("update")
         )
+        # ordering invariant: exactly two micro-batches, inserts first —
+        # a violated feed fails HERE with the cause, not downstream in the
+        # hash (and a changelog-first replay would already have raised in
+        # merge_agg_state's negative-count guard)
+        if len(counts) != 2:
+            raise RuntimeError(
+                f"changelog feed produced {len(counts)} micro-batches "
+                f"(counts={counts}), expected [n_base, 2*n_changed] — "
+                "write_feed ordering failed or maxFilesPerTrigger was ignored"
+            )
+        n_delta = counts[1]
 
-    q = (
-        spark.readStream.schema("bucket string, _dn long, d_cents long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("aggregate changelog stream did not drain in 300s")
-    # ordering invariant: exactly two micro-batches, inserts first —
-    # a violated feed fails HERE with the cause, not downstream in the
-    # hash (and a changelog-first replay would already have raised in
-    # merge_agg_state's negative-count guard)
-    if len(counts) != 2:
-        raise RuntimeError(
-            f"changelog feed produced {len(counts)} micro-batches "
-            f"(counts={counts}), expected [n_base, 2*n_changed] — "
-            "mtime pinning failed or maxFilesPerTrigger was ignored"
+        out = (
+            spark.read.parquet(state)
+            .select(
+                "bucket",
+                "n_rows",
+                F.col("cents").cast("bigint").alias("cents"),
+                F.lit(n_delta).cast("bigint").alias("n_delta_rows"),
+            )
+            .orderBy("bucket")
         )
-    n_delta = counts[1]
-
-    out = (
-        spark.read.parquet(state)
-        .select(
-            "bucket",
-            "n_rows",
-            F.col("cents").cast("bigint").alias("cents"),
-            F.lit(n_delta).cast("bigint").alias("n_delta_rows"),
-        )
-        .orderBy("bucket")
-    )
-    res = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return res
+        return materialize_release(out)
 
 
 _REG["streaming_ivm_aggregate_deltas"].oracle = _REG["ivm_aggregate_deltas"].oracle
@@ -856,10 +824,9 @@ def _run_ivm_pg_live(
     )
     from etl_sprint_2_5_spark.streaming.state import OffsetStore
 
-    tmp = tempfile.mkdtemp(prefix="ivm_pg_live_")
-    os.chmod(tmp, 0o755)  # the nobody-owned cluster must traverse it
-    gold = f"{tmp}/gold/docs"
-    try:
+    with tempfile.TemporaryDirectory(prefix="ivm_pg_live_") as tmp:
+        os.chmod(tmp, 0o755)  # the nobody-owned cluster must traverse it
+        gold = f"{tmp}/gold/docs"
         with pg_copy.ephemeral_pg(f"{tmp}/cluster") as dsn:
             env = _pg_live_env(spark, sf_dir, dsn, stage_threshold)
             # batch_size ≈ n/2: every pipeline needs ≥2 keyset cycles
@@ -922,9 +889,7 @@ def _run_ivm_pg_live(
                 )
                 .orderBy("o_orderkey")
             )
-            return spark.createDataFrame(docs.collect(), docs.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            return materialize_release(docs)
 
 
 _REG["ivm_staged_fanout_live"].oracle = (
@@ -1138,7 +1103,7 @@ def streaming_ivm_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     / restricted rebuild / manifest sink as the batch twin
     (``_pg_live_env``), same live SQL UPDATEs between phases — but the
     cursor discipline is now Spark's: phase A drains each table's
-    stream (processAllAvailable — the Python source has no
+    stream under availableNow (Spark wraps the Python source for
     Trigger.AvailableNow), phase B REOPENS each stream from its
     checkpoint, which must consume exactly the mutated rows.
     ``phase_b_rows`` (the resumed queries' own foreachBatch counts)
@@ -1156,12 +1121,11 @@ def streaming_ivm_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_pipeline_from,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ivm_pg_stream_")
-    os.chmod(tmp, 0o755)  # the nobody-owned cluster must traverse it
-    gold = f"{tmp}/gold/docs"
     spark.dataSource.register(PgKeysetDataSource)
-    try:
-        with pg_copy.ephemeral_pg(f"{tmp}/cluster") as dsn:
+    with streaming_gate(spark, "streaming_ivm_pg_live") as gate:
+        os.chmod(gate.dir, 0o755)  # the nobody-owned cluster must traverse it
+        gold = f"{gate.dir}/gold/docs"
+        with pg_copy.ephemeral_pg(f"{gate.dir}/cluster") as dsn:
             env = _pg_live_env(spark, sf_dir, dsn)
             common = dict(
                 rebuild=env["rebuild"], sink_path=gold,
@@ -1203,14 +1167,10 @@ def streaming_ivm_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .option("slices", "2")
                     .load()
                 )
-                q = stream_pipeline_from(
+                stream_pipeline_from(
                     spark, pipelines[name], stream, _no_pg_load,
-                    f"{tmp}/ckpt/{name}", available_now=False,
-                    row_counter=counters[name],
+                    gate.checkpoint(name), row_counter=counters[name],
                 )
-                q.processAllAvailable()
-                q.stop()
-                q.awaitTermination()
 
             for name in pipelines:  # phase A: stream backfill
                 drain(name)
@@ -1227,9 +1187,7 @@ def streaming_ivm_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .orderBy("o_orderkey")
             )
-            return spark.createDataFrame(docs.collect(), docs.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            return materialize_release(docs)
 
 
 _REG["streaming_ivm_pg_live"].oracle = _REG["ivm_maintained_docs_pg_live"].oracle
@@ -1289,12 +1247,11 @@ def streaming_pg_nulls_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_keyed_parquet_bucketed,
     )
 
-    tmp = tempfile.mkdtemp(prefix="pg_nulls_stream_")
-    os.chmod(tmp, 0o755)  # the nobody-owned cluster must traverse it
-    view, ckpt = f"{tmp}/view", f"{tmp}/ckpt"
     spark.dataSource.register(PgKeysetDataSource)
-    try:
-        with pg_copy.ephemeral_pg(f"{tmp}/cluster") as dsn:
+    with streaming_gate(spark, "streaming_pg_nulls_live") as gate:
+        os.chmod(gate.dir, 0o755)  # the nobody-owned cluster must traverse it
+        view = f"{gate.dir}/view"
+        with pg_copy.ephemeral_pg(f"{gate.dir}/cluster") as dsn:
             pg_copy.pg_exec(
                 dsn,
                 "CREATE TABLE docs_n (doc_id bigint PRIMARY KEY, "
@@ -1347,14 +1304,7 @@ def streaming_pg_nulls_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                     b.unpersist()
 
-                q = (
-                    stream.writeStream.foreachBatch(commit)
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                q.processAllAvailable()
-                q.stop()
-                q.awaitTermination()
+                gate.drain(stream.writeStream.foreachBatch(commit))
 
             drain()  # phase A: full backfill through the stream
             phase_a = sum(counters)
@@ -1378,6 +1328,4 @@ def streaming_pg_nulls_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("phase_b_rows", F.lit(phase_b).cast("bigint"))
                 .orderBy("doc_id")
             )
-            return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            return materialize_release(out)

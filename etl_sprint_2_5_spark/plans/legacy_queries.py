@@ -396,7 +396,6 @@ def sqlite_live_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (module docstring) — this is the legacy-migration ingest edge,
     not a fact-scan path."""
     import os
-    import shutil
     import tempfile
 
     from etl_sprint_2_5_spark.sources.sqlite_src import (
@@ -407,9 +406,8 @@ def sqlite_live_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir).select(
         "doc_id", "lang", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="sqlite_live_")
-    db = os.path.join(tmp, "legacy.sqlite")
-    try:
+    with tempfile.TemporaryDirectory(prefix="sqlite_live_") as tmp:
+        db = os.path.join(tmp, "legacy.sqlite")
         rows = [(r.doc_id, r.lang, r.n_chars) for r in d.collect()]
         dups = [t for t in rows if t[0] % 10 == 0]
         # the legacy table models the reference's un-constrained source
@@ -438,8 +436,6 @@ def sqlite_live_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 #: The reference's OWN legacy dataset — the 1000-movie db.sqlite the

@@ -18,6 +18,7 @@ from etl_sprint_2_5_spark.operators.profile import (
 )
 from etl_sprint_2_5_spark.plans.registry import materialize_release, query
 from etl_sprint_2_5_spark.sources.parquet import load_table
+from etl_sprint_2_5_spark.streaming.gate import streaming_gate, write_feed
 
 _ORDER_COLS = (
     "o_orderkey",
@@ -545,28 +546,19 @@ def streaming_hll_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The exact_distinct audit column is computed batch-side (it exists
     to show the error, not to stream)."""
-    import os
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.operators.sketch import (
         _hll_hash,
         hll_estimate,
     )
-    from etl_sprint_2_5_spark.plans.events_queries import _drain_or_raise
+    from etl_sprint_2_5_spark.plans.events_queries import bounded_state_shuffle
 
     b = _HLL_B
     m = 1 << b
     w_bits = 60 - b
     ev = load_table(spark, "events", sf_dir).select("event_id", "user_id", "event_type")
-    tmp = tempfile.mkdtemp(prefix="stream_hll_")
-    feed = f"{tmp}/feed"
-    for half in (0, 1):
-        ev.where(F.col("event_id") % 2 == half).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-
-    try:
+    with streaming_gate(spark, "streaming_hll_estimates") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(feed, *(ev.where(F.col("event_id") % 2 == h) for h in (0, 1)))
         stream = (
             spark.readStream.schema(
                 "event_id long, user_id long, event_type string"
@@ -588,24 +580,11 @@ def streaming_hll_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "bucket")
             .agg(F.max("rho").alias("reg"))
         )
-        sink = f"t_{os.path.basename(tmp)}"
         # state key space = event_type × m registers (≤ ~16 types in
         # the fixture domain; the bound only sizes the state shuffle)
-        from etl_sprint_2_5_spark.plans.events_queries import (
-            bounded_state_shuffle,
-        )
-
         with bounded_state_shuffle(spark, 16 * m):
-            q = (
-                regs.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain_or_raise(q, "streaming_hll_estimates")
-        est = hll_estimate(spark.table(sink), ("event_type",), b=b)
+            drained = gate.to_memory(regs, "complete")
+        est = hll_estimate(drained, ("event_type",), b=b)
         exact = ev.groupBy("event_type").agg(
             F.countDistinct("user_id").alias("exact_distinct")
         )
@@ -620,11 +599,7 @@ def streaming_hll_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type")
         )
-        # detach the result from the temp feed before cleanup
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return materialize_release(out)
 
 
 def _hll_pair_oracle(b: int) -> str:
@@ -862,27 +837,20 @@ def streaming_dd_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-statistic audit (computed batch-side and bucket-narrowed
     via dd_exact_rank, like the batch twin; it exists to show the
     error, not to stream)."""
-    import os
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.operators.sketch import (
         dd_exact_rank,
         dd_quantile,
     )
-    from etl_sprint_2_5_spark.plans.events_queries import _drain_or_raise
+    from etl_sprint_2_5_spark.plans.events_queries import bounded_state_shuffle
 
     li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_returnflag", "l_extendedprice"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_ddq_")
-    feed = f"{tmp}/feed"
-    for half in (0, 1):
-        li.where(F.col("l_orderkey") % 2 == half).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-
-    try:
+    with streaming_gate(spark, "streaming_dd_quantiles") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(
+            feed, *(li.where(F.col("l_orderkey") % 2 == h) for h in (0, 1))
+        )
         stream = (
             spark.readStream.schema(
                 "l_orderkey long, l_returnflag string, l_extendedprice double"
@@ -905,26 +873,10 @@ def streaming_dd_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("g", "bucket_id")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        sink = f"t_{os.path.basename(tmp)}"
         # state key space = l_returnflag (3-value TPC-H domain, bound
         # 4) × ≤ ~256 ddsketch bucket ids
-        from etl_sprint_2_5_spark.plans.events_queries import (
-            bounded_state_shuffle,
-        )
-
         with bounded_state_shuffle(spark, 4 * 256):
-            q = (
-                sk.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain_or_raise(q, "streaming_dd_quantiles")
-        drained = spark.createDataFrame(
-            spark.table(sink).collect(), spark.table(sink).schema
-        )
+            drained = materialize_release(gate.to_memory(sk, "complete"))
         est = dd_quantile(drained, _DD_QS, group_cols=("g",))
         cents = li.select(
             F.col("l_returnflag").alias("g"),
@@ -948,10 +900,7 @@ def streaming_dd_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rel_err_ppm"),
         ).orderBy("l_returnflag", "q_milli")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return materialize_release(out)
 
 
 def _cms_int_cells(table: str, key: str, width: int, depth: int, salt: str) -> str:
@@ -1043,20 +992,7 @@ def cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_cms_estimates",
-    oracle=f"""
-    WITH probes AS ({_cms_probe_union(512, 4, "cms-v1")}),
-    cells AS (
-      SELECT row, bucket, count(*) AS n
-      FROM probes GROUP BY row, bucket
-    ),
-    key_probes AS (
-      SELECT DISTINCT row, bucket, event_type FROM probes
-    )
-    SELECT p.event_type, CAST(min(c.n) AS BIGINT) AS est_count
-    FROM key_probes p JOIN cells c USING (row, bucket)
-    GROUP BY p.event_type
-    ORDER BY p.event_type
-    """,
+    oracle=None,  # set below — identical to cms_event_type_estimates' oracle
     covers=("X-stream-cms",),
 )
 def streaming_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1069,23 +1005,14 @@ def streaming_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     across triggers; the drained cells run through the same broadcast
     point-query and gate against the batch query's oracle verbatim —
     streaming and batch build the identical sketch."""
-    import os
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.operators.sketch import cms_estimate
-    from etl_sprint_2_5_spark.plans.events_queries import _drain_or_raise
+    from etl_sprint_2_5_spark.plans.events_queries import bounded_state_shuffle
 
     width, depth, salt = 512, 4, "cms-v1"
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type")
-    tmp = tempfile.mkdtemp(prefix="stream_cms_")
-    feed = f"{tmp}/feed"
-    for half in (0, 1):
-        ev.where(F.col("event_id") % 2 == half).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-
-    try:
+    with streaming_gate(spark, "streaming_cms_estimates") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(feed, *(ev.where(F.col("event_id") % 2 == h) for h in (0, 1)))
         stream = (
             spark.readStream.schema("event_id long, event_type string")
             .option("maxFilesPerTrigger", 1)
@@ -1120,31 +1047,19 @@ def streaming_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("row", "bucket")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        sink = f"t_{os.path.basename(tmp)}"
         # state key space = exactly depth × width CMS cells
-        from etl_sprint_2_5_spark.plans.events_queries import (
-            bounded_state_shuffle,
-        )
-
         with bounded_state_shuffle(spark, depth * width):
-            q = (
-                cells.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain_or_raise(q, "streaming_cms_estimates")
+            drained = gate.to_memory(cells, "complete")
         keys = ev.select("event_type").distinct()
         out = cms_estimate(
-            spark.table(sink), keys, "event_type", width=width, depth=depth,
-            salt=salt,
+            drained, keys, "event_type", width=width, depth=depth, salt=salt,
         ).orderBy("event_type")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return materialize_release(out)
+
+
+from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
+
+_REG["streaming_cms_estimates"].oracle = _REG["cms_event_type_estimates"].oracle
 
 
 def _hll_dau_oracle(b: int) -> str:
@@ -1893,27 +1808,21 @@ def streaming_kmv_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild; exact_distinct is the batch-side audit. Two micro-batches
     (event_id parity, maxFilesPerTrigger=1) force a cross-batch state
     fold, not a single-trigger pass-through."""
-    import os
-    import shutil
-    import tempfile
+    from pyspark.sql import Window
 
     from etl_sprint_2_5_spark.operators.sketch import (
         kmv_build,
         kmv_estimate,
         kmv_hash,
     )
-    from etl_sprint_2_5_spark.plans.events_queries import _drain_or_raise
+    from etl_sprint_2_5_spark.plans.events_queries import bounded_state_shuffle
     from etl_sprint_2_5_spark.streaming.stateful import kmv_bottomk_stream
 
     n_groups = 8
     ev = load_table(spark, "events", sf_dir).select("event_id", "user_id")
-    tmp = tempfile.mkdtemp(prefix="stream_kmv_")
-    feed = f"{tmp}/feed"
-    for half in (0, 1):
-        ev.where(F.col("event_id") % 2 == half).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-    try:
+    with streaming_gate(spark, "streaming_kmv_estimates") as gate:
+        feed = f"{gate.dir}/feed"
+        write_feed(feed, *(ev.where(F.col("event_id") % 2 == h) for h in (0, 1)))
         stream = (
             spark.readStream.schema("event_id long, user_id long")
             .option("maxFilesPerTrigger", 1)
@@ -1922,28 +1831,13 @@ def streaming_kmv_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed = stream.select(kmv_hash("user_id").alias("hv")).select(
             F.pmod(F.col("hv"), F.lit(n_groups)).alias("g"), "hv"
         )
-        sink = f"t_{os.path.basename(tmp)}"
         # state key space = exactly n_groups shard samples; the
         # applyInPandasWithState width also bounds the Python worker
         # round-trips per trigger
-        from etl_sprint_2_5_spark.plans.events_queries import (
-            bounded_state_shuffle,
-        )
-
         with bounded_state_shuffle(spark, n_groups, keys_per_partition=2):
-            q = (
-                kmv_bottomk_stream(hashed, k=_KMV_K)
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
+            emitted = gate.to_memory(
+                kmv_bottomk_stream(hashed, k=_KMV_K), "update"
             )
-            _drain_or_raise(q, "streaming_kmv_estimates")
-        from pyspark.sql import Window
-
-        emitted = spark.table(sink)
         latest = (
             emitted.withColumn(
                 "rn",
@@ -1988,11 +1882,7 @@ def streaming_kmv_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "exact_distinct",
             )
         )
-        # detach the result from the temp feed before cleanup
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return materialize_release(out)
 
 
 @query(
@@ -2089,7 +1979,6 @@ def manifest_forgotten_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     of buckets — cost proportional to the FORGOTTEN set, not the
     corpus. Companion to pseudonym_referential_integrity: one query
     de-identifies, this one erases."""
-    import shutil
     import tempfile
 
     from etl_sprint_2_5_spark.streaming.sink import (
@@ -2099,9 +1988,8 @@ def manifest_forgotten_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    tmp = tempfile.mkdtemp(prefix="forgotten_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="forgotten_") as tmp:
+        view = f"{tmp}/docs_view"
         upsert_keyed_parquet_bucketed(
             spark,
             d.where(F.col("doc_id") % 2 == 0).select(
@@ -2136,8 +2024,6 @@ def manifest_forgotten_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("grp")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2181,7 +2067,6 @@ def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (postgres_to_es/daemon.py index-creation payload); additive
     evolution is the beyond-reference surface any long-lived lake
     table needs."""
-    import shutil
     import tempfile
 
     from etl_sprint_2_5_spark.streaming.sink import (
@@ -2190,9 +2075,8 @@ def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="schema_evo_") as tmp:
+        view = f"{tmp}/docs_view"
         upsert_keyed_parquet_bucketed(
             spark,
             d.where(F.col("doc_id") % 2 == 0).select(
@@ -2223,8 +2107,6 @@ def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang_bucket")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2267,15 +2149,13 @@ def manifest_legacy_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected loudly (pytest-pinned in tests/test_sink_schema.py)."""
     import json
     import os
-    import shutil
     import tempfile
 
     from etl_sprint_2_5_spark.streaming import sink
 
     d = load_table(spark, "documents", sf_dir)
-    tmp = tempfile.mkdtemp(prefix="legacy_upgrade_")
-    view = f"{tmp}/docs_view"
-    try:
+    with tempfile.TemporaryDirectory(prefix="legacy_upgrade_") as tmp:
+        view = f"{tmp}/docs_view"
         sink.upsert_keyed_parquet_bucketed(
             spark,
             d.where(F.col("doc_id") % 2 == 0).select(
@@ -2319,8 +2199,6 @@ def manifest_legacy_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang_bucket")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2375,13 +2253,9 @@ def pg_copy_roundtrip_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("bal_cents"),
     )
-    import shutil
 
-    base = tempfile.mkdtemp(prefix="pg_live_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="pg_live_") as base:
         return _pg_live_scenario(spark, c, base)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _pg_live_scenario(spark, c, base):  # noqa: ANN001 - helper

@@ -12,8 +12,9 @@ from etl_sprint_2_5_spark.operators.similarity import (
     brute_force_topk_gemm,
     ivf_topk,
 )
-from etl_sprint_2_5_spark.plans.registry import query
+from etl_sprint_2_5_spark.plans.registry import materialize_release, query
 from etl_sprint_2_5_spark.sources.parquet import load_table
+from etl_sprint_2_5_spark.streaming.gate import streaming_gate, write_feed
 
 _N_QUERIES = 8  # vec_id < 8 are the query vectors
 _K = 5
@@ -1089,10 +1090,6 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed ONCE and cached across batches; at scale it is the
     persisted cell-partitioned index and each micro-batch touches
     only the probed cells' partitions."""
-    import os
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.artifacts import prepared_ivf_centroids
     from etl_sprint_2_5_spark.operators.similarity import (
         assign_cells_gemm,
@@ -1104,44 +1101,33 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, centroid_mod=_CENTROID_MOD, iters=_IVF_ITERS
     )
     assigned = assign_cells_gemm(e, centroids, "vec_id", "embedding").cache()
-
-    tmp = tempfile.mkdtemp(prefix="stream_ann_")
-    feed, out = f"{tmp}/feed", f"{tmp}/out"
     qs = e.where(F.col("vec_id") < _N_QUERIES).select("vec_id", "embedding")
-    for half in (0, 1):
-        qs.where(F.col("vec_id") % 2 == half).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
 
-    def search_batch(batch_df, batch_id: int) -> None:
-        q_cells = assign_cells_gemm(batch_df, centroids, "vec_id", "embedding")
-        ivf_topk(assigned, q_cells, "vec_id", "embedding", _K).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/batch_id={batch_id}")
+    with streaming_gate(spark, "streaming_ann_topk") as gate:
+        feed, out = f"{gate.dir}/feed", f"{gate.dir}/out"
+        write_feed(feed, *(qs.where(F.col("vec_id") % 2 == h) for h in (0, 1)))
 
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = (
-        stream.writeStream.foreachBatch(search_batch)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_ann_topk did not drain within 300s")
-    res = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out)
-        .orderBy("query_id", "rank")
-    )
-    rows = spark.createDataFrame(res.collect(), res.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    assigned.unpersist()
-    return rows.orderBy("query_id", "rank")
+        def search_batch(batch_df, batch_id: int) -> None:
+            q_cells = assign_cells_gemm(batch_df, centroids, "vec_id", "embedding")
+            ivf_topk(assigned, q_cells, "vec_id", "embedding", _K).write.mode(
+                "overwrite"
+            ).parquet(f"{out}/batch_id={batch_id}")
+
+        stream = (
+            spark.readStream.schema("vec_id long, embedding array<float>")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+        )
+        try:
+            gate.drain(stream.writeStream.foreachBatch(search_batch))
+            res = (
+                spark.read.option("recursiveFileLookup", "true")
+                .parquet(out)
+                .orderBy("query_id", "rank")
+            )
+            return materialize_release(res)
+        finally:
+            assigned.unpersist()
 
 
 from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402

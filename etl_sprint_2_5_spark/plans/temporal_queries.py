@@ -8,8 +8,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_sprint_2_5_spark.operators.temporal import asof_join, interval_join_binned
-from etl_sprint_2_5_spark.plans.registry import query
+from etl_sprint_2_5_spark.plans.registry import materialize_release, query
 from etl_sprint_2_5_spark.sources.parquet import load_table
+from etl_sprint_2_5_spark.streaming.gate import streaming_gate, write_feed
 
 BURST_WINDOW_S = 600  # clicks within 10 min after an error
 
@@ -165,55 +166,35 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "valid_from_us")
 
 
-def _drain_or_raise(q, name: str, timeout: int = 300) -> None:
-    """availableNow streams must fully drain before the sink is read:
-    on timeout, stop the query and fail loudly instead of returning a
-    silently-partial table (see events_queries._drain_or_raise)."""
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise RuntimeError(f"{name} did not drain within {timeout}s")
-
-
-def _timeline_split_feed(df: DataFrame, feed: str) -> None:
-    """Stage ``df`` as a two-file feed split at the midpoint of its
-    (ts, event_id) timeline: file 1 holds the earlier half, file 2 the
-    later half, with an mtime gap so the file source replays them in
-    order. A real stream arrives in event-time order, so each source's
-    micro-batches are time-monotone — which is also what makes
-    watermark-based state eviction provably lossless here (nothing is
-    ever late)."""
-    import time
-
+def timeline_halves(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split ``df`` at the midpoint of its (ts, event_id) timeline into
+    the earlier and the later half — the two waves of a time-ordered
+    feed (``gate.write_feed`` replays them in that order). A real
+    stream arrives in event-time order, so each source's micro-batches
+    are time-monotone — which is also what makes watermark-based state
+    eviction provably lossless here (nothing is ever late)."""
     from pyspark.sql import Window
 
     n = df.count()
     ranked = df.withColumn(
         "_rn", F.row_number().over(Window.orderBy("ts", "event_id"))
     )
-    ranked.where(F.col("_rn") <= n // 2).drop("_rn").coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    time.sleep(0.05)  # file-source orders batches by mtime
-    ranked.where(F.col("_rn") > n // 2).drop("_rn").coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
+    return (
+        ranked.where(F.col("_rn") <= n // 2).drop("_rn"),
+        ranked.where(F.col("_rn") > n // 2).drop("_rn"),
+    )
 
 
-def _time_split_feed(df: DataFrame, feed: str, t_us: int) -> None:
-    """Stage ``df`` as a two-file feed split at event time ``t_us``:
-    ts < T → file 1, ts >= T → file 2 (every fixture ts is unique, so
-    the cut is deterministic). Both micro-batches are time-monotone —
-    a real stream arrives in event-time order — which is what makes
-    watermark-based join-state eviction provably lossless here."""
-    import time
-
-    df.where(F.unix_micros("ts") < t_us).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
-    time.sleep(0.05)  # file-source orders batches by mtime
-    df.where(F.unix_micros("ts") >= t_us).coalesce(1).write.mode(
-        "append"
-    ).parquet(feed)
+def _time_halves(df: DataFrame, t_us: int) -> tuple[DataFrame, DataFrame]:
+    """Split ``df`` at event time ``t_us`` into the waves ts < T and
+    ts >= T (every fixture ts is unique, so the cut is deterministic).
+    Both micro-batches are time-monotone — a real stream arrives in
+    event-time order — which is what makes watermark-based join-state
+    eviction provably lossless here."""
+    return (
+        df.where(F.unix_micros("ts") < t_us),
+        df.where(F.unix_micros("ts") >= t_us),
+    )
 
 
 @query(
@@ -249,9 +230,6 @@ def streaming_interval_burst_join(spark: SparkSession, sf_dir: str) -> DataFrame
     a plain batch aggregate, not the stateful part — are attached
     after the drain, exactly like the batch twin's
     aggregate-then-left-join-back shape."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.joins import interval_stream_join
 
     ev = load_table(spark, "events", sf_dir)
@@ -289,67 +267,65 @@ def streaming_interval_burst_join(spark: SparkSession, sf_dir: str) -> DataFrame
             F.expr("percentile(unix_micros(ts), 0.5)").cast("long")
         ).collect()[0][0]
 
-    tmp = tempfile.mkdtemp(prefix="stream_interval_")
-    efeed, cfeed = f"{tmp}/errors", f"{tmp}/clicks"
-    _time_split_feed(errors.withColumn("ts", F.col("err_ts")), efeed, t_us)
-    _time_split_feed(clicks, cfeed, t_us)
+    with streaming_gate(spark, "streaming_interval_burst_join") as gate:
+        efeed, cfeed = f"{gate.dir}/errors", f"{gate.dir}/clicks"
+        out = f"{gate.dir}/out"
+        write_feed(
+            efeed, *_time_halves(errors.withColumn("ts", F.col("err_ts")), t_us)
+        )
+        write_feed(cfeed, *_time_halves(clicks, t_us))
 
-    es = (
-        spark.readStream.schema(
-            "event_id long, user_id long, err_ts timestamp, ts timestamp"
+        es = (
+            spark.readStream.schema(
+                "event_id long, user_id long, err_ts timestamp, ts timestamp"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(efeed)
+            .drop("ts")
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(efeed)
-        .drop("ts")
-    )
-    cs = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts timestamp, value double"
+        cs = (
+            spark.readStream.schema(
+                "event_id long, user_id long, ts timestamp, value double"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(cfeed)
+            .drop("event_id")
+            .withColumnRenamed("ts", "click_ts")
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(cfeed)
-        .drop("event_id")
-        .withColumnRenamed("ts", "click_ts")
-    )
-    joined = interval_stream_join(
-        es,
-        cs,
-        "user_id",
-        "err_ts",
-        "click_ts",
-        max_delay=f"{BURST_WINDOW_S} seconds",
-        lateness="11 minutes",
-    )
-    q = (
-        joined.select("event_id", "value")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_interval_burst_join")
-    pairs = spark.read.schema("event_id long, value double").parquet(f"{tmp}/out")
-    per_error = pairs.groupBy("event_id").agg(
-        F.count(F.lit(1)).alias("n_clicks"),
-        F.sum("value").alias("_sum_value"),
-    )
-    rollup = (
-        errors.join(per_error, "event_id", "left")
-        .select(
-            "event_id",
+        joined = interval_stream_join(
+            es,
+            cs,
             "user_id",
-            F.unix_micros("err_ts").alias("err_us"),
-            F.coalesce("n_clicks", F.lit(0)).alias("n_clicks"),
-            F.round(F.coalesce("_sum_value", F.lit(0.0)), 2).alias("click_value"),
+            "err_ts",
+            "click_ts",
+            max_delay=f"{BURST_WINDOW_S} seconds",
+            lateness="11 minutes",
         )
-        .orderBy("event_id")
-    )
-    # the parquet sink dir is deleted below — materialize before rmtree
-    out = spark.createDataFrame(rollup.collect(), rollup.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out.orderBy("event_id")
+        gate.drain(
+            joined.select("event_id", "value")
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+        )
+        pairs = spark.read.schema("event_id long, value double").parquet(out)
+        per_error = pairs.groupBy("event_id").agg(
+            F.count(F.lit(1)).alias("n_clicks"),
+            F.sum("value").alias("_sum_value"),
+        )
+        rollup = (
+            errors.join(per_error, "event_id", "left")
+            .select(
+                "event_id",
+                "user_id",
+                F.unix_micros("err_ts").alias("err_us"),
+                F.coalesce("n_clicks", F.lit(0)).alias("n_clicks"),
+                F.round(F.coalesce("_sum_value", F.lit(0.0)), 2).alias(
+                    "click_value"
+                ),
+            )
+            .orderBy("event_id")
+        )
+        return materialize_release(rollup)
 
 
 @query(
@@ -379,10 +355,6 @@ def streaming_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
     gated output. At scale the sentinel is unnecessary — a live
     stream's watermark keeps advancing; it exists here because
     availableNow ends the stream at the last real event."""
-    import shutil
-    import tempfile
-    import time
-
     from etl_sprint_2_5_spark.streaming.joins import interval_stream_join
 
     ev = load_table(spark, "events", sf_dir)
@@ -398,79 +370,75 @@ def streaming_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
     ).collect()[0][0]
     sentinel_us = max_us + (BURST_WINDOW_S + 11 * 60 + 3600) * 1_000_000
 
-    tmp = tempfile.mkdtemp(prefix="stream_outer_")
-    efeed, cfeed = f"{tmp}/errors", f"{tmp}/clicks"
-    _time_split_feed(
-        errors.select("event_id", "user_id", "err_ts"), efeed, mid_us
-    )
-    _time_split_feed(clicks, cfeed, mid_us)
-    time.sleep(0.05)
-    spark.createDataFrame(
+    # the third wave of each feed: the sentinel row
+    e_sentinel = spark.createDataFrame(
         [(-1, -1, sentinel_us)], "event_id long, user_id long, us long"
-    ).select(
-        "event_id", "user_id", F.timestamp_micros("us").alias("err_ts")
-    ).coalesce(1).write.mode("append").parquet(efeed)
-    spark.createDataFrame(
+    ).select("event_id", "user_id", F.timestamp_micros("us").alias("err_ts"))
+    c_sentinel = spark.createDataFrame(
         [(-1, sentinel_us, 0.0)], "user_id long, us long, value double"
-    ).select(
-        "user_id", F.timestamp_micros("us").alias("ts"), "value"
-    ).coalesce(1).write.mode("append").parquet(cfeed)
+    ).select("user_id", F.timestamp_micros("us").alias("ts"), "value")
 
-    es = (
-        spark.readStream.schema("event_id long, user_id long, err_ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(efeed)
-    )
-    cs = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(cfeed)
-        .withColumnRenamed("ts", "click_ts")
-    )
-    joined = interval_stream_join(
-        es,
-        cs,
-        "user_id",
-        "err_ts",
-        "click_ts",
-        max_delay=f"{BURST_WINDOW_S} seconds",
-        lateness="11 minutes",
-        how="leftOuter",
-    )
-    q = (
-        joined.select(es.event_id, es.user_id, "err_ts", "value")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_outer_interval_join")
-    sink = spark.read.schema(
-        "event_id long, user_id long, err_ts timestamp, value double"
-    ).parquet(f"{tmp}/out")
-    rollup = (
-        sink.where(F.col("user_id") >= 0)
-        .groupBy("event_id", "user_id", "err_ts")
-        .agg(
-            F.count("value").alias("n_clicks"),
-            F.round(F.sum(F.coalesce("value", F.lit(0.0))), 2).alias(
-                "click_value"
-            ),
+    with streaming_gate(spark, "streaming_outer_interval_join") as gate:
+        efeed, cfeed = f"{gate.dir}/errors", f"{gate.dir}/clicks"
+        out = f"{gate.dir}/out"
+        write_feed(
+            efeed,
+            *_time_halves(errors.select("event_id", "user_id", "err_ts"), mid_us),
+            e_sentinel,
         )
-        .select(
-            "event_id",
+        write_feed(cfeed, *_time_halves(clicks, mid_us), c_sentinel)
+
+        es = (
+            spark.readStream.schema(
+                "event_id long, user_id long, err_ts timestamp"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(efeed)
+        )
+        cs = (
+            spark.readStream.schema("user_id long, ts timestamp, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(cfeed)
+            .withColumnRenamed("ts", "click_ts")
+        )
+        joined = interval_stream_join(
+            es,
+            cs,
             "user_id",
-            F.unix_micros("err_ts").alias("err_us"),
-            "n_clicks",
-            "click_value",
+            "err_ts",
+            "click_ts",
+            max_delay=f"{BURST_WINDOW_S} seconds",
+            lateness="11 minutes",
+            how="leftOuter",
         )
-        .orderBy("event_id")
-    )
-    out = spark.createDataFrame(rollup.collect(), rollup.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out.orderBy("event_id")
+        gate.drain(
+            joined.select(es.event_id, es.user_id, "err_ts", "value")
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+        )
+        sink = spark.read.schema(
+            "event_id long, user_id long, err_ts timestamp, value double"
+        ).parquet(out)
+        rollup = (
+            sink.where(F.col("user_id") >= 0)
+            .groupBy("event_id", "user_id", "err_ts")
+            .agg(
+                F.count("value").alias("n_clicks"),
+                F.round(F.sum(F.coalesce("value", F.lit(0.0))), 2).alias(
+                    "click_value"
+                ),
+            )
+            .select(
+                "event_id",
+                "user_id",
+                F.unix_micros("err_ts").alias("err_us"),
+                "n_clicks",
+                "click_value",
+            )
+            .orderBy("event_id")
+        )
+        return materialize_release(rollup)
 
 
 @query(
@@ -493,9 +461,6 @@ def streaming_asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     falls between distinct timestamps, so (ts, event_id)-ordered
     replay makes the stream's carry-forward semantics coincide
     exactly with the batch ASOF join the oracle runs."""
-    import shutil
-    import tempfile
-
     from etl_sprint_2_5_spark.streaming.stateful import (
         ASOF_OUTPUT,
         asof_state_stream,
@@ -504,40 +469,35 @@ def streaming_asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).where(
         F.col("event_type").isin("click", "error")
     ).select("event_id", "ts", "user_id", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="stream_asof_")
-    feed = f"{tmp}/feed"
-    _timeline_split_feed(ev, feed)
+    with streaming_gate(spark, "streaming_asof_last_error") as gate:
+        feed, out = f"{gate.dir}/feed", f"{gate.dir}/out"
+        write_feed(feed, *timeline_halves(ev))
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double"
+        stream = (
+            spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, "
+                "event_type string, value double"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = (
-        asof_state_stream(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{tmp}/out")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain_or_raise(q, "streaming_asof_last_error")
-    sink = spark.read.schema(ASOF_OUTPUT).parquet(f"{tmp}/out")
-    res = sink.select(
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "value",
-        F.unix_micros("last_error_ts").alias("last_error_us"),
-        "last_error_value",
-    ).orderBy("event_id")
-    out = spark.createDataFrame(res.collect(), res.schema)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out.orderBy("event_id")
+        gate.drain(
+            asof_state_stream(stream)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out)
+        )
+        sink = spark.read.schema(ASOF_OUTPUT).parquet(out)
+        return materialize_release(
+            sink.select(
+                "event_id",
+                "user_id",
+                F.unix_micros("ts").alias("ts_us"),
+                "value",
+                F.unix_micros("last_error_ts").alias("last_error_us"),
+                "last_error_value",
+            ).orderBy("event_id")
+        )
 
 
 from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402

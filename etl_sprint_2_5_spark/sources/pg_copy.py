@@ -140,9 +140,11 @@ class ephemeral_pg:
     EMPTY: nothing but initdb's catalog is in the template, so no
     query state can leak between scenarios. The template is
     per-process (no cross-process sharing, no lock protocol) and
-    removed atexit."""
+    removed at interpreter exit by its TemporaryDirectory's
+    finalizer."""
 
     _template_dir: str | None = None  # process-wide initdb template
+    _template_tmp = None  # its TemporaryDirectory, kept alive until exit
 
     def __init__(self, base_dir: str, port: int = 54329):
         self.base = base_dir
@@ -163,7 +165,6 @@ class ephemeral_pg:
     def _template(self) -> str:
         """The once-per-process initdb'd template data dir (never
         started — no postmaster state, just initdb's catalog files)."""
-        import atexit
         import os
         import shutil as _sh
         import tempfile
@@ -173,7 +174,10 @@ class ephemeral_pg:
         if tpl and os.path.isdir(tpl):
             return tpl
 
-        base = tempfile.mkdtemp(prefix="pg_tpl_")
+        holder = tempfile.TemporaryDirectory(
+            prefix="pg_tpl_", ignore_cleanup_errors=True
+        )
+        base = holder.name
         os.chmod(base, 0o755)
         if os.geteuid() == 0:
             _sh.chown(base, user="nobody")
@@ -182,8 +186,7 @@ class ephemeral_pg:
             "initdb", "-D", tpl, "-U", "pguser", "--auth=trust",
             "--no-sync",
         )
-        cls._template_dir = tpl
-        atexit.register(lambda: _sh.rmtree(base, ignore_errors=True))
+        cls._template_dir, cls._template_tmp = tpl, holder
         return tpl
 
     def __enter__(self) -> str:

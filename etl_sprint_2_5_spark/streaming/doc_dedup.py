@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_sprint_2_5_spark.operators.dedup import hashed_shingle_sets
+from etl_sprint_2_5_spark.streaming.gate import drain
 
 
 class CorpusDedupIndex:
@@ -137,7 +138,6 @@ def stream_doc_dedup(
     out_path: str,
     checkpoint_dir: str,
     threshold: float = 0.5,
-    available_now: bool = True,
 ):
     """Classify a streaming document feed against the corpus index,
     writing (doc_id, verdict, match_id) per micro-batch to
@@ -145,7 +145,8 @@ def stream_doc_dedup(
     of ``out_path`` unions all batches). Per-batch overwrite of the
     deterministic subdirectory makes the sink an idempotent upsert
     keyed by batch_id — a retry after a partial commit replaces, not
-    duplicates. Returns the StreamingQuery."""
+    duplicates. Drains the feed's backlog and returns the terminated
+    StreamingQuery."""
     feed = spark.readStream.schema(feed_schema).parquet(feed_dir)
 
     def process(batch_df, batch_id: int) -> None:  # noqa: ANN001
@@ -155,11 +156,5 @@ def stream_doc_dedup(
             f"{out_path}/batch_id={batch_id}"
         )
 
-    writer = (
-        feed.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = feed.writeStream.foreachBatch(process).outputMode("update")
+    return drain(writer, checkpoint_dir, "doc_dedup")

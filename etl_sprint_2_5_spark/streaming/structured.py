@@ -12,9 +12,13 @@ drain's own fan-out → restricted rebuild → idempotent upsert core
 carries over unchanged: a replayed micro-batch re-upserts the same
 documents.
 
-``Trigger.AvailableNow`` drains the backlog then stops (batch-
-incremental mode); drop the trigger for a resident daemon with
-``processingTime`` polling (T1, daemon.py:537-542).
+Both starters drain through ``streaming.gate.drain``: the backlog is
+consumed under ``Trigger.AvailableNow`` (batch-incremental mode) with a
+bounded wait, and the returned query has terminated. That holds for
+registered Python data sources too (sources/pg_stream), which Spark
+drives through its AvailableNow wrapper. A resident daemon would run
+the same body under ``processingTime`` polling instead (T1,
+daemon.py:537-542).
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
+from etl_sprint_2_5_spark.streaming.gate import drain
 from etl_sprint_2_5_spark.streaming.ivm import (
     Pipeline,
     TableLoader,
@@ -36,11 +41,10 @@ def stream_pipeline(
     feed_schema: StructType,
     load: TableLoader,
     checkpoint_dir: str,
-    available_now: bool = True,
     row_counter: list | None = None,
 ):
-    """Run one pipeline as a Structured Streaming query over its
-    change-feed directory; returns the StreamingQuery.
+    """Drain one pipeline's change-feed directory as a Structured
+    Streaming query; returns the terminated StreamingQuery.
 
     ``row_counter``: optional list the per-batch row counts are
     appended to — the exact consumed-row accounting. (The progress
@@ -51,8 +55,7 @@ def stream_pipeline(
 
     changed_stream = spark.readStream.schema(feed_schema).parquet(feed_dir)
     return stream_pipeline_from(
-        spark, p, changed_stream, load, checkpoint_dir,
-        available_now=available_now, row_counter=row_counter,
+        spark, p, changed_stream, load, checkpoint_dir, row_counter=row_counter
     )
 
 
@@ -62,16 +65,13 @@ def stream_pipeline_from(
     changed_stream,  # noqa: ANN001 - streaming DataFrame of changed rows
     load: TableLoader,
     checkpoint_dir: str,
-    available_now: bool = True,
     row_counter: list | None = None,
 ):
     """The pipeline body over an ARBITRARY change-feed stream — each
     micro-batch goes through ``ivm.apply_changes`` as in
     :func:`stream_pipeline`, source-agnostic: file feeds, Kafka, or a
     registered Python data source (sources/pg_stream's live-PG keyset
-    source). ``available_now=False`` leaves the trigger default —
-    callers drain with ``processAllAvailable()`` when the source does
-    not support Trigger.AvailableNow (Python data sources)."""
+    source). Drains the backlog and returns the terminated query."""
 
     def process(batch_df, batch_id: int) -> None:  # noqa: ANN001
         n = batch_df.count()
@@ -80,11 +80,5 @@ def stream_pipeline_from(
         if n:
             apply_changes(spark, [(p, batch_df)], load)
 
-    writer = (
-        changed_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = changed_stream.writeStream.foreachBatch(process).outputMode("update")
+    return drain(writer, checkpoint_dir, p.name)

@@ -13,6 +13,7 @@ reference most lacked:
 from __future__ import annotations
 
 import datetime as dt
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -197,7 +198,7 @@ def test_flaky_sink_retried_offset_advances_once(spark, env, monkeypatch):
         return upsert_keyed_parquet(spark_, batch, path, key)
 
     monkeypatch.setattr(ivm_mod, "upsert_keyed_parquet", flaky)
-    monkeypatch.setattr(ivm_mod.time, "sleep", lambda s: None)
+    monkeypatch.setattr(ivm_mod, "time", SimpleNamespace(sleep=lambda s: None))
 
     before_ts, before_id = offsets.get(pipes[0].name)
     n = run_cycle(spark, pipes[0], ld, offsets)
@@ -228,7 +229,7 @@ def test_dead_sink_aborts_cycle_offset_unmoved(spark, env, monkeypatch):
         raise OSError("sink permanently down")
 
     monkeypatch.setattr(ivm_mod, "upsert_keyed_parquet", dead)
-    monkeypatch.setattr(ivm_mod.time, "sleep", lambda s: None)
+    monkeypatch.setattr(ivm_mod, "time", SimpleNamespace(sleep=lambda s: None))
 
     before = offsets.get(pipes[0].name)
     with _pytest.raises(OSError):

@@ -16,6 +16,7 @@ Pins the r16 optimization's contract:
 from __future__ import annotations
 
 import datetime as dt
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -201,7 +202,7 @@ def test_merged_sink_failure_leaves_every_offset_unmoved(
     monkeypatch.setattr(
         ivm_mod, "upsert_keyed_parquet_bucketed", dead, raising=True
     )
-    monkeypatch.setattr(ivm_mod.time, "sleep", lambda s: None)
+    monkeypatch.setattr(ivm_mod, "time", SimpleNamespace(sleep=lambda s: None))
     before = [offsets.get(p.name) for p in pipes]
     with pytest.raises(OSError):
         run_to_completion(spark, pipes, ld, offsets)
