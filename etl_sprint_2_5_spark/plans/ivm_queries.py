@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from etl_sprint_2_5_spark.plans.registry import materialize_release, query
 from etl_sprint_2_5_spark.sources.parquet import load_table
 from etl_sprint_2_5_spark.streaming.gate import streaming_gate, write_feed
+from etl_sprint_2_5_spark.streaming.ivm import snapshot_loader
 from etl_sprint_2_5_spark.streaming.sink import (
     buckets_for,
     dir_bytes,
@@ -97,27 +98,25 @@ def _stage_base(spark: SparkSession, sf_dir: str, base: str) -> None:
         df.write.mode("overwrite").parquet(f"{base}/{name}")
 
 
+def _loader(spark: SparkSession, base: str):
+    """A ``load`` over the staged snapshots under ``base``; every call
+    reads afresh. ``run_to_completion`` resolves each table once per
+    drain itself, so the batch gates hand it this plain loader for
+    both phases and phase B sees the mutated snapshots."""
+    return lambda name: spark.read.parquet(f"{base}/{name}")
+
+
 def _memo_loader(spark: SparkSession, base: str):
-    """A ``load`` whose relations are resolved ONCE per PHASE, not per
-    cycle: every `spark.read.parquet` call builds a fresh file index
-    (directory listing) and re-reads footers for the schema, and the
-    maintenance loop calls ``load`` up to five times per cycle (keyset
-    producer, bridge fan-out, three rebuild tables) — pure repeated
-    driver-side work (guide §1.2/§6). Memoizing the DataFrame reuses
-    one resolved relation for the whole drain. Scope is ONE PHASE by
-    construction: sources are quiescent during a drain (the documented
-    run_to_completion invariant), and the caller builds a FRESH loader
-    after the CDC mutate so phase B sees the overwritten snapshots —
-    a loader carried across the mutate would serve a stale file index
-    over deleted files."""
-    cache: dict[str, DataFrame] = {}
-
-    def load(name: str) -> DataFrame:
-        if name not in cache:
-            cache[name] = spark.read.parquet(f"{base}/{name}")
-        return cache[name]
-
-    return load
+    """:func:`_loader` with each table resolved ONCE, for the streaming
+    gate: its ``foreachBatch`` bodies call ``load`` per micro-batch and
+    the streaming path does not snapshot (a long-running stream is not
+    quiescent between micro-batches), so without the memo every batch
+    would rebuild each table's file index and re-read its footers. The
+    gate's feeds are quiescent within a phase, so one relation per
+    table serves every micro-batch of the phase; the gate builds a
+    FRESH loader after the CDC mutate, because a loader carried across
+    it would serve a stale file index over deleted files."""
+    return snapshot_loader(_loader(spark, base))
 
 
 def _mutate(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -296,9 +295,7 @@ def ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ~100k buckets at 100 TB; floors to 16 on this toy base)
         nb = buckets_for(dir_bytes(base))
 
-        # one resolved relation per table per PHASE (see _memo_loader on
-        # why the loader must not outlive the mutate boundary)
-        load = _memo_loader(spark, base)
+        load = _loader(spark, base)
 
         # batch_size ≈ n/2 per source: every pipeline needs ≥2 keyset
         # cycles for the backfill, so the cursor provably advances
@@ -312,9 +309,8 @@ def ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         run_to_completion(spark, pipelines, load, offsets)  # phase A: backfill
         _mutate(spark, sf_dir, base)  # the CDC writes
-        consumed_b = run_to_completion(
-            spark, pipelines, _memo_loader(spark, base), offsets
-        )  # phase B — fresh loader over the mutated snapshots
+        # phase B: the drain loads the mutated snapshots afresh
+        consumed_b = run_to_completion(spark, pipelines, load, offsets)
 
         docs = (
             read_bucketed_view(spark, gold)
@@ -498,8 +494,7 @@ def ivm_maintained_docs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_base(spark, sf_dir, base)
         nb = buckets_for(dir_bytes(base))
 
-        # one resolved relation per table per PHASE (see _memo_loader)
-        load = _memo_loader(spark, base)
+        load = _loader(spark, base)
 
         sizes = {
             name: max(1, load(name).count() // 2 + 1)
@@ -512,9 +507,8 @@ def ivm_maintained_docs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         run_to_completion(spark, pipelines, load, offsets)  # phase A: backfill
         _mutate(spark, sf_dir, base)  # the CDC writes
-        consumed_b = run_to_completion(
-            spark, pipelines, _memo_loader(spark, base), offsets
-        )  # phase B — fresh loader over the mutated snapshots
+        # phase B: the drain loads the mutated snapshots afresh
+        consumed_b = run_to_completion(spark, pipelines, load, offsets)
 
         docs = (
             read_bucketed_view(spark, gold)

@@ -23,6 +23,18 @@ def default_parallelism() -> int:
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` when set, else a quarter of the host's
+    physical memory, between 1g and 16g. A fixed 16g let one session's
+    JVM grow past what a small host could spare beside its other
+    processes."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(max(host_mb // 4, 1024), 16 * 1024)}m"
+
+
 def get_spark(app_name: str = APP_NAME, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -48,7 +60,7 @@ def get_spark(app_name: str = APP_NAME, shuffle_partitions: int | None = None) -
         # parquet reader rejects; read as long and convert in the source layer
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.crossJoin.enabled", "true")
     )

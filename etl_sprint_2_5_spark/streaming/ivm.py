@@ -11,22 +11,32 @@ Here each pipeline is a config over ordinary Catalyst plans, and every
 caller runs ONE change-apply core, :func:`apply_changes`:
 
 - **fan-out** (J7/J8) = changed rows → affected doc ids, either a
-  column pluck or a broadcast semi-join through the bridge table —
-  stays distributed, nothing but the cursor row is ever collected;
-- **rebuild** = the gold builder restricted by the affected-id
-  semi-join (J6) — same code as the full build, so incremental ==
-  batch by construction;
+  column pluck or a broadcast semi-join through the bridge table;
+  the members' fan-outs execute once per call and the distinct ids
+  are collected into a driver-local frame (the reference's
+  collected id list, ``WHERE id = ANY(:ids)``, daemon.py:195; a
+  backfill-sized set stays cached on the executors instead);
+- **rebuild** = the gold builder restricted by that id set (J6) —
+  same code as the full build, so incremental == batch by
+  construction;
 - **sink** = idempotent upsert by doc id (T3), retried with bounded
-  backoff (T6).
+  backoff (T6); the bucketed sink probes its touched buckets over the
+  same id set.
 
 The callers own where changed rows come from and where the cursor
 lives. :func:`run_round` is the batch daemon's round: read each
 member's keyset batch (S2/P6: composite (ts, id) cursor predicate,
-pushable into the parquet/JDBC scan), apply, and only then advance
-the offsets (T2's commit-after-sink ordering, daemon.py:118-129) ⇒ a
+pushable into the parquet/JDBC scan), count and tail every member's
+batch in ONE aggregation, apply, and only then advance the
+offsets (T2's commit-after-sink ordering, daemon.py:118-129) ⇒ a
 crash anywhere re-delivers an already-upserted batch: no loss, no
 duplicates. ``structured.stream_pipeline_from`` calls the same core
 from ``foreachBatch`` with Spark's checkpoint as the cursor.
+
+:func:`run_to_completion` loads each source table once per call (one
+snapshot per table per drain — sources are quiescent during a drain).
+The streaming path keeps its caller's loader: a long-running stream
+is not quiescent between micro-batches.
 
 Unlike the reference's one-batch-per-poll quirk (T8, max 500 rows/s),
 ``run_to_completion`` drains the full backlog — a documented superset.
@@ -216,6 +226,51 @@ def with_backoff(
     return None
 
 
+def snapshot_loader(load: TableLoader) -> TableLoader:
+    """``load`` memoized by table name: each table is loaded once and
+    every later request gets the same frame. Exact only while the
+    sources are quiescent (one drain); it saves the directory listing
+    and footer job of every repeated ``spark.read.parquet`` (the keyset
+    producer, the bridge fan-out and each rebuild's tables ask again
+    and again)."""
+    frames: dict[str, DataFrame] = {}
+
+    def snapshot(name: str) -> DataFrame:
+        if name not in frames:
+            frames[name] = load(name)
+        return frames[name]
+
+    return snapshot
+
+
+# Affected-id sets up to this size are held as a driver-local relation;
+# larger ones are cached on the executors. Every consumer of a
+# LocalTableScan ships its rows with its tasks, which outgrows a cached
+# scan at tens of thousands of rows (a touched-bucket probe and two
+# broadcast semi-joins over 20k ids: 0.7 s local against 0.5 s cached;
+# over 150k ids: 2.8 s against 0.9 s; 4-core host). Below it the local
+# set spares the job that fills a cache.
+LOCAL_IDS_MAX = 10_000
+
+
+def _materialize(spark: SparkSession, ids: DataFrame) -> DataFrame:
+    """Execute ``ids`` and return a frame its consumers read without
+    executing the fan-out again: up to :data:`LOCAL_IDS_MAX` rows, a
+    driver-local relation (the rows go from the executors to the driver
+    JVM and stay there — no Python round trip); above it, ``ids``
+    cached, so the fan-out executes once more, to fill the cache. The
+    caller unpersists the result when done (a no-op for the local
+    relation)."""
+    jdf = ids._jdf
+    # a plain collect: capping it with a LIMIT costs more Spark jobs
+    # (incremental partition scans) than the rows it saves
+    rows = jdf.collectAsList()
+    if rows.size() > LOCAL_IDS_MAX:
+        return ids.persist()
+    local = spark._jsparkSession.createDataFrame(rows, jdf.schema())
+    return DataFrame(local, spark)
+
+
 def apply_changes(
     spark: SparkSession,
     members: list[tuple[Pipeline, DataFrame]],
@@ -231,36 +286,70 @@ def apply_changes(
     Result-identical to applying the members one by one:
     rebuild(ids_a ∪ ids_b) row-for-row equals rebuild(ids_a) upserted
     then rebuild(ids_b) upserted — sources are quiescent while a round
-    runs, and overlapping ids rebuild to the same row either way. A
-    single member's ids pass through as-is (``affected_ids`` is already
-    distinct). Cursors stay with the caller, which must advance them
-    only after this returns."""
+    runs, and overlapping ids rebuild to the same row either way.
+
+    The affected-id set is materialized ONCE per call
+    (:func:`_materialize`): the members' fan-outs execute once and the
+    distinct ids are collected into a driver-local frame, the reference
+    daemon's collected id list (``WHERE id = ANY(:ids)``,
+    daemon.py:195,266,316) — or, above :data:`LOCAL_IDS_MAX` ids (a
+    backfill), a cached frame. The rebuild's restrictions and the
+    bucketed sink's touched-bucket probe then read the materialized
+    set; none of them re-runs the fan-out or its bridge scans. Every
+    consumer already broadcasts or collects these ids, and the set is
+    bounded by the members' batch sizes, so collecting it on the driver
+    adds no new memory bound. Cursors stay with the caller, which must
+    advance them only after this returns."""
     p = members[0][0]
     parts = [m.fanout.affected_ids(changed, load) for m, changed in members]
     ids = reduce(DataFrame.unionByName, parts)
     if len(parts) > 1:
         ids = ids.distinct()
-    # persist ONLY when the sink's touched-bucket probe will execute
-    # the frame a second time (rewrite-bucketed path): the affected-id
-    # frame then feeds the probe AND the rebuild's broadcast semi-join
-    # (AND, on source-native rebuilds, an eager collect), and without
-    # the persist a bridge fan-out re-runs its bridge-table scan+join
-    # per execution. The delta/flat sinks consume ids exactly once
-    # (the broadcast) — persisting there is pure overhead. Bounded by
-    # the batches' fan-out, so it is safely materializable.
-    if p.sink_mode != "delta" and p.n_buckets > 0:
-        ids = ids.persist()
+    ids = _materialize(spark, ids)
     try:
         docs = p.rebuild(load, ids)
         # T6: transient sink failures are retried with capped backoff;
         # only a still-failing sink aborts. ids rides along as the
         # touched-bucket probe hint: the rebuild restricted docs to
-        # exactly these ids, so the sink can probe over the bounded id
-        # frame and execute the rebuild plan only once — inside the
-        # merge write (the sink checks the superset contract)
+        # exactly these ids, so the sink probes the materialized id set
+        # and executes the rebuild plan only once — inside the merge
+        # write (the sink checks the superset contract)
         with_backoff(lambda: p.upsert(spark, docs, probe_keys=ids))
     finally:
         ids.unpersist()
+
+
+def _heads(batches: list[tuple[Pipeline, DataFrame]]) -> list[tuple]:
+    """ONE aggregation over every member's batch, yielding each
+    member's consumed-row count and cursor tail: the max over the
+    composite (ts, id) — struct comparison is lexicographic, identical
+    to ORDER BY ts DESC, id DESC LIMIT 1. The members' batches are
+    unioned with one tail column per member (NULL in the other members'
+    rows), so members whose cursor or id types differ still share the
+    aggregation and each tail keeps its own type and ordering. Returns
+    one ``(n, tail)`` pair per member, aligned with ``batches``."""
+    tails = [
+        F.struct(
+            F.col(p.cursor_field).alias("ts"), F.col(p.id_field).alias("id")
+        )
+        for p, _ in batches
+    ]
+    types = [
+        b.select(t).schema[0].dataType for (_, b), t in zip(batches, tails)
+    ]
+    tagged = [
+        b.select(*[
+            (t if j == i else F.lit(None).cast(types[j])).alias(f"t{j}")
+            for j, t in enumerate(tails)
+        ])
+        for i, (_, b) in enumerate(batches)
+    ]
+    head = reduce(DataFrame.unionByName, tagged).agg(*[
+        agg
+        for j in range(len(batches))
+        for agg in (F.count(f"t{j}"), F.max(f"t{j}"))
+    ]).first()
+    return [(head[2 * j], head[2 * j + 1]) for j in range(len(batches))]
 
 
 def run_round(
@@ -271,13 +360,12 @@ def run_round(
 ) -> list[int]:
     """One drain round for a group of pipelines sharing one
     :func:`_merge_key`: each member reads its bounded keyset batch
-    after its cursor, the non-empty ones go through ONE
+    after its cursor, ONE aggregation (:func:`_heads`) counts and
+    tails every batch, the non-empty ones go through ONE
     :func:`apply_changes`, and only after it returned do their cursors
     advance (T2) — a sink failure leaves every member's offset unmoved
     and the whole round re-delivers, idempotently. Returns the
     per-member consumed-row counts, aligned with ``plist``."""
-    counts: list[int] = []
-    live: list[tuple[Pipeline, DataFrame, object]] = []
     cached: list[DataFrame] = []
     try:
         for p in plist:
@@ -289,30 +377,17 @@ def run_round(
                     load(p.source), p.cursor_field, p.id_field, ts,
                     last_id, p.batch_size,
                 )
-            # cache: the batch feeds the fan-out AND the cursor
-            # computation; bounded by batch_size so it is safely
+            # cache: the batch feeds the head aggregation AND the
+            # fan-out; bounded by batch_size so it is safely
             # materializable. Registered for release before the head
             # aggregation runs, so a failing one cannot leak it.
-            batch = batch.cache()
-            cached.append(batch)
-            # ONE aggregation job yields both the consumed-row count
-            # and the cursor tail (max over the composite (ts, id) —
-            # struct comparison is lexicographic, identical to ORDER BY
-            # ts DESC, id DESC LIMIT 1)
-            head = batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max(
-                    F.struct(
-                        F.col(p.cursor_field).alias("ts"),
-                        F.col(p.id_field).alias("id"),
-                    )
-                ).alias("tail"),
-            ).first()
-            counts.append(head["n"])
-            if head["n"]:
-                live.append((p, batch, head["tail"]))
-            else:
-                cached.pop().unpersist()
+            cached.append(batch.cache())
+        heads = _heads(list(zip(plist, cached)))
+        live = [
+            (p, batch, tail)
+            for p, batch, (n, tail) in zip(plist, cached, heads)
+            if n
+        ]
         if live:
             apply_changes(spark, [(p, b) for p, b, _ in live], load)
             # T2: cursors advance only after the sink returned
@@ -321,7 +396,7 @@ def run_round(
                 if isinstance(ts_val, str):
                     ts_val = dt.datetime.fromisoformat(ts_val)
                 offsets.set(p.name, ts_val, tail["id"])
-        return counts
+        return [n for n, _ in heads]
     finally:
         for batch in cached:
             batch.unpersist()
@@ -403,7 +478,14 @@ def run_to_completion(
     which removes the confirm-empty cycle per pipeline (a full
     keyset-scan plan + aggregation job each). The drained set is
     per-call: the next call re-polls everything, so post-drain
-    mutations are picked up."""
+    mutations are picked up.
+
+    One snapshot per table per call: ``load`` is wrapped by
+    :func:`snapshot_loader`, so each table name is loaded at most once
+    per call and every round, fan-out and rebuild of the drain reads
+    the same frame — exact under the same quiescence. The next call
+    loads afresh, so it sees the writes that landed in between."""
+    load = snapshot_loader(load)
     groups: dict[tuple, list[int]] = {}
     for i, p in enumerate(pipelines):
         groups.setdefault(_merge_key(p), []).append(i)

@@ -1,7 +1,8 @@
-"""Merged-round drain (ivm._run_round_merged): pipelines sharing one
-sink + rebuild pay ONE rebuild and ONE sink commit per drain round.
+"""Merged-round drain (ivm.run_round over one ivm._merge_key group):
+pipelines sharing one sink + rebuild pay ONE rebuild and ONE sink
+commit per drain round.
 
-Pins the r16 optimization's contract:
+Pins the merged drain's contract:
 1. result identity — merged drain lands on exactly the batch build,
    through backfill AND incremental maintenance;
 2. the commit count actually drops (one manifest version per round,
@@ -10,7 +11,9 @@ Pins the r16 optimization's contract:
    member's offset unmoved (commit-after-sink, T2);
 4. delta-mode pipelines are NOT merged (their compaction cadence is
    counted in upserts — collapsing rounds would shift when the log
-   folds into bases, weakening the delta gate's mixed final state).
+   folds into bases, weakening the delta gate's mixed final state);
+5. a drain stays within its Spark-job budget: one load per table per
+   drain, one fan-out execution and one head aggregation per round.
 """
 
 from __future__ import annotations
@@ -252,3 +255,99 @@ def test_partially_drained_group_keeps_merging(spark, tmp_path):
     assert _rows(read_bucketed_view(spark, gold)) == _rows(
         _batch_build(spark, tmp)
     )
+
+
+def _write_tags(spark, tmp: str, n_items: int, n_tags: int) -> None:
+    """A dimension (tags) and the bridge (item_tags) that routes a tag
+    change to its items. Only the bridge fan-out reads the bridge."""
+    spark.range(n_tags).select(
+        F.col("id").alias("tag_id"),
+        F.lit(T0).cast("timestamp").alias("updated_at"),
+    ).write.mode("overwrite").parquet(f"{tmp}/base/tags")
+    spark.range(n_items).select(
+        (F.col("id") % n_tags).alias("tag_id"), F.col("id").alias("item_id"),
+    ).write.mode("overwrite").parquet(f"{tmp}/base/item_tags")
+
+
+def _drain_jobs(spark, action, group: str):  # noqa: ANN001, ANN202
+    """(Spark jobs, physical plan text of each SQL execution) that
+    ``action`` runs: jobs by job group through ``statusTracker``, plans
+    from the SQL status store."""
+    from tests.test_plan_properties import _executed_plans
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        plans = _executed_plans(spark, action)
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+# Spark jobs a two-round drain of the two-member group below may run
+# (measured: 37; before the affected ids were collected once per round
+# and the head aggregations folded into one, the same drain ran 47).
+# Per round: 2 for the head aggregation (AQE runs its shuffle stage as
+# a job of its own), the affected-id collect, and the touched-bucket
+# probe, the rebuild's broadcasts, stages and write inside the sink
+# commit.
+DRAIN_JOB_BUDGET = 37
+
+
+def test_merged_round_job_budget(spark, tmp_path):
+    """A two-member merged group (a column pluck and a bridge fan-out),
+    drained in two rounds, stays within its Spark-job budget:
+
+    - each table is loaded once per ``run_to_completion`` call;
+    - the fan-out executes once per round: one execution per round
+      scans the bridge, however many rebuild restrictions and sink
+      probes read the affected ids;
+    - one head aggregation per round counts and tails both batches;
+    - the drain's Spark jobs stay within ``DRAIN_JOB_BUDGET``."""
+    tmp = str(tmp_path)
+    _write_base(spark, tmp, n=40)
+    _write_tags(spark, tmp, n_items=40, n_tags=6)
+    gold = f"{tmp}/gold/docs"
+    common = dict(rebuild=_rebuild, sink_path=gold, doc_key="id",
+                  n_buckets=16)
+    # items drain in 21 + 19 rows, tags in 4 + 2: two rounds, both live
+    pipes = [
+        Pipeline(name="items", source="items", cursor_field="updated_at",
+                 id_field="id", fanout=FanOut(id_field="id"),
+                 batch_size=21, **common),
+        Pipeline(name="tags", source="tags", cursor_field="updated_at",
+                 id_field="tag_id",
+                 fanout=FanOut(id_field="tag_id", bridge="item_tags",
+                               join_field="tag_id", select_field="item_id"),
+                 batch_size=4, **common),
+    ]
+    offsets = OffsetStore(f"{tmp}/offsets.json", id_default=0)
+    loads: dict[str, int] = {}
+    base = _loader(spark, tmp)
+
+    def ld(name: str):  # noqa: ANN202
+        loads[name] = loads.get(name, 0) + 1
+        return base(name)
+
+    consumed = []
+    jobs, plans = _drain_jobs(
+        spark,
+        lambda: consumed.append(run_to_completion(spark, pipes, ld, offsets)),
+        "ivm_budget",
+    )
+    assert consumed == [40 + 6]
+    assert _rows(read_bucketed_view(spark, gold)) == _rows(
+        _batch_build(spark, tmp)
+    )
+    assert int(load_manifest(gold)["version"]) == 2  # two rounds
+    assert loads == {"items": 1, "tags": 1, "item_tags": 1, "extras": 1}
+    bridge_scans = [p for p in plans if "base/item_tags" in p]
+    assert len(bridge_scans) == 2, bridge_scans
+    heads = [p for p in plans if "InMemoryTableScan" in p and "max(" in p]
+    assert len(heads) == 2, heads
+    assert jobs <= DRAIN_JOB_BUDGET, jobs
+
+    # a second call loads afresh: one more load of each polled source,
+    # and the empty round runs only its head aggregation
+    run_to_completion(spark, pipes, ld, offsets)
+    assert loads == {"items": 2, "tags": 2, "item_tags": 1, "extras": 1}

@@ -18,6 +18,7 @@ from __future__ import annotations
 import pytest
 
 from etl_sprint_2_5_spark.sources import pg_copy
+from etl_sprint_2_5_spark.streaming.gate import drain
 
 
 pytestmark = pytest.mark.skipif(
@@ -228,31 +229,27 @@ def test_pg_keyset_stream_source(spark, dsn, tmp_path):
     def proc(bdf, bid):  # noqa: ANN001
         batches.append((bdf.count(), bdf.agg({"val": "sum"}).first()[0]))
 
-    def drain() -> None:
-        q = (
+    def drain_sev() -> None:
+        drain(
             spark.readStream.format("pg_keyset")
             .option("dsn", dsn).option("table", "sev")
             .option("tscol", "ts").option("idcol", "id")
             .option("readschema", "id bigint, ts timestamp, val bigint")
             .option("slices", "2").load()
-            .writeStream.foreachBatch(proc)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
+            .writeStream.foreachBatch(proc),
+            str(tmp_path / "ckpt"), "sev",
         )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
 
-    drain()  # backfill
+    drain_sev()  # backfill
     assert batches == [(20, sum(i * 2 for i in range(20)))]
     pg_copy.pg_exec(
         dsn,
         "UPDATE sev SET val = val + 1000, "
         "ts = TIMESTAMP '2026-03-02 00:00:00' WHERE id % 4 = 0",
     )
-    drain()  # resume: exactly the 5 mutated rows, new values
+    drain_sev()  # resume: exactly the 5 mutated rows, new values
     assert batches[1] == (5, sum(i * 2 + 1000 for i in range(0, 20, 4)))
-    drain()  # idle resume: no offset movement, no batch
+    drain_sev()  # idle resume: no offset movement, no batch
     assert len(batches) == 2
 
 

@@ -8,6 +8,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+from etl_sprint_2_5_spark.streaming.gate import drain
 from etl_sprint_2_5_spark.streaming.stateful import (
     running_user_counts_stream,
     stateful_dedup_stream,
@@ -27,16 +28,10 @@ def _drain(spark, feed, ckpt, out, build):
     def sink(batch_df, batch_id):  # update-mode emissions -> append files
         batch_df.write.mode("append").parquet(out)
 
-    q = (
-        build(stream)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        build(stream).writeStream.foreachBatch(sink).outputMode("update"),
+        ckpt, "stateful",
     )
-    q.awaitTermination(120)
-    assert not q.isActive
 
 
 def test_stateful_dedup_across_batches_and_restarts(spark, tmp_path):
@@ -109,27 +104,23 @@ def test_asof_state_stream_matches_batch_asof(spark, tmp_path):
     def write(rows, mode):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(mode).parquet(feed)
 
-    def drain():
+    def drain_feed():
         stream = spark.readStream.schema(schema).parquet(feed)
 
         def sink(batch_df, batch_id):
             batch_df.write.mode("append").parquet(out)
 
-        q = (
+        drain(
             asof_state_stream(stream)
             .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            ckpt, "asof_state",
         )
-        q.awaitTermination(120)
-        assert not q.isActive
 
     write(batch1, "overwrite")
-    drain()
+    drain_feed()
     write(batch2, "append")
-    drain()  # restart from checkpoint picks up only batch2
+    drain_feed()  # restart from checkpoint picks up only batch2
 
     got = {
         r["event_id"]: (r["last_error_ts"], r["last_error_value"])
@@ -183,27 +174,23 @@ def test_attribution_state_stream_matches_batch(spark, tmp_path):
     def write(rows, mode):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(mode).parquet(feed)
 
-    def drain():
+    def drain_feed():
         stream = spark.readStream.schema(schema).parquet(feed)
 
         def sink(batch_df, batch_id):
             batch_df.write.mode("append").parquet(out)
 
-        q = (
+        drain(
             attribution_state_stream(stream)
             .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            ckpt, "attribution_state",
         )
-        q.awaitTermination(120)
-        assert not q.isActive
 
     write(batch1, "overwrite")
-    drain()
+    drain_feed()
     write(batch2, "append")
-    drain()
+    drain_feed()
 
     got = {
         (r["user_id"], r["value"]): r["channel"]

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+from etl_sprint_2_5_spark.streaming.gate import drain
+
 T = dt.datetime(2024, 6, 1, 10, 0, 0)
 
 
@@ -27,15 +29,12 @@ def test_stream_static_enrichment(spark, tmp_path):
     )  # user 2 intentionally unmatched
 
     stream = spark.readStream.schema(schema).parquet(feed)
-    q = (
+    drain(
         enrich_stream(stream, dim, ("user_id",))
         .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out),
+        ckpt, "enrich",
     )
-    q.awaitTermination(120)
 
     got = sorted(
         (r["event_id"], r["segment"]) for r in spark.read.parquet(out).collect()
@@ -73,15 +72,12 @@ def test_stream_stream_interval_join(spark, tmp_path):
     joined = interval_stream_join(
         vs, cs, "ad_id", "view_ts", "click_ts", max_delay="10 minutes"
     )
-    q = (
+    drain(
         joined.select("view_id", "click_id")
         .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out),
+        ckpt, "interval_join",
     )
-    q.awaitTermination(120)
 
     got = sorted(
         (r["view_id"], r["click_id"]) for r in spark.read.parquet(out).collect()

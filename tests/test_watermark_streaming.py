@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+from etl_sprint_2_5_spark.streaming.gate import drain
+
 SCHEMA = "event_id long, ts timestamp, user_id long"
 T = dt.datetime(2024, 6, 1, 10, 0, 0)
 
@@ -24,15 +26,12 @@ def _drain(spark, feed, ckpt, out):
     agg = watermarked_window_agg(
         stream, "ts", lateness="10 minutes", window="5 minutes"
     )
-    q = (
+    drain(
         agg.writeStream.format("parquet")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")  # emit only closed (watermark-passed) windows
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),  # emit only closed (watermark-passed) windows
+        ckpt, "window_agg",
     )
-    q.awaitTermination(120)
 
 
 def test_watermark_closes_windows_and_drops_late_rows(spark, tmp_path):
@@ -66,15 +65,12 @@ def _drain_sessions(spark, feed, ckpt, out):
     agg = watermarked_session_agg(
         stream, "ts", "user_id", gap="5 minutes", lateness="5 minutes"
     )
-    q = (
+    drain(
         agg.writeStream.format("parquet")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        ckpt, "session_agg",
     )
-    q.awaitTermination(120)
 
 
 def test_native_session_window_merges_and_closes(spark, tmp_path):
@@ -155,15 +151,12 @@ def test_watermark_lag_and_comparators_pinned(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.sort_array(F.collect_list("id")).alias("ids"))
     )
-    q = (
+    q = drain(
         agg.writeStream.outputMode("append")
         .format("memory")
-        .queryName("wm_pin")
-        .option("checkpointLocation", f"{tmp_path}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .queryName("wm_pin"),
+        f"{tmp_path}/ckpt", "wm_pin",
     )
-    assert q.awaitTermination(120), "stream did not drain"
     got = [
         (r["we"], tuple(r["ids"]))
         for r in spark.table("wm_pin")
