@@ -1,9 +1,11 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+``python bench.py`` runs the headline queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
+ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec, ...}, "sf": ...}. ``python bench.py q1 q2``
+times exactly the named registered queries the same way and writes
+no BENCH_FULL file.
 
 Each query is forced with the noop writer (full computation, no
 driver-side collect). A warmup action amortizes JVM/codegen startup
@@ -15,7 +17,9 @@ dominate sub-second queries): each query is repeated on a bounded
 budget — median-of-3 for fast queries (≤2s first run), best-of-2 for
 mid-range (≤8s), single-run above that — so "value" is the sum of the
 per-query representative times, with the raw loop wall-clock reported
-separately as wall_sec.
+separately as wall_sec. The representative run of each query also
+carries its Spark cost (etl_sprint_2_5_spark/cost.py), read after the
+timed window.
 """
 
 from __future__ import annotations
@@ -325,12 +329,16 @@ def preflight_load(max_wait_sec: int = 180) -> float:
     return busy
 
 
-def main() -> None:
-    from etl_sprint_2_5_spark.session import default_parallelism, get_spark
+def main(names: list[str]) -> None:
     from etl_sprint_2_5_spark import plans
+    from etl_sprint_2_5_spark.cost import tracked
+    from etl_sprint_2_5_spark.session import default_parallelism, get_spark
 
-    busy_before = preflight_load()
     plans.load_all()
+    unknown = [n for n in names if n not in plans.REGISTRY]
+    if unknown:
+        raise SystemExit(f"bench: unknown queries: {', '.join(unknown)}")
+    busy_before = preflight_load()
     spark = get_spark("bench")
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
 
@@ -358,35 +366,17 @@ def main() -> None:
     # corpus stats). At 100 TB these are offline index builds, not
     # query-time work; the cost is reported separately as prepare_sec
     # (near-zero when the artifact is already on disk).
-    from etl_sprint_2_5_spark.artifacts import (
-        prepared_fulltext_stats,
-        prepared_hll_day_registers,
-        prepared_ivf_centroids,
-        prepared_kmv_week_samples,
-        prepared_pq_index,
-        prepared_shingle_index,
-    )
-    from etl_sprint_2_5_spark.sources.parquet import load_documents_spread
+    from etl_sprint_2_5_spark.artifacts import prepare_all
 
     t_prep = time.time()
-    prepared_ivf_centroids(spark, SF_DIR).count()
-    prepared_shingle_index(spark, SF_DIR).count()
-    prepared_hll_day_registers(spark, SF_DIR).count()
-    prepared_kmv_week_samples(spark, SF_DIR).count()
-    _pq_cb, _pq_codes = prepared_pq_index(spark, SF_DIR)
-    _pq_cb.count(), _pq_codes.count()
-    prepared_fulltext_stats(
-        load_documents_spread(spark, SF_DIR),
-        SF_DIR,
-        ("spark", "window", "merge"),
-        ("text", "source"),
-    )
+    prepare_all(spark, SF_DIR)
     prepare_sec = round(time.time() - t_prep, 3)
 
-    def run_once(q) -> float:
-        t0 = time.time()
-        force(q.fn(spark, SF_DIR))
-        dt = time.time() - t0
+    def run_once(q):  # noqa: ANN001, ANN202 - (seconds, cost.Tracked)
+        with tracked(spark, q.name) as t:
+            t0 = time.time()
+            force(q.fn(spark, SF_DIR))
+            dt = time.time() - t0
         # cold-honest repeats (round-15 verdict item 2): clear cached
         # intermediates BETWEEN repeats, not just between queries —
         # otherwise repeats 2..5 of the median-of-5 hit a warm cache
@@ -394,7 +384,7 @@ def main() -> None:
         # fresh query pays. Outside the timed window, so the clear
         # itself is never charged to the query.
         spark.catalog.clearCache()
-        return dt
+        return dt, t
 
     # Batch medians (round-13 variance finding: whole bench batches
     # inflate uniformly ~1.3x under ambient hypervisor-neighbor load
@@ -405,15 +395,17 @@ def main() -> None:
     # driver's per-round run is unchanged; the round's committed
     # BENCH_FULL uses N=3 with batch totals recorded alongside.
     n_batches = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_BATCHES", "1")))
-    batch_timings: list[dict[str, float]] = []
+    # per batch: name -> (representative seconds, that run's cost)
+    batch_runs: list[dict[str, tuple[float, dict]]] = []
+    cost_read_sec = 0.0
     # queries whose input outside the repo is absent on this host (the
     # reference checkout's db.sqlite for legacy_full_load_live): they
     # are recorded and left out of the total instead of aborting the run
     skipped: list[str] = []
     t_start = time.time()
     for _b in range(n_batches):
-        timings: dict[str, float] = {}
-        for name in HEADLINE:
+        batch: dict[str, tuple[float, dict]] = {}
+        for name in names or HEADLINE:
             if name in skipped:
                 continue
             q = plans.REGISTRY[name]
@@ -425,12 +417,12 @@ def main() -> None:
                 )
                 skipped.append(name)
                 continue
-            if runs[0] <= 2.0:  # median-of-5 where repeats are cheap
+            if runs[0][0] <= 2.0:  # median-of-5 where repeats are cheap
                 # (round-6 variance audit: median-of-3 still let single
                 # JIT/broadcast-timeout spikes swing sub-2s queries up to
                 # 3.4x between runs; two more repeats cost seconds total)
                 runs += [run_once(q) for _ in range(4)]
-                rep = sorted(runs)[2]
+                rep = sorted(runs, key=lambda r: r[0])[2]
             else:  # best-of-2 for EVERYTHING slower: the first run can
                 # carry a one-off codegen/JIT compile or artifact-probe
                 # cold start (observed 7x on dedup_simhash, 10x on
@@ -438,28 +430,29 @@ def main() -> None:
                 # record the spike as the query's time exactly when it
                 # looks slowest
                 runs.append(run_once(q))
-                rep = min(runs)
-            timings[name] = round(rep, 3)
-            # (between-query cache release now happens inside run_once,
-            # after every repeat — see the cold-honest note there)
-        batch_timings.append(timings)
-    if n_batches == 1:
-        timings = batch_timings[0]
-    else:  # per-query median across batches
-        timings = {
-            name: round(
-                sorted(bt[name] for bt in batch_timings)[n_batches // 2], 3
-            )
-            for name in batch_timings[0]
-        }
+                rep = min(runs, key=lambda r: r[0])
+            t_read = time.time()
+            batch[name] = (round(rep[0], 3), rep[1].cost().counts())
+            cost_read_sec += time.time() - t_read
+        batch_runs.append(batch)
+    # per-query median across batches, with the cost of that batch's run
+    reps = {
+        name: sorted((bt[name] for bt in batch_runs), key=lambda r: r[0])[
+            n_batches // 2
+        ]
+        for name in batch_runs[0]
+    }
+    timings = {name: sec for name, (sec, _c) in reps.items()}
     batch_totals = [
-        round(sum(bt.values()), 3) for bt in batch_timings
+        round(sum(sec for sec, _c in bt.values()), 3) for bt in batch_runs
     ]
     total = round(sum(timings.values()), 3)
-    wall = round(time.time() - t_start, 3)
+    # the loop's wall-clock without the cost readout between queries
+    wall = round(time.time() - t_start - cost_read_sec, 3)
 
+    metric = "queries_total" if names else "headline_queries_total"
     full = {
-        "metric": "headline_queries_total",
+        "metric": metric,
         "value": total,
         "unit": "sec",
         "queries": timings,
@@ -475,17 +468,17 @@ def main() -> None:
         "loadavg_end": round(os.getloadavg()[0], 2),
         "sf": sf,
         "skipped": skipped,
+        "costs": {name: c for name, (_sec, c) in reps.items()},
+        "cost_read_sec": round(cost_read_sec, 3),
     }
     # Full per-query JSON: printed for humans AND persisted to a file,
     # because the driver keeps only the tail of stdout (the round-8
     # BENCH capture truncated the per-query map mid-token and was
     # unparseable). The LAST stdout line is therefore a compact
     # summary — guaranteed to fit any tail window — pointing at the
-    # persisted full file.
+    # persisted full file. A subset run persists nothing, so it can never
+    # overwrite the headline file.
     full_path = os.path.join(REPO, f"BENCH_FULL_sf{sf:g}.json")
-    with open(full_path, "w") as f:
-        json.dump(full, f)
-        f.write("\n")
     # r15 verdict issue 5: the unstamped file is silently clobbered by
     # whichever run came last (the driver's c8 run once overwrote the
     # committed 3-batch medians). Also persist a copy stamped with the
@@ -494,14 +487,15 @@ def main() -> None:
     stamped = os.path.join(
         REPO, f"BENCH_FULL_sf{sf:g}_c{default_parallelism()}_b{n_batches}.json"
     )
-    with open(stamped, "w") as f:
-        json.dump(full, f)
-        f.write("\n")
+    for path in [] if names else [full_path, stamped]:
+        with open(path, "w") as f:
+            json.dump(full, f)
+            f.write("\n")
     print(json.dumps(full))
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total",
+                "metric": metric,
                 "value": total,
                 "unit": "sec",
                 "sf": sf,
@@ -511,7 +505,7 @@ def main() -> None:
                 "cpu_busy_before": round(busy_before, 3),
                 "loadavg_end": round(os.getloadavg()[0], 2),
                 "batches": n_batches,
-                "full": os.path.basename(full_path),
+                "full": None if names else os.path.basename(full_path),
             }
         ),
         flush=True,
@@ -519,4 +513,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

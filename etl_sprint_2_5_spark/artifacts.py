@@ -76,6 +76,23 @@ def _key(parts: dict) -> str:
     ).hexdigest()[:16]
 
 
+def _persist_df(spark: SparkSession, kind: str, key: str, build) -> DataFrame:  # noqa: ANN001
+    """Shared read-or-train-and-publish dance: serve the parquet
+    artifact when present, else write the frame ``build()`` returns to
+    a tmp dir and publish it with one atomic rename (losing the race to
+    an identical writer is harmless — same deterministic bytes)."""
+    dest = artifact_root() / f"{kind}-{key}"
+    if (dest / "_SUCCESS").exists():
+        return spark.read.parquet(str(dest))
+    tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
+    build().write.mode("overwrite").parquet(str(tmp))
+    try:
+        tmp.rename(dest)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return spark.read.parquet(str(dest))
+
+
 # --------------------------------------------------------------------
 # IVF centroids
 # --------------------------------------------------------------------
@@ -117,19 +134,12 @@ def prepared_ivf_centroids(
             "iters": iters,
         }
     )
-    dest = artifact_root() / f"ivf_centroids-{key}"
-    if (dest / "_SUCCESS").exists():
-        return spark.read.parquet(str(dest))
-
-    trained = train_ivf_centroids(corpus, seeds, id_col, vec_col, iters)
-    tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
-    trained.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    try:
-        tmp.rename(dest)
-    except OSError:
-        # lost the race to an identical writer — keep theirs
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(str(dest))
+    return _persist_df(
+        spark, "ivf_centroids", key,
+        lambda: train_ivf_centroids(
+            corpus, seeds, id_col, vec_col, iters
+        ).coalesce(1),
+    )
 
 
 # --------------------------------------------------------------------
@@ -171,16 +181,7 @@ def prepared_quantized_codes(
             "vec": vec_col,
         }
     )
-    dest = artifact_root() / f"quantized_codes-{key}"
-    if (dest / "_SUCCESS").exists():
-        return spark.read.parquet(str(dest))
-    tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
-    inline().write.mode("overwrite").parquet(str(tmp))
-    try:
-        tmp.rename(dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(str(dest))
+    return _persist_df(spark, "quantized_codes", key, inline)
 
 
 # --------------------------------------------------------------------
@@ -226,16 +227,7 @@ def prepared_shingle_index(
             "n": n,
         }
     )
-    dest = artifact_root() / f"shingle_index-{key}"
-    if (dest / "_SUCCESS").exists():
-        return spark.read.parquet(str(dest))
-    tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
-    inline().write.mode("overwrite").parquet(str(tmp))
-    try:
-        tmp.rename(dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(str(dest))
+    return _persist_df(spark, "shingle_index", key, inline)
 
 
 # --------------------------------------------------------------------
@@ -457,24 +449,6 @@ def prepared_pq_index(
 # (tests/test_artifacts.py asserts the equality).
 
 
-def _persist_df(spark: SparkSession, kind: str, key: str, inline_fn) -> DataFrame:  # noqa: ANN001
-    """Shared read-or-train-and-publish dance: serve the parquet
-    artifact when present, else build, write to a tmp dir, and publish
-    with one atomic rename (losing the race to an identical writer is
-    harmless — same deterministic bytes)."""
-    dest = artifact_root() / f"{kind}-{key}"
-    if (dest / "_SUCCESS").exists():
-        return spark.read.parquet(str(dest))
-    built = inline_fn()
-    tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
-    built.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    try:
-        tmp.rename(dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(str(dest))
-
-
 def prepared_hll_day_registers(
     spark: SparkSession,
     sf_dir: str,
@@ -510,7 +484,7 @@ def prepared_hll_day_registers(
             "b": b,
         }
     )
-    return _persist_df(spark, "hll_day_registers", key, inline)
+    return _persist_df(spark, "hll_day_registers", key, lambda: inline().coalesce(1))
 
 
 def prepared_dd_price_histogram(
@@ -545,7 +519,7 @@ def prepared_dd_price_histogram(
             "fp": table_fingerprint(sf_dir, "lineitem"),
         }
     )
-    return _persist_df(spark, "dd_price_histogram", key, inline)
+    return _persist_df(spark, "dd_price_histogram", key, lambda: inline().coalesce(1))
 
 
 def prepared_cms_custkey_cells(
@@ -582,7 +556,7 @@ def prepared_cms_custkey_cells(
             "d": depth,
         }
     )
-    return _persist_df(spark, "cms_cells", key, inline)
+    return _persist_df(spark, "cms_cells", key, lambda: inline().coalesce(1))
 
 
 def prepared_kmv_week_samples(
@@ -646,4 +620,26 @@ def prepared_kmv_week_samples(
             "k": k,
         }
     )
-    return _persist_df(spark, "kmv_week_samples", key, inline)
+    return _persist_df(spark, "kmv_week_samples", key, lambda: inline().coalesce(1))
+
+
+def prepare_all(spark: SparkSession, sf_dir: str) -> None:
+    """Build (or find) every artifact the served queries probe at
+    ``sf_dir`` — the offline index-build phase, run once before any
+    query that reads them."""
+    from etl_sprint_2_5_spark.sources.parquet import load_documents_spread
+
+    prepared_ivf_centroids(spark, sf_dir).count()
+    prepared_shingle_index(spark, sf_dir).count()
+    prepared_hll_day_registers(spark, sf_dir).count()
+    prepared_kmv_week_samples(spark, sf_dir).count()
+    codebook, codes = prepared_pq_index(spark, sf_dir)
+    codebook.count(), codes.count()
+    # the term index is vocabulary-wide: one probe with fulltext_search's
+    # fields builds it, whatever the terms
+    prepared_fulltext_stats(
+        load_documents_spread(spark, sf_dir),
+        sf_dir,
+        ("spark", "window", "merge"),
+        ("text", "source"),
+    )

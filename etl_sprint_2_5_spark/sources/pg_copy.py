@@ -37,7 +37,9 @@ range-partitioned READS; COPY stays the write path either way.
 from __future__ import annotations
 
 import io
+import logging
 import subprocess
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +54,27 @@ from pyspark.sql import functions as F
 #: that happens to equal the null string — _parse_csv_raw preserves
 #: that distinction where csv.reader would collapse it).
 _NULL = r"\N"
+
+log = logging.getLogger(__name__)
+
+
+def _psql(dsn: str, args: list[str], stdin: str, what: str, failed: str) -> str:
+    """One ``psql`` spawn: ``stdin`` in, stdout back. ON_ERROR_STOP so
+    a failed statement can't half-apply a script silently; a non-zero
+    exit raises RuntimeError(``failed: <PG's stderr>``). Logs one DEBUG
+    line per spawn: ``what``, seconds, bytes in and out."""
+    t0 = time.perf_counter()
+    proc = subprocess.run(
+        ["psql", dsn, "-v", "ON_ERROR_STOP=1", "-X", "-q", *args],
+        input=stdin, capture_output=True, text=True,
+    )
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug("psql %s: %.3f s, %d bytes in, %d bytes out", what,
+                  time.perf_counter() - t0, len(stdin.encode()),
+                  len(proc.stdout.encode()))
+    if proc.returncode != 0:
+        raise RuntimeError(f"{failed}: {proc.stderr.strip()}")
+    return proc.stdout
 
 
 def _csv_field(v) -> str:  # noqa: ANN001
@@ -243,44 +266,26 @@ def pg_ts_literal(ts) -> str:  # noqa: ANN001
 
 def pg_exec(dsn: str, sql: str) -> str:
     """Run one SQL statement (or psql script) over a fresh connection;
-    returns stdout. Raises RuntimeError with PG's stderr on failure —
-    ON_ERROR_STOP so a failed statement can't half-apply a script
-    silently. The SQL ships via STDIN (``-f -``), not argv: a
+    returns stdout. Raises RuntimeError with PG's stderr on failure.
+    The SQL ships via STDIN (``-f -``), not argv: a
     statement carrying a large IN-list (the CDC rebuild's affected-id
     pushdown at scale) would otherwise hit the kernel's per-argument
     size limit (MAX_ARG_STRLEN, ~128 KiB)."""
-    proc = subprocess.run(
-        ["psql", dsn, "-v", "ON_ERROR_STOP=1", "-X", "-q", "-At",
-         "-f", "-"],
-        input=sql,
-        capture_output=True,
-        text=True,
-    )
-    if proc.returncode != 0:
-        raise RuntimeError(f"psql failed: {proc.stderr.strip()}")
-    return proc.stdout
+    return _psql(dsn, ["-At", "-f", "-"], sql, "exec", "psql failed")
 
 
 def _copy_in(dsn: str, table: str, columns: list[str], rows) -> int:
     """One COPY FROM STDIN stream for an iterator of Row/tuple — the
     per-partition worker. Returns rows sent."""
     cols = ", ".join(columns)
-    cmd = [
-        "psql", dsn, "-v", "ON_ERROR_STOP=1", "-X", "-q", "-c",
-        f"COPY {table} ({cols}) FROM STDIN "
-        f"WITH (FORMAT csv, NULL '{_NULL}')",
-    ]
+    copy = f"COPY {table} ({cols}) FROM STDIN WITH (FORMAT csv, NULL '{_NULL}')"
     buf = io.StringIO()
     n = 0
     for r in rows:
         buf.write(",".join(_csv_field(v) for v in r))
         buf.write("\n")
         n += 1
-    proc = subprocess.run(
-        cmd, input=buf.getvalue(), capture_output=True, text=True
-    )
-    if proc.returncode != 0:
-        raise RuntimeError(f"COPY failed: {proc.stderr.strip()}")
+    _psql(dsn, ["-c", copy], buf.getvalue(), f"copy in {table}", "COPY failed")
     return n
 
 
@@ -468,15 +473,12 @@ def pg_copy_read(
     parallel reads want sources/jdbc.py's range partitioning once a
     JDBC jar is present. The COPY statement ships via STDIN — see
     pg_exec on the argv size limit large IN-lists would hit."""
-    proc = subprocess.run(
-        ["psql", dsn, "-v", "ON_ERROR_STOP=1", "-X", "-q", "-f", "-"],
-        input=f"COPY ({query}) TO STDOUT WITH (FORMAT csv, NULL '{_NULL}')",
-        capture_output=True,
-        text=True,
+    out = _psql(
+        dsn, ["-f", "-"],
+        f"COPY ({query}) TO STDOUT WITH (FORMAT csv, NULL '{_NULL}')",
+        "copy read", "COPY read failed",
     )
-    if proc.returncode != 0:
-        raise RuntimeError(f"COPY read failed: {proc.stderr.strip()}")
-    return _typed_frame(spark, proc.stdout, schema)
+    return _typed_frame(spark, out, schema)
 
 
 def _typed_frame(
@@ -534,15 +536,11 @@ def pg_copy_read_script(
         parts.append(f"\\echo {sep}")
     if epilogue:
         parts.append(epilogue)
-    proc = subprocess.run(
-        ["psql", dsn, "-v", "ON_ERROR_STOP=1", "-X", "-q", "-f", "-"],
-        input="\n".join(parts) + "\n",
-        capture_output=True,
-        text=True,
+    out = _psql(
+        dsn, ["-f", "-"], "\n".join(parts) + "\n",
+        f"copy script ({len(reads)} reads)", "COPY script failed",
     )
-    if proc.returncode != 0:
-        raise RuntimeError(f"COPY script failed: {proc.stderr.strip()}")
-    chunks = proc.stdout.split(sep + "\n")
+    chunks = out.split(sep + "\n")
     if len(chunks) != len(reads) + 1:
         raise RuntimeError(
             f"COPY script framing: expected {len(reads)} sentinel-"

@@ -25,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import etl_sprint_2_5_spark.streaming.ivm as ivm_mod
+from etl_sprint_2_5_spark.cost import tracked
 from etl_sprint_2_5_spark.streaming.ivm import (
     FanOut,
     Pipeline,
@@ -271,17 +272,11 @@ def _write_tags(spark, tmp: str, n_items: int, n_tags: int) -> None:
 
 def _drain_jobs(spark, action, group: str):  # noqa: ANN001, ANN202
     """(Spark jobs, physical plan text of each SQL execution) that
-    ``action`` runs: jobs by job group through ``statusTracker``, plans
-    from the SQL status store."""
-    from tests.test_plan_properties import _executed_plans
-
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        plans = _executed_plans(spark, action)
-    finally:
-        sc.setJobGroup("", "")
-    return len(sc.statusTracker().getJobIdsForGroup(group)), plans
+    ``action`` runs."""
+    with tracked(spark, group) as t:
+        action()
+    cost = t.cost()
+    return cost.jobs, cost.plans
 
 
 # Spark jobs a two-round drain of the two-member group below may run

@@ -191,21 +191,12 @@ def test_repeated_substrings_skew_bounded(spark):
 
 
 def _executed_plans(spark, action) -> list[str]:
-    """Physical plan text of every SQL execution ``action`` runs, read
-    from the SQL status store (present with the UI disabled)."""
-    store = spark._jsparkSession.sharedState().statusStore()
+    """Physical plan text of every SQL execution ``action`` runs."""
+    from etl_sprint_2_5_spark.cost import tracked
 
-    def last_id() -> int:
-        execs = store.executionsList()
-        return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
-
-    first = last_id() + 1
-    action()
-    return [
-        store.execution(i).get().physicalPlanDescription()
-        for i in range(first, last_id() + 1)
-        if store.execution(i).isDefined()
-    ]
+    with tracked(spark, "executed_plans") as t:
+        action()
+    return t.cost().plans
 
 
 def test_search_is_one_scan_per_job_with_no_shuffle(spark, tmp_path):

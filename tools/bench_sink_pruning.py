@@ -44,21 +44,15 @@ def main() -> None:
     n_batch = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     n_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 64
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from etl_sprint_2_5_spark.session import get_spark
     from etl_sprint_2_5_spark.streaming.sink import (
         upsert_keyed_parquet,
         upsert_keyed_parquet_bucketed,
     )
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("sink-pruning-bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("sink-pruning-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     base = tempfile.mkdtemp(prefix="sink_prune_")

@@ -1,11 +1,11 @@
 """Offline index build — the train-once half of the prepared-artifact
 serving path (etl_sprint_2_5_spark/artifacts.py).
 
-On a cluster this is the scheduled job that (re)builds the IVF
-centroids and the full-text corpus statistics whenever the corpus
-changes; queries then only probe the persisted artifacts. Locally it
-pre-warms the artifact cache so bench/driver runs pay zero training
-cost.
+On a cluster this is the scheduled job that (re)builds every prepared
+artifact (artifacts.prepare_all, the same phase bench.py runs) whenever
+the corpus changes; queries then only probe the persisted artifacts.
+Locally it pre-warms the artifact cache so bench/driver runs pay zero
+training cost.
 
 Usage: python tools/prepare_artifacts.py [sf_dir ...]
        (default: /root/testdata/sf0.01 and /root/testdata/sf0.1)
@@ -22,14 +22,8 @@ sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
-    from etl_sprint_2_5_spark.artifacts import (
-        artifact_root,
-        prepared_fulltext_stats,
-        prepared_ivf_centroids,
-        prepared_shingle_index,
-    )
+    from etl_sprint_2_5_spark.artifacts import artifact_root, prepare_all
     from etl_sprint_2_5_spark.session import get_spark
-    from etl_sprint_2_5_spark.sources.parquet import load_documents_spread
 
     sf_dirs = sys.argv[1:] or [
         "/root/testdata/sf0.01",
@@ -39,22 +33,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for sf_dir in sf_dirs:
         t0 = time.time()
-        n_cent = prepared_ivf_centroids(spark, sf_dir).count()
-        t1 = time.time()
-        n_sh = prepared_shingle_index(spark, sf_dir).count()
-        t2 = time.time()
-        stats, _ = prepared_fulltext_stats(
-            load_documents_spread(spark, sf_dir),
-            sf_dir,
-            ("spark", "window", "merge"),
-            ("text", "source"),
-        )
-        t3 = time.time()
-        print(
-            f"{sf_dir}: ivf_centroids={n_cent} ({t1 - t0:.2f}s), "
-            f"shingle_index={n_sh} docs ({t2 - t1:.2f}s), "
-            f"ft_stats n={stats['n']} ({t3 - t2:.2f}s)"
-        )
+        prepare_all(spark, sf_dir)
+        print(f"{sf_dir}: prepared in {time.time() - t0:.2f}s")
     print(f"artifacts in {artifact_root()}")
 
 
