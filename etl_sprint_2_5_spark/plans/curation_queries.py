@@ -230,21 +230,11 @@ _QUALITY_MIN = 0.65
 
 
 def _curation_oracle() -> str:
-    from etl_sprint_2_5_spark.plans.dedup_queries import _MINHASH_VERIFIED_CTES
+    from etl_sprint_2_5_spark.plans.dedup_queries import _MINHASH_LABEL_CTES
     from etl_sprint_2_5_spark.plans.text_queries import _DUCK_TOKS, _duck_hits
 
     return f"""
-    WITH RECURSIVE {_MINHASH_VERIFIED_CTES}, sym AS (
-      SELECT id_a AS a, id_b AS b FROM verified
-      UNION SELECT id_b, id_a FROM verified
-    ), reach AS (
-      SELECT a AS src, b AS dst FROM sym
-      UNION
-      SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
-    ), labels AS (
-      SELECT src AS doc_id, least(min(dst), src) AS label
-      FROM reach GROUP BY src
-    ), nonkeepers AS (
+    {_MINHASH_LABEL_CTES}, nonkeepers AS (
       SELECT doc_id FROM labels WHERE doc_id <> label
     ), ltoks AS (
       SELECT doc_id, source, text, {_DUCK_TOKS} AS tk FROM documents

@@ -145,6 +145,20 @@ _MINHASH_VERIFIED_CTES = f"""toks AS (
                    - len(list_intersect(sa.hs, sb.hs))), 4) >= 0.5
     )"""
 
+# connected-component labels over the verified pairs (each doc's
+# smallest reachable id), the head of every cluster-level oracle
+_MINHASH_LABEL_CTES = f"""WITH RECURSIVE {_MINHASH_VERIFIED_CTES}, sym AS (
+      SELECT id_a AS a, id_b AS b FROM verified
+      UNION SELECT id_b, id_a FROM verified
+    ), reach AS (
+      SELECT a AS src, b AS dst FROM sym
+      UNION
+      SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
+    ), labels AS (
+      SELECT src AS doc_id, least(min(dst), src) AS label
+      FROM reach GROUP BY src
+    )"""
+
 
 @query(
     "dedup_minhash_lsh",
@@ -427,17 +441,7 @@ def dedup_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE {_MINHASH_VERIFIED_CTES}, sym AS (
-      SELECT id_a AS a, id_b AS b FROM verified
-      UNION SELECT id_b, id_a FROM verified
-    ), reach AS (
-      SELECT a AS src, b AS dst FROM sym
-      UNION
-      SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
-    ), labels AS (
-      SELECT src AS doc_id, least(min(dst), src) AS label
-      FROM reach GROUP BY src
-    )
+    {_MINHASH_LABEL_CTES}
     SELECT label AS cluster_rep,
            count(*) AS n_docs,
            string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS members
@@ -480,9 +484,9 @@ _INCOMING = ("src16", "src17", "src18", "src19")
 _DUCK_INCOMING = "('src16', 'src17', 'src18', 'src19')"
 
 
-@query(
-    "incremental_dedup",
-    oracle=f"""
+# one oracle gates both execution modes (stream == batch parity is
+# additionally pytest-asserted in tests/test_stream_doc_dedup.py)
+_INCREMENTAL_DEDUP_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, text, source IN {_DUCK_INCOMING} AS is_new
       FROM documents
@@ -534,7 +538,12 @@ _DUCK_INCOMING = "('src16', 'src17', 'src18', 'src19')"
     LEFT JOIN near_tier n ON b.doc_id = n.doc_id
     WHERE b.is_new
     ORDER BY b.doc_id
-    """,
+    """
+
+
+@query(
+    "incremental_dedup",
+    oracle=_INCREMENTAL_DEDUP_ORACLE,
     covers=("X-dedup-incremental",),
 )
 def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,23 +740,10 @@ _SEM_THRESHOLD = 0.4  # cosine floor for "same meaning" (SemDeDup eps)
 
 
 def _sem_oracle() -> str:
-    from etl_sprint_2_5_spark.plans.similarity_queries import (
-        _IVF_ITERS,
-        _ivf_trained_ctes,
-    )
+    from etl_sprint_2_5_spark.plans.similarity_queries import _ivf_assigned
 
     return f"""
-    WITH {_ivf_trained_ctes(_IVF_ITERS)}, assigned AS (
-      SELECT vec_id, embedding, centroid_id FROM (
-        SELECT a.vec_id, a.embedding, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   a.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings a, cent{_IVF_ITERS} c
-      ) WHERE rn = 1
-    ), pairs AS (
+    {_ivf_assigned()}, pairs AS (
       SELECT b.vec_id AS vec_id, a.vec_id AS prior_id,
              round(list_cosine_similarity(a.embedding::DOUBLE[],
                                           b.embedding::DOUBLE[]), 6) AS cos
@@ -825,7 +821,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_incremental_dedup",
-    oracle=None,  # set below — identical to incremental_dedup's oracle
+    oracle=_INCREMENTAL_DEDUP_ORACLE,
     covers=("X-dedup-incremental-stream",),
 )
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -875,13 +871,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_doc_dedup(spark, index, feed, schema, out, gate.checkpoint())
         sink = spark.read.parquet(out).select("doc_id", "verdict", "match_id")
         return materialize_release(sink).orderBy("doc_id")
-
-
-# one oracle gates both execution modes (stream == batch parity is
-# additionally pytest-asserted in tests/test_stream_doc_dedup.py)
-from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["streaming_incremental_dedup"].oracle = _REG["incremental_dedup"].oracle
 
 
 _SIMHASH_HAMMING = 1  # near-dup when ≤ 1 of 32 bits differs (the
@@ -1451,17 +1440,7 @@ def bloom_membership_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "leakage_safe_split",
     oracle=f"""
-    WITH RECURSIVE {_MINHASH_VERIFIED_CTES}, sym AS (
-      SELECT id_a AS a, id_b AS b FROM verified
-      UNION SELECT id_b, id_a FROM verified
-    ), reach AS (
-      SELECT a AS src, b AS dst FROM sym
-      UNION
-      SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
-    ), labels AS (
-      SELECT src AS doc_id, least(min(dst), src) AS label
-      FROM reach GROUP BY src
-    ), units AS (
+    {_MINHASH_LABEL_CTES}, units AS (
       SELECT d.doc_id, coalesce(l.label, d.doc_id) AS unit
       FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id
     )
@@ -1517,17 +1496,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_keep_longest",
     oracle=f"""
-    WITH RECURSIVE {_MINHASH_VERIFIED_CTES}, sym AS (
-      SELECT id_a AS a, id_b AS b FROM verified
-      UNION SELECT id_b, id_a FROM verified
-    ), reach AS (
-      SELECT a AS src, b AS dst FROM sym
-      UNION
-      SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
-    ), labels AS (
-      SELECT src AS doc_id, least(min(dst), src) AS label
-      FROM reach GROUP BY src
-    ), ranked AS (
+    {_MINHASH_LABEL_CTES}, ranked AS (
       SELECT l.label, l.doc_id, d.n_chars,
              row_number() OVER (
                PARTITION BY l.label
@@ -1757,10 +1726,9 @@ def line_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "lsh_recall_report",
-    oracle=f"""
-    WITH toks AS (
+# the LSH audits' shared inputs: capped-postings exact-Jaccard truth
+# pairs (J >= 0.5) and the 12-permutation MinHash signature
+_LSH_AUDIT_CTES = f"""WITH toks AS (
       SELECT doc_id, {_DUCK_TOKS} AS tk FROM documents
     ), sh AS (
       SELECT doc_id, {_DUCK_SHINGLES} AS shingles FROM toks
@@ -1792,7 +1760,13 @@ def line_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
              list_min(list_transform(hs,
                  h -> (t.a * (h % 2147483647) + t.b) % 2147483647)) AS minh
       FROM hsh, (VALUES {_DUCK_PERMS}) AS t(seed, a, b)
-    ), bands AS (
+    )"""
+
+
+@query(
+    "lsh_recall_report",
+    oracle=f"""
+    {_LSH_AUDIT_CTES}, bands AS (
       SELECT doc_id, seed // 3 AS band,
              string_agg(minh::VARCHAR, ',' ORDER BY seed) AS band_key
       FROM mh GROUP BY doc_id, seed // 3
@@ -1898,39 +1872,7 @@ def _sweep_row_sql(r: int) -> str:
 @query(
     "lsh_band_sweep",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS} AS tk FROM documents
-    ), sh AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS shingles FROM toks
-    ), hsh AS MATERIALIZED (
-      SELECT doc_id,
-             list_transform(shingles,
-                 s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hs
-      FROM sh
-    ), ex AS (
-      SELECT doc_id, unnest(hs) AS s FROM hsh
-    ), dfc AS (
-      SELECT s, count(*) AS df FROM ex GROUP BY s
-    ), kept AS MATERIALIZED (
-      SELECT ex.doc_id, ex.s
-      FROM ex JOIN dfc ON ex.s = dfc.s AND dfc.df <= {MAX_SHINGLE_DF}
-    ), sz AS (
-      SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id
-    ), co AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-      FROM kept a JOIN kept b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), true_pairs AS MATERIALIZED (
-      SELECT id_a, id_b FROM co
-      JOIN sz la ON la.doc_id = co.id_a
-      JOIN sz lb ON lb.doc_id = co.id_b
-      WHERE round(inter::DOUBLE / (la.n + lb.n - inter), 4) >= 0.5
-    ), mh AS MATERIALIZED (
-      SELECT doc_id, t.seed,
-             list_min(list_transform(hs,
-                 h -> (t.a * (h % 2147483647) + t.b) % 2147483647)) AS minh
-      FROM hsh, (VALUES {_DUCK_PERMS}) AS t(seed, a, b)
-    ), {", ".join(_sweep_band_ctes(r) for r in (2, 3, 4, 6))},
+    {_LSH_AUDIT_CTES}, {", ".join(_sweep_band_ctes(r) for r in (2, 3, 4, 6))},
     raw AS ({" UNION ALL ".join(_sweep_row_sql(r) for r in (2, 3, 4, 6))})
     SELECT config, n_true_pairs, n_candidates, n_hits,
            CASE WHEN n_true_pairs = 0 THEN 0

@@ -59,9 +59,7 @@ def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "session_windows",
-    oracle=f"""
+_SESSION_ORACLE = f"""
     WITH gaps AS (
       SELECT user_id, ts, value,
              CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -84,7 +82,12 @@ def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions
     GROUP BY user_id, session_seq
     ORDER BY user_id, session_seq
-    """,
+    """
+
+
+@query(
+    "session_windows",
+    oracle=_SESSION_ORACLE,
     covers=("X-stream-session",),
 )
 def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,9 +117,7 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stateful_event_dedup",
-    oracle="""
+_EVENT_DEDUP_ORACLE = """
     SELECT user_id, event_type,
            min(event_id)  AS first_event_id,
            epoch_us(min(ts)) AS first_ts_us,
@@ -124,7 +125,12 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id, event_type
     ORDER BY user_id, event_type
-    """,
+    """
+
+
+@query(
+    "stateful_event_dedup",
+    oracle=_EVENT_DEDUP_ORACLE,
     covers=("T3", "X-stream-dedup"),
 )
 def stateful_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,9 +175,7 @@ def late_data_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sliding_window_agg",
-    oracle="""
+_SLIDING_ORACLE = """
     WITH ex AS (
       SELECT ts, value,
              time_bucket(INTERVAL '30 minutes', ts)
@@ -184,7 +188,12 @@ def late_data_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ex
     GROUP BY w_start
     ORDER BY window_start_us
-    """,
+    """
+
+
+@query(
+    "sliding_window_agg",
+    oracle=_SLIDING_ORACLE,
     covers=("X-stream-sliding",),
 )
 def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -467,9 +476,7 @@ def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "last_touch_attribution",
-    oracle="""
+_LAST_TOUCH_ORACLE = """
     WITH seq AS (
       SELECT user_id, ts, event_type, value,
              last_value(CASE WHEN event_type IN ('click', 'view')
@@ -493,7 +500,12 @@ def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type = 'purchase'
     GROUP BY channel
     ORDER BY channel
-    """,
+    """
+
+
+@query(
+    "last_touch_attribution",
+    oracle=_LAST_TOUCH_ORACLE,
     covers=("X-events-attribution",),
 )
 def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -677,7 +689,7 @@ def streaming_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "streaming_sliding_window_agg",
-    oracle=None,  # set below — identical to sliding_window_agg's oracle
+    oracle=_SLIDING_ORACLE,
     covers=("X-stream-sliding-live",),
 )
 def streaming_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -715,7 +727,7 @@ def streaming_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_session_window_agg",
-    oracle=None,  # set below — identical to session_windows' oracle
+    oracle=_SESSION_ORACLE,
     covers=("X-stream-session-live",),
 )
 def streaming_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -780,7 +792,7 @@ def streaming_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_stateful_event_dedup",
-    oracle=None,  # set below — identical to stateful_event_dedup's oracle
+    oracle=_EVENT_DEDUP_ORACLE,
     covers=("X-stream-dedup-live",),
 )
 def streaming_stateful_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -827,7 +839,7 @@ def streaming_stateful_event_dedup(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "streaming_last_touch_attribution",
-    oracle=None,  # set below — identical to last_touch_attribution's
+    oracle=_LAST_TOUCH_ORACLE,
     covers=("X-events-attribution-live",),
 )
 def streaming_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,16 +893,6 @@ def streaming_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFr
             .orderBy("channel")
         )
         return materialize_release(rollup)
-
-
-from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["streaming_sliding_window_agg"].oracle = _REG["sliding_window_agg"].oracle
-_REG["streaming_session_window_agg"].oracle = _REG["session_windows"].oracle
-_REG["streaming_stateful_event_dedup"].oracle = _REG["stateful_event_dedup"].oracle
-_REG["streaming_last_touch_attribution"].oracle = _REG[
-    "last_touch_attribution"
-].oracle
 
 
 @query(
@@ -1269,20 +1271,58 @@ def variant_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "jsonl_ingest_quarantine",
-    oracle="""
+def _quarantine_oracle(mod: int) -> str:
+    """Clean rows per event type with the cents checksum, plus the
+    ``_CORRUPT_`` bucket of every ``mod``-th event_id."""
+    return f"""
     SELECT event_type            AS bucket,
            count(*)              AS n_rows,
            CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
                                  AS sum_cents
-    FROM events WHERE event_id % 97 <> 0
+    FROM events WHERE event_id % {mod} <> 0
     GROUP BY event_type
     UNION ALL
     SELECT '_CORRUPT_', count(*), CAST(0 AS BIGINT)
-    FROM events WHERE event_id % 97 = 0
+    FROM events WHERE event_id % {mod} = 0
     ORDER BY bucket
-    """,
+    """
+
+
+def _quarantine_rollup(ev: DataFrame, line, prefix: str, read) -> DataFrame:  # noqa: ANN001
+    """Stage ``line`` over ``ev`` as a 4-file text feed, read it back
+    through ``read(feed, schema)``, split clean rows from the
+    quarantine and roll both up (the quarantine gates' shared body)."""
+    from etl_sprint_2_5_spark.schemas import TESTDATA_SCHEMAS
+    from etl_sprint_2_5_spark.sources.text_files import split_corrupt
+    from pyspark.sql.types import StructType
+
+    with tempfile.TemporaryDirectory(prefix=prefix) as tmp:
+        feed = f"{tmp}/feed"
+        ev.select(line.alias("value")).coalesce(4).write.mode("overwrite").text(feed)
+
+        schema = StructType(
+            [f for f in TESTDATA_SCHEMAS["events"].fields
+             if f.name in ("event_id", "event_type", "value")]
+        )
+        good, bad = split_corrupt(read(feed, schema))
+        clean = good.groupBy(F.col("event_type").alias("bucket")).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+            .cast("bigint")
+            .alias("sum_cents"),
+        )
+        quarantined = bad.agg(
+            F.lit("_CORRUPT_").alias("bucket"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.lit(0).cast("bigint").alias("sum_cents"),
+        )
+        out = clean.unionAll(quarantined).orderBy("bucket")
+        return materialize_release(out).orderBy("bucket")
+
+
+@query(
+    "jsonl_ingest_quarantine",
+    oracle=_quarantine_oracle(97),
     covers=("X-ingest-jsonl",),
 )
 def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1299,12 +1339,7 @@ def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad lines never kill the job and never silently vanish — they
     land countable. JSONL splits by line, so one big file still fans
     out across executors."""
-    from etl_sprint_2_5_spark.schemas import TESTDATA_SCHEMAS
-    from etl_sprint_2_5_spark.sources.text_files import (
-        read_jsonl,
-        split_corrupt,
-    )
-    from pyspark.sql.types import StructType
+    from etl_sprint_2_5_spark.sources.text_files import read_jsonl
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "value"
@@ -1315,44 +1350,15 @@ def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit('{"event_id": '), F.col("event_id").cast("string"),
                  F.lit(', "event_ty')),
     ).otherwise(F.to_json(F.struct("event_id", "event_type", "value")))
-    with tempfile.TemporaryDirectory(prefix="jsonl_ingest_") as tmp:
-        feed = f"{tmp}/feed"
-        ev.select(line.alias("value")).coalesce(4).write.mode("overwrite").text(feed)
-
-        schema = StructType(
-            [f for f in TESTDATA_SCHEMAS["events"].fields
-             if f.name in ("event_id", "event_type", "value")]
-        )
-        good, bad = split_corrupt(read_jsonl(spark, feed, schema))
-        clean = good.groupBy(F.col("event_type").alias("bucket")).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_cents"),
-        )
-        quarantined = bad.agg(
-            F.lit("_CORRUPT_").alias("bucket"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(0).cast("bigint").alias("sum_cents"),
-        )
-        out = clean.unionAll(quarantined).orderBy("bucket")
-        return materialize_release(out).orderBy("bucket")
+    return _quarantine_rollup(
+        ev, line, "jsonl_ingest_",
+        lambda feed, schema: read_jsonl(spark, feed, schema),
+    )
 
 
 @query(
     "csv_ingest_quarantine",
-    oracle="""
-    SELECT event_type            AS bucket,
-           count(*)              AS n_rows,
-           CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-                                 AS sum_cents
-    FROM events WHERE event_id % 89 <> 0
-    GROUP BY event_type
-    UNION ALL
-    SELECT '_CORRUPT_', count(*), CAST(0 AS BIGINT)
-    FROM events WHERE event_id % 89 = 0
-    ORDER BY bucket
-    """,
+    oracle=_quarantine_oracle(89),
     covers=("X-ingest-csv",),
 )
 def csv_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1365,12 +1371,7 @@ def csv_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed fans out across executors. Clean rows roll up by type with
     the cents checksum — doubles are serialized by Spark's CSV writer
     round-trip-exactly — and the quarantine lands countable."""
-    from etl_sprint_2_5_spark.schemas import TESTDATA_SCHEMAS
-    from etl_sprint_2_5_spark.sources.text_files import (
-        read_csv,
-        split_corrupt,
-    )
-    from pyspark.sql.types import StructType
+    from etl_sprint_2_5_spark.sources.text_files import read_csv
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "value"
@@ -1383,28 +1384,10 @@ def csv_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("string")
         ),
     )
-    with tempfile.TemporaryDirectory(prefix="csv_ingest_") as tmp:
-        feed = f"{tmp}/feed"
-        ev.select(line.alias("value")).coalesce(4).write.mode("overwrite").text(feed)
-
-        schema = StructType(
-            [f for f in TESTDATA_SCHEMAS["events"].fields
-             if f.name in ("event_id", "event_type", "value")]
-        )
-        good, bad = split_corrupt(read_csv(spark, feed, schema, header=False))
-        clean = good.groupBy(F.col("event_type").alias("bucket")).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_cents"),
-        )
-        quarantined = bad.agg(
-            F.lit("_CORRUPT_").alias("bucket"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.lit(0).cast("bigint").alias("sum_cents"),
-        )
-        out = clean.unionAll(quarantined).orderBy("bucket")
-        return materialize_release(out).orderBy("bucket")
+    return _quarantine_rollup(
+        ev, line, "csv_ingest_",
+        lambda feed, schema: read_csv(spark, feed, schema, header=False),
+    )
 
 
 @query(
@@ -1937,9 +1920,11 @@ def _cdf_three_commits(spark: SparkSession, sf_dir: str, view: str) -> None:
     )
 
 
-@query(
-    "manifest_change_feed_deletes",
-    oracle="""
+def _cdf_oracle(changed_only: bool = False) -> str:
+    """The v1 → v3 change feed of ``_cdf_three_commits`` counted per
+    op; ``changed_only`` drops the unchanged keys (the pruned feed)."""
+    where = "\n    WHERE op <> 'unchanged'" if changed_only else ""
+    return f"""
     WITH v1 AS (
       SELECT doc_id, n_chars AS payload
       FROM documents WHERE doc_id % 2 = 0
@@ -1960,10 +1945,15 @@ def _cdf_three_commits(spark: SparkSession, sf_dir: str, view: str) -> None:
     SELECT op,
            count(*) AS n_keys,
            CAST(sum(payload) AS BIGINT) AS payload_sum
-    FROM feed
+    FROM feed{where}
     GROUP BY op
     ORDER BY op
-    """,
+    """
+
+
+@query(
+    "manifest_change_feed_deletes",
+    oracle=_cdf_oracle(),
     covers=("T3", "T4", "X-sink-change-feed"),
 )
 def manifest_change_feed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2016,32 +2006,7 @@ def manifest_change_feed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "manifest_change_feed_pruned",
-    oracle="""
-    WITH v1 AS (
-      SELECT doc_id, n_chars AS payload
-      FROM documents WHERE doc_id % 2 = 0
-    ), v3 AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0 THEN n_chars + 1000
-                  ELSE n_chars END AS payload
-      FROM documents
-      WHERE (doc_id % 2 = 0 OR doc_id % 3 = 0) AND doc_id % 5 <> 0
-    ), feed AS (
-      SELECT CASE WHEN o.doc_id IS NULL THEN 'insert'
-                  WHEN n.doc_id IS NULL THEN 'delete'
-                  WHEN n.payload <> o.payload THEN 'update'
-                  ELSE 'unchanged' END AS op,
-             COALESCE(n.payload, o.payload) AS payload
-      FROM v3 n FULL OUTER JOIN v1 o ON n.doc_id = o.doc_id
-    )
-    SELECT op,
-           count(*) AS n_keys,
-           CAST(sum(payload) AS BIGINT) AS payload_sum
-    FROM feed
-    WHERE op <> 'unchanged'
-    GROUP BY op
-    ORDER BY op
-    """,
+    oracle=_cdf_oracle(changed_only=True),
     covers=("T4", "X-sink-change-feed"),
 )
 def manifest_change_feed_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

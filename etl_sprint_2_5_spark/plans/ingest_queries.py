@@ -42,6 +42,102 @@ _DOC_ORACLE = """
     FROM documents
     ORDER BY doc_id
     """
+# the two-wave streaming ingest gates: the documents table plus each
+# wave's row count
+_WAVE_ORACLE = """
+    SELECT doc_id, text, lang, source, n_chars,
+           CAST((SELECT count(*) FROM documents
+                 WHERE doc_id < (SELECT count(*) // 2 FROM documents))
+                AS BIGINT) AS phase_a_rows,
+           CAST((SELECT count(*) FROM documents
+                 WHERE doc_id >= (SELECT count(*) // 2 FROM documents))
+                AS BIGINT) AS phase_b_rows
+    FROM documents
+    ORDER BY doc_id
+    """
+
+
+def _two_wave_ingest(
+    spark: SparkSession, name: str, docs: DataFrame, ext: str,
+    write_shard, parse,  # noqa: ANN001
+) -> DataFrame:
+    """The two-wave checkpoint-discipline gate shared by the streaming
+    ingest twins: stage wave A (doc_id below half) as 4 shards named
+    ``*{ext}`` in an inbox, drain it into the keyed manifest view,
+    stage wave B and drain again from the same checkpoint.
+    ``write_shard(path, batches)`` writes one executor-side shard and
+    returns its row count; ``parse`` is the ``mapInPandas`` body that
+    turns the file source's ``content`` column back into documents."""
+    import os
+
+    import pandas as pd
+
+    from etl_sprint_2_5_spark.streaming.sink import (
+        read_bucketed_view,
+        upsert_keyed_parquet_bucketed,
+    )
+
+    root = os.environ.get("SPARK_GRAFT_INGEST_ROOT")
+    with streaming_gate(spark, name, root or None) as gate:
+        inbox, view = f"{gate.dir}/inbox", f"{gate.dir}/view"
+        os.makedirs(inbox)
+
+        def stage_wave(wave: str, part: DataFrame) -> None:
+            def write(batches):  # noqa: ANN001 - Arrow iterator
+                from pyspark import TaskContext
+
+                pid = TaskContext.get().partitionId()
+                path = os.path.join(inbox, f"{wave}-{pid:04d}{ext}")
+                n = write_shard(path, batches)
+                yield pd.DataFrame({"path": [path], "rows": [n]})
+
+            part.repartition(4, "doc_id").mapInPandas(
+                write, "path string, rows long"
+            ).collect()
+
+        def drain_once() -> int:
+            stream = (
+                spark.readStream.format("binaryFile")
+                # the source's fixed schema, stated explicitly — streaming
+                # sources refuse inference by design
+                .schema(
+                    "path string, modificationTime timestamp, "
+                    "length long, content binary"
+                )
+                .option("pathGlobFilter", f"*{ext}")
+                .option("maxFilesPerTrigger", 2)
+                .load(inbox)
+                .select("content")
+                .mapInPandas(parse, _DOC_SCHEMA)
+            )
+            seen = []
+
+            def commit(b, _eid) -> None:  # noqa: ANN001 - micro-batch DF
+                b.persist()
+                seen.append(b.count())
+                upsert_keyed_parquet_bucketed(spark, b, view, "doc_id",
+                                              n_buckets=8)
+                b.unpersist()
+
+            gate.drain(stream.writeStream.foreachBatch(commit))
+            return sum(seen)
+
+        half = docs.count() // 2  # SF-independent wave split
+        stage_wave("wave_a", docs.where(F.col("doc_id") < half))
+        drain_once()
+        phase_a = read_bucketed_view(spark, view).count()
+
+        stage_wave("wave_b", docs.where(F.col("doc_id") >= half))
+        phase_b = drain_once()
+
+        out = (
+            read_bucketed_view(spark, view)
+            .select(*_DOC_COLS)
+            .withColumn("phase_a_rows", F.lit(phase_a).cast("bigint"))
+            .withColumn("phase_b_rows", F.lit(phase_b).cast("bigint"))
+            .orderBy("doc_id")
+        )
+        return materialize_release(out)
 
 
 @query(
@@ -192,17 +288,7 @@ def warc_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_warc_ingest",
-    oracle="""
-    SELECT doc_id, text, lang, source, n_chars,
-           CAST((SELECT count(*) FROM documents
-                 WHERE doc_id < (SELECT count(*) // 2 FROM documents))
-                AS BIGINT) AS phase_a_rows,
-           CAST((SELECT count(*) FROM documents
-                 WHERE doc_id >= (SELECT count(*) // 2 FROM documents))
-                AS BIGINT) AS phase_b_rows
-    FROM documents
-    ORDER BY doc_id
-    """,
+    oracle=_WAVE_ORACLE,
     covers=("X-ingest-warc-stream",),
 )
 def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,8 +328,6 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     subdirectory is created per run and removed afterward); the
     default — a driver-local temp dir — is exactly as portable as
     local[*], where driver and executors share one filesystem."""
-    import os
-
     import pandas as pd
 
     from etl_sprint_2_5_spark.operators.warc import (
@@ -251,107 +335,49 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         warc_parse_record,
         warc_split_members,
     )
-    from etl_sprint_2_5_spark.streaming.sink import (
-        read_bucketed_view,
-        upsert_keyed_parquet_bucketed,
-    )
+
+    def write_shard(path: str, batches) -> int:  # noqa: ANN001
+        n = 0
+        with open(path, "wb") as fh:
+            for pdf in batches:
+                for r in pdf.itertuples():
+                    fh.write(
+                        warc_pack_record(
+                            f"http://corpus.local/docs/{int(r.doc_id)}",
+                            str(r.text).encode("utf-8"),
+                            extra_headers={
+                                "X-Doc-Lang": str(r.lang),
+                                "X-Doc-Source": str(r.source),
+                                "X-Doc-NChars": str(int(r.n_chars)),
+                            },
+                        )
+                    )
+                    n += 1
+        return n
+
+    def parse(batches):  # noqa: ANN001 - Arrow iterator
+        for pdf in batches:
+            rows = []
+            for shard in pdf["content"]:
+                for raw in warc_split_members(bytes(shard)):
+                    hdr, block = warc_parse_record(raw)
+                    rows.append(
+                        (
+                            int(hdr["warc-target-uri"].rsplit("/", 1)[1]),
+                            block.decode("utf-8"),
+                            hdr["x-doc-lang"],
+                            hdr["x-doc-source"],
+                            int(hdr["x-doc-nchars"]),
+                        )
+                    )
+            yield pd.DataFrame(
+                rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
+            )
 
     docs = load_table(spark, "documents", sf_dir).select(*_DOC_COLS)
-    root = os.environ.get("SPARK_GRAFT_INGEST_ROOT")
-    with streaming_gate(spark, "streaming_warc_ingest", root or None) as gate:
-        inbox, view = f"{gate.dir}/inbox", f"{gate.dir}/view"
-        os.makedirs(inbox)
-
-        def stage_wave(wave: str, part: DataFrame) -> None:
-            def write_shard(batches):  # noqa: ANN001 - Arrow iterator
-                from pyspark import TaskContext
-
-                pid = TaskContext.get().partitionId()
-                path = os.path.join(inbox, f"{wave}-{pid:04d}.warc.gz")
-                n = 0
-                with open(path, "wb") as fh:
-                    for pdf in batches:
-                        for r in pdf.itertuples():
-                            fh.write(
-                                warc_pack_record(
-                                    f"http://corpus.local/docs/{int(r.doc_id)}",
-                                    str(r.text).encode("utf-8"),
-                                    extra_headers={
-                                        "X-Doc-Lang": str(r.lang),
-                                        "X-Doc-Source": str(r.source),
-                                        "X-Doc-NChars": str(int(r.n_chars)),
-                                    },
-                                )
-                            )
-                            n += 1
-                yield pd.DataFrame({"path": [path], "rows": [n]})
-
-            part.repartition(4, "doc_id").mapInPandas(
-                write_shard, "path string, rows long"
-            ).collect()
-
-        def parse(batches):  # noqa: ANN001 - Arrow iterator
-            for pdf in batches:
-                rows = []
-                for shard in pdf["content"]:
-                    for raw in warc_split_members(bytes(shard)):
-                        hdr, block = warc_parse_record(raw)
-                        rows.append(
-                            (
-                                int(hdr["warc-target-uri"].rsplit("/", 1)[1]),
-                                block.decode("utf-8"),
-                                hdr["x-doc-lang"],
-                                hdr["x-doc-source"],
-                                int(hdr["x-doc-nchars"]),
-                            )
-                        )
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
-                )
-
-        def drain_once() -> int:
-            stream = (
-                spark.readStream.format("binaryFile")
-                # the source's fixed schema, stated explicitly — streaming
-                # sources refuse inference by design
-                .schema(
-                    "path string, modificationTime timestamp, "
-                    "length long, content binary"
-                )
-                .option("pathGlobFilter", "*.warc.gz")
-                .option("maxFilesPerTrigger", 2)
-                .load(inbox)
-                .select("content")
-                .mapInPandas(parse, _DOC_SCHEMA)
-            )
-            seen = []
-
-            def commit(b, _eid) -> None:  # noqa: ANN001 - micro-batch DF
-                b.persist()
-                seen.append(b.count())
-                upsert_keyed_parquet_bucketed(spark, b, view, "doc_id",
-                                              n_buckets=8)
-                b.unpersist()
-
-            gate.drain(stream.writeStream.foreachBatch(commit))
-            return sum(seen)
-
-        half = docs.count() // 2  # SF-independent wave split
-        stage_wave("wave_a", docs.where(F.col("doc_id") < half))
-        drain_once()
-        phase_a = read_bucketed_view(spark, view).count()
-
-        stage_wave("wave_b", docs.where(F.col("doc_id") >= half))
-        phase_b = drain_once()
-
-        out = (
-            read_bucketed_view(spark, view)
-            .select(*_DOC_COLS)
-            .withColumn("phase_a_rows", F.lit(phase_a).cast("bigint"))
-            .withColumn("phase_b_rows", F.lit(phase_b).cast("bigint"))
-            .orderBy("doc_id")
-        )
-        return materialize_release(out)
+    return _two_wave_ingest(
+        spark, "streaming_warc_ingest", docs, ".warc.gz", write_shard, parse
+    )
 
 
 @query(
@@ -588,17 +614,7 @@ def avro_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_avro_ingest",
-    oracle="""
-    SELECT doc_id, text, lang, source, n_chars,
-           CAST((SELECT count(*) FROM documents
-                 WHERE doc_id < (SELECT count(*) // 2 FROM documents))
-                AS BIGINT) AS phase_a_rows,
-           CAST((SELECT count(*) FROM documents
-                 WHERE doc_id >= (SELECT count(*) // 2 FROM documents))
-                AS BIGINT) AS phase_b_rows
-    FROM documents
-    ORDER BY doc_id
-    """,
+    oracle=_WAVE_ORACLE,
     covers=("X-ingest-avro-stream",),
 )
 def streaming_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -623,8 +639,6 @@ def streaming_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-range split path is gated separately by
     ``avro_ingest_roundtrip`` (a streaming trigger's unit of work is
     the discovered FILE)."""
-    import os
-
     import pandas as pd
 
     from etl_sprint_2_5_spark.operators.avro_ocf import (
@@ -632,81 +646,23 @@ def streaming_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_ocf,
         write_ocf_stream,
     )
-    from etl_sprint_2_5_spark.streaming.sink import (
-        read_bucketed_view,
-        upsert_keyed_parquet_bucketed,
-    )
 
     docs = load_table(spark, "documents", sf_dir).select(*_DOC_COLS)
     avro_schema = avro_schema_of(docs.schema, name="document")
-    root = os.environ.get("SPARK_GRAFT_INGEST_ROOT")
-    with streaming_gate(spark, "streaming_avro_ingest", root or None) as gate:
-        inbox, view = f"{gate.dir}/inbox", f"{gate.dir}/view"
-        os.makedirs(inbox)
 
-        def stage_wave(wave: str, part: DataFrame) -> None:
-            def write_shard(batches):  # noqa: ANN001 - Arrow iterator
-                from pyspark import TaskContext
-
-                pid = TaskContext.get().partitionId()
-                path = os.path.join(inbox, f"{wave}-{pid:04d}.avro")
-                recs = (
-                    rec for pdf in batches for rec in pdf.to_dict("records")
-                )
-                n = write_ocf_stream(
-                    path, recs, avro_schema, codec="deflate", block_rows=64
-                )
-                yield pd.DataFrame({"path": [path], "rows": [n]})
-
-            part.repartition(4, "doc_id").mapInPandas(
-                write_shard, "path string, rows long"
-            ).collect()
-
-        def parse(batches):  # noqa: ANN001 - Arrow iterator
-            cols = list(_DOC_COLS)
-            for pdf in batches:
-                for blob in pdf["content"]:
-                    _, rows = read_ocf(bytes(blob))
-                    yield pd.DataFrame(rows, columns=cols)
-
-        def drain_once() -> int:
-            stream = (
-                spark.readStream.format("binaryFile")
-                .schema(
-                    "path string, modificationTime timestamp, "
-                    "length long, content binary"
-                )
-                .option("pathGlobFilter", "*.avro")
-                .option("maxFilesPerTrigger", 2)
-                .load(inbox)
-                .select("content")
-                .mapInPandas(parse, _DOC_SCHEMA)
-            )
-            seen = []
-
-            def commit(b, _eid) -> None:  # noqa: ANN001 - micro-batch DF
-                b.persist()
-                seen.append(b.count())
-                upsert_keyed_parquet_bucketed(spark, b, view, "doc_id",
-                                              n_buckets=8)
-                b.unpersist()
-
-            gate.drain(stream.writeStream.foreachBatch(commit))
-            return sum(seen)
-
-        half = docs.count() // 2  # SF-independent wave split
-        stage_wave("wave_a", docs.where(F.col("doc_id") < half))
-        drain_once()
-        phase_a = read_bucketed_view(spark, view).count()
-
-        stage_wave("wave_b", docs.where(F.col("doc_id") >= half))
-        phase_b = drain_once()
-
-        out = (
-            read_bucketed_view(spark, view)
-            .select(*_DOC_COLS)
-            .withColumn("phase_a_rows", F.lit(phase_a).cast("bigint"))
-            .withColumn("phase_b_rows", F.lit(phase_b).cast("bigint"))
-            .orderBy("doc_id")
+    def write_shard(path: str, batches) -> int:  # noqa: ANN001
+        recs = (rec for pdf in batches for rec in pdf.to_dict("records"))
+        return write_ocf_stream(
+            path, recs, avro_schema, codec="deflate", block_rows=64
         )
-        return materialize_release(out)
+
+    def parse(batches):  # noqa: ANN001 - Arrow iterator
+        cols = list(_DOC_COLS)
+        for pdf in batches:
+            for blob in pdf["content"]:
+                _, rows = read_ocf(bytes(blob))
+                yield pd.DataFrame(rows, columns=cols)
+
+    return _two_wave_ingest(
+        spark, "streaming_avro_ingest", docs, ".avro", write_shard, parse
+    )

@@ -92,6 +92,20 @@ def _base_frames(
     return {"orders": orders, "customer": cust, "lineitem": li}
 
 
+# the three change-feed row schemas: the staged parquet feeds and the
+# live-PG reads carry the same columns
+_FEED_SCHEMAS = {
+    "orders": (
+        "o_orderkey long, o_custkey long, o_orderpriority string, "
+        "updated_at timestamp"
+    ),
+    "customer": "c_custkey long, c_name string, updated_at timestamp",
+    "lineitem": (
+        "li_id long, l_orderkey long, cents long, updated_at timestamp"
+    ),
+}
+
+
 def _stage_base(spark: SparkSession, sf_dir: str, base: str) -> None:
     """Write the pre-mutation snapshots with deterministic cursors."""
     for name, df in _base_frames(spark, sf_dir).items():
@@ -183,111 +197,75 @@ def _rebuild_docs(load, ids: DataFrame) -> DataFrame:  # noqa: ANN001
 
 
 def _docs_pipelines(
-    gold: str, nb: int, sizes: dict, sink_mode: str = "rewrite",
-    compact_every: int = 0,
+    gold: str, nb: int, sizes: dict | None = None, sink_mode: str = "rewrite",
+    compact_every: int = 0, rebuild=_rebuild_docs,  # noqa: ANN001
+    batch_fn=None, bridge_fn=None,  # noqa: ANN001
 ):
     """The three maintenance pipelines (fact, dimension-via-bridge,
-    child-fact fan-out) shared by the rewrite-sink gate and its
-    log-structured delta twin."""
+    child-fact fan-out) shared by every docs gate: the rewrite-sink
+    gate, its log-structured delta twin, the streaming twin and the
+    live-PG gates. ``sizes`` sets each pipeline's keyset batch size
+    (the streaming twins keep the default: their micro-batches come
+    from the stream); the live-PG gates pass their source-native
+    ``rebuild``, a ``batch_fn(name)`` keyset producer factory and the
+    customer fan-out's ``bridge_fn``."""
     from etl_sprint_2_5_spark.streaming.ivm import FanOut, Pipeline
 
     common = dict(
-        rebuild=_rebuild_docs, sink_path=gold, doc_key="o_orderkey",
+        rebuild=rebuild, sink_path=gold, doc_key="o_orderkey",
         n_buckets=nb, sink_mode=sink_mode, compact_every=compact_every,
     )
+
+    def pipeline(name: str, id_field: str, fanout: FanOut) -> Pipeline:
+        extra = {}
+        if sizes is not None:
+            extra["batch_size"] = sizes[name]
+        if batch_fn is not None:
+            extra["batch_fn"] = batch_fn(name)
+        return Pipeline(
+            name=name, source=name, cursor_field="updated_at",
+            id_field=id_field, fanout=fanout, **common, **extra,
+        )
+
     return [
-        Pipeline(
-            name="orders",
-            source="orders",
-            cursor_field="updated_at",
-            id_field="o_orderkey",
-            fanout=FanOut(id_field="o_orderkey"),
-            batch_size=sizes["orders"],
-            **common,
-        ),
-        Pipeline(
-            name="customer",
-            source="customer",
-            cursor_field="updated_at",
-            id_field="c_custkey",
+        pipeline("orders", "o_orderkey", FanOut(id_field="o_orderkey")),
+        pipeline(
+            "customer",
+            "c_custkey",
             # dimension change → affected facts via the bridge
             # (get_table_ids_by_join, daemon.py:139-152)
-            fanout=FanOut(
+            FanOut(
                 id_field="c_custkey",
                 bridge="orders",
                 join_field="o_custkey",
                 select_field="o_orderkey",
+                bridge_fn=bridge_fn,
             ),
-            batch_size=sizes["customer"],
-            **common,
         ),
-        Pipeline(
-            name="lineitem",
-            source="lineitem",
-            cursor_field="updated_at",
-            id_field="li_id",
-            fanout=FanOut(id_field="l_orderkey"),
-            batch_size=sizes["lineitem"],
-            **common,
-        ),
+        pipeline("lineitem", "li_id", FanOut(id_field="l_orderkey")),
     ]
 
 
-@query(
-    "ivm_maintained_docs",
-    oracle="""
-    WITH mut_cust AS (
-      SELECT c_custkey,
-             CASE WHEN c_custkey % 10 = 0 THEN upper(c_name)
-                  ELSE c_name END AS c_name
-      FROM customer
-    ), mut_ord AS (
-      SELECT o_orderkey, o_custkey,
-             CASE WHEN o_orderkey % 13 = 0 THEN 'MUTATED'
-                  ELSE o_orderpriority END AS o_orderpriority
-      FROM orders
-    ), li AS (
-      SELECT l_orderkey AS o_orderkey,
-             count(*) AS n_items,
-             CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100
-                                 + 0.5) AS BIGINT)) AS BIGINT)
-                 AS revenue_cents
-      FROM lineitem GROUP BY l_orderkey
-    ), meta AS (
-      SELECT (SELECT count(*) FROM customer WHERE c_custkey % 10 = 0)
-           + (SELECT count(*) FROM orders  WHERE o_orderkey % 13 = 0)
-             AS phase_b_rows
+def _docs_view(spark: SparkSession, gold: str, consumed_b: int) -> DataFrame:
+    """The maintained view plus the gated phase-B consumed count,
+    materialized before the staging dir disappears."""
+    docs = (
+        read_bucketed_view(spark, gold)
+        .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
+        .orderBy("o_orderkey")
     )
-    SELECT o.o_orderkey AS o_orderkey, c.c_name, o.o_orderpriority,
-           COALESCE(li.n_items, 0)       AS n_items,
-           COALESCE(li.revenue_cents, 0) AS revenue_cents,
-           m.phase_b_rows
-    FROM mut_ord o
-    JOIN mut_cust c ON o.o_custkey = c.c_custkey
-    LEFT JOIN li   ON li.o_orderkey = o.o_orderkey
-    CROSS JOIN meta m
-    ORDER BY o.o_orderkey
-    """,
-    covers=("T2", "T3", "T4", "T7", "T8", "X-ivm-live"),
-)
-def ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two full maintenance phases through streaming/ivm.py, gated
-    against a from-scratch DuckDB rebuild (module docstring has the
-    full story). ``phase_b_rows`` — the number of source rows the
-    incremental phase consumed — is a gated column: if the cursors
-    failed to exclude already-seen rows (or missed the mutated ones)
-    the count, not just the doc values, breaks the hash.
+    return materialize_release(docs)
 
-    Sink: the bucket-pruned keyed upsert (n_buckets sized by buckets_for,
-    streaming/sink.upsert_keyed_parquet_bucketed) — each cycle reads
-    and rewrites only the buckets its affected documents hash into,
-    one Spark job per cycle, so upsert cost tracks the CHANGE, not
-    the view. The flat whole-view-rewrite sink remains available
-    (Pipeline.n_buckets=0) but is not what the gate proves anymore."""
+
+def _two_phase_docs(
+    spark: SparkSession, sf_dir: str, prefix: str, **sink
+) -> DataFrame:
+    """Backfill, CDC mutate, incremental drain over parquet-staged
+    snapshots; ``sink`` is the pipelines' ``sink_mode``/``compact_every``."""
     from etl_sprint_2_5_spark.streaming.ivm import run_to_completion
     from etl_sprint_2_5_spark.streaming.state import OffsetStore
 
-    with tempfile.TemporaryDirectory(prefix="ivm_gate_") as tmp:
+    with tempfile.TemporaryDirectory(prefix=prefix) as tmp:
         base, gold = f"{tmp}/base", f"{tmp}/gold/docs"
         _stage_base(spark, sf_dir, base)
         # bucket count from TARGET BUCKET SIZE, not a magic number
@@ -304,26 +282,93 @@ def ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             name: max(1, load(name).count() // 2 + 1)
             for name in ("orders", "customer", "lineitem")
         }
-        pipelines = _docs_pipelines(gold, nb, sizes)
+        pipelines = _docs_pipelines(gold, nb, sizes, **sink)
         offsets = OffsetStore(f"{tmp}/offsets.json", id_default=0)
 
         run_to_completion(spark, pipelines, load, offsets)  # phase A: backfill
         _mutate(spark, sf_dir, base)  # the CDC writes
         # phase B: the drain loads the mutated snapshots afresh
         consumed_b = run_to_completion(spark, pipelines, load, offsets)
+        return _docs_view(spark, gold, consumed_b)
 
-        docs = (
-            read_bucketed_view(spark, gold)
-            .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
-            .orderBy("o_orderkey")
-        )
-        # materialize before the staging dir disappears
-        return materialize_release(docs)
+
+def _docs_oracle(subset: int = 1) -> str:
+    """The from-scratch rebuild over the mutated base tables that
+    every docs gate is hashed against; ``subset`` > 1 restricts orders
+    and lineitems to ``o_orderkey % subset == 0``, the slice the
+    live-PG gates stage."""
+    with_o, orders, li_where = "", "orders", ""
+    if subset > 1:
+        with_o = f"""o AS (
+      SELECT o_orderkey, o_custkey, o_orderpriority
+      FROM orders WHERE o_orderkey % {subset} = 0
+    ), """
+        orders, li_where = "o", f" WHERE l_orderkey % {subset} = 0"
+    return f"""
+    WITH {with_o}mut_cust AS (
+      SELECT c_custkey,
+             CASE WHEN c_custkey % 10 = 0 THEN upper(c_name)
+                  ELSE c_name END AS c_name
+      FROM customer
+    ), mut_ord AS (
+      SELECT o_orderkey, o_custkey,
+             CASE WHEN o_orderkey % 13 = 0 THEN 'MUTATED'
+                  ELSE o_orderpriority END AS o_orderpriority
+      FROM {orders}
+    ), li AS (
+      SELECT l_orderkey AS o_orderkey,
+             count(*) AS n_items,
+             CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100
+                                 + 0.5) AS BIGINT)) AS BIGINT)
+                 AS revenue_cents
+      FROM lineitem{li_where} GROUP BY l_orderkey
+    ), meta AS (
+      SELECT (SELECT count(*) FROM customer WHERE c_custkey % 10 = 0)
+           + (SELECT count(*) FROM {orders} WHERE o_orderkey % 13 = 0)
+             AS phase_b_rows
+    )
+    SELECT o.o_orderkey AS o_orderkey, c.c_name, o.o_orderpriority,
+           COALESCE(li.n_items, 0)       AS n_items,
+           COALESCE(li.revenue_cents, 0) AS revenue_cents,
+           m.phase_b_rows
+    FROM mut_ord o
+    JOIN mut_cust c ON o.o_custkey = c.c_custkey
+    LEFT JOIN li   ON li.o_orderkey = o.o_orderkey
+    CROSS JOIN meta m
+    ORDER BY o.o_orderkey
+    """
+
+
+_DOCS_ORACLE = _docs_oracle()
+# the live-PG gates stage orders/lineitems with o_orderkey % 20 == 0
+_PG_LIVE_ORACLE = _docs_oracle(subset=20)
+
+
+@query(
+    "ivm_maintained_docs",
+    oracle=_DOCS_ORACLE,
+    covers=("T2", "T3", "T4", "T7", "T8", "X-ivm-live"),
+)
+def ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two full maintenance phases through streaming/ivm.py, gated
+    against a from-scratch DuckDB rebuild (module docstring has the
+    full story). ``phase_b_rows`` — the number of source rows the
+    incremental phase consumed — is a gated column: if the cursors
+    failed to exclude already-seen rows (or missed the mutated ones)
+    the count, not just the doc values, breaks the hash.
+
+    Sink: the bucket-pruned keyed upsert (n_buckets sized by buckets_for,
+    streaming/sink.upsert_keyed_parquet_bucketed) — each cycle reads
+    and rewrites only the buckets its affected documents hash into,
+    one Spark job per cycle, so upsert cost tracks the CHANGE, not
+    the view. The flat whole-view-rewrite sink remains available
+    (Pipeline.n_buckets=0) but is not what the gate proves anymore."""
+    return _two_phase_docs(spark, sf_dir, "ivm_gate_")
 
 
 @query(
     "streaming_ivm_maintained_docs",
-    oracle=None,  # set below — identical to ivm_maintained_docs' oracle
+    oracle=_DOCS_ORACLE,
     covers=("T1", "X-ivm-stream-live",),
 )
 def streaming_ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,7 +392,6 @@ def streaming_ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     hash. Pipelines run sequentially within a phase (the keyed-
     parquet upsert swaps a directory; one writer at a time), exactly
     like the reference daemon's per-table coroutine round-robin."""
-    from etl_sprint_2_5_spark.streaming.ivm import FanOut, Pipeline
     from etl_sprint_2_5_spark.streaming.structured import stream_pipeline
 
     with streaming_gate(spark, "streaming_ivm_maintained_docs") as gate:
@@ -363,56 +407,7 @@ def streaming_ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame
         # overwritten snapshots
         load = _memo_loader(spark, base)
 
-        schemas = {
-            "orders": (
-                "o_orderkey long, o_custkey long, o_orderpriority string, "
-                "updated_at timestamp"
-            ),
-            "customer": "c_custkey long, c_name string, updated_at timestamp",
-            "lineitem": (
-                "li_id long, l_orderkey long, cents long, updated_at timestamp"
-            ),
-        }
-        pipelines = {
-            "orders": Pipeline(
-                name="orders",
-                source="orders",
-                cursor_field="updated_at",
-                id_field="o_orderkey",
-                fanout=FanOut(id_field="o_orderkey"),
-                rebuild=_rebuild_docs,
-                sink_path=gold,
-                doc_key="o_orderkey",
-                n_buckets=nb,
-            ),
-            "customer": Pipeline(
-                name="customer",
-                source="customer",
-                cursor_field="updated_at",
-                id_field="c_custkey",
-                fanout=FanOut(
-                    id_field="c_custkey",
-                    bridge="orders",
-                    join_field="o_custkey",
-                    select_field="o_orderkey",
-                ),
-                rebuild=_rebuild_docs,
-                sink_path=gold,
-                doc_key="o_orderkey",
-                n_buckets=nb,
-            ),
-            "lineitem": Pipeline(
-                name="lineitem",
-                source="lineitem",
-                cursor_field="updated_at",
-                id_field="li_id",
-                fanout=FanOut(id_field="l_orderkey"),
-                rebuild=_rebuild_docs,
-                sink_path=gold,
-                doc_key="o_orderkey",
-                n_buckets=nb,
-            ),
-        }
+        pipelines = {p.name: p for p in _docs_pipelines(gold, nb)}
 
         from pyspark.sql.types import _parse_datatype_string
 
@@ -426,7 +421,7 @@ def streaming_ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame
                 spark,
                 pipelines[name],
                 f"{gate.dir}/feed/{name}",
-                _parse_datatype_string(schemas[name]),
+                _parse_datatype_string(_FEED_SCHEMAS[name]),
                 loader,
                 gate.checkpoint(name),
                 row_counter=counter,
@@ -450,23 +445,12 @@ def streaming_ivm_maintained_docs(spark: SparkSession, sf_dir: str) -> DataFrame
 
         # phase B: resumed queries must consume exactly the new files
         consumed_b = sum(drain(name, load) for name in pipelines)
-
-        docs = (
-            read_bucketed_view(spark, gold)
-            .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
-            .orderBy("o_orderkey")
-        )
-        return materialize_release(docs)
-
-
-from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["streaming_ivm_maintained_docs"].oracle = _REG["ivm_maintained_docs"].oracle
+        return _docs_view(spark, gold, consumed_b)
 
 
 @query(
     "ivm_maintained_docs_delta",
-    oracle=None,  # set below — identical to ivm_maintained_docs' oracle
+    oracle=_DOCS_ORACLE,
     covers=("T2", "T3", "T7", "T8", "X-ivm-live", "X-sink-delta-log"),
 )
 def ivm_maintained_docs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,44 +470,41 @@ def ivm_maintained_docs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-size (~1 GiB), I/O per commit, with read amplification
     bounded by the compaction cadence. phase_b_rows gates the cursor
     discipline exactly as in the rewrite twin."""
-    from etl_sprint_2_5_spark.streaming.ivm import run_to_completion
-    from etl_sprint_2_5_spark.streaming.state import OffsetStore
-
-    with tempfile.TemporaryDirectory(prefix="ivm_delta_gate_") as tmp:
-        base, gold = f"{tmp}/base", f"{tmp}/gold/docs"
-        _stage_base(spark, sf_dir, base)
-        nb = buckets_for(dir_bytes(base))
-
-        load = _loader(spark, base)
-
-        sizes = {
-            name: max(1, load(name).count() // 2 + 1)
-            for name in ("orders", "customer", "lineitem")
-        }
-        pipelines = _docs_pipelines(
-            gold, nb, sizes, sink_mode="delta", compact_every=3
-        )
-        offsets = OffsetStore(f"{tmp}/offsets.json", id_default=0)
-
-        run_to_completion(spark, pipelines, load, offsets)  # phase A: backfill
-        _mutate(spark, sf_dir, base)  # the CDC writes
-        # phase B: the drain loads the mutated snapshots afresh
-        consumed_b = run_to_completion(spark, pipelines, load, offsets)
-
-        docs = (
-            read_bucketed_view(spark, gold)
-            .withColumn("phase_b_rows", F.lit(consumed_b).cast("bigint"))
-            .orderBy("o_orderkey")
-        )
-        return materialize_release(docs)
+    return _two_phase_docs(
+        spark, sf_dir, "ivm_delta_gate_", sink_mode="delta", compact_every=3
+    )
 
 
-_REG["ivm_maintained_docs_delta"].oracle = _REG["ivm_maintained_docs"].oracle
+def _agg_images(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The v1 orders snapshot (bucket = priority, cents) and the
+    changed rows' before- and after-images, shared by the aggregate
+    gate and its streaming twin."""
+    cents_v1 = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    o = load_table(spark, "orders", sf_dir).select(
+        "o_orderkey",
+        F.col("o_orderpriority").alias("bucket"),
+        cents_v1.alias("cents"),
+    )
+    changed_pred = (F.col("o_orderkey") % 13 == 0) | (
+        F.col("o_orderkey") % 17 == 0
+    )
+    # snapshot v2 images of the changed rows (the CDC after-image)
+    new_rows = o.where(changed_pred).select(
+        F.when(F.col("o_orderkey") % 13 == 0, F.lit("MUTATED"))
+        .otherwise(F.col("bucket"))
+        .alias("bucket"),
+        F.when(F.col("o_orderkey") % 17 == 0, F.col("cents") * 2)
+        .otherwise(F.col("cents"))
+        .alias("cents"),
+    )
+    old_rows = o.where(changed_pred).select("bucket", "cents")
+    return o, old_rows, new_rows
 
 
-@query(
-    "ivm_aggregate_deltas",
-    oracle="""
+# the from-scratch aggregate over the mutated base (both aggregate gates)
+_AGG_ORACLE = """
     WITH v2 AS (
       SELECT o_orderkey,
              CASE WHEN o_orderkey % 13 = 0 THEN 'MUTATED'
@@ -544,7 +525,12 @@ _REG["ivm_maintained_docs_delta"].oracle = _REG["ivm_maintained_docs"].oracle
     FROM v2 CROSS JOIN meta m
     GROUP BY bucket, m.n_delta_rows
     ORDER BY bucket
-    """,
+    """
+
+
+@query(
+    "ivm_aggregate_deltas",
+    oracle=_AGG_ORACLE,
     covers=("X-ivm-aggregate",),
 )
 def ivm_aggregate_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -567,26 +553,7 @@ def ivm_aggregate_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned merge instead of a full rescan."""
     from etl_sprint_2_5_spark.streaming.ivm import agg_delta, merge_agg_state
 
-    cents_v1 = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-    o = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("bucket"),
-        cents_v1.alias("cents"),
-    )
-    changed_pred = (F.col("o_orderkey") % 13 == 0) | (
-        F.col("o_orderkey") % 17 == 0
-    )
-    # snapshot v2 images of the changed rows (the CDC after-image)
-    new_rows = o.where(changed_pred).select(
-        "o_orderkey",
-        F.when(F.col("o_orderkey") % 13 == 0, F.lit("MUTATED"))
-        .otherwise(F.col("bucket"))
-        .alias("bucket"),
-        F.when(F.col("o_orderkey") % 17 == 0, F.col("cents") * 2)
-        .otherwise(F.col("cents"))
-        .alias("cents"),
-    )
-    old_rows = o.where(changed_pred)
+    o, old_rows, new_rows = _agg_images(spark, sf_dir)
 
     # phase A: state initialized from the v1 snapshot (the batch build)
     state = o.groupBy("bucket").agg(
@@ -610,7 +577,7 @@ def ivm_aggregate_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_ivm_aggregate_deltas",
-    oracle=None,  # set below — identical to ivm_aggregate_deltas' oracle
+    oracle=_AGG_ORACLE,
     covers=("X-ivm-aggregate-stream",),
 )
 def streaming_ivm_aggregate_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -628,24 +595,7 @@ def streaming_ivm_aggregate_deltas(spark: SparkSession, sf_dir: str) -> DataFram
     batch twin, with the changelog row count as the gated column."""
     from etl_sprint_2_5_spark.streaming.ivm import agg_delta, apply_agg_delta_batch
 
-    cents_v1 = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-    o = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("bucket"),
-        cents_v1.alias("cents"),
-    )
-    changed_pred = (F.col("o_orderkey") % 13 == 0) | (
-        F.col("o_orderkey") % 17 == 0
-    )
-    new_rows = o.where(changed_pred).select(
-        F.when(F.col("o_orderkey") % 13 == 0, F.lit("MUTATED"))
-        .otherwise(F.col("bucket"))
-        .alias("bucket"),
-        F.when(F.col("o_orderkey") % 17 == 0, F.col("cents") * 2)
-        .otherwise(F.col("cents"))
-        .alias("cents"),
-    )
-    old_rows = o.where(changed_pred).select("bucket", "cents")
+    o, old_rows, new_rows = _agg_images(spark, sf_dir)
 
     # micro-batch 1: initial inserts as (+1) changelog rows;
     # micro-batch 2: the mutation changelog (retract old, add new)
@@ -703,47 +653,11 @@ def streaming_ivm_aggregate_deltas(spark: SparkSession, sf_dir: str) -> DataFram
         return materialize_release(out)
 
 
-_REG["streaming_ivm_aggregate_deltas"].oracle = _REG["ivm_aggregate_deltas"].oracle
 
 
 @query(
     "ivm_maintained_docs_pg_live",
-    oracle="""
-    WITH o AS (
-      SELECT o_orderkey, o_custkey, o_orderpriority
-      FROM orders WHERE o_orderkey % 20 = 0
-    ), mut_cust AS (
-      SELECT c_custkey,
-             CASE WHEN c_custkey % 10 = 0 THEN upper(c_name)
-                  ELSE c_name END AS c_name
-      FROM customer
-    ), mut_ord AS (
-      SELECT o_orderkey, o_custkey,
-             CASE WHEN o_orderkey % 13 = 0 THEN 'MUTATED'
-                  ELSE o_orderpriority END AS o_orderpriority
-      FROM o
-    ), li AS (
-      SELECT l_orderkey AS o_orderkey,
-             count(*) AS n_items,
-             CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100
-                                 + 0.5) AS BIGINT)) AS BIGINT)
-                 AS revenue_cents
-      FROM lineitem WHERE l_orderkey % 20 = 0 GROUP BY l_orderkey
-    ), meta AS (
-      SELECT (SELECT count(*) FROM customer WHERE c_custkey % 10 = 0)
-           + (SELECT count(*) FROM o WHERE o_orderkey % 13 = 0)
-             AS phase_b_rows
-    )
-    SELECT o.o_orderkey AS o_orderkey, c.c_name, o.o_orderpriority,
-           COALESCE(li.n_items, 0)       AS n_items,
-           COALESCE(li.revenue_cents, 0) AS revenue_cents,
-           m.phase_b_rows
-    FROM mut_ord o
-    JOIN mut_cust c ON o.o_custkey = c.c_custkey
-    LEFT JOIN li   ON li.o_orderkey = o.o_orderkey
-    CROSS JOIN meta m
-    ORDER BY o.o_orderkey
-    """,
+    oracle=_PG_LIVE_ORACLE,
     covers=("S2", "S4", "S7", "T2", "T3", "T7", "T8", "X-ivm-live",
             "X-pg-live"),
 )
@@ -787,7 +701,7 @@ def ivm_maintained_docs_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivm_staged_fanout_live",
-    oracle=None,  # patched below: identical to ivm_maintained_docs_pg_live
+    oracle=_PG_LIVE_ORACLE,
     covers=("S2", "S4", "S7", "T2", "T3", "X-ivm-live", "X-pg-live"),
 )
 def ivm_staged_fanout_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,11 +725,7 @@ def _run_ivm_pg_live(
     import os
 
     from etl_sprint_2_5_spark.sources import pg_copy
-    from etl_sprint_2_5_spark.streaming.ivm import (
-        FanOut,
-        Pipeline,
-        run_to_completion,
-    )
+    from etl_sprint_2_5_spark.streaming.ivm import run_to_completion
     from etl_sprint_2_5_spark.streaming.state import OffsetStore
 
     with tempfile.TemporaryDirectory(prefix="ivm_pg_live_") as tmp:
@@ -831,43 +741,16 @@ def _run_ivm_pg_live(
             def mk_batch_fn(name: str):
                 def fn(cursor_ts, cursor_id, n):  # noqa: ANN001
                     return pg_copy.pg_keyset_read(
-                        spark, dsn, name, _PG_SCHEMAS[name],
+                        spark, dsn, name, _FEED_SCHEMAS[name],
                         "updated_at", _PG_KEYS[name], cursor_ts,
                         cursor_id, n,
                     )
                 return fn
 
-            common = dict(
-                rebuild=env["rebuild"], sink_path=gold,
-                doc_key="o_orderkey", n_buckets=env["nb"],
+            pipelines = _docs_pipelines(
+                gold, env["nb"], sizes, rebuild=env["rebuild"],
+                batch_fn=mk_batch_fn, bridge_fn=env["bridge_custkeys"],
             )
-            pipelines = [
-                Pipeline(
-                    name="orders", source="orders",
-                    cursor_field="updated_at", id_field="o_orderkey",
-                    fanout=FanOut(id_field="o_orderkey"),
-                    batch_size=sizes["orders"],
-                    batch_fn=mk_batch_fn("orders"), **common,
-                ),
-                Pipeline(
-                    name="customer", source="customer",
-                    cursor_field="updated_at", id_field="c_custkey",
-                    fanout=FanOut(
-                        id_field="c_custkey", bridge="orders",
-                        join_field="o_custkey", select_field="o_orderkey",
-                        bridge_fn=env["bridge_custkeys"],
-                    ),
-                    batch_size=sizes["customer"],
-                    batch_fn=mk_batch_fn("customer"), **common,
-                ),
-                Pipeline(
-                    name="lineitem", source="lineitem",
-                    cursor_field="updated_at", id_field="li_id",
-                    fanout=FanOut(id_field="l_orderkey"),
-                    batch_size=sizes["lineitem"],
-                    batch_fn=mk_batch_fn("lineitem"), **common,
-                ),
-            ]
             offsets = OffsetStore(f"{tmp}/offsets.json", id_default=0)
 
             run_to_completion(spark, pipelines, _no_pg_load, offsets)  # A
@@ -875,31 +758,9 @@ def _run_ivm_pg_live(
             consumed_b = run_to_completion(
                 spark, pipelines, _no_pg_load, offsets
             )  # phase B
-
-            docs = (
-                read_bucketed_view(spark, gold)
-                .withColumn(
-                    "phase_b_rows", F.lit(consumed_b).cast("bigint")
-                )
-                .orderBy("o_orderkey")
-            )
-            return materialize_release(docs)
+            return _docs_view(spark, gold, consumed_b)
 
 
-_REG["ivm_staged_fanout_live"].oracle = (
-    _REG["ivm_maintained_docs_pg_live"].oracle
-)
-
-_PG_SCHEMAS = {
-    "orders": (
-        "o_orderkey long, o_custkey long, o_orderpriority string, "
-        "updated_at timestamp"
-    ),
-    "customer": "c_custkey long, c_name string, updated_at timestamp",
-    "lineitem": (
-        "li_id long, l_orderkey long, cents long, updated_at timestamp"
-    ),
-}
 _PG_DDL = {
     "orders": (
         "o_orderkey bigint PRIMARY KEY, o_custkey bigint, "
@@ -1079,7 +940,7 @@ def _pg_live_mutate(dsn: str) -> None:
 
 @query(
     "streaming_ivm_pg_live",
-    oracle=None,  # set below — identical to ivm_maintained_docs_pg_live's
+    oracle=_PG_LIVE_ORACLE,
     covers=("T1", "S2", "X-ivm-stream-live", "X-pg-live",
             "X-pg-stream-source"),
 )
@@ -1110,7 +971,6 @@ def streaming_ivm_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_sprint_2_5_spark.sources import pg_copy
     from etl_sprint_2_5_spark.sources.pg_stream import PgKeysetDataSource
-    from etl_sprint_2_5_spark.streaming.ivm import FanOut, Pipeline
     from etl_sprint_2_5_spark.streaming.structured import (
         stream_pipeline_from,
     )
@@ -1121,32 +981,12 @@ def streaming_ivm_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         gold = f"{gate.dir}/gold/docs"
         with pg_copy.ephemeral_pg(f"{gate.dir}/cluster") as dsn:
             env = _pg_live_env(spark, sf_dir, dsn)
-            common = dict(
-                rebuild=env["rebuild"], sink_path=gold,
-                doc_key="o_orderkey", n_buckets=env["nb"],
-                cursor_field="updated_at",
-            )
             pipelines = {
-                "orders": Pipeline(
-                    name="orders", source="orders",
-                    id_field="o_orderkey",
-                    fanout=FanOut(id_field="o_orderkey"), **common,
-                ),
-                "customer": Pipeline(
-                    name="customer", source="customer",
-                    id_field="c_custkey",
-                    fanout=FanOut(
-                        id_field="c_custkey", bridge="orders",
-                        join_field="o_custkey", select_field="o_orderkey",
-                        bridge_fn=env["bridge_custkeys"],
-                    ),
-                    **common,
-                ),
-                "lineitem": Pipeline(
-                    name="lineitem", source="lineitem",
-                    id_field="li_id",
-                    fanout=FanOut(id_field="l_orderkey"), **common,
-                ),
+                p.name: p
+                for p in _docs_pipelines(
+                    gold, env["nb"], rebuild=env["rebuild"],
+                    bridge_fn=env["bridge_custkeys"],
+                )
             }
             counters: dict[str, list] = {n: [] for n in pipelines}
 
@@ -1157,7 +997,7 @@ def streaming_ivm_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .option("table", name)
                     .option("tscol", "updated_at")
                     .option("idcol", _PG_KEYS[name])
-                    .option("readschema", _PG_SCHEMAS[name])
+                    .option("readschema", _FEED_SCHEMAS[name])
                     .option("slices", "2")
                     .load()
                 )
@@ -1173,18 +1013,7 @@ def streaming_ivm_pg_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             for name in pipelines:  # phase B: resumed from checkpoint
                 drain(name)
             consumed_b = sum(sum(c) for c in counters.values()) - phase_a
-
-            docs = (
-                read_bucketed_view(spark, gold)
-                .withColumn(
-                    "phase_b_rows", F.lit(consumed_b).cast("bigint")
-                )
-                .orderBy("o_orderkey")
-            )
-            return materialize_release(docs)
-
-
-_REG["streaming_ivm_pg_live"].oracle = _REG["ivm_maintained_docs_pg_live"].oracle
+            return _docs_view(spark, gold, consumed_b)
 
 
 @query(

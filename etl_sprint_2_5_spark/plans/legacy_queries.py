@@ -162,6 +162,47 @@ def legacy_frames(
     return movies, actors, writers, bridge
 
 
+# the genre bridge both oracles derive from ``mv``'s cleansed csv
+_GENRE_LINKS = """mg AS (
+  SELECT DISTINCT mid, g FROM
+    (SELECT mid, unnest(string_split(genre_csv, ', ')) AS g FROM mv)
+  WHERE g IS NOT NULL AND g NOT IN ('N/A', '')
+)"""
+
+# the normalization readback both oracles end with: per-movie genre and
+# person lists plus the global dim/bridge cardinalities, from ``mv``,
+# ``mg`` and ``uni``
+_READBACK = """
+ga  AS (SELECT mid, string_agg(DISTINCT g, ',' ORDER BY g) AS genres
+        FROM mg GROUP BY mid),
+pa_a AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
+              AS actors FROM uni WHERE role='actor' GROUP BY mid),
+pa_d AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
+              AS directors FROM uni WHERE role='director' GROUP BY mid),
+pa_w AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
+              AS writers FROM uni WHERE role='writer' GROUP BY mid),
+cnt AS (SELECT
+  (SELECT count(DISTINCT g) FROM mg)            AS n_genre_dim,
+  (SELECT count(DISTINCT full_name) FROM uni)   AS n_person_dim,
+  (SELECT count(*) FROM mg)                     AS n_genre_links,
+  (SELECT count(*) FROM uni)                    AS n_person_links)
+SELECT mv.mid AS source_id, mv.title, mv.description,
+       round(mv.rating, 1) AS rating,
+       COALESCE(ga.genres, '')    AS genres,
+       COALESCE(pa_a.actors, '')  AS actors,
+       COALESCE(pa_d.directors, '') AS directors,
+       COALESCE(pa_w.writers, '') AS writers,
+       cnt.n_genre_dim, cnt.n_person_dim,
+       cnt.n_genre_links, cnt.n_person_links
+FROM mv
+LEFT JOIN ga   ON ga.mid   = mv.mid
+LEFT JOIN pa_a ON pa_a.mid = mv.mid
+LEFT JOIN pa_d ON pa_d.mid = mv.mid
+LEFT JOIN pa_w ON pa_w.mid = mv.mid
+CROSS JOIN cnt
+ORDER BY source_id
+"""
+
 _GL = "['Action','Drama','Sci-Fi','Comedy','Thriller','Romance']"
 
 _ORACLE = f"""
@@ -190,11 +231,7 @@ mv AS (
         FROM orders),
        (SELECT {_GL} AS gl)
 ),
-mg AS (
-  SELECT DISTINCT mid, g FROM
-    (SELECT mid, unnest(string_split(genre_csv, ', ')) AS g FROM mv)
-  WHERE g IS NOT NULL AND g NOT IN ('N/A', '')
-),
+{_GENRE_LINKS},
 act AS (
   SELECT s_suppkey AS aid,
          CASE WHEN s_suppkey%19=0 OR s_suppkey%23=0 THEN NULL
@@ -227,35 +264,7 @@ uni AS (
     WHERE d IS NOT NULL AND d NOT IN ('N/A', '')
   )
 ),
-ga  AS (SELECT mid, string_agg(DISTINCT g, ',' ORDER BY g) AS genres
-        FROM mg GROUP BY mid),
-pa_a AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
-              AS actors FROM uni WHERE role='actor' GROUP BY mid),
-pa_d AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
-              AS directors FROM uni WHERE role='director' GROUP BY mid),
-pa_w AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
-              AS writers FROM uni WHERE role='writer' GROUP BY mid),
-cnt AS (SELECT
-  (SELECT count(DISTINCT g) FROM mg)            AS n_genre_dim,
-  (SELECT count(DISTINCT full_name) FROM uni)   AS n_person_dim,
-  (SELECT count(*) FROM mg)                     AS n_genre_links,
-  (SELECT count(*) FROM uni)                    AS n_person_links)
-SELECT mv.mid AS source_id, mv.title, mv.description,
-       round(mv.rating, 1) AS rating,
-       COALESCE(ga.genres, '')    AS genres,
-       COALESCE(pa_a.actors, '')  AS actors,
-       COALESCE(pa_d.directors, '') AS directors,
-       COALESCE(pa_w.writers, '') AS writers,
-       cnt.n_genre_dim, cnt.n_person_dim,
-       cnt.n_genre_links, cnt.n_person_links
-FROM mv
-LEFT JOIN ga   ON ga.mid   = mv.mid
-LEFT JOIN pa_a ON pa_a.mid = mv.mid
-LEFT JOIN pa_d ON pa_d.mid = mv.mid
-LEFT JOIN pa_w ON pa_w.mid = mv.mid
-CROSS JOIN cnt
-ORDER BY source_id
-"""
+{_READBACK}"""
 
 
 @query(
@@ -486,11 +495,7 @@ WITH m_raw AS (
            THEN [writer]
            ELSE [] END) AS writer_ids
   FROM m_raw
-), mg AS (
-  SELECT DISTINCT mid, g FROM
-    (SELECT mid, unnest(string_split(genre_csv, ', ')) AS g FROM mv)
-  WHERE g IS NOT NULL AND g NOT IN ('N/A', '')
-), uni AS (
+), {_GENRE_LINKS}, uni AS (
   SELECT DISTINCT mid, full_name, role FROM (
     SELECT ma.movie_id AS mid, act.name AS full_name, 'actor' AS role
     FROM ma_raw ma JOIN act ON act.aid = CAST(ma.actor_id AS BIGINT)
@@ -504,35 +509,7 @@ WITH m_raw AS (
     WHERE d IS NOT NULL AND d NOT IN ('N/A', '')
   )
 ),
-ga  AS (SELECT mid, string_agg(DISTINCT g, ',' ORDER BY g) AS genres
-        FROM mg GROUP BY mid),
-pa_a AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
-              AS actors FROM uni WHERE role='actor' GROUP BY mid),
-pa_d AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
-              AS directors FROM uni WHERE role='director' GROUP BY mid),
-pa_w AS (SELECT mid, string_agg(DISTINCT full_name, ',' ORDER BY full_name)
-              AS writers FROM uni WHERE role='writer' GROUP BY mid),
-cnt AS (SELECT
-  (SELECT count(DISTINCT g) FROM mg)            AS n_genre_dim,
-  (SELECT count(DISTINCT full_name) FROM uni)   AS n_person_dim,
-  (SELECT count(*) FROM mg)                     AS n_genre_links,
-  (SELECT count(*) FROM uni)                    AS n_person_links)
-SELECT mv.mid AS source_id, mv.title, mv.description,
-       round(mv.rating, 1) AS rating,
-       COALESCE(ga.genres, '')    AS genres,
-       COALESCE(pa_a.actors, '')  AS actors,
-       COALESCE(pa_d.directors, '') AS directors,
-       COALESCE(pa_w.writers, '') AS writers,
-       cnt.n_genre_dim, cnt.n_person_dim,
-       cnt.n_genre_links, cnt.n_person_links
-FROM mv
-LEFT JOIN ga   ON ga.mid   = mv.mid
-LEFT JOIN pa_a ON pa_a.mid = mv.mid
-LEFT JOIN pa_d ON pa_d.mid = mv.mid
-LEFT JOIN pa_w ON pa_w.mid = mv.mid
-CROSS JOIN cnt
-ORDER BY source_id
-"""
+{_READBACK}"""
 
 
 @query(

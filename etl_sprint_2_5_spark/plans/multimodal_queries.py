@@ -270,6 +270,51 @@ def multimodal_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _image_dims(blobs: DataFrame) -> DataFrame:
+    """The production decode stage's mode and dims per (doc_id,
+    payload) blob, shared by every image decode gate."""
+    # the decode stage's output id is a string (DECODED_SCHEMA) — feed
+    # it one and cast back for the gate's BIGINT doc_id
+    return M.decode_images(
+        blobs.select(
+            F.col("doc_id").cast("string").alias("doc_id"), "payload"
+        ),
+        "doc_id",
+        "payload",
+    ).select(
+        F.col("id").cast("long").alias("doc_id"),
+        "width", "height", "channels", "decode_ok",
+    )
+
+
+def _pixel_checksums(spark: SparkSession, blobs: DataFrame, decode) -> DataFrame:  # noqa: ANN001
+    """The decode gates' result: :func:`_image_dims` beside a second
+    Arrow stage that decodes each blob with ``decode`` and sums its
+    pixels."""
+    import numpy as np
+    import pandas as pd
+
+    dims = _image_dims(blobs)
+
+    def pixsum(batches):  # noqa: ANN001 - Arrow iterator
+        for pdf in batches:
+            rows = [
+                (int(d), int(decode(bytes(p)).astype(np.int64).sum()))
+                for d, p in zip(pdf["doc_id"], pdf["payload"])
+            ]
+            yield pd.DataFrame(rows, columns=["doc_id", "pix_sum"])
+
+    sums = blobs.mapInPandas(pixsum, "doc_id long, pix_sum long")
+    out = (
+        dims.join(sums, "doc_id")
+        .select(
+            "doc_id", "width", "height", "channels", "pix_sum", "decode_ok"
+        )
+        .orderBy("doc_id")
+    )
+    return spark.createDataFrame(out.collect(), out.schema)
+
+
 @query(
     "png_decode_real",
     oracle="""
@@ -357,51 +402,24 @@ def png_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     blobs = ids.mapInPandas(gen, "doc_id long, payload binary")
 
-    # the decode stage's output id is a string (DECODED_SCHEMA) — feed
-    # it one and cast back for the gate's BIGINT doc_id
-    dims = M.decode_images(
-        blobs.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "payload"
-        ),
-        "doc_id",
-        "payload",
-    ).select(
-        F.col("id").cast("long").alias("doc_id"),
-        "width", "height", "channels", "decode_ok",
-    )
-
-    def pixsum(batches):  # noqa: ANN001 - Arrow iterator
-        for pdf in batches:
-            rows = [
-                (int(d), int(png_decode(bytes(p)).astype(np.int64).sum()))
-                for d, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "pix_sum"])
-
-    sums = blobs.mapInPandas(pixsum, "doc_id long, pix_sum long")
-    out = (
-        dims.join(sums, "doc_id")
-        .select(
-            "doc_id", "width", "height", "channels", "pix_sum", "decode_ok"
-        )
-        .orderBy("doc_id")
-    )
-    return spark.createDataFrame(out.collect(), out.schema)
+    return _pixel_checksums(spark, blobs, png_decode)
 
 
-@query(
-    "jpeg_decode_real",
-    oracle="""
+def _block_flat_oracle(hmul: int, a: int, b: int, c: int) -> str:
+    """Closed-form dims and pixel sum of the block-flat R=G=B JPEG
+    fixtures: W = 16(1 + d%3), H = 16(1 + hmul·d%3), each 8×8 block
+    flat at (a·bx + b·by + c·d) mod 256."""
+    return f"""
     WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 48),
     dims AS (
       SELECT doc_id,
              16 * (1 + doc_id % 3) AS w,
-             16 * (1 + (doc_id * 7) % 3) AS h
+             16 * (1 + (doc_id * {hmul}) % 3) AS h
       FROM ids
     ),
     blocks AS (
       SELECT d.doc_id, d.w, d.h,
-             (17 * bx.range + 29 * by.range + 13 * d.doc_id) % 256 AS v
+             ({a} * bx.range + {b} * by.range + {c} * d.doc_id) % 256 AS v
       FROM dims d
       JOIN range(0, 6) bx ON bx.range < d.w // 8
       JOIN range(0, 6) by ON by.range < d.h // 8
@@ -415,7 +433,12 @@ def png_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM blocks
     GROUP BY doc_id, w, h
     ORDER BY doc_id
-    """,
+    """
+
+
+@query(
+    "jpeg_decode_real",
+    oracle=_block_flat_oracle(7, 17, 29, 13),
     covers=("X-multimodal-decode", "X-jpeg-codec"),
 )
 def jpeg_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,63 +502,12 @@ def jpeg_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     blobs = ids.mapInPandas(gen, "doc_id long, payload binary")
 
-    dims = M.decode_images(
-        blobs.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "payload"
-        ),
-        "doc_id",
-        "payload",
-    ).select(
-        F.col("id").cast("long").alias("doc_id"),
-        "width", "height", "channels", "decode_ok",
-    )
-
-    def pixsum(batches):  # noqa: ANN001 - Arrow iterator
-        for pdf in batches:
-            rows = [
-                (int(d), int(jpeg_decode(bytes(p)).astype(np.int64).sum()))
-                for d, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "pix_sum"])
-
-    sums = blobs.mapInPandas(pixsum, "doc_id long, pix_sum long")
-    out = (
-        dims.join(sums, "doc_id")
-        .select(
-            "doc_id", "width", "height", "channels", "pix_sum", "decode_ok"
-        )
-        .orderBy("doc_id")
-    )
-    return spark.createDataFrame(out.collect(), out.schema)
+    return _pixel_checksums(spark, blobs, jpeg_decode)
 
 
 @query(
     "jpeg_decode_progressive",
-    oracle="""
-    WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 48),
-    dims AS (
-      SELECT doc_id,
-             16 * (1 + doc_id % 3) AS w,
-             16 * (1 + (doc_id * 5) % 3) AS h
-      FROM ids
-    ),
-    blocks AS (
-      SELECT d.doc_id, d.w, d.h,
-             (19 * bx.range + 23 * by.range + 11 * d.doc_id) % 256 AS v
-      FROM dims d
-      JOIN range(0, 6) bx ON bx.range < d.w // 8
-      JOIN range(0, 6) by ON by.range < d.h // 8
-    )
-    SELECT doc_id,
-           CAST(w AS INTEGER) AS width,
-           CAST(h AS INTEGER) AS height,
-           CAST(3 AS INTEGER) AS channels,
-           CAST(192 * sum(v) AS BIGINT) AS pix_sum,
-           'real' AS decode_ok
-    FROM blocks
-    GROUP BY doc_id, w, h
-    ORDER BY doc_id
-    """,
+    oracle=_block_flat_oracle(5, 19, 23, 11),
     covers=("X-multimodal-decode", "X-jpeg-codec-progressive"),
 )
 def jpeg_decode_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -601,34 +573,7 @@ def jpeg_decode_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     blobs = ids.mapInPandas(gen, "doc_id long, payload binary")
 
-    dims = M.decode_images(
-        blobs.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "payload"
-        ),
-        "doc_id",
-        "payload",
-    ).select(
-        F.col("id").cast("long").alias("doc_id"),
-        "width", "height", "channels", "decode_ok",
-    )
-
-    def pixsum(batches):  # noqa: ANN001 - Arrow iterator
-        for pdf in batches:
-            rows = [
-                (int(d), int(jpeg_decode(bytes(p)).astype(np.int64).sum()))
-                for d, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "pix_sum"])
-
-    sums = blobs.mapInPandas(pixsum, "doc_id long, pix_sum long")
-    out = (
-        dims.join(sums, "doc_id")
-        .select(
-            "doc_id", "width", "height", "channels", "pix_sum", "decode_ok"
-        )
-        .orderBy("doc_id")
-    )
-    return spark.createDataFrame(out.collect(), out.schema)
+    return _pixel_checksums(spark, blobs, jpeg_decode)
 
 
 @query(
@@ -1244,16 +1189,7 @@ def gif_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     blobs = ids.mapInPandas(gen, "doc_id long, payload binary")
 
-    dims = M.decode_images(
-        blobs.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "payload"
-        ),
-        "doc_id",
-        "payload",
-    ).select(
-        F.col("id").cast("long").alias("doc_id"),
-        "width", "height", "channels", "decode_ok",
-    )
+    dims = _image_dims(blobs)
 
     def sums(batches):  # noqa: ANN001 - Arrow iterator
         for pdf in batches:

@@ -83,23 +83,29 @@ def k_anonymity_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cms_probe_union(width: int, depth: int, salt: str) -> str:
+def _cms_probes(
+    table: str, key_sql: str, width: int, depth: int, salt: str, carry: str = ""
+) -> str:
+    """One salted-md5 probe row per (depth row, source row) — the
+    oracle side of operators/sketch.cms_build's cell hashing; ``carry``
+    appends columns kept beside each probe."""
     parts = [
         f"""
         SELECT {d} AS row,
-               ('0x' || substr(md5('{salt}:{d}:' || event_type), 1, 15))::BIGINT
-                 % {width} AS bucket,
-               event_type
-        FROM events"""
+               ('0x' || substr(md5('{salt}:{d}:' || {key_sql}), 1, 15))::BIGINT
+                 % {width} AS bucket{carry}
+        FROM {table}"""
         for d in range(depth)
     ]
     return "\n UNION ALL \n".join(parts)
 
 
-@query(
-    "cms_event_type_estimates",
-    oracle=f"""
-    WITH probes AS ({_cms_probe_union(512, 4, "cms-v1")}),
+# the 4x512 event-type sketch and its point queries (the batch gate
+# and its streaming twin build the identical sketch)
+_CMS_EVENT_TYPE_ORACLE = f"""
+    WITH probes AS ({_cms_probes(
+        "events", "event_type", 512, 4, "cms-v1", carry=", event_type"
+    )}),
     cells AS (
       SELECT row, bucket, count(*) AS n
       FROM probes GROUP BY row, bucket
@@ -111,7 +117,12 @@ def _cms_probe_union(width: int, depth: int, salt: str) -> str:
     FROM key_probes p JOIN cells c USING (row, bucket)
     GROUP BY p.event_type
     ORDER BY p.event_type
-    """,
+    """
+
+
+@query(
+    "cms_event_type_estimates",
+    oracle=_CMS_EVENT_TYPE_ORACLE,
     covers=("X-sketch-cms",),
 )
 def cms_event_type_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,18 +360,39 @@ def _hll_oracle_ctes(b: int, slice_pred: str = "TRUE") -> str:
       GROUP BY event_type, bucket"""
 
 
-def _hll_oracle_est(regs_cte: str, b: int) -> str:
+def _hll_oracle_est(regs_cte: str, b: int, key: str = "event_type") -> str:
     """Harmonic-sum SQL over a registers CTE — same exact int64 sum
-    as hll_estimate (absent buckets contribute 2^(W+1))."""
+    as hll_estimate (absent buckets contribute 2^(W+1)) — per ``key``,
+    or over the whole CTE when ``key`` is empty."""
     m = 1 << b
     wmax = 60 - b + 1
+    sel, grp = (f"{key},", f" GROUP BY {key}") if key else ("", "")
     return f"""
-      SELECT event_type,
+      SELECT {sel}
              CAST({m} - count(*) AS BIGINT) AS n_zero_regs,
              CAST(sum((1::BIGINT << ({wmax} - reg)))
                   + CAST({m} - count(*) AS BIGINT) * (1::BIGINT << {wmax})
                   AS BIGINT) AS harmonic_num
-      FROM {regs_cte} GROUP BY event_type"""
+      FROM {regs_cte}{grp}"""
+
+
+def _hll_day_regs(b: int) -> str:
+    """:func:`_hll_oracle_ctes`' registers per calendar day."""
+    m = 1 << b
+    wmax = 60 - b + 1
+    return f"""
+      SELECT CAST(epoch_us(date_trunc('day', ts)) // 86400000000 AS BIGINT)
+               AS day_num,
+             hv & {m - 1} AS bucket,
+             max(CASE WHEN hv >> {b} = 0 THEN {wmax}
+                      ELSE {wmax} - length(bin(hv >> {b})) END) AS reg
+      FROM (
+        SELECT ts,
+               ('0x' || substr(md5('hll-v1:' || CAST(user_id AS VARCHAR)),
+                               1, 15))::BIGINT AS hv
+        FROM events
+      )
+      GROUP BY 1, 2"""
 
 
 _HLL_B = 6  # m = 64 registers: rse ≈ 13%, small enough that sf0.01
@@ -605,18 +637,10 @@ def streaming_hll_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hll_pair_oracle(b: int) -> str:
     from etl_sprint_2_5_spark.operators.sketch import hll_est_milli_sql
 
-    m = 1 << b
-    wmax = 60 - b + 1
-
     def est_of(cte: str) -> str:
         return f"""
         SELECT {hll_est_milli_sql(b)} AS v
-        FROM (
-          SELECT CAST({m} - count(*) AS BIGINT) AS n_zero_regs,
-                 CAST(sum((1::BIGINT << ({wmax} - reg)))
-                      + CAST({m} - count(*) AS BIGINT) * (1::BIGINT << {wmax})
-                      AS BIGINT) AS harmonic_num
-          FROM {cte}
+        FROM ({_hll_oracle_est(cte, b, key="")}
         )"""
 
     return f"""
@@ -708,9 +732,12 @@ def hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DD_QS = (500, 900, 990)
 
 
-def _dd_oracle() -> str:
+def _dd_oracle(served: bool = False) -> str:
+    """The integer-bucket histogram and its rank walk per quantile;
+    ``served`` ends at the walk (dd_quantiles_served), the builder
+    gates add the exact order-statistic audit."""
     qs = ", ".join(f"({q})" for q in _DD_QS)
-    return f"""
+    ranks = f"""
     WITH cents AS (
       SELECT l_returnflag AS g,
              CAST(floor(l_extendedprice * 100 + 0.5e0) AS BIGINT) AS c
@@ -737,13 +764,25 @@ def _dd_oracle() -> str:
       FROM cum c CROSS JOIN (VALUES {qs}) q(q_milli)
       WHERE c.cum_n >= (q.q_milli * c.total_n + 999) // 1000
       GROUP BY c.g, q.q_milli
-    ),
-    est AS (
-      SELECT g, q_milli, rank_k, bucket_id,
-             CASE WHEN bucket_id < 4 THEN bucket_id * 1000
+    )"""
+    # the bucket's midpoint in thousandths of a cent
+    mid = """CASE WHEN bucket_id < 4 THEN bucket_id * 1000
                   ELSE ((4 | (bucket_id & 3)) << ((bucket_id >> 2) - 3)) * 1000
                        + (1::BIGINT << ((bucket_id >> 2) - 3)) * 500
-             END AS est_milli
+             END"""
+    if served:
+        return ranks + f"""
+    SELECT g AS l_returnflag, q_milli,
+           CAST(rank_k AS BIGINT) AS rank_k,
+           CAST(bucket_id AS BIGINT) AS bucket_id,
+           CAST({mid} AS BIGINT) AS est_milli
+    FROM ranks
+    ORDER BY l_returnflag, q_milli
+    """
+    return ranks + f""",
+    est AS (
+      SELECT g, q_milli, rank_k, bucket_id,
+             {mid} AS est_milli
       FROM ranks
     ),
     numbered AS (
@@ -904,15 +943,7 @@ def streaming_dd_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cms_int_cells(table: str, key: str, width: int, depth: int, salt: str) -> str:
-    parts = [
-        f"""
-        SELECT {d} AS row,
-               ('0x' || substr(md5('{salt}:{d}:' || CAST({key} AS VARCHAR)),
-                               1, 15))::BIGINT % {width} AS bucket
-        FROM {table}"""
-        for d in range(depth)
-    ]
-    probes = "\n UNION ALL \n".join(parts)
+    probes = _cms_probes(table, f"CAST({key} AS VARCHAR)", width, depth, salt)
     return f"SELECT row, bucket, count(*) AS n FROM ({probes}) GROUP BY row, bucket"
 
 
@@ -992,7 +1023,7 @@ def cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_cms_estimates",
-    oracle=None,  # set below — identical to cms_event_type_estimates' oracle
+    oracle=_CMS_EVENT_TYPE_ORACLE,
     covers=("X-stream-cms",),
 )
 def streaming_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1057,38 +1088,13 @@ def streaming_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
         return materialize_release(out)
 
 
-from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["streaming_cms_estimates"].oracle = _REG["cms_event_type_estimates"].oracle
-
-
 def _hll_dau_oracle(b: int) -> str:
     from etl_sprint_2_5_spark.operators.sketch import hll_est_milli_sql
 
-    m = 1 << b
-    wmax = 60 - b + 1
     return f"""
-    WITH regs AS (
-      SELECT CAST(epoch_us(date_trunc('day', ts)) // 86400000000 AS BIGINT)
-               AS day_num,
-             hv & {m - 1} AS bucket,
-             max(CASE WHEN hv >> {b} = 0 THEN {wmax}
-                      ELSE {wmax} - length(bin(hv >> {b})) END) AS reg
-      FROM (
-        SELECT ts,
-               ('0x' || substr(md5('hll-v1:' || CAST(user_id AS VARCHAR)),
-                               1, 15))::BIGINT AS hv
-        FROM events
-      )
-      GROUP BY 1, 2
+    WITH regs AS ({_hll_day_regs(b)}
     ),
-    agg AS (
-      SELECT day_num,
-             CAST({m} - count(*) AS BIGINT) AS n_zero_regs,
-             CAST(sum((1::BIGINT << ({wmax} - reg)))
-                  + CAST({m} - count(*) AS BIGINT) * (1::BIGINT << {wmax})
-                  AS BIGINT) AS harmonic_num
-      FROM regs GROUP BY day_num
+    agg AS ({_hll_oracle_est('regs', b, key='day_num')}
     ),
     fin AS (
       SELECT day_num, n_zero_regs, harmonic_num,
@@ -1152,34 +1158,14 @@ def hll_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hll_wau_oracle(b: int) -> str:
     from etl_sprint_2_5_spark.operators.sketch import hll_est_milli_sql
 
-    m = 1 << b
-    wmax = 60 - b + 1
     return f"""
-    WITH dayregs AS (
-      SELECT CAST(epoch_us(date_trunc('day', ts)) // 86400000000 AS BIGINT)
-               AS day_num,
-             hv & {m - 1} AS bucket,
-             max(CASE WHEN hv >> {b} = 0 THEN {wmax}
-                      ELSE {wmax} - length(bin(hv >> {b})) END) AS reg
-      FROM (
-        SELECT ts,
-               ('0x' || substr(md5('hll-v1:' || CAST(user_id AS VARCHAR)),
-                               1, 15))::BIGINT AS hv
-        FROM events
-      )
-      GROUP BY 1, 2
+    WITH dayregs AS ({_hll_day_regs(b)}
     ),
     wk AS (
       SELECT day_num // 7 AS week_num, bucket, max(reg) AS reg
       FROM dayregs GROUP BY 1, 2
     ),
-    agg AS (
-      SELECT week_num,
-             CAST({m} - count(*) AS BIGINT) AS n_zero_regs,
-             CAST(sum((1::BIGINT << ({wmax} - reg)))
-                  + CAST({m} - count(*) AS BIGINT) * (1::BIGINT << {wmax})
-                  AS BIGINT) AS harmonic_num
-      FROM wk GROUP BY week_num
+    agg AS ({_hll_oracle_est('wk', b, key='week_num')}
     ),
     fin AS (
       SELECT week_num, n_zero_regs, harmonic_num,
@@ -1259,51 +1245,9 @@ def hll_weekly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dd_served_oracle() -> str:
-    qs = ", ".join(f"({q})" for q in _DD_QS)
-    return f"""
-    WITH cents AS (
-      SELECT l_returnflag AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5e0) AS BIGINT) AS c
-      FROM lineitem
-    ),
-    sk AS (
-      SELECT g,
-             CASE WHEN c < 4 THEN c
-                  ELSE (length(bin(c)) << 2)
-                       | ((c >> (length(bin(c)) - 3)) & 3) END AS bucket_id,
-             count(*) AS n
-      FROM cents GROUP BY 1, 2
-    ),
-    cum AS (
-      SELECT g, bucket_id,
-             sum(n) OVER (PARTITION BY g ORDER BY bucket_id) AS cum_n,
-             sum(n) OVER (PARTITION BY g) AS total_n
-      FROM sk
-    ),
-    ranks AS (
-      SELECT c.g, q.q_milli,
-             min(c.bucket_id) AS bucket_id,
-             min((q.q_milli * c.total_n + 999) // 1000) AS rank_k
-      FROM cum c CROSS JOIN (VALUES {qs}) q(q_milli)
-      WHERE c.cum_n >= (q.q_milli * c.total_n + 999) // 1000
-      GROUP BY c.g, q.q_milli
-    )
-    SELECT g AS l_returnflag, q_milli,
-           CAST(rank_k AS BIGINT) AS rank_k,
-           CAST(bucket_id AS BIGINT) AS bucket_id,
-           CAST(CASE WHEN bucket_id < 4 THEN bucket_id * 1000
-                ELSE ((4 | (bucket_id & 3)) << ((bucket_id >> 2) - 3)) * 1000
-                     + (1::BIGINT << ((bucket_id >> 2) - 3)) * 500
-           END AS BIGINT) AS est_milli
-    FROM ranks
-    ORDER BY l_returnflag, q_milli
-    """
-
-
 @query(
     "dd_quantiles_served",
-    oracle=_dd_served_oracle(),
+    oracle=_dd_oracle(served=True),
     covers=("X-sketch-ddq-serving",),
 )
 def dd_quantiles_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1378,24 +1322,74 @@ def cms_join_size_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cms_inner_product(sa, sb, depth=d)
 
 
-def _kmv_churn_oracle(k: int) -> str:
-    from etl_sprint_2_5_spark.operators.sketch import _KMV_M
-
-    c_lit = float(1000 * _KMV_M)
-
-    def sample(pred: str) -> str:
-        return f"""
+def _kmv_sample(k: int, src: str, pred: str | None = None) -> str:
+    """The bottom-k salted-md5 user-hash sample of ``src`` (the oracle
+    side of operators/sketch.kmv_build), shared by every KMV oracle."""
+    where = f" WHERE {pred}" if pred else ""
+    return f"""
         SELECT hv FROM (
           SELECT DISTINCT ('0x' || substr(md5('kmv-v1:' ||
                  CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS hv
-          FROM wk, bounds WHERE {pred}
+          FROM {src}{where}
         ) ORDER BY hv LIMIT {k}"""
 
-    def est(n: str, name: str) -> str:
-        return (
-            f"CAST(floor(({c_lit!r} * ({n})) / CAST(theta AS DOUBLE) "
-            f"+ 0.5e0) AS BIGINT) AS {name}"
-        )
+
+def _kmv_theta(k: int, cte: str) -> str:
+    """One sample's size and θ (exact mode below k: θ = M)."""
+    from etl_sprint_2_5_spark.operators.sketch import _KMV_M
+
+    return f"""
+          SELECT count(*) AS n_sample,
+                 CASE WHEN count(*) >= {k} THEN max(hv)
+                      ELSE {_KMV_M} END AS theta
+          FROM {cte}"""
+
+
+def _kmv_scaled(n: str, name: str, theta: str = "theta") -> str:
+    """The fixed-point estimate ``n`` · M/θ in thousandths."""
+    from etl_sprint_2_5_spark.operators.sketch import _KMV_M
+
+    c_lit = float(1000 * _KMV_M)
+    return (
+        f"CAST(floor(({c_lit!r} * ({n})) / CAST({theta} AS DOUBLE) "
+        f"+ 0.5e0) AS BIGINT) AS {name}"
+    )
+
+
+def _kmv_distinct_est(k: int, n: str, name: str, theta: str = "theta") -> str:
+    """The single-sketch distinct estimate: (k−1)·M/θ once the sample
+    is full, the exact count below k."""
+    return _kmv_scaled(
+        f"CASE WHEN {n} >= {k} THEN {n} - 1 ELSE {n} END", name, theta
+    )
+
+
+def _kmv_churn_oracle(k: int, audit: bool = True) -> str:
+    """Week-over-week churn over the first two weeks' samples; ``audit``
+    adds the exact EXCEPT/INTERSECT counts (the builder query keeps
+    them, the served twin does not)."""
+    from etl_sprint_2_5_spark.operators.sketch import _KMV_M
+
+    def sample(pred: str) -> str:
+        return _kmv_sample(k, "wk, bounds", pred)
+
+    audit_ctes = audit_cols = audit_from = ""
+    if audit:
+        audit_ctes = """,
+    ua AS (SELECT DISTINCT user_id FROM wk, bounds WHERE week_num = w0),
+    ub AS (SELECT DISTINCT user_id FROM wk, bounds WHERE week_num = w0 + 1),
+    ex AS (
+      SELECT
+        (SELECT count(*) FROM (SELECT * FROM ua EXCEPT SELECT * FROM ub))
+          AS exact_churned,
+        (SELECT count(*) FROM (SELECT * FROM ub EXCEPT SELECT * FROM ua))
+          AS exact_new,
+        (SELECT count(*) FROM (SELECT * FROM ua INTERSECT SELECT * FROM ub))
+          AS exact_retained
+    )"""
+        audit_cols = """,
+           exact_churned, exact_new, exact_retained"""
+        audit_from = ", ex"
 
     return f"""
     WITH wk AS (
@@ -1425,27 +1419,15 @@ def _kmv_churn_oracle(k: int) -> str:
              coalesce(sum(in_b), 0) AS n_b,
              coalesce(sum(in_a * in_b), 0) AS n_inter
       FROM tagged, st WHERE hv < theta
-    ),
-    ua AS (SELECT DISTINCT user_id FROM wk, bounds WHERE week_num = w0),
-    ub AS (SELECT DISTINCT user_id FROM wk, bounds WHERE week_num = w0 + 1),
-    ex AS (
-      SELECT
-        (SELECT count(*) FROM (SELECT * FROM ua EXCEPT SELECT * FROM ub))
-          AS exact_churned,
-        (SELECT count(*) FROM (SELECT * FROM ub EXCEPT SELECT * FROM ua))
-          AS exact_new,
-        (SELECT count(*) FROM (SELECT * FROM ua INTERSECT SELECT * FROM ub))
-          AS exact_retained
-    )
+    ){audit_ctes}
     SELECT theta,
            CAST(n_a AS BIGINT) AS n_a,
            CAST(n_b AS BIGINT) AS n_b,
            CAST(n_inter AS BIGINT) AS n_inter,
-           {est('n_a - n_inter', 'churned_est_milli')},
-           {est('n_b - n_inter', 'new_est_milli')},
-           {est('n_inter', 'retained_est_milli')},
-           exact_churned, exact_new, exact_retained
-    FROM st, cnt, ex
+           {_kmv_scaled('n_a - n_inter', 'churned_est_milli')},
+           {_kmv_scaled('n_b - n_inter', 'new_est_milli')},
+           {_kmv_scaled('n_inter', 'retained_est_milli')}{audit_cols}
+    FROM st, cnt{audit_from}
     """
 
 
@@ -1529,29 +1511,14 @@ def kmv_weekly_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_slice_oracle(k: int) -> str:
-    from etl_sprint_2_5_spark.operators.sketch import _KMV_M
-
-    c_lit = float(1000 * _KMV_M)
-
     def sample(pred: str) -> str:
-        return f"""
-        SELECT hv FROM (
-          SELECT DISTINCT ('0x' || substr(md5('kmv-v1:' ||
-                 CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS hv
-          FROM events WHERE {pred}
-        ) ORDER BY hv LIMIT {k}"""
+        return _kmv_sample(k, "events", pred)
 
     def est(cte: str, name: str) -> str:
         return f"""
         SELECT CAST(n_sample AS BIGINT) AS n_sample, theta,
-               CAST(floor(({c_lit!r} * (CASE WHEN n_sample >= {k}
-                     THEN n_sample - 1 ELSE n_sample END))
-                    / CAST(theta AS DOUBLE) + 0.5e0) AS BIGINT) AS {name}
-        FROM (
-          SELECT count(*) AS n_sample,
-                 CASE WHEN count(*) >= {k} THEN max(hv)
-                      ELSE {_KMV_M} END AS theta
-          FROM {cte}
+               {_kmv_distinct_est(k, 'n_sample', name)}
+        FROM ({_kmv_theta(k, cte)}
         )"""
 
     return f"""
@@ -1653,68 +1620,9 @@ def kmv_sliced_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize_release(out, merged)
 
 
-def _kmv_churn_served_oracle(k: int) -> str:
-    from etl_sprint_2_5_spark.operators.sketch import _KMV_M
-
-    c_lit = float(1000 * _KMV_M)
-
-    def sample(pred: str) -> str:
-        return f"""
-        SELECT hv FROM (
-          SELECT DISTINCT ('0x' || substr(md5('kmv-v1:' ||
-                 CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS hv
-          FROM wk, bounds WHERE {pred}
-        ) ORDER BY hv LIMIT {k}"""
-
-    def est(n: str, name: str) -> str:
-        return (
-            f"CAST(floor(({c_lit!r} * ({n})) / CAST(theta AS DOUBLE) "
-            f"+ 0.5e0) AS BIGINT) AS {name}"
-        )
-
-    return f"""
-    WITH wk AS (
-      SELECT CAST(epoch_us(date_trunc('day', ts)) // 86400000000 AS BIGINT)
-               // 7 AS week_num,
-             user_id
-      FROM events
-    ),
-    bounds AS (SELECT min(week_num) AS w0 FROM wk),
-    ha AS ({sample('week_num = w0')}),
-    hb AS ({sample('week_num = w0 + 1')}),
-    st AS (
-      SELECT least(
-        CASE WHEN (SELECT count(*) FROM ha) >= {k}
-             THEN (SELECT max(hv) FROM ha) ELSE {_KMV_M} END,
-        CASE WHEN (SELECT count(*) FROM hb) >= {k}
-             THEN (SELECT max(hv) FROM hb) ELSE {_KMV_M} END) AS theta
-    ),
-    tagged AS (
-      SELECT hv, max(in_a) AS in_a, max(in_b) AS in_b FROM (
-        SELECT hv, 1 AS in_a, 0 AS in_b FROM ha
-        UNION ALL SELECT hv, 0 AS in_a, 1 AS in_b FROM hb
-      ) GROUP BY hv
-    ),
-    cnt AS (
-      SELECT coalesce(sum(in_a), 0) AS n_a,
-             coalesce(sum(in_b), 0) AS n_b,
-             coalesce(sum(in_a * in_b), 0) AS n_inter
-      FROM tagged, st WHERE hv < theta
-    )
-    SELECT theta,
-           CAST(n_a AS BIGINT) AS n_a,
-           CAST(n_b AS BIGINT) AS n_b,
-           CAST(n_inter AS BIGINT) AS n_inter,
-           {est('n_a - n_inter', 'churned_est_milli')},
-           {est('n_b - n_inter', 'new_est_milli')},
-           {est('n_inter', 'retained_est_milli')}
-    FROM st, cnt
-    """
-
-
 @query(
     "kmv_churn_served",
-    oracle=_kmv_churn_served_oracle(_KMV_K),
+    oracle=_kmv_churn_oracle(_KMV_K, audit=False),
     covers=("X-sketch-kmv-serving",),
 )
 def kmv_churn_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1758,29 +1666,15 @@ def kmv_churn_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_stream_oracle(k: int) -> str:
-    from etl_sprint_2_5_spark.operators.sketch import _KMV_M
-
-    c_lit = float(1000 * _KMV_M)
     return f"""
-    WITH direct AS (
-      SELECT hv FROM (
-        SELECT DISTINCT ('0x' || substr(md5('kmv-v1:' ||
-               CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS hv
-        FROM events
-      ) ORDER BY hv LIMIT {k}
+    WITH direct AS ({_kmv_sample(k, 'events')}
     ),
-    e AS (
-      SELECT count(*) AS n_sample,
-             CASE WHEN count(*) >= {k} THEN max(hv)
-                  ELSE {_KMV_M} END AS theta
-      FROM direct
+    e AS ({_kmv_theta(k, 'direct')}
     ),
     ex AS (SELECT count(DISTINCT user_id) AS exact_distinct FROM events)
     SELECT CAST(e.n_sample AS BIGINT) AS k_streamed,
            TRUE AS streamed_equals_direct,
-           CAST(floor(({c_lit!r} * (CASE WHEN e.n_sample >= {k}
-                 THEN e.n_sample - 1 ELSE e.n_sample END))
-                / CAST(e.theta AS DOUBLE) + 0.5e0) AS BIGINT) AS est_milli,
+           {_kmv_distinct_est(k, 'e.n_sample', 'est_milli', 'e.theta')},
            ex.exact_distinct
     FROM e, ex
     """

@@ -26,23 +26,81 @@ _DUCK_COS = (
 )
 
 
-@query(
-    "ann_bruteforce_topk",
-    oracle=f"""
-    WITH scored AS (
+# every other vector scored against each query vector (exact kNN)
+_EXACT_SCORED = f"""
       SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
              {_DUCK_COS} AS cos
       FROM embeddings a, embeddings q
-      WHERE q.vec_id < {_N_QUERIES} AND a.vec_id <> q.vec_id
-    ), ranked AS (
+      WHERE q.vec_id < {_N_QUERIES} AND a.vec_id <> q.vec_id"""
+# the same, restricted to each query's own cell of ``assigned`` (IVF)
+_CELL_SCORED = f"""
+      SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
+             {_DUCK_COS} AS cos
+      FROM assigned a JOIN assigned q ON a.centroid_id = q.centroid_id
+      WHERE q.vec_id < {_N_QUERIES} AND a.vec_id <> q.vec_id"""
+
+
+def _top_k(src: str, cols: str = "query_id, neighbor_id, cos, rank") -> str:
+    """The oracles' final cut: rank ``src``'s rows per query by cos
+    with neighbor-id tiebreak and keep the top ``_K``."""
+    return f"""ranked AS (
       SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
+      FROM {src}
     )
-    SELECT query_id, neighbor_id, cos, rank
+    SELECT {cols}
     FROM ranked WHERE rank <= {_K}
     ORDER BY query_id, rank
-    """,
+    """
+
+
+def _nearest_cells(
+    cent: str, alias: str, emb: bool = True, where: str = "", keep: str = "rn = 1"
+) -> str:
+    """Each vector of ``embeddings {alias}`` (the raw ``where`` tail
+    filters them) with its nearest cells of centroid CTE ``cent`` by
+    round(cos,6) with centroid-id tiebreak; ``keep`` bounds the cells
+    per vector and ``emb`` carries the embedding along."""
+    e_out, e_in = (", embedding", f", {alias}.embedding") if emb else ("", "")
+    return f"""
+      SELECT vec_id{e_out}, centroid_id FROM (
+        SELECT {alias}.vec_id{e_in}, c.centroid_id,
+               row_number() OVER (
+                 PARTITION BY {alias}.vec_id
+                 ORDER BY round(list_cosine_similarity(
+                   {alias}.embedding::DOUBLE[], c.emb), 6) DESC,
+                   c.centroid_id) AS rn
+        FROM embeddings {alias}, {cent} c{where}
+      ) WHERE {keep}"""
+
+
+def _ivf_assigned(
+    train_where: str = "", emb: bool = True, materialized: bool = False
+) -> str:
+    """``WITH`` the trained centroids and every vector's cell
+    (``assigned``), the head of every IVF oracle."""
+    cells = _nearest_cells(f"cent{_IVF_ITERS}", "a", emb)
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""WITH {_ivf_trained_ctes(_IVF_ITERS, train_where)}, assigned AS{mat} ({cells}
+    )"""
+
+
+def _ivf_probes(emb: bool = True, materialized: bool = False) -> str:
+    """The query vectors' ``_NPROBE`` nearest cells (``probes``)."""
+    cells = _nearest_cells(
+        f"cent{_IVF_ITERS}", "q", emb, f"\n        WHERE q.vec_id < {_N_QUERIES}",
+        f"rn <= {_NPROBE}",
+    )
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""probes AS{mat} ({cells}
+    )"""
+
+
+@query(
+    "ann_bruteforce_topk",
+    oracle=f"""
+    WITH scored AS ({_EXACT_SCORED}
+    ), {_top_k('scored')}""",
     covers=("X-ann-brute",),
 )
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,15 +133,8 @@ def _ivf_trained_ctes(iters: int, train_where: str = "") -> str:
     ]
     for i in range(1, iters + 1):
         where_i = f" WHERE true{extra}" if train_where else ""
-        parts.append(f"""asg{i} AS MATERIALIZED (
-      SELECT vec_id, embedding, centroid_id FROM (
-        SELECT a.vec_id, a.embedding, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   a.embedding::DOUBLE[], c.emb), 6) DESC, c.centroid_id) AS rn
-        FROM embeddings a, cent{i - 1} c{where_i}
-      ) WHERE rn = 1
+        cells = _nearest_cells(f"cent{i - 1}", "a", where=where_i)
+        parts.append(f"""asg{i} AS MATERIALIZED ({cells}
     )""")
         parts.append(f"""cent{i} AS MATERIALIZED (
       SELECT centroid_id, list(round(v, 6) ORDER BY i) AS emb FROM (
@@ -97,33 +148,18 @@ def _ivf_trained_ctes(iters: int, train_where: str = "") -> str:
     return ", ".join(parts)
 
 
+def _ivf_topk_oracle(train_where: str = "") -> str:
+    """Top-k within each query's own cell: ann_ivf_topk, its streaming
+    twin and the index-upsert gate (centroids trained on
+    ``train_where``)."""
+    return f"""
+    {_ivf_assigned(train_where)}, scored AS ({_CELL_SCORED}
+    ), {_top_k('scored')}"""
+
+
 @query(
     "ann_ivf_topk",
-    oracle=f"""
-    WITH {_ivf_trained_ctes(_IVF_ITERS)}, assigned AS (
-      SELECT vec_id, embedding, centroid_id FROM (
-        SELECT a.vec_id, a.embedding, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   a.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings a, cent{_IVF_ITERS} c
-      ) WHERE rn = 1
-    ), scored AS (
-      SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-             {_DUCK_COS} AS cos
-      FROM assigned a JOIN assigned q ON a.centroid_id = q.centroid_id
-      WHERE q.vec_id < {_N_QUERIES} AND a.vec_id <> q.vec_id
-    ), ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= {_K}
-    ORDER BY query_id, rank
-    """,
+    oracle=_ivf_topk_oracle(),
     covers=("X-ann-ivf",),
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,15 +254,7 @@ _QUANT_CAND = 20  # int8 candidate pool = 4x the final k
       JOIN embeddings a  ON a.vec_id = c.neighbor_id
       JOIN embeddings qq ON qq.vec_id = c.query_id
     ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM rescored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= {_K}
-    ORDER BY query_id, rank
-    """,
+    {_top_k('rescored')}""",
     covers=("X-ann-quantized",),
 )
 def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,15 +336,7 @@ _FILTER_LABEL = 3
         AND a.label = {_FILTER_LABEL}
         AND a.vec_id <> q.vec_id
     ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= {_K}
-    ORDER BY query_id, rank
-    """,
+    {_top_k('scored')}""",
     covers=("X-ann-filtered",),
 )
 def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,41 +409,12 @@ def ivf_search(
 @query(
     "ann_ivf_nprobe_topk",
     oracle=f"""
-    WITH {_ivf_trained_ctes(_IVF_ITERS)}, assigned AS (
-      SELECT vec_id, embedding, centroid_id FROM (
-        SELECT a.vec_id, a.embedding, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   a.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings a, cent{_IVF_ITERS} c
-      ) WHERE rn = 1
-    ), probes AS (
-      SELECT vec_id, embedding, centroid_id FROM (
-        SELECT q.vec_id, q.embedding, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   q.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings q, cent{_IVF_ITERS} c
-        WHERE q.vec_id < {_N_QUERIES}
-      ) WHERE rn <= {_NPROBE}
-    ), scored AS (
+    {_ivf_assigned()}, {_ivf_probes()}, scored AS (
       SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
              {_DUCK_COS} AS cos
       FROM assigned a JOIN probes q ON a.centroid_id = q.centroid_id
       WHERE a.vec_id <> q.vec_id
-    ), ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= {_K}
-    ORDER BY query_id, rank
-    """,
+    ), {_top_k('scored')}""",
     covers=("X-ann-ivf-nprobe",),
 )
 def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,31 +436,7 @@ _UPSERT_BASE = "vec_id % 10 <> 9"  # 90% of vectors are the existing
 
 @query(
     "ann_index_upsert_topk",
-    oracle=f"""
-    WITH {_ivf_trained_ctes(_IVF_ITERS, train_where=_UPSERT_BASE)}, assigned AS (
-      SELECT vec_id, embedding, centroid_id FROM (
-        SELECT a.vec_id, a.embedding, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   a.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings a, cent{_IVF_ITERS} c
-      ) WHERE rn = 1
-    ), scored AS (
-      SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-             {_DUCK_COS} AS cos
-      FROM assigned a JOIN assigned q ON a.centroid_id = q.centroid_id
-      WHERE q.vec_id < {_N_QUERIES} AND a.vec_id <> q.vec_id
-    ), ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= {_K}
-    ORDER BY query_id, rank
-    """,
+    oracle=_ivf_topk_oracle(_UPSERT_BASE),
     covers=("X-ann-upsert",),
 )
 def ann_index_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,20 +684,9 @@ def _pq_ctes() -> str:
     )"""
 
 
-@query(
-    "ann_pq_topk",
-    oracle=f"""
-    WITH {_pq_ctes()},
-    adc AS (
-      SELECT qs.vec_id AS query_id, x.vec_id AS neighbor_id,
-             CAST(sum(list_dot_product(qs.sv, c.cv)) AS BIGINT) AS score
-      FROM codes x
-      JOIN cb c ON x.m = c.m AND x.code = c.code
-      JOIN sub qs ON qs.m = x.m
-      WHERE qs.vec_id < {_N_QUERIES} AND x.vec_id <> qs.vec_id
-      GROUP BY 1, 2
-    ),
-    cand AS (
+# the PQ oracles' tail: cut the ADC candidate pool, rescore it in exact
+# float cosine, keep the top k
+_PQ_RESCORE_TOP_K = f"""cand AS (
       SELECT query_id, neighbor_id FROM (
         SELECT *, row_number() OVER (PARTITION BY query_id
                    ORDER BY score DESC, neighbor_id) AS crank
@@ -744,15 +700,23 @@ def _pq_ctes() -> str:
       JOIN embeddings a ON a.vec_id = c2.neighbor_id
       JOIN embeddings q ON q.vec_id = c2.query_id
     ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM rescored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= {_K}
-    ORDER BY query_id, rank
-    """,
+    {_top_k('rescored')}"""
+
+
+@query(
+    "ann_pq_topk",
+    oracle=f"""
+    WITH {_pq_ctes()},
+    adc AS (
+      SELECT qs.vec_id AS query_id, x.vec_id AS neighbor_id,
+             CAST(sum(list_dot_product(qs.sv, c.cv)) AS BIGINT) AS score
+      FROM codes x
+      JOIN cb c ON x.m = c.m AND x.code = c.code
+      JOIN sub qs ON qs.m = x.m
+      WHERE qs.vec_id < {_N_QUERIES} AND x.vec_id <> qs.vec_id
+      GROUP BY 1, 2
+    ),
+    {_PQ_RESCORE_TOP_K}""",
     covers=("X-ann-pq",),
 )
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -862,17 +826,7 @@ _PRUNE_CAP = 30  # per-cluster keep quota
 @query(
     "cluster_balanced_prune",
     oracle=f"""
-    WITH {_ivf_trained_ctes(_IVF_ITERS)}, assigned AS (
-      SELECT vec_id, centroid_id FROM (
-        SELECT a.vec_id, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   a.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings a, cent{_IVF_ITERS} c
-      ) WHERE rn = 1
-    ), ranked AS (
+    {_ivf_assigned(emb=False)}, ranked AS (
       SELECT centroid_id, vec_id,
              row_number() OVER (PARTITION BY centroid_id
                                 ORDER BY vec_id) AS rk
@@ -936,28 +890,8 @@ def cluster_balanced_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_ivfpq_topk",
     oracle=f"""
-    WITH {_ivf_trained_ctes(_IVF_ITERS)}, assigned AS MATERIALIZED (
-      SELECT vec_id, centroid_id FROM (
-        SELECT a.vec_id, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   a.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings a, cent{_IVF_ITERS} c
-      ) WHERE rn = 1
-    ), probes AS MATERIALIZED (
-      SELECT vec_id, centroid_id FROM (
-        SELECT q.vec_id, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   q.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings q, cent{_IVF_ITERS} c
-        WHERE q.vec_id < {_N_QUERIES}
-      ) WHERE rn <= {_NPROBE}
-    ),
+    {_ivf_assigned(emb=False, materialized=True)},
+    {_ivf_probes(emb=False, materialized=True)},
     {_pq_ctes()},
     adc AS MATERIALIZED (
       SELECT p.vec_id AS query_id, x.vec_id AS neighbor_id,
@@ -970,29 +904,7 @@ def cluster_balanced_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE x.vec_id <> p.vec_id
       GROUP BY 1, 2
     ),
-    cand AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, neighbor_id) AS crank
-        FROM adc) WHERE crank <= {_PQ_CAND}
-    ),
-    rescored AS (
-      SELECT c2.query_id, c2.neighbor_id,
-             round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                          q.embedding::DOUBLE[]), 6) AS cos
-      FROM cand c2
-      JOIN embeddings a ON a.vec_id = c2.neighbor_id
-      JOIN embeddings q ON q.vec_id = c2.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM rescored
-    )
-    SELECT query_id, neighbor_id, cos, rank
-    FROM ranked WHERE rank <= {_K}
-    ORDER BY query_id, rank
-    """,
+    {_PQ_RESCORE_TOP_K}""",
     covers=("X-ann-ivfpq",),
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1067,7 +979,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_ann_topk",
-    oracle=None,  # set below — identical to ann_ivf_topk's oracle
+    oracle=_ivf_topk_oracle(),
     covers=("X-ann-live",),
 )
 def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1130,11 +1042,6 @@ def streaming_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             assigned.unpersist()
 
 
-from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["streaming_ann_topk"].oracle = _REG["ann_ivf_topk"].oracle
-
-
 @query(
     "hard_negative_mining",
     oracle=f"""
@@ -1146,15 +1053,7 @@ _REG["streaming_ann_topk"].oracle = _REG["ann_ivf_topk"].oracle
       WHERE q.vec_id < {_N_QUERIES}
         AND a.vec_id <> q.vec_id
         AND a.label <> q.label
-    ), ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, neighbor_label, cos, rank
-    FROM ranked WHERE rank <= {_K}
-    ORDER BY query_id, rank
-    """,
+    ), {_top_k('scored', 'query_id, neighbor_id, neighbor_label, cos, rank')}""",
     covers=("X-ann-hard-negatives",),
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,32 +1112,14 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_recall_report",
     oracle=f"""
-    WITH {_ivf_trained_ctes(_IVF_ITERS)}, assigned AS (
-      SELECT vec_id, embedding, centroid_id FROM (
-        SELECT a.vec_id, a.embedding, c.centroid_id,
-               row_number() OVER (
-                 PARTITION BY a.vec_id
-                 ORDER BY round(list_cosine_similarity(
-                   a.embedding::DOUBLE[], c.emb), 6) DESC,
-                   c.centroid_id) AS rn
-        FROM embeddings a, cent{_IVF_ITERS} c
-      ) WHERE rn = 1
-    ), ivf_scored AS (
-      SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-             {_DUCK_COS} AS cos
-      FROM assigned a JOIN assigned q ON a.centroid_id = q.centroid_id
-      WHERE q.vec_id < {_N_QUERIES} AND a.vec_id <> q.vec_id
+    {_ivf_assigned()}, ivf_scored AS ({_CELL_SCORED}
     ), ivf_topk AS (
       SELECT query_id, neighbor_id FROM (
         SELECT *, row_number() OVER (PARTITION BY query_id
                                      ORDER BY cos DESC, neighbor_id) AS rank
         FROM ivf_scored
       ) WHERE rank <= {_K}
-    ), brute_scored AS (
-      SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-             {_DUCK_COS} AS cos
-      FROM embeddings a, embeddings q
-      WHERE q.vec_id < {_N_QUERIES} AND a.vec_id <> q.vec_id
+    ), brute_scored AS ({_EXACT_SCORED}
     ), brute_topk AS (
       SELECT query_id, neighbor_id FROM (
         SELECT *, row_number() OVER (PARTITION BY query_id

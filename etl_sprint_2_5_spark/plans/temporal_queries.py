@@ -15,9 +15,7 @@ from etl_sprint_2_5_spark.streaming.gate import streaming_gate, write_feed
 BURST_WINDOW_S = 600  # clicks within 10 min after an error
 
 
-@query(
-    "asof_last_error",
-    oracle="""
+_ASOF_ORACLE = """
     WITH clicks AS (
       SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'click'
     ), errors AS (
@@ -31,7 +29,12 @@ BURST_WINDOW_S = 600  # clicks within 10 min after an error
     FROM clicks c ASOF LEFT JOIN errors e
       ON c.user_id = e.user_id AND c.ts >= e.ts
     ORDER BY c.event_id
-    """,
+    """
+
+
+@query(
+    "asof_last_error",
+    oracle=_ASOF_ORACLE,
     covers=("X-temporal-asof",),
 )
 def asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,9 +63,7 @@ def asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "interval_burst_join",
-    oracle=f"""
+_BURST_ORACLE = f"""
     WITH errors AS (
       SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'
     ), clicks AS (
@@ -78,7 +79,12 @@ def asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.ts <= e.ts + INTERVAL {BURST_WINDOW_S} SECOND
     GROUP BY e.event_id, e.user_id, e.ts
     ORDER BY e.event_id
-    """,
+    """
+
+
+@query(
+    "interval_burst_join",
+    oracle=_BURST_ORACLE,
     covers=("X-temporal-range",),
 )
 def interval_burst_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -199,7 +205,7 @@ def _time_halves(df: DataFrame, t_us: int) -> tuple[DataFrame, DataFrame]:
 
 @query(
     "streaming_interval_burst_join",
-    oracle=None,  # set below — identical to interval_burst_join's oracle
+    oracle=_BURST_ORACLE,
     covers=("X-stream-stream-join-live",),
 )
 def streaming_interval_burst_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,7 +336,7 @@ def streaming_interval_burst_join(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "streaming_outer_interval_join",
-    oracle=None,  # set below — identical to interval_burst_join's oracle
+    oracle=_BURST_ORACLE,
     covers=("X-stream-stream-outer-live",),
 )
 def streaming_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,7 +449,7 @@ def streaming_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "streaming_asof_last_error",
-    oracle=None,  # set below — identical to asof_last_error's oracle
+    oracle=_ASOF_ORACLE,
     covers=("X-stream-asof-live",),
 )
 def streaming_asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,10 +504,3 @@ def streaming_asof_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "last_error_value",
             ).orderBy("event_id")
         )
-
-
-from etl_sprint_2_5_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["streaming_interval_burst_join"].oracle = _REG["interval_burst_join"].oracle
-_REG["streaming_outer_interval_join"].oracle = _REG["interval_burst_join"].oracle
-_REG["streaming_asof_last_error"].oracle = _REG["asof_last_error"].oracle

@@ -174,6 +174,25 @@ def _ft_score_sql() -> str:
     )
 
 
+def _scored_docs(spark: SparkSession, sf_dir: str, **bm25) -> DataFrame:
+    """Every document scored for 'spark window merge' over text (3×)
+    and source (1×), term stats probed from the prepared artifact;
+    ``bm25`` passes k1/b to switch tf·idf to BM25."""
+    from etl_sprint_2_5_spark.artifacts import prepared_fulltext_stats
+
+    d = load_documents_spread(spark, sf_dir)
+    stats, _ = prepared_fulltext_stats(
+        d, sf_dir, ("spark", "window", "merge"), ("text", "source")
+    )
+    return with_fulltext_score(
+        d,
+        terms=("spark", "window", "merge"),
+        fields={"text": 3.0, "source": 1.0},
+        stats=stats,
+        **bm25,
+    )
+
+
 @query(
     "fulltext_search",
     oracle=f"""
@@ -205,18 +224,7 @@ def fulltext_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     source 1×, query 'spark window merge', top-20. Corpus term stats
     come from the prepared artifact (artifacts.py) — computed once per
     corpus fingerprint at index-build time, probed per query."""
-    from etl_sprint_2_5_spark.artifacts import prepared_fulltext_stats
-
-    d = load_documents_spread(spark, sf_dir)
-    stats, _ = prepared_fulltext_stats(
-        d, sf_dir, ("spark", "window", "merge"), ("text", "source")
-    )
-    scored = with_fulltext_score(
-        d,
-        terms=("spark", "window", "merge"),
-        fields={"text": 3.0, "source": 1.0},
-        stats=stats,
-    )
+    scored = _scored_docs(spark, sf_dir)
     return score_page(scored, F.col("doc_id"), 1, 20).select("doc_id", "score")
 
 
@@ -277,10 +285,8 @@ def _bm25_score_sql() -> str:
     )
 
 
-@query(
-    "fulltext_bm25",
-    oracle=f"""
-    WITH toks AS (
+# every document's BM25 score (fulltext_bm25 and the hybrid fusion)
+_BM25_SCORED_CTES = f"""WITH toks AS (
       SELECT doc_id, {_DUCK_TOKS} AS tk,
              list_filter(string_split(trim(regexp_replace(lower(source),
                '[^a-z0-9]+', ' ', 'g')), ' '), t -> len(t) > 0) AS srctk
@@ -294,7 +300,13 @@ def _bm25_score_sql() -> str:
       SELECT doc_id,
              round({_bm25_score_sql()}, 2) AS score
       FROM toks, stats
-    )
+    )"""
+
+
+@query(
+    "fulltext_bm25",
+    oracle=f"""
+    {_BM25_SCORED_CTES}
     SELECT doc_id, score
     FROM scored
     WHERE score > 0
@@ -310,20 +322,7 @@ def fulltext_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf·idf-only divergence documented in round 1. Term stats probe the
     same prepared artifact as fulltext_search (one artifact serves
     both formulas — avglen is always computed)."""
-    from etl_sprint_2_5_spark.artifacts import prepared_fulltext_stats
-
-    d = load_documents_spread(spark, sf_dir)
-    stats, _ = prepared_fulltext_stats(
-        d, sf_dir, ("spark", "window", "merge"), ("text", "source")
-    )
-    scored = with_fulltext_score(
-        d,
-        terms=("spark", "window", "merge"),
-        fields={"text": 3.0, "source": 1.0},
-        stats=stats,
-        k1=1.2,
-        b=0.75,
-    )
+    scored = _scored_docs(spark, sf_dir, k1=1.2, b=0.75)
     return score_page(scored, F.col("doc_id"), 1, 20).select("doc_id", "score")
 
 
@@ -447,10 +446,8 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "unigram_lm_surprisal",
-    oracle=f"""
-    WITH toks AS (
+# add-one smoothed unigram cost per token, in ppm (both LM oracles)
+_UNIGRAM_COST_CTES = f"""WITH toks AS (
       SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
     ),
     vocab AS (
@@ -465,7 +462,13 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                -ln((c + 1) / CAST(n_total + v AS DOUBLE)) * 1e6 + 0.5e0
              ) AS BIGINT) AS cost_ppm
       FROM vocab, consts
-    ),
+    )"""
+
+
+@query(
+    "unigram_lm_surprisal",
+    oracle=f"""
+    {_UNIGRAM_COST_CTES},
     scored AS (
       SELECT t.doc_id,
              count(*) AS n_tokens,
@@ -790,22 +793,7 @@ _PPL_Q = ("0.33333333", "0.66666667")  # tertile fractions, literal on both engi
 @query(
     "perplexity_buckets",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_TOKS}) AS tok FROM documents
-    ),
-    vocab AS (
-      SELECT tok, count(*) AS c FROM toks GROUP BY tok
-    ),
-    consts AS (
-      SELECT CAST(sum(c) AS BIGINT) AS n_total, count(*) AS v FROM vocab
-    ),
-    costs AS (
-      SELECT tok,
-             CAST(floor(
-               -ln((c + 1) / CAST(n_total + v AS DOUBLE)) * 1e6 + 0.5e0
-             ) AS BIGINT) AS cost_ppm
-      FROM vocab, consts
-    ),
+    {_UNIGRAM_COST_CTES},
     scored AS (
       SELECT t.doc_id,
              CAST(sum(cost_ppm) AS BIGINT) // count(*) AS avg_nll_ppm
@@ -892,21 +880,7 @@ _RRF_TOP = 10  # fused results returned
 @query(
     "hybrid_retrieval_rrf",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, {_DUCK_TOKS} AS tk,
-             list_filter(string_split(trim(regexp_replace(lower(source),
-               '[^a-z0-9]+', ' ', 'g')), ' '), t -> len(t) > 0) AS srctk
-      FROM documents
-    ), stats AS (
-      SELECT count(*) AS n,
-             {_bm25_stat_aggs()},
-             {_ft_df_aggs()}
-      FROM toks
-    ), scored AS (
-      SELECT doc_id,
-             round({_bm25_score_sql()}, 2) AS score
-      FROM toks, stats
-    ), trank AS (
+    {_BM25_SCORED_CTES}, trank AS (
       SELECT doc_id, text_rank FROM (
         SELECT doc_id,
                CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
@@ -959,23 +933,10 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine); the fusion itself touches only 2×{_RRF_LIST} (id, rank)
     rows — a full-outer join of two driver-size lists. At 100 TB you
     fuse top-1000 lists, still bytes."""
-    from etl_sprint_2_5_spark.artifacts import prepared_fulltext_stats
     from etl_sprint_2_5_spark.operators.similarity import brute_force_topk_gemm
-    from etl_sprint_2_5_spark.sources.parquet import load_documents_spread
     from pyspark.sql import Window
 
-    d = load_documents_spread(spark, sf_dir)
-    stats, _ = prepared_fulltext_stats(
-        d, sf_dir, ("spark", "window", "merge"), ("text", "source")
-    )
-    scored = with_fulltext_score(
-        d,
-        terms=("spark", "window", "merge"),
-        fields={"text": 3.0, "source": 1.0},
-        stats=stats,
-        k1=1.2,
-        b=0.75,
-    )
+    scored = _scored_docs(spark, sf_dir, k1=1.2, b=0.75)
     wt = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     trank = score_page(scored, F.col("doc_id"), 1, _RRF_LIST).select(
         "doc_id", F.row_number().over(wt).cast("long").alias("text_rank")
@@ -1111,49 +1072,20 @@ def _bpe_round_ctes(r: int) -> str:
 _BPE_K = 5
 
 
-@query(
-    "bpe_merge_sequence",
-    oracle=f"""
-    WITH pieces AS (
+# the BPE oracles' shared head: the piece dictionary and its K rounds
+_BPE_ROUND_CTES = f"""WITH pieces AS (
       SELECT unnest(regexp_extract_all(text, '{_BPE_RE}')) AS piece
       FROM documents
     ), freq0 AS MATERIALIZED (
       SELECT regexp_replace(piece, '(.)', ' \\1 ', 'g') AS seq,
              count(*) AS f
       FROM pieces GROUP BY 1
-    ), {", ".join(_bpe_round_ctes(r) for r in range(1, _BPE_K + 1))}
-    SELECT * FROM (
-      {" UNION ALL ".join(
-          f'''SELECT CAST({r} AS BIGINT) AS merge_rank,
-                 split_part(pair, ' ', 1) AS left_tok,
-                 split_part(pair, ' ', 2) AS right_tok,
-                 replace(pair, ' ', '')   AS merged,
-                 cnt                      AS pair_count
-          FROM w{r}''' for r in range(1, _BPE_K + 1))}
-    ) ORDER BY merge_rank
-    """,
-    covers=("X-text-bpe-train",),
-)
-def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ITERATED BPE training (Sennrich et al. 2016), K=5 applied
-    merge rounds — not just the first round's candidate list
-    (bpe_top_merges) but the real training loop: each round counts
-    adjacent token pairs weighted by piece frequency over the
-    vocabulary, picks the winner (count desc, pair asc), APPLIES the
-    merge to every piece's token sequence, and re-counts — so rounds
-    2-5 see tokens rounds 1-4 created, and the gated output is the
-    order-pinned merge table a tokenizer would persist.
+    ), {", ".join(_bpe_round_ctes(r) for r in range(1, _BPE_K + 1))}"""
 
-    Representation: a piece's token sequence is a sentinel-wrapped
-    string (' t1  t2  ... '); applying a merge is one leftmost
-    non-overlapping replace of ' left  right ' with ' leftright ' —
-    a pure-JVM string op on both engines with identical semantics
-    (tokens can't contain the space sentinel: _BPE_RE pieces exclude
-    whitespace). The per-round scan runs over the DISTINCT-piece
-    dictionary (vocabulary-sized, sub-linear in the corpus); only the
-    single winning pair crosses to the driver per round, so K rounds
-    cost K small vocab aggregations — the exact shape of a real
-    distributed tokenizer trainer."""
+
+def _bpe_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cached distinct-piece dictionary: each piece as a
+    sentinel-wrapped character sequence with its corpus frequency."""
     d = load_documents_spread(spark, sf_dir)
     pieces = d.select(
         F.explode(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("piece")
@@ -1167,6 +1099,13 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
+    return state
+
+
+def _bpe_train(state: DataFrame) -> tuple[list, DataFrame]:
+    """Apply the K merge rounds to the cached dictionary ``state``
+    (each round's parent cache is released); returns the merge table
+    rows and the cached final dictionary, which the caller releases."""
     merges = []
     prev = state
     for r in range(1, _BPE_K + 1):
@@ -1201,7 +1140,47 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.count()  # materialize before dropping the parent cache
         prev.unpersist()
         prev = nxt
-    prev.unpersist()
+    return merges, prev
+
+
+@query(
+    "bpe_merge_sequence",
+    oracle=f"""
+    {_BPE_ROUND_CTES}
+    SELECT * FROM (
+      {" UNION ALL ".join(
+          f'''SELECT CAST({r} AS BIGINT) AS merge_rank,
+                 split_part(pair, ' ', 1) AS left_tok,
+                 split_part(pair, ' ', 2) AS right_tok,
+                 replace(pair, ' ', '')   AS merged,
+                 cnt                      AS pair_count
+          FROM w{r}''' for r in range(1, _BPE_K + 1))}
+    ) ORDER BY merge_rank
+    """,
+    covers=("X-text-bpe-train",),
+)
+def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ITERATED BPE training (Sennrich et al. 2016), K=5 applied
+    merge rounds — not just the first round's candidate list
+    (bpe_top_merges) but the real training loop: each round counts
+    adjacent token pairs weighted by piece frequency over the
+    vocabulary, picks the winner (count desc, pair asc), APPLIES the
+    merge to every piece's token sequence, and re-counts — so rounds
+    2-5 see tokens rounds 1-4 created, and the gated output is the
+    order-pinned merge table a tokenizer would persist.
+
+    Representation: a piece's token sequence is a sentinel-wrapped
+    string (' t1  t2  ... '); applying a merge is one leftmost
+    non-overlapping replace of ' left  right ' with ' leftright ' —
+    a pure-JVM string op on both engines with identical semantics
+    (tokens can't contain the space sentinel: _BPE_RE pieces exclude
+    whitespace). The per-round scan runs over the DISTINCT-piece
+    dictionary (vocabulary-sized, sub-linear in the corpus); only the
+    single winning pair crosses to the driver per round, so K rounds
+    cost K small vocab aggregations — the exact shape of a real
+    distributed tokenizer trainer."""
+    merges, last = _bpe_train(_bpe_dictionary(spark, sf_dir))
+    last.unpersist()
     return spark.createDataFrame(
         merges,
         "merge_rank long, left_tok string, right_tok string, "
@@ -1212,14 +1191,7 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "bpe_compression_stats",
     oracle=f"""
-    WITH pieces AS (
-      SELECT unnest(regexp_extract_all(text, '{_BPE_RE}')) AS piece
-      FROM documents
-    ), freq0 AS MATERIALIZED (
-      SELECT regexp_replace(piece, '(.)', ' \\1 ', 'g') AS seq,
-             count(*) AS f
-      FROM pieces GROUP BY 1
-    ), {", ".join(_bpe_round_ctes(r) for r in range(1, _BPE_K + 1))}
+    {_BPE_ROUND_CTES}
     SELECT CAST((SELECT count(*) FROM freq0) AS BIGINT) AS n_pieces,
            CAST((SELECT sum(f * len(string_split(trim(seq, ' '), '  ')))
                  FROM freq0) AS BIGINT) AS tokens_before,
@@ -1241,19 +1213,7 @@ def bpe_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     token per occurrence — so this query cross-checks the training
     loop's arithmetic from an independent direction. Same
     vocabulary-sized cost as one training round."""
-    d = load_documents_spread(spark, sf_dir)
-    pieces = d.select(
-        F.explode(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("piece")
-    )
-    state = (
-        pieces.groupBy("piece")
-        .agg(F.count("*").alias("f"))
-        .select(
-            F.regexp_replace("piece", "(.)", " $1 ").alias("seq"),
-            "f",
-        )
-        .cache()
-    )
+    state = _bpe_dictionary(spark, sf_dir)
 
     def tok_count(df: DataFrame):
         return df.select(
@@ -1265,40 +1225,9 @@ def bpe_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_pieces = state.count()
     before = tok_count(state)
-    prev = state
-    for r in range(1, _BPE_K + 1):
-        tk = prev.select(
-            F.split(F.expr("btrim(seq, ' ')"), "  ").alias("tk"), "f"
-        ).where(F.size("tk") >= 2)
-        pairs = tk.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(2, size(tk)),"
-                    " i -> element_at(tk, i-1) || ' ' || element_at(tk, i))"
-                )
-            ).alias("pair"),
-            "f",
-        )
-        win = (
-            pairs.groupBy("pair")
-            .agg(F.sum("f").cast("long").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("pair"))
-            .first()
-        )
-        left, right = win["pair"].split(" ")
-        nxt = prev.select(
-            F.replace(
-                F.col("seq"),
-                F.lit(f" {left}  {right} "),
-                F.lit(f" {left}{right} "),
-            ).alias("seq"),
-            "f",
-        ).cache()
-        nxt.count()
-        prev.unpersist()
-        prev = nxt
-    after = tok_count(prev)
-    prev.unpersist()
+    _, last = _bpe_train(state)
+    after = tok_count(last)
+    last.unpersist()
     return spark.createDataFrame(
         [(n_pieces, before, after, before - after)],
         "n_pieces long, tokens_before long, tokens_after long, "

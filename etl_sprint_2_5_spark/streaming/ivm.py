@@ -56,6 +56,8 @@ from pyspark.sql import functions as F
 
 from etl_sprint_2_5_spark.operators.keyset import keyset_batch
 from etl_sprint_2_5_spark.streaming.sink import (
+    recover_swap,
+    swap_in,
     upsert_keyed_parquet,
     upsert_keyed_parquet_bucketed,
 )
@@ -594,39 +596,6 @@ def merge_agg_state(
     return merged.where(F.col("n_rows") > 0)
 
 
-def _recover_agg_state(path: str) -> None:
-    """Heal an interrupted aggregate-state swap. Unlike the keyed doc
-    sink (sink.recover_swap), completeness is gated on the LEDGER
-    file, not Spark's _SUCCESS marker: a delta application is only
-    complete once the applied-batch id sits INSIDE the new directory,
-    because promoting a merged state without its ledger would let a
-    replayed batch re-apply non-idempotent deltas (double-count).
-
-    Why this keeps the rename-swap while the corpus-sized bucketed
-    sink moved to manifest commits (sink.py): aggregate state is
-    GROUP-CARDINALITY-sized (thousands of rows, one small directory),
-    so the whole-state rewrite the swap implies is already the cheap
-    path, there is nothing to bucket-prune, and the heal covers every
-    crash window. Contract: the swap depends on POSIX rename atomicity
-    — this ledger layout is for real filesystems ONLY. On an object
-    store the same ledger rides the manifest sink unchanged (the
-    ledger becomes a manifest field; see sink.py's module docstring
-    for the routing rule)."""
-    import os
-    import shutil
-
-    tmp, bak = path + ".swap", path + ".old"
-    if not os.path.exists(path):
-        if os.path.exists(os.path.join(tmp, "_ledger.json")):
-            os.replace(tmp, path)
-        elif os.path.exists(bak):
-            os.replace(bak, path)
-    if os.path.exists(bak):
-        shutil.rmtree(bak, ignore_errors=True)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def apply_agg_delta_batch(
     spark: SparkSession,
     path: str,
@@ -645,12 +614,28 @@ def apply_agg_delta_batch(
     This is the standard foreachBatch exactly-once recipe
     (batch-id-keyed transactional write), with the keyed-parquet
     directory swap as the transaction. Returns True if applied,
-    False if skipped as a duplicate."""
+    False if skipped as a duplicate.
+
+    Completeness is gated on the LEDGER file, not Spark's _SUCCESS
+    marker: a delta application is only complete once the
+    applied-batch id sits INSIDE the new directory, because promoting
+    a merged state without its ledger would let a replayed batch
+    re-apply non-idempotent deltas (double-count).
+
+    Why this keeps the rename-swap while the corpus-sized bucketed
+    sink moved to manifest commits (sink.py): aggregate state is
+    GROUP-CARDINALITY-sized (thousands of rows, one small directory),
+    so the whole-state rewrite the swap implies is already the cheap
+    path, there is nothing to bucket-prune, and the heal covers every
+    crash window. Contract: the swap depends on POSIX rename atomicity
+    — this ledger layout is for real filesystems ONLY. On an object
+    store the same ledger rides the manifest sink unchanged (the
+    ledger becomes a manifest field; see sink.py's module docstring
+    for the routing rule)."""
     import json
     import os
-    import shutil
 
-    _recover_agg_state(path)
+    recover_swap(path, marker="_ledger.json")
     ledger = os.path.join(path, "_ledger.json")
     if os.path.exists(ledger):
         with open(ledger) as f:
@@ -666,14 +651,11 @@ def apply_agg_delta_batch(
             *[F.col(f"d_{m}").alias(m) for m in measure_cols],
         ).limit(0)
     merged = merge_agg_state(state, delta, group_cols, measure_cols)
-    tmp, bak = path + ".swap", path + ".old"
+    tmp = path + ".swap"
     # materialize BEFORE touching the target (merged reads the target)
     merged.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, "_ledger.json"), "w") as f:
         json.dump({"last_batch": batch_id}, f)
     # ledger now inside tmp → tmp is provably complete from here on
-    if os.path.exists(path):
-        os.replace(path, bak)
-    os.replace(tmp, path)
-    shutil.rmtree(bak, ignore_errors=True)
+    swap_in(path)
     return True

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def recover_swap(path: str) -> None:
+def recover_swap(path: str, marker: str = "_SUCCESS") -> None:
     """Heal an interrupted swap so no crash window loses data.
 
     States a crash can leave behind (see ``upsert_keyed_parquet``):
@@ -59,19 +59,21 @@ def recover_swap(path: str) -> None:
       was renamed aside but the new one not yet moved in → promote the
       ``.swap`` (it is the complete merged dataset). "Provably
       complete" = the ``.old`` backup exists (the rename-aside only
-      happens after the write finished) or the dir carries Spark's
-      ``_SUCCESS`` commit marker. A first-ever write that crashed
-      mid-write leaves a partial ``.swap`` with neither — promoting it
-      would wedge every subsequent read on a corrupt target, so it is
-      discarded instead: its offset was never committed, redelivery
-      regenerates it.
+      happens after the write finished) or the dir carries its
+      completeness ``marker`` (Spark's ``_SUCCESS`` commit marker for
+      the keyed sink; IVM's aggregate state passes its ledger file,
+      which is written into ``.swap`` last). A first-ever write that
+      crashed mid-write leaves a partial ``.swap`` with neither —
+      promoting it would wedge every subsequent read on a corrupt
+      target, so it is discarded instead: its offset was never
+      committed, redelivery regenerates it.
     - no target, only ``.old``: restore the backup.
     - target + ``.old``: swap completed, cleanup didn't → drop ``.old``.
     """
     tmp, bak = path + ".swap", path + ".old"
     if not os.path.exists(path):
         tmp_complete = os.path.exists(tmp) and (
-            os.path.exists(bak) or os.path.exists(os.path.join(tmp, "_SUCCESS"))
+            os.path.exists(bak) or os.path.exists(os.path.join(tmp, marker))
         )
         if tmp_complete:
             os.replace(tmp, path)
@@ -93,7 +95,7 @@ def upsert_keyed_parquet(
     the target or a recoverable copy exists on disk. ``recover_swap``
     heals any leftover intermediate state on the next call.
     """
-    tmp, bak = path + ".swap", path + ".old"
+    tmp = path + ".swap"
     recover_swap(path)
     if os.path.exists(path):
         old = spark.read.parquet(path)
@@ -103,6 +105,15 @@ def upsert_keyed_parquet(
         merged = batch
     # materialize BEFORE touching the target (merged reads the target)
     merged.write.mode("overwrite").parquet(tmp)
+    swap_in(path)
+
+
+def swap_in(path: str) -> None:
+    """Move the complete ``path + ".swap"`` dir in as ``path``: rename
+    the current version aside to ``.old``, rename the new one in, drop
+    the backup. At every instant the target or a copy
+    :func:`recover_swap` can promote exists."""
+    tmp, bak = path + ".swap", path + ".old"
     if os.path.exists(path):
         os.replace(path, bak)  # crash here → recover_swap promotes tmp
     os.replace(tmp, path)

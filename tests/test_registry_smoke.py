@@ -36,5 +36,5 @@ def test_entry_contract(spark):
     assert df.count() > 0
     names = e.queries()
     oracles = e.oracle_sql()
-    assert set(oracles) <= set(names)
+    assert set(oracles) == set(names)
     assert len(names) == len(plans.REGISTRY)
