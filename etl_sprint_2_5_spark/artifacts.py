@@ -43,7 +43,7 @@ ALGO_VERSION = {
     "ivf_centroids": 1,
     "quantized_codes": 1,
     "shingle_index": 1,
-    "ftindex": 1,
+    "ftindex": 2,
     "pq_index": 1,
     "hll_day_registers": 1,
     "dd_price_histogram": 1,
@@ -266,10 +266,11 @@ def build_term_index(
 
     df semantics match corpus_term_stats exactly: df(field, term) =
     number of docs whose analyzed token array contains the term;
-    avglen = HALF_UP-rounded mean token count."""
+    avglen = HALF_UP-rounded mean token count. Both come from
+    ``term_counters``, the builder the API's view statistics use."""
     from etl_sprint_2_5_spark.operators.textops import (
-        _analyzer,
-        _round_half_up6,
+        term_counters,
+        term_stats_dict,
     )
     from pyspark.sql import functions as F
 
@@ -277,33 +278,18 @@ def build_term_index(
     if (dest / "_meta.json").exists():
         return dest
 
-    analyzer = _analyzer(stem)
-    from functools import reduce
-
-    parts = []
-    len_aggs = [F.count(F.lit(1)).alias("_n")]
-    for i, field in enumerate(fields):
-        toks = analyzer(field)
-        len_aggs.append(F.sum(F.size(toks)).alias(f"_len_{i}"))
-        parts.append(
-            df.select(
-                F.lit(field).alias("field"),
-                F.explode(F.array_distinct(toks)).alias("term"),
-            )
-        )
-    postings = reduce(lambda a, b: a.unionByName(b), parts)
-    index = postings.groupBy("field", "term").agg(
-        F.count(F.lit(1)).alias("df")
+    counters = term_counters(df, fields, stem=stem)
+    index = counters.where(F.col("term").isNotNull()).select(
+        "field", "term", F.col("n").alias("df")
     )
-    row = df.agg(*len_aggs).first()
-    n = row["_n"]
-    meta = {
-        "n": n,
-        "avglen": {
-            f: _round_half_up6((row[f"_len_{i}"] or 0) / n) if n else 0.0
-            for i, f in enumerate(fields)
-        },
+    totals = {
+        r["field"]: r["n"]
+        for r in counters.where(F.col("term").isNull()).collect()
     }
+    stats = term_stats_dict(
+        totals.get(None, 0), {}, {f: totals.get(f, 0) for f in fields}
+    )
+    meta = {"n": stats["n"], "avglen": stats["avglen"]}
     tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
     index.write.mode("overwrite").parquet(str(tmp))
     (tmp / "_meta.json").write_text(json.dumps(meta))

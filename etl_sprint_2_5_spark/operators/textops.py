@@ -188,23 +188,74 @@ def _query_terms(terms: tuple[str, ...], stem: bool | str) -> tuple[str, ...]:
     return tuple(dict.fromkeys(t for t in terms if t))
 
 
-def _analyzed(
-    df: DataFrame, terms: tuple[str, ...], fields, stem: bool | str
-) -> DataFrame:
-    """``df`` plus ``_q`` (the query terms as ONE literal array column,
-    so user text never enters SQL) and ``_tk{i}``, field i's analyzed
-    token array (a NULL field is an empty array). A field is a column
-    name or a SQL expression over the row. The token arrays are
-    referenced more than once downstream, so projection collapse keeps
-    them here: each field is tokenized once per row."""
+def _token_arrays(fields, stem: bool | str) -> list[Column]:
+    """``_tk{i}``: field i's analyzed token array (a NULL field is an
+    empty array). A field is a column name or a SQL expression over the
+    row."""
     if stem:
         toks = [_analyzer(stem)(F.expr(f)) for f in fields]
     else:
         toks = [F.expr(tokenize_sql(f)) for f in fields]
+    return [F.coalesce(t, F.array()).alias(f"_tk{i}") for i, t in enumerate(toks)]
+
+
+def _analyzed(
+    df: DataFrame, terms: tuple[str, ...], fields, stem: bool | str
+) -> DataFrame:
+    """``df`` plus ``_q`` (the query terms as ONE literal array column,
+    so user text never enters SQL) and the ``_tk{i}`` token arrays. The
+    token arrays are referenced more than once downstream, so
+    projection collapse keeps them here: each field is tokenized once
+    per row."""
     return df.select(
-        "*",
-        F.lit(list(terms)).alias("_q"),
-        *[F.coalesce(t, F.array()).alias(f"_tk{i}") for i, t in enumerate(toks)],
+        "*", F.lit(list(terms)).alias("_q"), *_token_arrays(fields, stem)
+    )
+
+
+def term_counters(
+    df: DataFrame,
+    fields: tuple[str, ...],
+    stem: bool | str = False,
+    by: Column | None = None,
+) -> DataFrame:
+    """The whole vocabulary's ``corpus_term_stats`` counters as ONE
+    aggregate, optionally per group ``by``: rows ``(by, field, term,
+    n)`` where
+
+    - ``(field, term)``: n = docs whose analyzed field contains term
+      (the document frequency);
+    - ``(field, NULL)``: n = the field's token count summed over docs;
+    - ``(NULL, NULL)``: n = the number of docs.
+
+    Each row is tokenized once, its distinct tokens per field exploded
+    with the length and row counters, and everything summed in one
+    group-by. Counters of disjoint row sets add up, so per-file rows
+    summed on the driver equal the corpus-wide figures exactly. This is
+    the one vocabulary builder: the prepared term index and the API's
+    per-file view statistics both read it."""
+    keys = [] if by is None else ["by"]
+    tok = df.select(*[by.alias(k) for k in keys], *_token_arrays(fields, stem))
+
+    def counter(field: str | None, term: Column, n: Column) -> Column:
+        return F.struct(
+            F.lit(field).cast("string").alias("field"),
+            term.cast("string").alias("term"),
+            n.cast("long").alias("n"),
+        )
+
+    def postings(field: str):  # noqa: ANN202 - Column lambda
+        return lambda t: counter(field, t, F.lit(1))
+
+    no_term = F.lit(None)
+    entries = [F.array(counter(None, no_term, F.lit(1)))]
+    for i, f in enumerate(fields):
+        tk = F.col(f"_tk{i}")
+        entries.append(F.transform(F.array_distinct(tk), postings(f)))
+        entries.append(F.array(counter(f, no_term, F.size(tk))))
+    return (
+        tok.select(*keys, F.explode(F.concat(*entries)).alias("_c"))
+        .groupBy(*keys, "_c.field", "_c.term")
+        .agg(F.sum("_c.n").alias("n"))
     )
 
 
@@ -219,8 +270,10 @@ def corpus_term_stats(
 
     |fields|×|terms| counters (plus one token-length sum per field, for
     BM25 length normalization) in a single-row agg — the "small
-    broadcast" of the scoring design. In a serving deployment this is
-    computed once at index-build time and reused per query."""
+    broadcast" of the scoring design. Query-time callers that can reuse
+    statistics pass them as ``stats=``: the prepared term index
+    (artifacts.py) and the API's per-file view statistics
+    (api/view_stats.py) both sum ``term_counters`` rows instead."""
     return _term_stats(_analyzed(df, terms, fields, stem), terms, fields)
 
 
@@ -234,20 +287,29 @@ def _term_stats(tok: DataFrame, terms: tuple[str, ...], fields) -> dict:
             for j in range(len(terms))
         ]
     row = tok.selectExpr(*aggs).first()
-    n = row["_n"]
-    return {
-        "n": n,
-        "df": {
+    return term_stats_dict(
+        row["_n"],
+        {
             (field, term): row[f"_df_{i}_{j}"]
             for i, field in enumerate(fields)
             for j, term in enumerate(terms)
         },
+        {field: row[f"_len_{i}"] or 0 for i, field in enumerate(fields)},
+    )
+
+
+def term_stats_dict(n: int, df: dict, lengths: dict) -> dict:
+    """The ``stats=`` dict of ``with_fulltext_score`` from the counters:
+    ``n`` docs, ``df[(field, term)]`` and each field's token-length sum."""
+    return {
+        "n": n,
+        "df": df,
         # avg field length, rounded HALF_UP to 6 (matches the oracle's
         # round(CAST(sum .. AS DOUBLE)/count, 6) — DuckDB rounds half up,
         # Python's round() is half-even, so don't use it here)
         "avglen": {
-            field: _round_half_up6((row[f"_len_{i}"] or 0) / n) if n else 0.0
-            for i, field in enumerate(fields)
+            field: _round_half_up6(total / n) if n else 0.0
+            for field, total in lengths.items()
         },
     }
 
@@ -312,8 +374,8 @@ def with_fulltext_score(
                  tf·(k1+1) / (tf + k1·(1 − b + b·len_f/avglen_f))
 
     where len_f = size(tokens_f) and avglen_f is the corpus mean from
-    the same stats pass — the same projection, with each tf held in its
-    own column because the formula reads it twice."""
+    the same stats pass — the same projection; the formula reads each
+    tf twice, and subexpression elimination computes it once."""
     terms = _query_terms(terms, stem)
     if not terms:
         return df.withColumn("score", F.lit(0.0))
@@ -321,12 +383,10 @@ def with_fulltext_score(
     if stats is None:
         stats = _term_stats(tok, terms, tuple(fields))
     n = stats["n"]
-    tks = [f"_tk{i}" for i in range(len(fields))]
-    tfs, parts = {}, []
+    parts = []
     for i, f in enumerate(fields):
         for j, t in enumerate(terms):
-            tf = f"_tf{i}_{j}"
-            tfs[tf] = f"size(_tk{i}) - size(array_remove(_tk{i}, _q[{j}])) AS {tf}"
+            tf = f"(size(_tk{i}) - size(array_remove(_tk{i}, _q[{j}])))"
             wk = _dbl(fields[f] * idf_weight(n, stats["df"][(f, t)]))
             if k1 is None:
                 parts.append(f"{wk} * {tf}")
@@ -338,11 +398,10 @@ def with_fulltext_score(
                 f"{wk} * ({tf} * {_dbl(k1 + 1.0)})"
                 f" / ({tf} + {_dbl(k1)} * ({_dbl(1.0)} - {_dbl(b)} + {norm}))"
             )
-    return (
-        tok.selectExpr("*", *tfs.values())
-        .selectExpr("*", f"round({' + '.join(parts)}, 2) AS score")
-        .drop("_q", *tks, *tfs)
-    )
+    # one projection on top of the token arrays: a serving request pays
+    # the JVM's analysis of each plan step it builds
+    keep = ["`" + c.replace("`", "``") + "`" for c in df.columns]
+    return tok.selectExpr(*keep, f"round({' + '.join(parts)}, 2) AS score")
 
 
 def score_page(
