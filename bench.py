@@ -362,10 +362,12 @@ def main(names: list[str]) -> None:
         _noop(F.col("id"))
     ).write.format("noop").mode("overwrite").save()
 
-    # Index-build phase: train-once artifacts (IVF centroids, full-text
-    # corpus stats). At 100 TB these are offline index builds, not
-    # query-time work; the cost is reported separately as prepare_sec
-    # (near-zero when the artifact is already on disk).
+    # Index-build phase: train-once artifacts (IVF centroids, PQ codes,
+    # shingle and sketch indexes). At 100 TB these are offline index
+    # builds, not query-time work; the cost is reported separately as
+    # prepare_sec (near-zero when the artifacts are already on disk).
+    # The documents file's term statistics live in this process's
+    # memory, so every run builds them here, before the timed runs.
     from etl_sprint_2_5_spark.artifacts import prepare_all
 
     t_prep = time.time()

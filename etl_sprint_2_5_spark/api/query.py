@@ -17,9 +17,10 @@ The serving contract assumes gold views are the "index" (S6): modest
 result pages over a pre-built denormalized DataFrame. Over a view read
 straight from parquet (``sink.read_view``), the admin count and the
 search idf statistics are summed from per-file statistics memoized
-across requests (api/view_stats.py, Elasticsearch's per-segment
-model), so a request runs one Spark job, its page. Any other frame
-(filtered, derived, in-memory) aggregates its own rows per request.
+across requests (operators/view_stats.py, Elasticsearch's per-segment
+model; the scorer finds the search statistics itself), so a request
+runs one Spark job, its page. Any other frame (filtered, derived,
+in-memory) aggregates its own rows per request.
 At cluster scale the gold view is the thing you'd actually ship to
 ES/OpenSearch via the connector; these operators are the
 engine-internal equivalent with identical envelopes.
@@ -33,9 +34,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from etl_sprint_2_5_spark.api.view_stats import view_count, view_term_stats
 from etl_sprint_2_5_spark.operators.pagination import paginate
 from etl_sprint_2_5_spark.operators.textops import score_page, with_fulltext_score
+from etl_sprint_2_5_spark.operators.view_stats import view_count
 
 SORT_FIELDS = ("id", "title", "imdb_rating")
 ORDERS = ("asc", "desc")
@@ -96,16 +97,13 @@ def list_movies(movies: DataFrame, params: ListParams) -> DataFrame:
 
     With ``search``: order by relevance desc (ties by id, as ES does by
     internal doc id), like api.py:93-100. Without: explicit sort field.
-    The movie rows are scored in place: no join back to ``movies``; the
-    idf statistics come from the view's per-file statistics when it has
-    them (``view_term_stats``), else from one aggregate over ``movies``.
+    The movie rows are scored in place: no join back to ``movies``. The
+    search text is analyzed like the documents (lowercased and split by
+    the analyzer's tokenizer).
     """
     if params.search:
-        terms = tuple(params.search.lower().split())
-        stem = STEM[params.analyzer]
         scored = with_fulltext_score(
-            movies, terms, SEARCH_FIELDS,
-            stats=view_term_stats(movies, terms, SEARCH_FIELDS, stem), stem=stem,
+            movies, (params.search,), SEARCH_FIELDS, stem=STEM[params.analyzer]
         )
         return score_page(scored, F.col("id"), params.page, params.limit)
     col = F.col(params.sort)

@@ -1,12 +1,13 @@
 """Prepared-artifact serving path — train once, probe many.
 
 The IVF centroid training (operators/similarity.py
-train_ivf_centroids) and the full-text corpus term statistics
-(operators/textops.py corpus_term_stats) are index-build steps: at
-100 TB they run ONCE offline and every query probes the persisted
-result (the faiss / search-index convention). Running them inside the
-query is only a small-SF convenience — this module makes the
-train-once path real.
+train_ivf_centroids), the PQ codebook, the dedup shingle index and the
+sketch tables are index-build steps: at 100 TB they run ONCE offline
+and every query probes the persisted result (the faiss / search-index
+convention). Running them inside the query is only a small-SF
+convenience — this module makes the train-once path real. (Full-text
+term statistics are not persisted here: the scorer sums per-file
+counters memoized in the process, operators/view_stats.py.)
 
 Artifacts are keyed by a fingerprint of the source parquet (name,
 size, mtime) plus every training parameter plus a manually-bumped
@@ -16,9 +17,9 @@ fully deterministic (no RNG anywhere), so the prepared path is
 bit-identical to the inline path — the DuckDB oracles, which always
 train inline, stay green either way (pytest asserts equality).
 
-Writes are atomic: train → write to a tmp dir/file → rename into
-place. A concurrent preparer loses the rename race harmlessly (same
-bytes). Artifacts live under <repo>/.artifacts (git-ignored), or
+Writes are atomic: train → write to a tmp dir → rename into place
+(``_publish``). A concurrent preparer loses the rename race harmlessly
+(same bytes). Artifacts live under <repo>/.artifacts (git-ignored), or
 $SPARK_GRAFT_ARTIFACT_DIR.
 """
 
@@ -43,7 +44,6 @@ ALGO_VERSION = {
     "ivf_centroids": 1,
     "quantized_codes": 1,
     "shingle_index": 1,
-    "ftindex": 2,
     "pq_index": 1,
     "hll_day_registers": 1,
     "dd_price_histogram": 1,
@@ -76,20 +76,26 @@ def _key(parts: dict) -> str:
     ).hexdigest()[:16]
 
 
-def _persist_df(spark: SparkSession, kind: str, key: str, build) -> DataFrame:  # noqa: ANN001
-    """Shared read-or-train-and-publish dance: serve the parquet
-    artifact when present, else write the frame ``build()`` returns to
-    a tmp dir and publish it with one atomic rename (losing the race to
-    an identical writer is harmless — same deterministic bytes)."""
-    dest = artifact_root() / f"{kind}-{key}"
-    if (dest / "_SUCCESS").exists():
-        return spark.read.parquet(str(dest))
+def _publish(dest: Path, write) -> None:  # noqa: ANN001
+    """Let ``write(tmp)`` fill a tmp dir next to ``dest`` and publish it
+    with one atomic rename; losing the race to an identical writer is
+    harmless (same deterministic bytes), so the loser's dir is
+    discarded."""
     tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
-    build().write.mode("overwrite").parquet(str(tmp))
+    write(tmp)
     try:
         tmp.rename(dest)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _persist_df(spark: SparkSession, kind: str, key: str, build) -> DataFrame:  # noqa: ANN001
+    """Shared read-or-train-and-publish dance: serve the parquet
+    artifact when present, else write the frame ``build()`` returns
+    and publish it."""
+    dest = artifact_root() / f"{kind}-{key}"
+    if not (dest / "_SUCCESS").exists():
+        _publish(dest, lambda tmp: build().write.mode("overwrite").parquet(str(tmp)))
     return spark.read.parquet(str(dest))
 
 
@@ -231,130 +237,6 @@ def prepared_shingle_index(
 
 
 # --------------------------------------------------------------------
-# Full-text corpus term statistics
-# --------------------------------------------------------------------
-
-
-def _term_index_dir(sf_dir: str, table: str, fields, stem) -> "Path":
-    key = _key(
-        {
-            "kind": "ftindex",
-            "fp": table_fingerprint(sf_dir, table),
-            "table": table,
-            "fields": list(fields),
-            "stem": str(stem),
-        }
-    )
-    return artifact_root() / f"ftindex-{key}"
-
-
-def build_term_index(
-    df: DataFrame,
-    sf_dir: str,
-    fields: tuple[str, ...],
-    *,
-    table: str = "documents",
-    stem: bool | str = False,
-) -> "Path":
-    """Build (or reuse) the VOCABULARY-WIDE term index artifact: one
-    parquet of (field, term, df) rows covering every distinct term in
-    every field, plus meta.json with the corpus size and avg field
-    lengths. This is the real index-build step — it is keyed by the
-    corpus fingerprint and the analyzer, NOT by any query's terms, so
-    every future query probes the same artifact with a pushed-down
-    term filter.
-
-    df semantics match corpus_term_stats exactly: df(field, term) =
-    number of docs whose analyzed token array contains the term;
-    avglen = HALF_UP-rounded mean token count. Both come from
-    ``term_counters``, the builder the API's view statistics use."""
-    from etl_sprint_2_5_spark.operators.textops import (
-        term_counters,
-        term_stats_dict,
-    )
-    from pyspark.sql import functions as F
-
-    dest = _term_index_dir(sf_dir, table, fields, stem)
-    if (dest / "_meta.json").exists():
-        return dest
-
-    counters = term_counters(df, fields, stem=stem)
-    index = counters.where(F.col("term").isNotNull()).select(
-        "field", "term", F.col("n").alias("df")
-    )
-    totals = {
-        r["field"]: r["n"]
-        for r in counters.where(F.col("term").isNull()).collect()
-    }
-    stats = term_stats_dict(
-        totals.get(None, 0), {}, {f: totals.get(f, 0) for f in fields}
-    )
-    meta = {"n": stats["n"], "avglen": stats["avglen"]}
-    tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
-    index.write.mode("overwrite").parquet(str(tmp))
-    (tmp / "_meta.json").write_text(json.dumps(meta))
-    try:
-        tmp.rename(dest)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return dest
-
-
-def prepared_fulltext_stats(
-    df: DataFrame,
-    sf_dir: str,
-    terms: tuple[str, ...],
-    fields: tuple[str, ...],
-    *,
-    table: str = "documents",
-    stem: bool | str = False,
-    use_artifact: bool = True,
-) -> tuple[dict, tuple[str, ...]]:
-    """Corpus term stats (idf document frequencies + avg field
-    lengths) probed from the vocabulary-wide term index artifact
-    (build_term_index) — a per-(field, term) parquet lookup with the
-    term filter pushed into the scan, so ANY query's terms are served
-    by the one per-corpus artifact. Terms are analyzed FIRST (the
-    stats must be keyed by what the token stream produces), so the
-    return is ``(stats, analyzed_terms)`` — pass both through to
-    ``fulltext_score(stats=..., )`` with the same ``stem``.
-
-    One artifact serves both tf·idf and BM25 (avglen is always in the
-    meta). ``use_artifact=False`` forces the inline single-pass
-    aggregate (the pytest equality witness)."""
-    from etl_sprint_2_5_spark.operators.textops import (
-        _query_terms,
-        corpus_term_stats,
-    )
-
-    terms = _query_terms(terms, stem)
-    if not use_artifact:
-        return corpus_term_stats(df, terms, fields, stem=stem), terms
-
-    dest = build_term_index(df, sf_dir, fields, table=table, stem=stem)
-    meta = json.loads((dest / "_meta.json").read_text())
-    spark = df.sparkSession
-    from pyspark.sql import functions as F
-
-    rows = (
-        spark.read.parquet(str(dest))
-        .where(F.col("term").isin(*terms))
-        .collect()
-        if terms
-        else []
-    )
-    found = {(r["field"], r["term"]): r["df"] for r in rows}
-    stats = {
-        "n": meta["n"],
-        "df": {
-            (f, t): found.get((f, t), 0) for f in fields for t in terms
-        },
-        "avglen": meta["avglen"],
-    }
-    return stats, terms
-
-
-# --------------------------------------------------------------------
 # Product-quantization index (codebook + per-vector codes)
 # --------------------------------------------------------------------
 
@@ -403,18 +285,14 @@ def prepared_pq_index(
     # its codes used to wedge the retrain on ENOTEMPTY)
     dest = artifact_root() / f"pq_index-{key}"
     cb_dest, codes_dest = dest / "codebook", dest / "codes"
-    if (cb_dest / "_SUCCESS").exists() and (codes_dest / "_SUCCESS").exists():
-        return spark.read.parquet(str(cb_dest)), spark.read.parquet(str(codes_dest))
+    if not ((cb_dest / "_SUCCESS").exists() and (codes_dest / "_SUCCESS").exists()):
 
-    cb, codes = inline()
-    tmp = dest.with_name(dest.name + f".tmp{os.getpid()}")
-    cb.coalesce(1).write.mode("overwrite").parquet(str(tmp / "codebook"))
-    codes.write.mode("overwrite").parquet(str(tmp / "codes"))
-    try:
-        tmp.rename(dest)
-    except OSError:
-        # lost the publish race (same deterministic bytes) — discard
-        shutil.rmtree(tmp, ignore_errors=True)
+        def write(tmp: Path) -> None:
+            cb, codes = inline()
+            cb.coalesce(1).write.mode("overwrite").parquet(str(tmp / "codebook"))
+            codes.write.mode("overwrite").parquet(str(tmp / "codes"))
+
+        _publish(dest, write)
     return spark.read.parquet(str(cb_dest)), spark.read.parquet(str(codes_dest))
 
 
@@ -612,7 +490,9 @@ def prepared_kmv_week_samples(
 def prepare_all(spark: SparkSession, sf_dir: str) -> None:
     """Build (or find) every artifact the served queries probe at
     ``sf_dir`` — the offline index-build phase, run once before any
-    query that reads them."""
+    query that reads them — and index the documents file's term
+    statistics in this process's memo, which does not outlive it."""
+    from etl_sprint_2_5_spark.operators.view_stats import view_term_stats
     from etl_sprint_2_5_spark.sources.parquet import load_documents_spread
 
     prepared_ivf_centroids(spark, sf_dir).count()
@@ -621,11 +501,6 @@ def prepare_all(spark: SparkSession, sf_dir: str) -> None:
     prepared_kmv_week_samples(spark, sf_dir).count()
     codebook, codes = prepared_pq_index(spark, sf_dir)
     codebook.count(), codes.count()
-    # the term index is vocabulary-wide: one probe with fulltext_search's
-    # fields builds it, whatever the terms
-    prepared_fulltext_stats(
-        load_documents_spread(spark, sf_dir),
-        sf_dir,
-        ("spark", "window", "merge"),
-        ("text", "source"),
-    )
+    # the per-file counters are vocabulary-wide: one lookup with the
+    # fulltext queries' fields and analyzer builds them, whatever the term
+    view_term_stats(load_documents_spread(spark, sf_dir), ("spark",), ("text", "source"))

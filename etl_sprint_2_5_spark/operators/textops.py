@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_sprint_2_5_spark.functions.text import tokenize, tokenize_sql
+from etl_sprint_2_5_spark.functions.text import TOKEN_SPLIT_RE, tokenize, tokenize_sql
 from etl_sprint_2_5_spark.operators.pagination import paginate
 
 # Function-word marker lists for n-gram-free language ID. Tiny on
@@ -174,18 +174,28 @@ def _analyzer(stem: bool | str):
 
 
 def _query_terms(terms: tuple[str, ...], stem: bool | str) -> tuple[str, ...]:
-    """Query-side twin of the token-stream analyzer: stem each term
-    with the same chain (ru_en drops stopword terms entirely), drop
-    empties and duplicates — the one place query terms are analyzed."""
-    if stem == "ru_en":
-        from etl_sprint_2_5_spark.functions.stem_ru import stem_term_ru_en
+    """Query-side twin of the token-stream analyzer: lowercase each term
+    and split it on the chain's tokenizer separators (ru_en folds ё→е
+    first), stem each token with the same chain (ru_en drops stopwords
+    entirely), drop empties and duplicates — the one place query terms
+    are analyzed."""
+    import re
 
-        terms = (stem_term_ru_en(t) for t in terms)
-    elif stem:
+    if stem == "ru_en":
+        from etl_sprint_2_5_spark.functions.stem_ru import (
+            RU_EN_SPLIT_RE,
+            stem_term_ru_en,
+        )
+
+        texts = (t.lower().replace("ё", "е") for t in terms)
+        sep, analyze = RU_EN_SPLIT_RE, stem_term_ru_en
+    else:
         from etl_sprint_2_5_spark.functions.stem import porter_stem
 
-        terms = (porter_stem(t) for t in terms)
-    return tuple(dict.fromkeys(t for t in terms if t))
+        texts = (t.lower() for t in terms)
+        sep, analyze = TOKEN_SPLIT_RE, porter_stem if stem else str
+    tokens = (tok for t in texts for tok in re.split(sep, t) if tok)
+    return tuple(dict.fromkeys(a for a in map(analyze, tokens) if a))
 
 
 def _token_arrays(fields, stem: bool | str) -> list[Column]:
@@ -231,8 +241,8 @@ def term_counters(
     with the length and row counters, and everything summed in one
     group-by. Counters of disjoint row sets add up, so per-file rows
     summed on the driver equal the corpus-wide figures exactly. This is
-    the one vocabulary builder: the prepared term index and the API's
-    per-file view statistics both read it."""
+    the one vocabulary builder: the per-file view statistics
+    (operators/view_stats.py) read it."""
     keys = [] if by is None else ["by"]
     tok = df.select(*[by.alias(k) for k in keys], *_token_arrays(fields, stem))
 
@@ -270,10 +280,9 @@ def corpus_term_stats(
 
     |fields|×|terms| counters (plus one token-length sum per field, for
     BM25 length normalization) in a single-row agg — the "small
-    broadcast" of the scoring design. Query-time callers that can reuse
-    statistics pass them as ``stats=``: the prepared term index
-    (artifacts.py) and the API's per-file view statistics
-    (api/view_stats.py) both sum ``term_counters`` rows instead."""
+    broadcast" of the scoring design. ``with_fulltext_score`` runs it
+    per request for a frame that is not a parquet view, and the per-file
+    view statistics (operators/view_stats.py) must equal it."""
     return _term_stats(_analyzed(df, terms, fields, stem), terms, fields)
 
 
@@ -299,8 +308,9 @@ def _term_stats(tok: DataFrame, terms: tuple[str, ...], fields) -> dict:
 
 
 def term_stats_dict(n: int, df: dict, lengths: dict) -> dict:
-    """The ``stats=`` dict of ``with_fulltext_score`` from the counters:
-    ``n`` docs, ``df[(field, term)]`` and each field's token-length sum."""
+    """The statistics dict ``with_fulltext_score`` weighs terms by, from
+    the counters: ``n`` docs, ``df[(field, term)]`` and each field's
+    token-length sum."""
     return {
         "n": n,
         "df": df,
@@ -339,7 +349,6 @@ def with_fulltext_score(
     df: DataFrame,
     terms: tuple[str, ...],
     fields: dict[str, float],
-    stats: dict | None = None,
     stem: bool | str = False,
     k1: float | None = None,
     b: float = 0.75,
@@ -362,9 +371,11 @@ def with_fulltext_score(
     tokens_f, t)) (the tokens equal to t, counted by codegen'd array
     ops instead of a per-term lambda), and the weighted sum is one SQL
     expression summed field-major then term-major, the order the DuckDB
-    oracles sum in. The idf weights come from ``stats`` (one single-row
-    aggregate over the same token arrays when not supplied); the query
-    terms ride in one literal array column, never in SQL text.
+    oracles sum in. The idf weights come from the per-file statistics
+    when ``df`` is a parquet view (``view_term_stats``: summed from
+    memoized per-file counters, built once per file), else from one
+    single-row aggregate over the same token arrays; the query terms
+    ride in one literal array column, never in SQL text.
 
     With ``k1=None`` (default) the score is plain tf·idf — no tf
     saturation, no length normalization. Pass ``k1`` (e.g. 1.2) to get
@@ -376,10 +387,13 @@ def with_fulltext_score(
     where len_f = size(tokens_f) and avglen_f is the corpus mean from
     the same stats pass — the same projection; the formula reads each
     tf twice, and subexpression elimination computes it once."""
+    from etl_sprint_2_5_spark.operators.view_stats import view_term_stats
+
     terms = _query_terms(terms, stem)
     if not terms:
         return df.withColumn("score", F.lit(0.0))
     tok = _analyzed(df, terms, fields, stem)
+    stats = view_term_stats(df, terms, fields, stem)
     if stats is None:
         stats = _term_stats(tok, terms, tuple(fields))
     n = stats["n"]
@@ -421,7 +435,6 @@ def fulltext_score(
     id_col: str,
     terms: tuple[str, ...],
     fields: dict[str, float],
-    stats: dict | None = None,
     stem: bool | str = False,
     k1: float | None = None,
     b: float = 0.75,
@@ -430,7 +443,7 @@ def fulltext_score(
     above 0 (rounded) — the docs with at least one term hit. Spark
     pushes the filter under the scoring projection, so the score is
     evaluated twice per row; ranked consumers use ``score_page``."""
-    scored = with_fulltext_score(df, terms, fields, stats, stem, k1, b)
+    scored = with_fulltext_score(df, terms, fields, stem, k1, b)
     return scored.where(F.col("score") > 0).select(id_col, "score")
 
 

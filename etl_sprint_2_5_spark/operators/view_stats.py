@@ -1,4 +1,4 @@
-"""Per-file statistics of a served view: the admin count and the search
+"""Per-file statistics of a parquet view: a row count and full-text
 term statistics without a corpus scan per request.
 
 Elasticsearch, the reference's serving store, keeps document
@@ -14,19 +14,22 @@ view's current files on the driver:
 - the vocabulary counters (``textops.term_counters``: per (field, term)
   document frequency and per-field token-length sums) are built by ONE
   aggregate over the files not yet indexed, grouped by file, and
-  collected through Arrow. They are also keyed by the search fields and
-  the analyzer.
+  collected through Arrow. They are also keyed by the fields and the
+  analyzer.
 
 A flat-sink version is all new files, so its first search indexes the
 whole view once; a bucketed version re-indexes only its new bucket
 dirs. The memo keeps only files that are still on disk unchanged: every
-build drops the entries of files a sink swapped away.
+build drops the entries of files a sink swapped away. It lives in the
+process, so each process builds the statistics of a file once.
 
 This applies when the frame's optimized plan is a bare parquet relation
 on the local filesystem (``sink.read_view``, a rewrite-mode
-``read_bucketed_view``, ``spark.read.parquet``). For any other frame
-(filtered, derived, in-memory, delta-mode merge-on-read) the functions
-return None and the caller runs its own aggregate.
+``read_bucketed_view``, ``spark.read.parquet``), optionally under
+repartitions, which move rows between partitions but keep every row
+(``load_documents_spread``). For any other frame (filtered, derived,
+in-memory, delta-mode merge-on-read) the functions return None and the
+caller runs its own aggregate (``with_fulltext_score`` does so itself).
 """
 
 from __future__ import annotations
@@ -41,11 +44,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_sprint_2_5_spark.operators.textops import (
-    _query_terms,
-    term_counters,
-    term_stats_dict,
-)
+from etl_sprint_2_5_spark.operators.textops import term_counters, term_stats_dict
 
 log = logging.getLogger(__name__)
 
@@ -71,6 +70,11 @@ _ROWS: dict[FileKey, int] = {}
 _VOCAB: dict[tuple[FileKey, tuple[str, ...], bool | str], _Vocab] = {}
 
 
+# logical nodes that move rows between partitions without adding,
+# dropping or changing any
+_REPARTITIONS = ("Repartition", "RepartitionByExpression")
+
+
 def _local_path(uri: str) -> str | None:
     u = urlparse(uri)
     return unquote(u.path) if u.scheme in ("", "file") else None
@@ -78,12 +82,15 @@ def _local_path(uri: str) -> str | None:
 
 def view_files(df: DataFrame) -> list[FileKey] | None:
     """The data files of ``df`` when its optimized plan is a bare,
-    unpartitioned parquet relation on the local filesystem; else None.
-    Listing reads the relation's cached file index: no Spark job."""
+    unpartitioned parquet relation on the local filesystem, under any
+    number of repartitions; else None. Listing reads the relation's
+    cached file index: no Spark job."""
     jdf = getattr(df, "_jdf", None)
     if jdf is None:
         return None
     plan = jdf.queryExecution().optimizedPlan()
+    while plan.getClass().getSimpleName() in _REPARTITIONS:
+        plan = plan.child()
     if plan.getClass().getSimpleName() != "LogicalRelation":
         return None
     rel = plan.relation()
@@ -180,13 +187,12 @@ def _index(df: DataFrame, files: list[FileKey], fields: tuple[str, ...],
 def view_term_stats(
     df: DataFrame, terms: tuple[str, ...], fields, stem: bool | str = False
 ) -> dict | None:
-    """``corpus_term_stats(df, terms, fields, stem)`` summed from the
-    per-file counters of ``df``'s files, or None when ``df`` is not a
-    bare parquet view (or the query has no terms left after analysis).
-    Only files not indexed yet are read."""
+    """``corpus_term_stats(df, terms, fields, stem)`` (``terms`` already
+    analyzed) summed from the per-file counters of ``df``'s files, or
+    None when ``df`` is not a bare parquet view. Only files not indexed
+    yet are read."""
     files = view_files(df)
-    terms = _query_terms(terms, stem)
-    if files is None or not terms:
+    if files is None:
         return None
     fields = tuple(fields)
     with _LOCK:

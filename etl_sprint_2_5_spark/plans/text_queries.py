@@ -176,19 +176,13 @@ def _ft_score_sql() -> str:
 
 def _scored_docs(spark: SparkSession, sf_dir: str, **bm25) -> DataFrame:
     """Every document scored for 'spark window merge' over text (3×)
-    and source (1×), term stats probed from the prepared artifact;
-    ``bm25`` passes k1/b to switch tf·idf to BM25."""
-    from etl_sprint_2_5_spark.artifacts import prepared_fulltext_stats
-
-    d = load_documents_spread(spark, sf_dir)
-    stats, _ = prepared_fulltext_stats(
-        d, sf_dir, ("spark", "window", "merge"), ("text", "source")
-    )
+    and source (1×); ``bm25`` passes k1/b to switch tf·idf to BM25. The
+    term statistics are summed from the documents file's per-file
+    counters (operators/view_stats.py), built once per process."""
     return with_fulltext_score(
-        d,
-        terms=("spark", "window", "merge"),
+        load_documents_spread(spark, sf_dir),
+        terms=_FT_TERMS,
         fields={"text": 3.0, "source": 1.0},
-        stats=stats,
         **bm25,
     )
 
@@ -222,8 +216,8 @@ def fulltext_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted multi-field full-text scoring (the ES multi_match
     approximation, search_api/api.py:93-100): text boosted 3×,
     source 1×, query 'spark window merge', top-20. Corpus term stats
-    come from the prepared artifact (artifacts.py) — computed once per
-    corpus fingerprint at index-build time, probed per query."""
+    come from the documents file's per-file counters, memoized in the
+    process: the first query builds them, later ones sum them."""
     scored = _scored_docs(spark, sf_dir)
     return score_page(scored, F.col("doc_id"), 1, 20).select("doc_id", "score")
 
@@ -319,9 +313,9 @@ def fulltext_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL BM25 (k1=1.2, b=0.75) multi-field scoring — exact parity
     with the reference's ES defaults (search_api/api.py:93-100 BM25
     with per-field boosts; ES k1/b defaults are 1.2/0.75), closing the
-    tf·idf-only divergence documented in round 1. Term stats probe the
-    same prepared artifact as fulltext_search (one artifact serves
-    both formulas — avglen is always computed)."""
+    tf·idf-only divergence documented in round 1. Term stats come from
+    the same per-file counters as fulltext_search (one build serves
+    both formulas — the token-length sums are always counted)."""
     scored = _scored_docs(spark, sf_dir, k1=1.2, b=0.75)
     return score_page(scored, F.col("doc_id"), 1, 20).select("doc_id", "score")
 
@@ -916,11 +910,10 @@ _RRF_TOP = 10  # fused results returned
 def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval — the RAG-serving shape that combines the two
     index families this engine already maintains: the BM25 ranking
-    (same terms/fields/stats as fulltext_bm25, probing the prepared
-    term-stats artifact) and a vector ranking (exact cosine of doc 0's
-    embedding over the row-aligned embeddings table), fused by
-    reciprocal rank fusion (Cormack et al. 2009):
-    score(d) = Σ_lists 1/(60 + rank_list(d)).
+    (same terms, fields and per-file term statistics as fulltext_bm25)
+    and a vector ranking (exact cosine of doc 0's embedding over the
+    row-aligned embeddings table), fused by reciprocal rank fusion
+    (Cormack et al. 2009): score(d) = Σ_lists 1/(60 + rank_list(d)).
 
     RRF is computed in integer ppm (1000000 div (60+rank)) so the
     fused scores, like both input ranks, are engine-exact — the only

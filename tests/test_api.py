@@ -189,9 +189,10 @@ def _mirror_movies(spark):
 
 
 def _mirror_pages(query: str, limit: int) -> list[list[tuple[str, float]]]:
-    """Pure-Python tf·idf search over _MIRROR_ROWS: the same tokenizer,
-    idf, field boosts and summation order as the engine, HALF_UP
-    round-2, ranked by (score desc, id), split into pages."""
+    """Pure-Python tf·idf search over _MIRROR_ROWS: the same tokenizer
+    (for the query text too), idf, field boosts and summation order as
+    the engine, HALF_UP round-2, ranked by (score desc, id), split into
+    pages."""
     import re
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -208,7 +209,7 @@ def _mirror_pages(query: str, limit: int) -> list[list[tuple[str, float]]]:
     docs = [
         (r[0], [toks(text(r[k])) for k in (1, 2, 3, 4, 5, 6)]) for r in _MIRROR_ROWS
     ]
-    terms = list(dict.fromkeys(query.lower().split()))
+    terms = list(dict.fromkeys(toks(query)))
     n = len(docs)
     ranked = []
     for doc_id, fields in docs:

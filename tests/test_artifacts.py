@@ -1,12 +1,10 @@
 """Prepared-artifact serving path (artifacts.py): the persisted IVF
-centroids and full-text corpus stats must be BIT-IDENTICAL to the
-inline training path (training is deterministic), artifacts must be
-reused (no retrain on the second call), and a regenerated corpus must
-self-invalidate via the fingerprint."""
+centroids, shingle sets, codes and sketch tables must be
+BIT-IDENTICAL to the inline training path (training is deterministic),
+artifacts must be reused (no retrain on the second call), and a
+regenerated corpus must self-invalidate via the fingerprint."""
 
 from __future__ import annotations
-
-import json
 
 import pytest
 
@@ -49,49 +47,6 @@ def test_ivf_centroids_artifact_reused_not_retrained(spark, artifact_dir, monkey
     assert again.count() > 0
 
 
-def test_fulltext_stats_prepared_equals_inline(spark, artifact_dir):
-    from etl_sprint_2_5_spark.sources.parquet import load_documents_spread
-
-    d = load_documents_spread(spark, SF_DIR)
-    terms, fields = ("spark", "window", "merge"), ("text", "source")
-    inline, t1 = A.prepared_fulltext_stats(
-        d, SF_DIR, terms, fields, use_artifact=False
-    )
-    prepared, t2 = A.prepared_fulltext_stats(d, SF_DIR, terms, fields)
-    assert t1 == t2 == terms
-    assert prepared == inline
-    # second call probes the persisted index (same values)
-    again, _ = A.prepared_fulltext_stats(d, SF_DIR, terms, fields)
-    assert again == inline
-    dirs = list(artifact_dir.glob("ftindex-*"))
-    assert len(dirs) == 1
-    meta = json.loads((dirs[0] / "_meta.json").read_text())
-    assert meta["n"] == inline["n"]
-    # the index is vocabulary-wide: a DIFFERENT query's terms probe
-    # the same artifact (no rebuild) and still match the inline pass
-    other = ("data", "engine", "nosuchtermxyz")
-    probed, _ = A.prepared_fulltext_stats(d, SF_DIR, other, fields)
-    inline2, _ = A.prepared_fulltext_stats(
-        d, SF_DIR, other, fields, use_artifact=False
-    )
-    assert probed == inline2
-    assert probed["df"][("text", "nosuchtermxyz")] == 0
-    assert list(artifact_dir.glob("ftindex-*")) == dirs
-
-
-def test_fulltext_stats_stemmed_terms_keying(spark, artifact_dir):
-    from etl_sprint_2_5_spark.sources.parquet import load_documents_spread
-
-    d = load_documents_spread(spark, SF_DIR)
-    stats, terms = A.prepared_fulltext_stats(
-        d, SF_DIR, ("running", "merges"), ("text",), stem=True
-    )
-    # the stats are keyed by the ANALYZED terms, matching what
-    # fulltext_score looks up after it stems the query itself
-    assert terms == ("run", "merg")
-    assert set(stats["df"]) == {("text", "run"), ("text", "merg")}
-
-
 def test_shingle_index_prepared_equals_inline(spark, artifact_dir):
     inline = {
         r["doc_id"]: list(r["hs"])
@@ -120,6 +75,20 @@ def test_quantized_codes_prepared_equals_inline(spark, artifact_dir):
         for r in A.prepared_quantized_codes(spark, SF_DIR).collect()
     }
     assert prepared == inline and len(prepared) > 0
+
+
+def test_pq_index_prepared_equals_inline(spark, artifact_dir):
+    """The codebook and the codes are published together by one rename:
+    one key dir holding both, no tmp dir left, and both equal the
+    inline build."""
+    rows = lambda df: sorted(tuple(map(str, r)) for r in df.collect())  # noqa: E731
+    inline = A.prepared_pq_index(spark, SF_DIR, use_artifact=False)
+    prepared = A.prepared_pq_index(spark, SF_DIR)
+    assert [rows(df) for df in prepared] == [rows(df) for df in inline]
+    assert all(rows(df) for df in prepared)
+    dirs = list(artifact_dir.glob("pq_index-*"))
+    assert len(dirs) == 1 and not dirs[0].name.count(".tmp")
+    assert all((dirs[0] / part / "_SUCCESS").exists() for part in ("codebook", "codes"))
 
 
 def test_fingerprint_invalidates_on_table_change(tmp_path, monkeypatch):

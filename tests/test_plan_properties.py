@@ -231,6 +231,22 @@ def test_search_is_one_scan_per_job_with_no_shuffle(spark, tmp_path):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_fulltext_search_warm_is_one_execution(spark, tmp_path):
+    """fulltext_search over a fresh copy of the documents file: the cold
+    run indexes the file's term statistics (one execution) before its
+    page, and a warm run is the page alone; the statistics are summed
+    from the per-file memo, not probed from a persisted index."""
+    import shutil
+
+    shutil.copyfile(f"{SF}/documents.parquet", tmp_path / "documents.parquet")
+    load_all()
+    search = REGISTRY["fulltext_search"].fn
+    cold = _executed_plans(spark, lambda: search(spark, str(tmp_path)).collect())
+    assert len(cold) == 2 and "TakeOrderedAndProject" in cold[1], cold
+    warm = _executed_plans(spark, lambda: search(spark, str(tmp_path)).collect())
+    assert len(warm) == 1 and "TakeOrderedAndProject" in warm[0], warm
+
+
 def test_paginate_is_a_top_k_not_a_window(spark):
     """paginate plans orderBy → offset → limit as one
     TakeOrderedAndProject, not a global single-partition row_number."""

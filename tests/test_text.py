@@ -293,18 +293,24 @@ def test_tokenize_sql_matches_tokenize(spark):
 
 def test_fulltext_score_repeated_terms(spark):
     """A repeated term counts once on every analyzer path, instead of
-    raising a duplicate-map-key error on the unstemmed ones."""
+    raising a duplicate-map-key error on the unstemmed ones; and query
+    terms are analyzed like the documents: lowercased and split on the
+    tokenizer's separators."""
     from etl_sprint_2_5_spark.operators.textops import fulltext_score
 
     df = spark.createDataFrame(
-        [("d1", "spark spark rows"), ("d2", "rows"), ("d3", "sparks fly")],
+        [("d1", "spark spark rows"), ("d2", "rows"), ("d3", "sparks fly"),
+         ("d4", "Spark and Sci Fi")],
         "id string, text string",
     )
+    same = [(("spark",), ("spark", "spark")), (("spark",), ("Spark",)),
+            (("sci", "fi"), ("sci-fi",))]
     for kwargs in ({}, {"k1": 1.2}, {"stem": True}, {"stem": "ru_en"}):
-        once = fulltext_score(df, "id", ("spark",), {"text": 1.0}, **kwargs)
-        twice = fulltext_score(df, "id", ("spark", "spark"), {"text": 1.0}, **kwargs)
-        assert sorted(twice.collect()) == sorted(once.collect()), kwargs
-        assert once.count() >= 1
+        for terms, spelled in same:
+            once = fulltext_score(df, "id", terms, {"text": 1.0}, **kwargs)
+            twice = fulltext_score(df, "id", spelled, {"text": 1.0}, **kwargs)
+            assert sorted(twice.collect()) == sorted(once.collect()), (kwargs, spelled)
+            assert once.count() >= 1
 
 
 def test_with_fulltext_score_keeps_every_row(spark):

@@ -1,8 +1,8 @@
-"""Per-file view statistics (api/view_stats.py): the search idf
-statistics and the admin count of a parquet view, memoized per data
-file, must equal the from-scratch aggregate after every maintenance
-wave, drop the files a sink swapped away, and leave a warm request
-one Spark job."""
+"""Per-file view statistics (operators/view_stats.py): the full-text
+idf statistics and the admin count of a parquet view, memoized per
+data file, must equal the from-scratch aggregate after every
+maintenance wave, drop the files a sink swapped away, and leave a warm
+request one Spark job."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from dataclasses import replace
 import pytest
 from pyspark.sql import functions as F
 
-from etl_sprint_2_5_spark.api import view_stats
 from etl_sprint_2_5_spark.api.query import (
     SEARCH_FIELDS,
     STEM,
@@ -25,21 +24,29 @@ from etl_sprint_2_5_spark.api.query import (
     admin_movie_list,
     list_movies,
 )
-from etl_sprint_2_5_spark.api.view_stats import view_count, view_files, view_term_stats
 from etl_sprint_2_5_spark.cost import tracked
-from etl_sprint_2_5_spark.operators.textops import _query_terms, corpus_term_stats
+from etl_sprint_2_5_spark.operators import view_stats
+from etl_sprint_2_5_spark.operators.textops import (
+    _query_terms,
+    corpus_term_stats,
+    score_page,
+    with_fulltext_score,
+)
+from etl_sprint_2_5_spark.operators.view_stats import view_count, view_files, view_term_stats
 from etl_sprint_2_5_spark.pipeline.movie_gold import movies_gold
 from etl_sprint_2_5_spark.pipeline.normalize import normalize
+from etl_sprint_2_5_spark.sources.parquet import load_documents_spread, load_table
 from etl_sprint_2_5_spark.streaming.ivm import run_to_completion
 from etl_sprint_2_5_spark.streaming.movie_pipelines import movie_pipelines
 from etl_sprint_2_5_spark.streaming.sink import read_bucketed_view, read_view
 from etl_sprint_2_5_spark.streaming.state import OffsetStore
+from tests.conftest import SF_SMOKE
 from tests.fixtures_legacy import as_dataframes
 from tests.test_api import _mirror_movies, _mirror_pages
 from tests.test_ivm import T0, _mutate, loader, write_base
 
 QUERY = ("renamed", "person", "quux", "movie", "drama", "the", "running")
-LOG = "etl_sprint_2_5_spark.api.view_stats"
+LOG = "etl_sprint_2_5_spark.operators.view_stats"
 
 
 def _rename_again(spark, tmp):
@@ -102,7 +109,7 @@ def test_view_stats_equal_from_scratch_after_each_wave(spark, tmp_path, caplog,
         caplog.clear()
         for analyzer, stem in STEM.items():
             terms = _query_terms(QUERY, stem)
-            assert view_term_stats(movies, QUERY, SEARCH_FIELDS, stem) == (
+            assert view_term_stats(movies, terms, SEARCH_FIELDS, stem) == (
                 corpus_term_stats(movies, terms, fields, stem)
             ), (wave, analyzer)
         # one build per analyzer, each over this version's new files only
@@ -143,6 +150,42 @@ def test_parquet_pages_match_python_mirror(spark, tmp_path):
             assert [(r["id"], r["score"]) for r in got.collect()] == expected, query
 
 
+@pytest.mark.parametrize(
+    "stem, query, analyzed, fields",
+    [
+        (False, ("spark", "nosuchtermxyz"), ("spark", "nosuchtermxyz"), ("text", "source")),
+        (True, ("running", "merges", "nosuchtermxyz"), ("run", "merg", "nosuchtermxyz"),
+         ("text",)),
+    ],
+    ids=["plain", "en"],
+)
+def test_spread_documents_take_the_per_file_path(spark, stem, query, analyzed, fields):
+    """The repartitioned documents frame the fulltext queries score
+    (``load_documents_spread``) lists its file, and its per-file
+    statistics equal the aggregate, keyed by the analyzed query terms:
+    a term absent from the corpus counts df 0, and an ``en`` query is
+    keyed by its stems. A filtered frame falls back to the per-request
+    aggregate and returns the same page."""
+    docs = load_documents_spread(spark, SF_SMOKE)
+    files = view_files(docs)
+    assert files and files == view_files(load_table(spark, "documents", SF_SMOKE))
+    terms = _query_terms(query, stem)
+    assert terms == analyzed
+    stats = view_term_stats(docs, terms, fields, stem)
+    assert stats == corpus_term_stats(docs, terms, fields, stem)
+    assert set(stats["df"]) == {(f, t) for f in fields for t in analyzed}
+    assert all(stats["df"][(f, "nosuchtermxyz")] == 0 for f in fields)
+    filtered = docs.where(F.col("doc_id").isNotNull())
+    assert view_files(filtered) is None
+
+    def page(frame):
+        scored = with_fulltext_score(frame, query, dict.fromkeys(fields, 1.0), stem)
+        top = score_page(scored, F.col("doc_id"), 1, 20)
+        return [(r["doc_id"], r["score"]) for r in top.collect()]
+
+    assert page(docs) and page(docs) == page(filtered)
+
+
 def _jobs(spark, action) -> tuple[int, object]:
     with tracked(spark, "view_stats_budget") as t:
         out = action()
@@ -175,6 +218,7 @@ def test_concurrent_cold_requests_index_each_file_once(spark, tmp_path, caplog):
     movies_gold(normalize(*as_dataframes(spark))).repartition(3).write.parquet(path)
     movies = spark.read.parquet(path)
     fields = tuple(SEARCH_FIELDS)
+    terms = _query_terms(QUERY, False)
     caplog.set_level(logging.DEBUG, logger=LOG)
     workers = 2 * (os.cpu_count() or 4)
     interval = sys.getswitchinterval()
@@ -182,7 +226,7 @@ def test_concurrent_cold_requests_index_each_file_once(spark, tmp_path, caplog):
     try:
         with ThreadPoolExecutor(workers) as pool:
             stats = [f.result(timeout=300) for f in [
-                pool.submit(view_term_stats, movies, QUERY, SEARCH_FIELDS)
+                pool.submit(view_term_stats, movies, terms, SEARCH_FIELDS)
                 for _ in range(workers)
             ]]
             counts = [f.result(timeout=300) for f in [
@@ -190,7 +234,7 @@ def test_concurrent_cold_requests_index_each_file_once(spark, tmp_path, caplog):
             ]]
     finally:
         sys.setswitchinterval(interval)
-    want = corpus_term_stats(movies, _query_terms(QUERY, False), fields)
+    want = corpus_term_stats(movies, terms, fields)
     assert all(s == want for s in stats)
     assert set(counts) == {movies.count()}
     assert len([r for r in caplog.records if r.name == LOG]) == 1

@@ -5,7 +5,9 @@ On a cluster this is the scheduled job that (re)builds every prepared
 artifact (artifacts.prepare_all, the same phase bench.py runs) whenever
 the corpus changes; queries then only probe the persisted artifacts.
 Locally it pre-warms the artifact cache so bench/driver runs pay zero
-training cost.
+training cost. Full-text term statistics are not among them: they are
+memoized per process (operators/view_stats.py), so each query process
+builds them on first use and this tool's copy ends with it.
 
 Usage: python tools/prepare_artifacts.py [sf_dir ...]
        (default: /root/testdata/sf0.01 and /root/testdata/sf0.1)
